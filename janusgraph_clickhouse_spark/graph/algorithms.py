@@ -21,18 +21,6 @@ from .model import PropertyGraph
 from .pregel import pregel
 
 
-def _edges_aligned(graph: PropertyGraph) -> bool:
-    """True when graph.edges is bucketed on src AND the bucket count
-    matches this session's shuffle width, so the message join can reuse
-    the on-disk partitioning with no Exchange on either side."""
-    if not getattr(graph, "src_partitioned", False):
-        return False
-    from .persistence import EDGE_BUCKETS
-    spark = graph.edges.sparkSession
-    return int(spark.conf.get("spark.sql.shuffle.partitions",
-                              "200")) == EDGE_BUCKETS
-
-
 def pagerank(graph: PropertyGraph, max_iter: int = 10,
              damping: float = 0.85, tol: float | None = None) -> DataFrame:
     """PageRank over the directed edges; returns (id, rank).
@@ -56,16 +44,9 @@ def pagerank(graph: PropertyGraph, max_iter: int = 10,
               .withColumn("rank", F.lit(1.0)))
     # cache the edge set partitioned on the message-join key: every
     # superstep joins contribs on src, so hash-partitioning edges once
-    # lets each round reuse the layout (measured 22s → 15.5s at sf0.1).
-    # A bucketed substrate (graph.src_partitioned) is ALREADY laid out on
-    # src — repartitioning it would just re-add the exchange it removed —
-    # but only when its bucket count matches the session's shuffle width
-    # (mismatched counts make EnsureRequirements re-shuffle a side).
-    edges = graph.edges.select("src", "dst")
-    if not _edges_aligned(graph):
-        width = graph.edges.sparkSession.sparkContext.defaultParallelism
-        edges = edges.repartition(width, "src")
-    edges = edges.cache()
+    # lets each round reuse the layout (measured 22s → 15.5s at sf0.1)
+    width = graph.edges.sparkSession.sparkContext.defaultParallelism
+    edges = graph.edges.select("src", "dst").repartition(width, "src").cache()
 
     def make_messages(st: DataFrame, e: DataFrame) -> DataFrame:
         contrib = (st.filter(F.col("out_deg") > 0)
@@ -264,12 +245,8 @@ def shortest_paths(graph: PropertyGraph, source_ids: list[int],
         edges = edges.unionByName(
             e.select(F.col("dst").alias("src"), F.col("src").alias("dst"),
                      w.alias("w")))
-    # directed + bucketed substrate: already src-partitioned (the union
-    # for undirected breaks the layout, so only the directed path skips)
-    if not (directed and _edges_aligned(graph)):
-        width = graph.edges.sparkSession.sparkContext.defaultParallelism
-        edges = edges.repartition(width, "src")
-    edges = edges.cache()
+    width = graph.edges.sparkSession.sparkContext.defaultParallelism
+    edges = edges.repartition(width, "src").cache()
     inf = float("inf")
     state = graph.vertices.select(
         "id",
@@ -1665,6 +1642,11 @@ def triangles_per_vertex(graph: PropertyGraph) -> DataFrame:
     return per
 
 
+# |V| at or below which hits runs its broadcast-state half-steps (see
+# the hits docstring for the measured crossover)
+HITS_BCAST_V = 1_000_000
+
+
 def hits(graph: PropertyGraph, max_iter: int = 8) -> DataFrame:
     """HITS hubs/authorities over the directed edges; returns
     (id, hub, authority) after `max_iter` synchronous UNNORMALIZED
@@ -1675,7 +1657,7 @@ def hits(graph: PropertyGraph, max_iter: int = 8) -> DataFrame:
         finally  a ← a / Σ a,  h ← h / Σ h
 
     Same substrate discipline as pagerank: edges cached pre-partitioned
-    on the join key (or served by the bucketed layout when aligned).
+    on the join key.
     Unlike pagerank there is NO per-iteration checkpoint: the loop is a
     single linear chain (each intermediate consumed exactly once), so
     only the final ``a`` (consumed twice) is checkpointed — plus a
@@ -1706,8 +1688,8 @@ def hits(graph: PropertyGraph, max_iter: int = 8) -> DataFrame:
     2·max_iter |E|-shuffles total).  Each half-step's |V|-row
     aggregate is eagerly checkpointed so at most two broadcast
     relations are live at once (driver/executor memory stays bounded
-    for any max_iter).  The gate is |V| ≤ SPARK_GRAFT_HITS_BCAST_V
-    (default 1M rows ≈ ~32 MB built relation): per-iteration broadcast
+    for any max_iter).  The gate is |V| ≤ HITS_BCAST_V
+    (1M rows ≈ ~32 MB built relation): per-iteration broadcast
     traffic is |V|·n_executors bytes vs the shuffle form's |E| bytes,
     so broadcast wins only while the relation is decisively cheap —
     x30-MEASURED at |V|=5.58M the broadcast form read 97.7 s vs the
@@ -1719,23 +1701,12 @@ def hits(graph: PropertyGraph, max_iter: int = 8) -> DataFrame:
     identical sums up to FP summation order (verified row-identical
     after the registered round(5) at sf0.001/0.01/0.1)."""
     width = graph.edges.sparkSession.sparkContext.defaultParallelism
-    edges = graph.edges.select("src", "dst")
-    if not _edges_aligned(graph):
-        edges = edges.repartition(width, "src")
-    edges = edges.cache()
+    edges = graph.edges.select("src", "dst").repartition(width, "src").cache()
     # second cached orientation, partitioned on dst: the hub half-step
     # joins on dst, and without this the whole edge set re-shuffles
     # EVERY iteration (8× at the default) — the classic CSR/CSC dual
-    # adjacency, paid once instead of per-iteration network.  When the
-    # clustered substrate ships its persisted dst-bucketed table
-    # (persistence v4) at the session's width, serve it from DISK
-    # layout — zero Exchange even on the first materialization;
-    # otherwise fall back to one in-memory repartition.
-    ebd = getattr(graph, "edges_by_dst", None)
-    if ebd is not None and _edges_aligned(graph):
-        edges_by_dst = ebd.select("src", "dst").cache()
-    else:
-        edges_by_dst = edges.repartition(width, "dst").cache()
+    # adjacency, paid once instead of per-iteration network
+    edges_dst = edges.repartition(width, "dst").cache()
     # The loop carries only the MESSAGE AGGREGATES, never the joined-in
     # full vertex state: a vertex absent from `h` has hub 0 and
     # contributes nothing through the inner message join, so joining
@@ -1751,10 +1722,7 @@ def hits(graph: PropertyGraph, max_iter: int = 8) -> DataFrame:
     # Only the LAST a is consumed twice (inside h_T's lineage and by
     # the final join-back), so exactly that one is checkpointed.
     v = graph.vertices.select("id")
-    import os as _os
-    bcast_cap = int(_os.environ.get("SPARK_GRAFT_HITS_BCAST_V",
-                                    "1000000"))
-    use_bcast = v.count() <= bcast_cap
+    use_bcast = v.count() <= HITS_BCAST_V
     h = v.select("id", F.lit(1.0).alias("hub"))
     a = v.select("id", F.lit(1.0).alias("authority"))
     for t in range(max_iter):
@@ -1764,7 +1732,7 @@ def hits(graph: PropertyGraph, max_iter: int = 8) -> DataFrame:
             # key, so neither the join nor the aggregate exchanges the
             # |E|-scaled message stream.  Eager checkpoints bound live
             # broadcast relations to two.
-            a = (edges_by_dst
+            a = (edges_dst
                  .join(F.broadcast(h.select(F.col("id").alias("src"),
                                             "hub")), "src")
                  .groupBy(F.col("dst").alias("id"))
@@ -1785,7 +1753,7 @@ def hits(graph: PropertyGraph, max_iter: int = 8) -> DataFrame:
         if t == max_iter - 1:
             a = a.localCheckpoint(eager=True)
         # hubs from authorities: messages flow dst→src, keyed on dst
-        h = (edges_by_dst
+        h = (edges_dst
              .join(a.select(F.col("id").alias("dst"), "authority"), "dst")
              .groupBy(F.col("src").alias("id"))
              .agg(F.sum("authority").alias("hub")))
@@ -1816,7 +1784,7 @@ def hits(graph: PropertyGraph, max_iter: int = 8) -> DataFrame:
                      norm_a.alias("authority"))
              .localCheckpoint(eager=True))
     edges.unpersist()
-    edges_by_dst.unpersist()
+    edges_dst.unpersist()
     return state.select("id", "hub", "authority")
 
 
@@ -1850,11 +1818,8 @@ def personalized_pagerank(graph: PropertyGraph, source_ids: list[int],
               .fillna(0, subset=["out_deg"])
               .withColumn("p", F.when(src_set, F.lit(p0)).otherwise(F.lit(0.0)))
               .withColumn("rank", F.col("p")))
-    edges = graph.edges.select("src", "dst")
-    if not _edges_aligned(graph):
-        width = graph.edges.sparkSession.sparkContext.defaultParallelism
-        edges = edges.repartition(width, "src")
-    edges = edges.cache()
+    width = graph.edges.sparkSession.sparkContext.defaultParallelism
+    edges = graph.edges.select("src", "dst").repartition(width, "src").cache()
 
     def make_messages(st: DataFrame, e: DataFrame) -> DataFrame:
         contrib = (st.filter((F.col("out_deg") > 0) & (F.col("rank") != 0.0))
@@ -1910,11 +1875,9 @@ def seeded_random_walks(graph: PropertyGraph,
     from pyspark.sql import Window
 
     spark = graph.edges.sparkSession
-    edges = graph.edges.select("src", "dst")
-    if not _edges_aligned(graph):
-        edges = edges.repartition(spark.sparkContext.defaultParallelism,
-                                  "src")
-    edges = edges.cache()
+    edges = (graph.edges.select("src", "dst")
+             .repartition(spark.sparkContext.defaultParallelism, "src")
+             .cache())
     if isinstance(source_ids, DataFrame):
         srcs = source_ids.select(
             F.col(source_ids.columns[0]).alias("id"))
@@ -2040,11 +2003,9 @@ def biased_random_walks(graph: PropertyGraph,
     from pyspark.sql import Window
 
     spark = graph.edges.sparkSession
-    edges = graph.edges.select("src", "dst")
-    if not _edges_aligned(graph):
-        edges = edges.repartition(spark.sparkContext.defaultParallelism,
-                                  "src")
-    edges = edges.cache()
+    edges = (graph.edges.select("src", "dst")
+             .repartition(spark.sparkContext.defaultParallelism, "src")
+             .cache())
     if isinstance(sources, DataFrame):
         srcs = sources.select(F.col(sources.columns[0]).alias("id"))
         seed_df = graph.vertices.join(srcs, "id", "semi")
@@ -2091,8 +2052,7 @@ def biased_random_walks(graph: PropertyGraph,
 
 def strongly_connected_components(edges: DataFrame, max_phases: int = 25,
                                   max_iter: int = 50,
-                                  probe_every: int = 4,
-                                  backward: str = "dense") -> DataFrame:
+                                  probe_every: int = 4) -> DataFrame:
     """Strongly connected components of a directed edge set; returns
     (id, component) where component == the MAX vertex id in the SCC.
 
@@ -2148,34 +2108,20 @@ def strongly_connected_components(edges: DataFrame, max_phases: int = 25,
 
     The backward loop joins the REACHED SET (not a frontier) against
     the same-color edge subgraph built ONCE per phase (two equi-joins
-    against the final colors) and REPARTITIONED ON dst — the
-    dual-orientation discipline from the HITS/v4 substrate: the
-    per-hop join keys on dst, so the edge side stays in place and only
-    the reached side shuffles.  DENSE-FORM TRADE-OFF (r9 ADVICE): the
-    self-loop augmentation that buys single-consumption lazy batching
-    re-joins the FULL reached set every round, so a long-cycle SCC
-    pays O(hops × |E_same|) total backward work where a
-    frontier-minus-visited form pays Σ|frontier| — the same dense form
-    bfs_distances' docstring rejects for whole-graph BFS.  It is the
-    DEFAULT because E_same is the SINGLE COLOR CLASS being extracted
-    (a small slice of the phase's subgraph, not the whole graph) and
-    because hops is bounded by the class diameter, so the batched-job
-    economy that motivated the r9 restructure (adjudicated 13.85 →
-    10.14 s warm at sf0.1, PERF.md) wins on shallow classes.  For
-    DEEP-CYCLE inputs (SCC diameter ≫ probe_every),
-    `backward="frontier"` runs classic frontier BFS instead — per-hop
-    anti-join against the visited set, per-hop materialization, ~3
-    driver barriers per hop — saving matched-row volume (Σ|frontier|
-    vs O(hops × |reached|) rows through the distinct).  MEASURED
-    (r11, PERF.md "g23 backward-mode crossover A/B"): dense wins at
-    every scale this box can hold — 1.6× at a 205k-edge/32-hop thick
-    ring, 1.8× at 12M edges/48 hops — because both modes scan the
-    same-color edge set once per hop (the dominant, identical term);
-    frontier's matched-row saving lost to its 3-jobs/hop barrier tax
-    even at 12M edges.  Keep dense unless the reached-set is so large
-    that the per-hop matched-row shuffle dominates the edge scan (a
-    regime with NO measured local crossover); frontier stays correct
-    either way (randomized Warshall property tests cover both modes).
+    against the final colors) and REPARTITIONED ON dst: the per-hop
+    join keys on dst, so the edge side stays in place and only the
+    reached side shuffles.  DENSE-FORM TRADE-OFF: the self-loop
+    augmentation that buys single-consumption lazy batching re-joins
+    the FULL reached set every round, so a long-cycle SCC pays
+    O(hops × |E_same|) total backward work where a
+    frontier-minus-visited form pays Σ|frontier|.  The dense form is
+    kept anyway: E_same is the SINGLE COLOR CLASS being extracted, and
+    both forms scan it once per hop (the dominant, identical term).
+    MEASURED (PERF.md "g23 backward-mode crossover A/B"): dense beat a
+    frontier BFS (per-hop anti-join against the visited set, ~3 driver
+    barriers per hop) at every scale measured — 1.6× at a
+    205k-edge/32-hop thick ring, 1.8× at 12M edges/48 hops — so the
+    dense form is the only one.
 
     All state is (id, color) pairs or bare ids; every join is an
     equi-join keyed on vertex id.  At 100 TB each lazy round is still
@@ -2193,9 +2139,6 @@ def strongly_connected_components(edges: DataFrame, max_phases: int = 25,
     """
     if probe_every < 1:
         raise ValueError(f"probe_every must be >= 1, got {probe_every}")
-    if backward not in ("dense", "frontier"):
-        raise ValueError(
-            f"backward must be 'dense' or 'frontier', got {backward!r}")
     spark = edges.sparkSession
     width = spark.sparkContext.defaultParallelism
     # the vertex UNIVERSE comes from the raw edge endpoints (self-loops
@@ -2295,84 +2238,43 @@ def strongly_connected_components(edges: DataFrame, max_phases: int = 25,
                               F.col("color").alias("c_s"))
         c_dst = colors.select(F.col("id").alias("dst"),
                               F.col("color").alias("c_d"))
-        e_same_core = (e_cur.join(c_src, "src").join(c_dst, "dst")
-                       .filter(F.col("c_s") == F.col("c_d"))
-                       .select("src", "dst"))
-        roots = colors.filter(F.col("id") == F.col("color")).select("id")
-        if backward == "dense":
-            e_same = (e_same_core
-                      .unionAll(self_loops)
-                      .repartition(width, "dst")
-                      .localCheckpoint(eager=False))
-            reached = roots
-            prev_cnt = None
-            grown = True
-            hops = 0
-            while hops < max_iter:
-                for _ in range(min(probe_every, max_iter - hops)):
-                    reached = (e_same.join(reached.select(F.col("id")
-                                                          .alias("dst")),
-                                           "dst")
-                               .select(F.col("src").alias("id"))
-                               .distinct())
-                    hops += 1
-                reached = reached.localCheckpoint(eager=False)
-                cnt = reached.count()
-                if cnt == prev_cnt:
-                    grown = False
-                    break
-                prev_cnt = cnt
-            if grown:
-                # same confirmation-only round as the color loop: the
-                # reached set only grows (self-loops keep members), so
-                # one extra hop with an unchanged count proves the
-                # fixpoint even when it landed inside the final batch
+        e_same = (e_cur.join(c_src, "src").join(c_dst, "dst")
+                  .filter(F.col("c_s") == F.col("c_d"))
+                  .select("src", "dst")
+                  .unionAll(self_loops)
+                  .repartition(width, "dst")
+                  .localCheckpoint(eager=False))
+        reached = colors.filter(F.col("id") == F.col("color")).select("id")
+        prev_cnt = None
+        grown = True
+        hops = 0
+        while hops < max_iter:
+            for _ in range(min(probe_every, max_iter - hops)):
                 reached = (e_same.join(reached.select(F.col("id")
                                                       .alias("dst")),
                                        "dst")
                            .select(F.col("src").alias("id"))
-                           .distinct()
-                           .localCheckpoint(eager=False))
-                grown = reached.count() != prev_cnt
-        else:
-            # frontier mode (deep-cycle fallback): no self-loop union —
-            # the visited set persists in `reached` and each hop
-            # expands only the NEW vertices, anti-joined against it.
-            # Three consumptions per hop (expand + anti + accumulate),
-            # so both frames materialize fully every hop; total data
-            # work is Σ|frontier| at ~3 driver barriers per hop.
-            e_same = (e_same_core
-                      .repartition(width, "dst")
-                      .localCheckpoint(eager=False))
-            reached = roots.localCheckpoint(eager=False)
-            reached.count()
-            frontier = reached
-            grown = True
-            hops = 0
-            while hops < max_iter + 1:
-                # the +1 round is confirmation-only (the dense-mode
-                # contract): a frontier emitted exactly at hop
-                # max_iter may expand to nothing
-                preds = (e_same.join(frontier.select(F.col("id")
-                                                     .alias("dst")),
-                                     "dst")
-                         .select(F.col("src").alias("id"))
-                         .distinct())
-                frontier = (preds.join(reached, "id", "left_anti")
-                            .localCheckpoint(eager=False))
+                           .distinct())
                 hops += 1
-                if frontier.count() == 0:
-                    grown = False
-                    break
-                reached = (reached.unionAll(frontier)
-                           .localCheckpoint(eager=False))
-                reached.count()  # full: consumed twice next hop
+            reached = reached.localCheckpoint(eager=False)
+            cnt = reached.count()
+            if cnt == prev_cnt:
+                grown = False
+                break
+            prev_cnt = cnt
         if grown:
-            # `hops` is the expansions actually run: both modes run up
-            # to max_iter counted hops plus one confirmation-only hop
-            # (dense adds it after the loop without incrementing hops;
-            # frontier counts it, so hops may read max_iter+1 — the
-            # bound being exceeded is still max_iter; r10 ADVICE).
+            # same confirmation-only round as the color loop: the
+            # reached set only grows (self-loops keep members), so
+            # one extra hop with an unchanged count proves the
+            # fixpoint even when it landed inside the final batch
+            reached = (e_same.join(reached.select(F.col("id")
+                                                  .alias("dst")),
+                                   "dst")
+                       .select(F.col("src").alias("id"))
+                       .distinct()
+                       .localCheckpoint(eager=False))
+            grown = reached.count() != prev_cnt
+        if grown:
             raise RuntimeError(
                 f"SCC containment propagation still expanding after "
                 f"{hops} hops run (bound max_iter={max_iter} plus one "

@@ -12,9 +12,9 @@ typed DataFrames,
 An adjacency slice (the reference's getSlice on edgestore) is then
 `edges.filter(src == id)` with the filter pushed into the parquet scan; a
 label-restricted slice (column-prefix range in the reference) is a plain
-label equality filter.  At 100 TB the edges table is what you bucket/sort
-by `src` so expansions are co-partitioned joins (the Spark analog of the
-MergeTree `ORDER BY (k,c)` clustering, QueryHelper.java:57).
+label equality filter.  The persisted edges (graph/persistence.py) are
+partitioned by edge set and sorted by (src, dst) — the Spark analog of
+the MergeTree `ORDER BY (k,c)` clustering, QueryHelper.java:57.
 """
 
 from __future__ import annotations
@@ -47,22 +47,15 @@ class PropertyGraph:
     label_propagation's single-consumption vote aggregate derives its
     output rows from edge endpoints ∪ vertex self-loops, so a ghost
     endpoint (edge id absent from vertices) would both vote and appear
-    in the output where the old join-back form silently dropped it."""
+    in the output where the old join-back form silently dropped it.
 
-    def __init__(self, vertices: DataFrame, edges: DataFrame,
-                 src_partitioned: bool = False):
+    The two frames carry no partitioning promise: graphs served from the
+    persisted layout are plain parquet scans, and iterative algorithms
+    repartition the edges on their message-join key themselves."""
+
+    def __init__(self, vertices: DataFrame, edges: DataFrame):
         self.vertices = vertices
         self.edges = edges
-        # True when `edges` is already hash-co-partitioned on src (e.g.
-        # served from the bucketed catalog table): iterative consumers
-        # (pagerank, sssp) then skip their own repartition(src) — the
-        # edge side of every message join runs Exchange-free
-        self.src_partitioned = src_partitioned
-        # optionally set by clustered_star_graph: the SAME edge set
-        # served through the dst-bucketed orientation (CSC to edges'
-        # CSR), for algorithms whose half-steps join on dst (hits).
-        # None means no persisted dst layout — consumers repartition.
-        self.edges_by_dst: DataFrame | None = None
 
     def degrees(self, direction: str = "out") -> DataFrame:
         """Per-vertex degree (Gremlin out()/in()/both().count())."""
@@ -94,8 +87,7 @@ _FACT_EDGE_SETS = {"placed", "contains", "supplied_by", "supplier_in_nation"}
 
 
 def star_schema_graph(spark: SparkSession, sf_dir: str,
-                      edge_labels: set[str] | None = None,
-                      clustered: bool | None = None) -> PropertyGraph:
+                      edge_labels: set[str] | None = None) -> PropertyGraph:
     """Property graph over the star schema (FIXTURES.md):
 
     vertices: customer/order/part/supplier/nation/region (offset ids)
@@ -103,29 +95,25 @@ def star_schema_graph(spark: SparkSession, sf_dir: str,
            supplied_by (part→supplier), in_nation (customer→nation,
            supplier→nation), in_region (nation→region).
 
-    `edge_labels` restricts which edge sets are built (skips reading
-    unneeded tables — at scale each edge set is its own scan).
+    `edge_labels` restricts which edge sets are read (partition pruning
+    on the edge set; the vertex universe follows derive_star_graph's
+    table-skipping rule).
 
-    `clustered` (default on; env SPARK_GRAFT_CLUSTERED=0 disables): read
-    the persisted clustered adjacency (persistence.ensure_clustered_graph
-    — built once per sf_dir; edges partitioned by edge set and sorted by
-    (src, dst), vertices partitioned by label), the Spark analog of the
-    reference's MergeTree ``ORDER BY (k,c)`` edgestore layout
-    (QueryHelper.java:57).  Every graph query then starts from ONE narrow
-    pre-derived table with partition pruning on the edge set and
-    row-group pruning on src, instead of re-deriving vertices/edges from
-    the star schema per query."""
-    if clustered is None:
-        import os as _os
-        clustered = _os.environ.get("SPARK_GRAFT_CLUSTERED", "1") == "1"
+    Served from the one persisted layout
+    (persistence.ensure_clustered_graph — built once per sf_dir; edges
+    partitioned by edge set and sorted by (src, dst), vertices
+    partitioned by label), the Spark analog of the reference's
+    MergeTree ``ORDER BY (k,c)`` edgestore (QueryHelper.java:57).  Every
+    graph query starts from that narrow pre-derived table with partition
+    pruning on the edge set and row-group pruning on src, instead of
+    re-deriving vertices/edges from the star schema; derive_star_graph
+    is the in-plan derivation the cache is built from."""
     if edge_labels is not None and not (edge_labels & _KNOWN_EDGE_SETS):
         raise ValueError(
             f"edge_labels {sorted(edge_labels)} match no known edge set "
             f"{sorted(_KNOWN_EDGE_SETS)}")
-    if clustered:
-        from .persistence import clustered_star_graph
-        return clustered_star_graph(spark, sf_dir, edge_labels)
-    return derive_star_graph(spark, sf_dir, edge_labels)
+    from .persistence import clustered_star_graph
+    return clustered_star_graph(spark, sf_dir, edge_labels)
 
 
 def derive_star_graph(spark: SparkSession, sf_dir: str,
@@ -240,26 +228,20 @@ def props_map(*cols: str):
 
 
 def interaction_graph(spark: SparkSession, sf_dir: str,
-                      window: str = "10 minutes",
-                      clustered: bool | None = None) -> PropertyGraph:
+                      window: str = "10 minutes") -> PropertyGraph:
     """Temporal interaction graph sessionized from the events stream
     (FIXTURES.md: `interacted` user→user edges): users co-occurring in
     the same tumbling activity window are linked.
 
-    `clustered` (default on; env SPARK_GRAFT_CLUSTERED=0 disables): serve
-    from the persisted derived graph (persistence.ensure_interaction_graph
-    — the events distinct + window self-join runs ONCE per (sf_dir,
-    window), then every consumer — k-core, LPA, link prediction, degree —
-    starts from the narrow clustered edge list instead of re-deriving
-    from the event log per query; at 100 TB the derivation is a full
-    fact-table pass, the clustered read is not)."""
-    if clustered is None:
-        import os as _os
-        clustered = _os.environ.get("SPARK_GRAFT_CLUSTERED", "1") == "1"
-    if clustered:
-        from .persistence import clustered_interaction_graph
-        return clustered_interaction_graph(spark, sf_dir, window)
-    return derive_interaction_graph(spark, sf_dir, window)
+    Served from the persisted derived graph
+    (persistence.ensure_interaction_graph — the events distinct + window
+    self-join runs ONCE per (sf_dir, window), then every consumer —
+    k-core, LPA, link prediction, degree — starts from the narrow
+    clustered edge list instead of re-deriving from the event log per
+    query; at 100 TB the derivation is a full fact-table pass, the
+    clustered read is not)."""
+    from .persistence import clustered_interaction_graph
+    return clustered_interaction_graph(spark, sf_dir, window)
 
 
 def derive_interaction_graph(spark: SparkSession, sf_dir: str,

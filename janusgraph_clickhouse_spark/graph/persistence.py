@@ -1,9 +1,9 @@
-"""Graph persistence: the warehouse layout for vertices/edges.
+"""Graph persistence: the one warehouse layout for vertices/edges.
 
 The reference's edgestore is one MergeTree table clustered ORDER BY
 (k,c) (QueryHelper.java:57) — rows for one vertex are physically
 adjacent, so adjacency slices are index scans.  The Spark-native
-equivalent layers the same two ideas:
+equivalent layers the same two ideas on plain parquet:
 
 - **partition pruning** — edges partitioned by edge set (`etype`),
   vertices by `label`: a label-restricted traversal reads only its
@@ -15,16 +15,14 @@ equivalent layers the same two ideas:
   src) prunes row groups before decoding anything.
 
 `ensure_clustered_graph` builds this layout ONCE per sf_dir (cached
-under a content-keyed directory) and every `star_schema_graph` call
-reads it — graph queries start from one narrow pre-derived table
-instead of re-deriving vertices/edges from the star schema per query.
-The build also writes the edge set as a BUCKETED external table
-(CLUSTERED BY src, SORTED BY (src, dst) — `_write_bucketed_edges`), the
-full analog of the reference's primary-index scan: full-graph reads
-(`clustered_star_graph` with no label restriction) serve edges through
-it, so every per-superstep pregel/frontier join on `src` runs with NO
-Exchange on the edge side.  The catalog entry is session-scoped DDL over
-persistent bucket files (`bucketed_edges` re-registers per session).
+under a content-keyed directory holding only `edges/`, `vertices/` and
+the `_BUILT` marker) and every `star_schema_graph` call reads it — graph
+queries start from one narrow pre-derived table instead of re-deriving
+vertices/edges from the star schema per query.  It is the only
+persisted copy of the edges: iterative algorithms repartition the edge
+set they read at the session's width once per call (the pregel
+supersteps are plain joins and group-bys over it), and nothing is
+registered in the session catalog.
 """
 
 from __future__ import annotations
@@ -34,7 +32,7 @@ import os
 import shutil
 import tempfile
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.layout import write_sorted_parquet
@@ -62,25 +60,13 @@ def load_graph(spark: SparkSession, path: str) -> PropertyGraph:
 # -- clustered star-schema adjacency (build once per sf_dir) ----------------
 
 # bump when the persisted layout/schema changes so stale caches rebuild
-LAYOUT_VERSION = 4  # v4: dual-orientation bucketed edges — a second
-# bucketed table CLUSTERED BY (dst) SORTED BY (dst, src) beside the src
-# one, so dst-keyed message joins (the HITS hub half-step, reverse-edge
-# fixpoints) also run Exchange-free off disk layout instead of paying an
-# in-memory repartition per algorithm invocation (the CSR + CSC dual).
+LAYOUT_VERSION = 5  # v5: edges/ + vertices/ only — the src- and
+# dst-bucketed edge copies of v4 are gone, so v4 caches (which carry
+# them) are orphaned rather than served.
 # (v3: unit-adaptive events.ts read — caches built by the hard-coded ns
 # loader against the µs fixture derived a 1000×-compressed timeline; the
 # source fingerprint alone can't see a LOADER bug, so the version bump
 # orphans them.)
-
-# bucket count for the bucketed edge table.  MUST equal the session's
-# shuffle width (session.py sets spark.sql.shuffle.partitions = cpus=32):
-# the pregel state side is hash-partitioned at the shuffle width, and
-# when the two sides' partition counts differ EnsureRequirements
-# re-shuffles one of them — matching counts make the whole message join
-# Exchange-free.  Consumers verify the width at runtime and fall back to
-# an explicit repartition when it differs (algorithms.pagerank).  On a
-# real cluster this is the executor-core width, chosen at build time.
-EDGE_BUCKETS = 32
 
 # tables the star-schema graph derives from — their on-disk identity is
 # part of the cache key
@@ -122,9 +108,9 @@ def _source_fingerprint(sf_dir: str) -> str:
 
 
 def _build_token() -> str:
-    """Uniqueness token for temp dirs and build tables: pid alone is NOT
-    unique inside one driver — two threads building concurrently would
-    share a temp dir and a catalog table name and corrupt each other."""
+    """Uniqueness token for build temp dirs: pid alone is NOT unique
+    inside one driver — two threads building concurrently would share a
+    temp dir and corrupt each other."""
     import uuid
     return f"{os.getpid()}_{uuid.uuid4().hex[:8]}"
 
@@ -163,7 +149,7 @@ def _publish(tmp: str, path: str) -> None:
 def clustered_graph_path(sf_dir: str, base_dir: str | None = None) -> str:
     root = base_dir or os.path.join(tempfile.gettempdir(), "jcs_graph_cache")
     key = hashlib.md5(
-        f"{os.path.abspath(sf_dir)}:v{LAYOUT_VERSION}:b{EDGE_BUCKETS}"
+        f"{os.path.abspath(sf_dir)}:v{LAYOUT_VERSION}"
         f":{_source_fingerprint(sf_dir)}".encode()
     ).hexdigest()[:12]
     return os.path.join(root, key)
@@ -196,95 +182,9 @@ def ensure_clustered_graph(spark: SparkSession, sf_dir: str,
      .sortWithinPartitions("label", "id")
      .write.mode("overwrite").partitionBy("label")
      .parquet(os.path.join(tmp, "vertices")))
-    # bucketed table fed from the JUST-WRITTEN partitioned edges, not a
-    # third re-derivation of the star-schema lineage — cheaper AND
-    # guarantees the two layouts are bit-identical
-    written = spark.read.parquet(os.path.join(tmp, "edges"))
-    _write_bucketed_edges(spark, written, tmp)
     open(os.path.join(tmp, "_BUILT"), "w").close()
     _publish(tmp, path)
     return path
-
-
-def _edge_cols_ddl(df: DataFrame) -> str:
-    fields = [f for f in df.schema.fields
-              if f.name in ("src", "dst", "label", "weight")]
-    return ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in fields)
-
-
-# the two persisted bucket orientations (the CSR/CSC dual): src-keyed
-# joins (pregel message sends) and dst-keyed joins (HITS hub half-step,
-# reverse-edge fixpoints) each read their own Exchange-free layout
-_BUCKET_ORIENTATIONS = {"src": ("", "src", "src, dst"),
-                        "dst": ("_dst", "dst", "dst, src")}
-
-
-def _write_bucketed_edges(spark: SparkSession, edges: DataFrame,
-                          tmp_dir: str) -> None:
-    """Write the edge set as BUCKETED external tables inside the build's
-    temp dir (they ride ensure_clustered_graph's atomic rename — one
-    builder, one race mechanism).  Bucketing on src is the full analog of
-    the reference's MergeTree `ORDER BY (k,c)` primary index
-    (QueryHelper.java:57): every pregel/frontier join on src reads
-    co-partitioned buckets with NO Exchange on the edge side, vs the
-    sorted-parquet layout which gives pruning + row-group skipping only.
-    The dst orientation is the same index for the reverse direction —
-    2× the (small, fixed-width) edge footprint buys every dst-keyed
-    half-step the same Exchange-free read.  The catalog entries are
-    session-scoped metadata (re-registered per session); the bucket
-    FILES are what persist."""
-    e = edges.select("src", "dst", "label", "weight")
-    for suffix, key, sort in _BUCKET_ORIENTATIONS.values():
-        loc = os.path.join(tmp_dir, f"edges_bucketed{EDGE_BUCKETS}{suffix}")
-        os.makedirs(loc, exist_ok=True)  # CREATE TABLE…LOCATION stats it
-        tname = f"jcs_build_{_build_token()}"
-        spark.sql(f"DROP TABLE IF EXISTS {tname}")
-        spark.sql(
-            f"CREATE TABLE {tname} ({_edge_cols_ddl(e)}) USING parquet "
-            f"CLUSTERED BY ({key}) SORTED BY ({sort}) "
-            f"INTO {EDGE_BUCKETS} BUCKETS LOCATION '{loc}'")
-        e.write.mode("overwrite").insertInto(tname)
-        spark.sql(f"DROP TABLE {tname}")  # metadata only; files stay
-
-
-def _bucketed_table(spark: SparkSession, sf_dir: str, orientation: str,
-                    base_dir: str | None) -> DataFrame:
-    path = ensure_clustered_graph(spark, sf_dir, base_dir)
-    suffix, key, sort = _BUCKET_ORIENTATIONS[orientation]
-    loc = os.path.join(path, f"edges_bucketed{EDGE_BUCKETS}{suffix}")
-    # the table name keys on the FULL location (not just the basename):
-    # the same sf_dir cached under two base_dirs shares a basename key,
-    # and the first registration would otherwise serve its location to
-    # every later caller
-    table = ("jcs_edges_"
-             + hashlib.md5(os.path.abspath(loc).encode()).hexdigest()[:12])
-    if not spark.catalog.tableExists(table):
-        cols = _edge_cols_ddl(spark.read.parquet(loc))
-        spark.sql(
-            f"CREATE TABLE IF NOT EXISTS {table} ({cols}) USING parquet "
-            f"CLUSTERED BY ({key}) SORTED BY ({sort}) "
-            f"INTO {EDGE_BUCKETS} BUCKETS LOCATION '{loc}'")
-    return spark.table(table)
-
-
-def bucketed_edges(spark: SparkSession, sf_dir: str,
-                   base_dir: str | None = None) -> DataFrame:
-    """The clustered edge set served through its src-BUCKETED catalog
-    table: joins/aggregations keyed on src skip the edge-side Exchange
-    entirely (tests/test_plans.py pins the plan shape).  Registers the
-    external table in this session's catalog if absent — a pure-DDL step
-    over the already-built bucket files."""
-    return _bucketed_table(spark, sf_dir, "src", base_dir)
-
-
-def bucketed_edges_by_dst(spark: SparkSession, sf_dir: str,
-                          base_dir: str | None = None) -> DataFrame:
-    """The same edge set served through the dst-BUCKETED orientation:
-    joins/aggregations keyed on dst (the HITS hub half-step, in-degree
-    style folds inside iterative loops) skip the edge-side Exchange —
-    previously those consumers paid an in-memory repartition(dst) per
-    algorithm invocation."""
-    return _bucketed_table(spark, sf_dir, "dst", base_dir)
 
 
 def clustered_star_graph(spark: SparkSession, sf_dir: str,
@@ -297,25 +197,14 @@ def clustered_star_graph(spark: SparkSession, sf_dir: str,
     vertex universe matches the derivation's table-skipping rule)."""
     path = ensure_clustered_graph(spark, sf_dir, base_dir)
     verts = spark.read.parquet(os.path.join(path, "vertices"))
-    if edge_labels is None:
-        # full-graph reads (pagerank/bfs/sssp) serve edges from the
-        # BUCKETED table: message joins on src run Exchange-free.  The
-        # dst orientation rides along for algorithms with dst-keyed
-        # half-steps (hits) — registration is pure DDL, the scan is lazy
-        g = PropertyGraph(verts.select("id", "label", "name"),
-                          bucketed_edges(spark, sf_dir, base_dir)
-                          .select("src", "dst", "label", "weight"),
-                          src_partitioned=True)
-        g.edges_by_dst = (bucketed_edges_by_dst(spark, sf_dir, base_dir)
-                          .select("src", "dst", "label", "weight"))
-        return g
     edges = spark.read.parquet(os.path.join(path, "edges"))
-    want = edge_labels & _KNOWN_EDGE_SETS
-    edges = edges.filter(F.col("etype").isin(sorted(want)))
-    vlabels = {"customer", "nation", "region"}
-    if want & _FACT_EDGE_SETS:
-        vlabels |= {"order", "part", "supplier"}
-    verts = verts.filter(F.col("label").isin(sorted(vlabels)))
+    if edge_labels is not None:
+        want = edge_labels & _KNOWN_EDGE_SETS
+        edges = edges.filter(F.col("etype").isin(sorted(want)))
+        vlabels = {"customer", "nation", "region"}
+        if want & _FACT_EDGE_SETS:
+            vlabels |= {"order", "part", "supplier"}
+        verts = verts.filter(F.col("label").isin(sorted(vlabels)))
     return PropertyGraph(verts.select("id", "label", "name"),
                          edges.select("src", "dst", "label", "weight"))
 

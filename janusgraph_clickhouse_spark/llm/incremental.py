@@ -420,8 +420,7 @@ def compact_index_catalog(spark: SparkSession, path: str,
                           prefix: str = "jcs_fp_index",
                           num_buckets: int = 16) -> dict[str, DataFrame]:
     """Compact the parquet index into catalog-BUCKETED tables (one per
-    fingerprint table, bucketed+sorted by its join key — the
-    write_clustered_table layout, graph/persistence.py discipline) and
+    fingerprint table, bucketed+sorted by its join key) and
     return handles usable as the `index` argument of
     incremental_dedup_pairs (a READ-SIDE copy: absorb_batch always
     reads and appends the parquet directories, so re-run this after

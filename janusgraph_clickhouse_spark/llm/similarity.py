@@ -349,68 +349,15 @@ def hyperplanes(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]:
     return rng.randn(n_planes, dim).tolist()
 
 
-def _expand_dot_cap() -> int:
-    """Dim bound for the EXPANDED (codegen) literal dot/L2 forms.
-
-    `F.aggregate`/`F.zip_with` lambdas are interpreted PER ELEMENT
-    (guide §4; the repo's unit_expr/exists(isNull) lessons), so a
-    literal-vector dot pays dim·(lambda dispatch) per row; the
-    expanded form is a flat codegen arithmetic chain.  Above the cap
-    the expression tree itself becomes the cost (compile time +
-    codegen method splitting), so the HOF fold stays.  Default chosen
-    by A/B at dim 64 (fixture) and dim 256 (synthetic) — see
-    OPTIMIZATION_r15.md."""
-    import os
-    return int(os.environ.get("SPARK_GRAFT_EXPAND_DOT_DIM", "256"))
-
-
-def _dot_lit_expr(cd: Column, lits: list[float]) -> Column:
-    """Expanded codegen dot of an array column against a LITERAL
-    vector — bit-identical to `dot_expr(cd, F.array(lits))`: the HOF
-    fold computes ((0.0+t0)+t1)+… and 0.0+t0 == t0 for every double
-    (a -0.0 first term flips to +0.0, which every downstream
-    comparison/quantization treats identically), so the left-assoc
-    chain below reproduces the exact summation order.  The size guard
-    reproduces the HOF's NULL pattern: zip_with NULL-pads any length
-    mismatch, making the fold NULL — as does any NULL element, which
-    here poisons its term the same way."""
-    s = F.get(cd, 0) * F.lit(float(lits[0]))
-    for j in range(1, len(lits)):
-        s = s + F.get(cd, j) * F.lit(float(lits[j]))
-    return F.when(F.size(cd) == len(lits), s) \
-            .otherwise(F.lit(None).cast("double"))
-
-
-def _l2_lit_expr(cd: Column, lits: list[float]) -> Column:
-    """Expanded codegen squared-L2 distance to a LITERAL vector —
-    bit-identical to the aggregate(zip_with (a-b)*(a-b)) fold by the
-    same argument as _dot_lit_expr (terms are squares, so not even
-    the -0.0 caveat applies)."""
-    d0 = F.get(cd, 0) - F.lit(float(lits[0]))
-    s = d0 * d0
-    for j in range(1, len(lits)):
-        dj = F.get(cd, j) - F.lit(float(lits[j]))
-        s = s + dj * dj
-    return F.when(F.size(cd) == len(lits), s) \
-            .otherwise(F.lit(None).cast("double"))
-
-
 def lsh_bucket_expr(vec_col: str | Column,
                     planes: list[list[float]]) -> Column:
     """Sign-bit bucket id: bit i = (vec · plane_i) >= 0.  Pure column
-    expressions — the bucketing is computed scan-side, no UDF.  Below
-    the _expand_dot_cap dim bound the dots are EXPANDED codegen
-    arithmetic (r15, guide §4 — the HOF fold dispatches an interpreted
-    lambda per element); bit-identical by _dot_lit_expr's argument."""
+    expressions — the bucketing is computed scan-side, no UDF."""
     c = F.col(vec_col) if isinstance(vec_col, str) else vec_col
     cd = c.cast("array<double>")
-    expand = planes and len(planes[0]) <= _expand_dot_cap()
     bucket = F.lit(0).cast("long")
     for i, p in enumerate(planes):
-        if expand:
-            d = _dot_lit_expr(cd, p)
-        else:
-            d = dot_expr(cd, F.array(*[F.lit(float(x)) for x in p]))
+        d = dot_expr(cd, F.array(*[F.lit(float(x)) for x in p]))
         bit = F.when(d >= 0, F.lit(1).cast("long")) \
                .otherwise(F.lit(0).cast("long"))
         bucket = bucket + F.shiftleft(bit, i)
@@ -463,19 +410,12 @@ def _nearest_cell_expr(vec_col: str | Column,
     class) so the argmin is tie-unambiguous across engines."""
     c = F.col(vec_col) if isinstance(vec_col, str) else vec_col
     cd = c.cast("array<double>")
-    expand = centroids and len(centroids[0]) <= _expand_dot_cap()
     scored = []
     for i, cent in enumerate(centroids):
-        if expand:
-            # r15 guide-§4 form: expanded codegen arithmetic replaces
-            # the per-element interpreted HOF lambdas; bit-identical
-            # (_l2_lit_expr)
-            d2 = _l2_lit_expr(cd, cent)
-        else:
-            lit = F.array(*[F.lit(float(x)) for x in cent])
-            d2 = F.aggregate(
-                F.zip_with(cd, lit, lambda a, b: (a - b) * (a - b)),
-                F.lit(0.0), lambda acc, x: acc + x)
+        lit = F.array(*[F.lit(float(x)) for x in cent])
+        d2 = F.aggregate(
+            F.zip_with(cd, lit, lambda a, b: (a - b) * (a - b)),
+            F.lit(0.0), lambda acc, x: acc + x)
         dq = F.floor(d2 * F.lit(1e6) + F.lit(0.5)).cast("long")
         scored.append(F.struct(dq.alias("d"), F.lit(i).alias("i")))
     return F.array_min(F.array(*scored))["i"]

@@ -181,9 +181,8 @@ def query(name: str, oracle: str | None = None):
 # 3. rule 2, r10 changes: g23_scc — the r9 ADVICE fixes landed this
 #    round (confirmation-only probe beyond max_iter in both loops,
 #    full-count phase-exit probe — interleaved A/B: perf-neutral),
-#    plus the backward="frontier" deep-cycle mode (default dense path
-#    refactored but plan-identical; both modes Warshall
-#    property-tested), postdating its r9 row;
+#    plus the backward="frontier" deep-cycle mode (since removed:
+#    dense won at every measured scale), postdating its r9 row;
 # 4. 3 spares from the 49 r7-row names (stalest pool; they fall out
 #    at r11): g04 connected components + g19 personalized pagerank
 #    (iterative-family evidence is worth most; also lifts the g
@@ -248,32 +247,43 @@ def query(name: str, oracle: str | None = None):
 # 3. spares (3): g07 g08 g05 — stalest g names (r12 rows), family
 #    sentinel; g05 is also a small-input shuffle-width target this
 #    round.  Family sentinels in-window: 22 q, 3 g, 21 l, 4 s.
+# ROUND-16 WINDOW (re-derived from the correctness files via
+# `python tools/rotation.py`).  Histogram after r15: 50xr15 + 49xr14 +
+# 45xr13 + 36xr12; zero reds, no rule-3 traffic.  Window:
+# 1. LEAD COHORT (36): the r12-row names r15 left unwindowed — their
+#    r12 rows leave the horizon {r13,r14,r15,r16} when r16's file lands.
+# 2. rule 2 (14): the queries whose plans changed this round and that
+#    are not lead names, r13 rows first, then r14.  Graph: the
+#    full-graph readers now scan the etype-partitioned edges/ parquet
+#    instead of the src/dst bucketed tables, and SCC lost its frontier
+#    mode — g18 g20 g21 g22 g23 g27 (r13), g06 g14 g19 (r14).  LLM:
+#    the literal-vector dot/L2 in lsh_bucket_expr and
+#    _nearest_cell_expr lost the expanded codegen form and always run
+#    the HOF fold — l17 l27 (r13), l11 l12 l51 (r14).  g05, l50 and l55
+#    changed too but hold r15 rows; g10/g32 changed but are lead names.
+# Family sentinels in-window: 12 q, 15 g, 18 l, 5 s.
 DRIVER_PRIORITY: list[str] = [
-    # rule 1: the 36 horizon-critical r11-row names
-    "q05_unordered_scan_topk", "q07_group_count",
-    "q08_customer_top_parts", "q09_semi_join", "q10_anti_join",
-    "q11_shipping_priority", "q12_region_revenue",
-    "q13_predicate_library", "q14_union_dedup", "q15_per_group_topk",
-    "q16_distinct_pairs", "q22_left_outer_distribution", "q23_having",
-    "q24_correlated_min", "q25_count_distinct", "q27_set_operations",
-    "q28_sql_surface", "q31_statistics", "q32_cross_nation_volume",
-    "q33_large_order_customers", "q34_window_analytics",
-    "q36_cube_grouping",
-    "l09_fingerprint", "l20_vocab_topk", "l21_decontaminate",
-    "l22_domain_mixture", "l23_repetition_stats",
-    "l24_sequence_packing", "l25_tfidf_topk", "l26_bigram_lm_score",
-    "l28_user_event_sequences", "l29_length_band_filter",
-    "l47_entropy_quality",
-    "s04_dedup_keep_first", "s05_asof_join", "s15_pit_enrich",
-    # rule 2: s03 (r15 oracle boundary fix) + 10 r14-changed names
-    # without a post-change driver row (l21/l25/l26 are lead names)
-    "s03_session_window",
-    "l03_minhash_lsh_pairs", "l19_knn_join", "l32_containment_pairs",
-    "l34_bloom_decontaminate", "l40_pq_topk", "l50_knn_classify",
-    "l55_ann_recall_eval", "l56_source_overlap_matrix",
-    "l62_winnow_pairs", "l30_incremental_dedup",
-    # rule 5/stalest-first: 3 spares, g sentinels + one s (r12 rows)
-    "g07_traversal_semi_anti", "g08_path_query", "g05_bfs_distances",
+    # rule 1: the 36 horizon-critical r12-row names
+    "g09_in_traversal", "g10_weighted_sssp", "g11_interaction_degree",
+    "g13_topo_levels", "g29_copurchase_lift", "g32_weighted_sssp",
+    "l13_hash_split", "l14_groupwise_normalize", "l15_label_centroids",
+    "l16_pipeline_composed", "l18_dedup_clusters",
+    "l31_boilerplate_score", "l46_lsh_banding_audit",
+    "l48_url_canonical_dedup", "l49_fuzzy_linkage",
+    "l52_source_report", "l57_audio_rms", "l63_embedding_outliers",
+    "l67_leakage_free_split",
+    "q18_json_extract", "q20_group_collect", "q21_array_functions",
+    "q26_rollup", "q29_pivot", "q35_range_step", "q37_geo_within",
+    "q41_hll_distinct", "q42_cms_heavy_hitters", "q44_delta_sum",
+    "q45_ttl_partition_prune", "q46_hll_mergeable_rollup",
+    "s11_stateful_running_totals", "s12_incremental_rollup",
+    "s14_gap_fill", "s16_lttb_downsample", "s20_incremental_hll",
+    # rule 2: queries whose plans changed this round (r13, then r14)
+    "g18_hits", "g20_random_walks", "g21_harmonic_centrality",
+    "g22_biased_walks", "g23_scc", "g27_diameter",
+    "l17_lsh_blocked_near_dup", "l27_semantic_dedup_clusters",
+    "g06_pagerank", "g14_repeat_until", "g19_personalized_pagerank",
+    "l11_ann_lsh_topk", "l12_ivf_ann_topk", "l51_hard_negatives",
 ]
 # SATURATION AMENDMENT (late r5): the registry crossed 100 queries
 # (g23/g24/l34 registered mid-round, landing in the TAIL — the r5

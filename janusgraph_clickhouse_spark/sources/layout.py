@@ -5,51 +5,36 @@ The reference gets efficient range slices from MergeTree clustering:
 ``CREATE TABLE … ENGINE = MergeTree() ORDER BY (k,c)``
 (QueryHelper.java:57) — the primary index makes every (k, c-range) read an
 index scan.  In Spark the equivalent physical choices are ours to make at
-WRITE time (SURVEY §4 "layout choice is ours, not Catalyst's"):
+WRITE time (SURVEY §4 "layout choice is ours, not Catalyst's"), and every
+writer here produces plain parquet directories — no catalog table, so a
+layout survives the session that wrote it:
 
-- **bucketing** on the key column co-locates equal keys → joins and
-  groupBys on that key skip the shuffle entirely (bucket pruning for
-  point lookups);
-- **sortWithinPartitions** on (key, col) gives parquet row-group min/max
-  stats that act like the MergeTree primary index: a (k, c-range) filter
-  prunes row groups before decoding anything;
+- **repartition + sortWithinPartitions** on (key, col) clusters equal
+  keys into the same files and gives parquet row-group min/max stats
+  that act like the MergeTree primary index: a (k, c-range) filter
+  prunes row groups before decoding anything (`write_sorted_parquet`);
+- **Z-order** generalizes that to several dimensions at once
+  (`write_zordered_parquet`);
 - **partitionBy** on a coarse column (e.g. label, date) is the
-  partition-pruning layer above that.
+  partition-pruning layer above that, and makes expiry a directory
+  drop (`apply_ttl`).
 
-At 100 TB the adjacency table (edges bucketed by src, sorted by (src,
-label, dst)) is what makes frontier joins co-partitioned instead of
-all-shuffle.
+The persisted graph (graph/persistence.py) is one such layout: edges
+partitioned by edge set and sorted by (src, dst).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-
-def write_clustered_table(df: DataFrame, table_name: str, key_col: str,
-                          sort_cols: list[str], num_buckets: int = 16,
-                          partition_by: list[str] | None = None) -> None:
-    """Write a bucketed + sorted managed table (the ORDER BY (k,c) analog).
-
-    Bucketed tables require the catalog (saveAsTable); readers that join
-    or aggregate on `key_col` then avoid the shuffle when bucket specs
-    line up on both sides.
-    """
-    writer = (df.write.mode("overwrite")
-              .bucketBy(num_buckets, key_col)
-              .sortBy(*sort_cols))
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.saveAsTable(table_name)
 
 
 def write_sorted_parquet(df: DataFrame, path: str, sort_cols: list[str],
                          repartition_col: str | None = None,
                          num_files: int | None = None) -> None:
-    """Plain-parquet variant when no catalog is available: repartition by
-    the key (clusters equal keys into the same files) then sort within
-    partitions so row-group min/max stats prune range scans."""
+    """Clustered parquet: repartition by the key (clusters equal keys
+    into the same files) then sort within partitions so row-group
+    min/max stats prune range scans."""
     if num_files is not None and num_files < 1:
         raise ValueError(f"num_files={num_files} must be >= 1")
     out = df
@@ -62,10 +47,6 @@ def write_sorted_parquet(df: DataFrame, path: str, sort_cols: list[str],
         # incoming partitioning df had)
         out = out.repartition(num_files)
     out.sortWithinPartitions(*sort_cols).write.mode("overwrite").parquet(path)
-
-
-def table_scan(spark: SparkSession, table_name: str) -> DataFrame:
-    return spark.table(table_name)
 
 
 def zorder_key(cols: list[str | Column], bits: int = 16) -> Column:

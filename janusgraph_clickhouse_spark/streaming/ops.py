@@ -197,11 +197,21 @@ def foreach_batch_upsert(stream: DataFrame, target_path: str,
     (ClickhouseKeyColumnValueStore.java:118-121) without per-row ALTER
     DELETE mutations (QueryHelper.java:73).
 
-    Plain-parquet caveat (documented, not hidden): read-modify-overwrite
-    of the whole table is atomic only per micro-batch and assumes one
-    writer.  At real scale back the target with a transactional table
-    format or partition-overwrite discipline; the operator shape
-    (anti-join ∪ additions inside foreachBatch) is identical.
+    Each batch writes the merged table ONCE, to `<target>_stage`, then
+    swaps it in with two renames (target → `<target>_old`, stage →
+    target) and deletes the old copy.  A batch that dies between the two
+    renames leaves no target; the next batch (the replay of the failed
+    one — foreachBatch is at-least-once) first puts a complete copy back
+    — the finished stage if its `_SUCCESS` marker is there, else the
+    set-aside old table — and never mistakes the gap for an empty table.
+    Replaying a batch onto either copy converges, because the upsert is
+    idempotent.
+
+    Plain-parquet caveat (documented, not hidden): the whole table is
+    rewritten per micro-batch and one writer is assumed.  At real scale
+    back the target with a transactional table format or
+    partition-overwrite discipline; the operator shape (anti-join ∪
+    additions inside foreachBatch) is identical.
 
     At-least-once transport (Kafka redelivery) can duplicate a key
     WITHIN one micro-batch; a keyed table must still end with one row
@@ -221,26 +231,35 @@ def foreach_batch_upsert(stream: DataFrame, target_path: str,
                         .filter(F.col("__rn") == 1).drop("__rn"))
         else:
             batch_df = batch_df.dropDuplicates(key_cols)
+        import os
+        import shutil
+        stage, old = target_path + "_stage", target_path + "_old"
+        if not os.path.exists(target_path):
+            # heal a batch that died between the two swap renames: a
+            # missing target beside a complete copy is NOT a first batch
+            if os.path.exists(os.path.join(stage, "_SUCCESS")):
+                os.rename(stage, target_path)
+            elif os.path.exists(old):
+                os.rename(old, target_path)
+        if os.path.exists(old):
+            shutil.rmtree(old)  # a finished swap whose cleanup was lost
         # existence decided by an explicit filesystem probe, NEVER by a
         # broad read-failure catch: a corrupt footer or transient FS
         # error at read time must FAIL THE BATCH loudly — treating it
-        # as "table does not exist" would take the else branch and
-        # overwrite the accumulated table with this one batch's rows
-        # (unrecoverable data loss that replay cannot converge from)
-        import os
-        import shutil
+        # as "table does not exist" would replace the accumulated table
+        # with this one batch's rows (unrecoverable data loss that
+        # replay cannot converge from)
         exists = os.path.exists(target_path)
+        merged = batch_df
         if exists:
-            current = spark.read.parquet(target_path)
-            merged = mutate(current, additions=batch_df, deletions=None,
+            merged = mutate(spark.read.parquet(target_path),
+                            additions=batch_df, deletions=None,
                             key_cols=key_cols)
-            stage = target_path + "_stage"
-            merged.write.mode("overwrite").parquet(stage)
-            staged = spark.read.parquet(stage)
-            staged.write.mode("overwrite").parquet(target_path)
-            shutil.rmtree(stage, ignore_errors=True)
-        else:
-            batch_df.write.mode("overwrite").parquet(target_path)
+        merged.write.mode("overwrite").parquet(stage)
+        if exists:
+            os.rename(target_path, old)
+        os.rename(stage, target_path)
+        shutil.rmtree(old, ignore_errors=True)
 
     writer = stream.writeStream.foreachBatch(upsert).outputMode("update")
     if checkpoint_dir:

@@ -54,8 +54,6 @@ def test_degenerate_graphs_every_operator_returns(spark):
         ("betw", lambda g: A.betweenness_approx(g.edges).collect()),
         ("scc", lambda g: A.strongly_connected_components(
             g.edges).collect()),
-        ("scc_frontier", lambda g: A.strongly_connected_components(
-            g.edges, backward="frontier").collect()),
     ]
     for case, rows in [("edgeless", []),
                        ("selfloop", [(1, 1, "e", 1.0)])]:

@@ -428,7 +428,7 @@ def test_seeded_random_walks_sink_terminates(spark):
 def test_clustered_interaction_matches_derivation(spark, sf_smoke):
     from janusgraph_clickhouse_spark.graph.model import (
         derive_interaction_graph, interaction_graph)
-    g_c = interaction_graph(spark, sf_smoke, "10 minutes", clustered=True)
+    g_c = interaction_graph(spark, sf_smoke, "10 minutes")
     g_d = derive_interaction_graph(spark, sf_smoke, "10 minutes")
     assert (sorted((r.src, r.dst) for r in g_c.edges.collect())
             == sorted((r.src, r.dst) for r in g_d.edges.collect()))

@@ -473,40 +473,31 @@ def test_scc_fixpoint_inside_final_batch(spark):
         strongly_connected_components(e, max_iter=4, probe_every=4)
 
 
-def test_scc_frontier_mode_deep_cycle_and_bounds(spark):
-    """backward='frontier' exists FOR deep cycles: a 40-cycle (class
-    diameter ≫ probe_every) resolves with total backward data work
-    Σ|frontier| = 40 instead of the dense form's 40 × |E_same|.  Both
-    modes must agree on the mixed graph; max_iter bounds progress
-    hops only (a 6-cycle needs 5 progress rounds + 1 confirmation in
-    BOTH loops, so max_iter=5 passes and max_iter=4 refuses loudly —
-    the forward color loop trips first); an unknown mode is a loud
-    ValueError."""
+def test_scc_deep_cycle_and_bounds(spark):
+    """A 40-cycle (class diameter ≫ probe_every) beside a 2-cycle, a
+    self-loop singleton and a one-way tail resolves exactly; max_iter
+    bounds progress hops only (a 6-cycle needs 5 progress rounds + 1
+    confirmation in BOTH loops, so max_iter=5 passes and max_iter=4
+    refuses loudly — the forward color loop trips first)."""
     import pytest
     from janusgraph_clickhouse_spark.graph.algorithms import (
         strongly_connected_components)
     deep = [(i, (i + 1) % 40) for i in range(40)]
     mixed = deep + [(40, 41), (41, 40), (100, 100), (7, 50)]
     e = spark.createDataFrame(mixed, "src long, dst long")
-    dense = {r.id: r.component
-             for r in strongly_connected_components(e).collect()}
-    frontier = {r.id: r.component
-                for r in strongly_connected_components(
-                    e, backward="frontier").collect()}
-    assert dense == frontier
-    assert frontier[0] == 39 and frontier[40] == 41
-    assert frontier[100] == 100 and frontier[50] == 50
+    got = {r.id: r.component
+           for r in strongly_connected_components(e).collect()}
+    assert all(got[i] == 39 for i in range(40))
+    assert got[40] == got[41] == 41
+    assert got[100] == 100 and got[50] == 50
     six = spark.createDataFrame([(i, (i + 1) % 6) for i in range(6)],
                                 "src long, dst long")
     got = {r.id: r.component
            for r in strongly_connected_components(
-               six, max_iter=5, backward="frontier").collect()}
+               six, max_iter=5).collect()}
     assert got == {i: 5 for i in range(6)}
     with pytest.raises(RuntimeError, match="raise max_iter"):
-        strongly_connected_components(six, max_iter=4,
-                                      backward="frontier")
-    with pytest.raises(ValueError, match="backward"):
-        strongly_connected_components(six, backward="eager")
+        strongly_connected_components(six, max_iter=4)
 
 
 def test_hits_periodic_checkpoint_boundary(spark):

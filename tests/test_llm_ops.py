@@ -1293,12 +1293,23 @@ def test_auto_planes_scales_with_corpus(spark):
     def auto(m, budget=256):
         return _auto_planes(spark.range(m), "auto", budget)
 
+    class Counted:
+        """A corpus that reports `m` rows: counting spark.range(10**12)
+        is a minutes-long scan that tests nothing _auto_planes does
+        (it reads only df.count())."""
+
+        def __init__(self, m):
+            self.m = m
+
+        def count(self):
+            return self.m
+
     assert auto(500) == 4       # sf0.01 fixture → oracle's value
     assert auto(2000) == 4      # sf0.1 fixture → oracle's value
     assert auto(16 * 256) == 4          # boundary (m = 2^4·budget)
     assert auto(16 * 256 + 1) == 5      # first flip
-    assert auto(10**9) == 22    # 1B vectors → ~4M buckets/table
-    assert auto(10**12) == 24   # cap bounds plan-literal size
+    assert _auto_planes(Counted(10**9), "auto", 256) == 22  # ~4M buckets
+    assert _auto_planes(Counted(10**12), "auto", 256) == 24  # cap
     # explicit ints pass through without a count job
     assert _auto_planes(spark.range(1), 7, 256) == 7
 

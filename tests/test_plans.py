@@ -86,78 +86,6 @@ def test_clustered_graph_partition_pruning(spark, sf_smoke):
     assert n_joins <= 2, f"expected <=2 joins (got {n_joins}):\n{plan}"
 
 
-def test_bucketed_pregel_join_has_no_edge_exchange(spark, sf_smoke):
-    """The per-superstep message join on src must show NO Exchange on the
-    bucketed edge side (and a Bucketed FileScan under it) — the full
-    analog of the reference's MergeTree ORDER BY (k,c) primary-index scan
-    (QueryHelper.java:57).  The contrib/state side, already partitioned
-    at the matching width, needs no new exchange either."""
-    from pyspark.sql import functions as F
-
-    from janusgraph_clickhouse_spark.graph.algorithms import _edges_aligned
-    from janusgraph_clickhouse_spark.graph.model import star_schema_graph
-
-    old_bc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    old_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        # the test session runs at width 8; alignment (and the bench/
-        # production session) is the EDGE_BUCKETS width
-        spark.conf.set("spark.sql.shuffle.partitions", "32")
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        g = star_schema_graph(spark, sf_smoke, clustered=True)
-        assert g.src_partitioned and _edges_aligned(g)
-        e = g.edges.select("src", "dst")
-        contrib = (g.vertices.select("id").repartition(32, "id")
-                   .select(F.col("id").alias("src"),
-                           F.lit(1.0).alias("msg")))
-        plan = _plan(e.join(contrib, "src"))
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_bc)
-        spark.conf.set("spark.sql.shuffle.partitions", old_sp)
-    assert "Bucketed: true" in plan, plan
-    # edge branch = between the join's first child marker and the second
-    # child; it must contain the bucketed scan and no Exchange
-    edge_branch = plan.split(":- ")[1].split("+- Sort")[0]
-    assert "Exchange" not in edge_branch, plan
-
-
-def test_dual_orientation_half_steps_have_no_edge_exchange(spark, sf_smoke):
-    """HITS alternates a src-keyed and a dst-keyed message join; the v4
-    substrate persists BOTH bucket orientations (CSR + CSC), so each
-    half-step must read its own bucketed layout with NO Exchange on the
-    edge side — previously the dst half-step paid an in-memory
-    repartition(dst) per invocation."""
-    from pyspark.sql import functions as F
-
-    from janusgraph_clickhouse_spark.graph.algorithms import _edges_aligned
-    from janusgraph_clickhouse_spark.graph.model import star_schema_graph
-
-    old_bc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    old_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", "32")
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        g = star_schema_graph(spark, sf_smoke, clustered=True)
-        assert g.src_partitioned and _edges_aligned(g)
-        assert g.edges_by_dst is not None
-        state = (g.vertices.select("id").repartition(32, "id")
-                 .select("id", F.lit(1.0).alias("score")))
-        halves = {
-            "src": g.edges.select("src", "dst").join(
-                state.select(F.col("id").alias("src"), "score"), "src"),
-            "dst": g.edges_by_dst.select("src", "dst").join(
-                state.select(F.col("id").alias("dst"), "score"), "dst"),
-        }
-        for key, df in halves.items():
-            plan = _plan(df)
-            assert "Bucketed: true" in plan, (key, plan)
-            edge_branch = plan.split(":- ")[1].split("+- Sort")[0]
-            assert "Exchange" not in edge_branch, (key, plan)
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_bc)
-        spark.conf.set("spark.sql.shuffle.partitions", old_sp)
-
-
 def test_clustered_restriction_matches_derivation(spark, sf_smoke):
     """The clustered read restricted by edge_labels must reproduce the
     in-plan derivation exactly — including NOT leaking supplier→nation
@@ -166,8 +94,7 @@ def test_clustered_restriction_matches_derivation(spark, sf_smoke):
         derive_star_graph, star_schema_graph)
 
     for labels in ({"in_nation", "in_region"}, {"placed"}, None):
-        clustered = star_schema_graph(spark, sf_smoke, labels,
-                                      clustered=True)
+        clustered = star_schema_graph(spark, sf_smoke, labels)
         derived = derive_star_graph(spark, sf_smoke, labels)
         ce = sorted(map(tuple, clustered.edges
                         .select("src", "dst", "label").collect()))
@@ -177,6 +104,30 @@ def test_clustered_restriction_matches_derivation(spark, sf_smoke):
         cv = sorted(r.id for r in clustered.vertices.collect())
         dv = sorted(r.id for r in derived.vertices.collect())
         assert cv == dv, f"vertex mismatch for {labels}"
+
+
+def test_graph_cache_is_one_parquet_layout(spark, sf_smoke):
+    """The persisted graph is plain parquet and nothing else: building
+    and serving the star-schema and interaction graphs registers no
+    catalog table, and each cache directory holds only `edges/`,
+    `vertices/` and the `_BUILT` marker (no second copy of the edges
+    in another layout)."""
+    import os
+
+    from janusgraph_clickhouse_spark.graph.model import (
+        interaction_graph, star_schema_graph)
+    from janusgraph_clickhouse_spark.graph.persistence import (
+        ensure_clustered_graph, ensure_interaction_graph)
+
+    before = sorted(t.name for t in spark.catalog.listTables())
+    paths = [ensure_clustered_graph(spark, sf_smoke),
+             ensure_interaction_graph(spark, sf_smoke, "10 minutes")]
+    assert star_schema_graph(spark, sf_smoke).edges.count() > 0
+    assert star_schema_graph(spark, sf_smoke, {"placed"}).edges.count() > 0
+    assert interaction_graph(spark, sf_smoke, "10 minutes").edges.count() > 0
+    assert sorted(t.name for t in spark.catalog.listTables()) == before
+    for path in paths:
+        assert sorted(os.listdir(path)) == ["_BUILT", "edges", "vertices"]
 
 
 def test_sequence_packing_has_no_global_single_partition_window(

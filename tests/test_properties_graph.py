@@ -123,41 +123,6 @@ def test_scc_random_digraphs_match_reference(spark, edges):
 
 
 @SPARK_FAST
-@given(edges=st.sets(st.tuples(st.integers(0, 5), st.integers(0, 5)),
-                     min_size=1, max_size=14))
-def test_scc_frontier_mode_matches_reference(spark, edges):
-    """backward='frontier' (the r10 deep-cycle fallback: per-hop
-    anti-join BFS instead of the dense lazily-batched reachability
-    fixpoint) must produce the identical partition on arbitrary small
-    digraphs — same Warshall reference as the dense-mode test, so a
-    divergence between the two modes cannot hide behind a shared
-    wrong answer."""
-    from janusgraph_clickhouse_spark.graph.algorithms import (
-        strongly_connected_components)
-    verts = sorted({v for p in edges for v in p})
-    idx = {v: i for i, v in enumerate(verts)}
-    n = len(verts)
-    reach = [[False] * n for _ in range(n)]
-    for a, b in edges:
-        reach[idx[a]][idx[b]] = True
-    for k in range(n):
-        for i in range(n):
-            if reach[i][k]:
-                for j in range(n):
-                    if reach[k][j]:
-                        reach[i][j] = True
-    want = {v: max(u for u in verts
-                   if u == v or (reach[idx[v]][idx[u]]
-                                 and reach[idx[u]][idx[v]]))
-            for v in verts}
-    e = spark.createDataFrame(sorted(edges), "src long, dst long")
-    got = {r.id: r.component
-           for r in strongly_connected_components(
-               e, backward="frontier").collect()}
-    assert got == want
-
-
-@SPARK_FAST
 @given(pairs=st.sets(st.tuples(st.integers(0, 6), st.integers(0, 6)),
                      min_size=1, max_size=16))
 def test_lpa_random_graphs_match_reference(spark, pairs):

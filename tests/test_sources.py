@@ -300,32 +300,6 @@ def test_apply_ttl_drops_whole_partitions_only(spark, tmp_path):
     assert "PartitionFilters" in plan
 
 
-def test_write_clustered_table_bucket_spec(spark, sf_smoke):
-    """write_clustered_table produces a catalog table with the declared
-    bucket spec and sorted-by columns, and joins on the bucket key read
-    back correctly (the bucketBy path had zero tests before r7 —
-    COVERAGE attributed it to a test that never called bucketBy)."""
-    from janusgraph_clickhouse_spark.sources import load_table
-    from janusgraph_clickhouse_spark.sources.layout import (
-        table_scan, write_clustered_table)
-    name = "t_clustered_r7"
-    spark.sql(f"DROP TABLE IF EXISTS {name}")
-    orders = load_table(spark, sf_smoke, "orders").limit(500)
-    write_clustered_table(orders, name, key_col="o_custkey",
-                          sort_cols=["o_custkey", "o_orderdate"],
-                          num_buckets=4)
-    desc = "\n".join(r.data_type for r in
-                     spark.sql(f"DESCRIBE TABLE EXTENDED {name}")
-                     .collect() if r.data_type)
-    assert "4 buckets" in desc or "Num Buckets" in desc + "\n".join(
-        r.col_name for r in
-        spark.sql(f"DESCRIBE TABLE EXTENDED {name}").collect())
-    got = table_scan(spark, name)
-    assert got.count() == 500
-    assert sorted(got.columns) == sorted(orders.columns)
-    spark.sql(f"DROP TABLE {name}")
-
-
 def test_zorder_key_rejects_out_of_domain(spark):
     """Out-of-range values raise loudly instead of silently colliding
     distant rows into one Z-key (r7 review)."""

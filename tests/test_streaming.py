@@ -82,6 +82,60 @@ def test_foreach_batch_upsert_delete_before_add(spark, events_dir, tmp_path):
     assert final.select("event_id").distinct().count() == events.count()
 
 
+@pytest.mark.parametrize("survivor", ["stage", "old"])
+def test_foreach_batch_upsert_heals_crash_between_swap_renames(
+        spark, events_dir, tmp_path, monkeypatch, survivor):
+    """A batch that dies after moving the target aside but before
+    renaming the finished stage into place leaves NO target.  The next
+    batch (the replay) must put a complete copy back — the finished
+    stage, or the set-aside old table when the stage is gone — and
+    merge onto it.  Taking the first-batch branch instead would keep
+    only that batch's rows and lose the `extra` keys the stream never
+    carries."""
+    import os
+
+    target = str(tmp_path / "target.parquet")
+    stage, old = target + "_stage", target + "_old"
+    events = load_table(spark, events_dir, "events")
+    seed = events.limit(100).withColumn("value", F.lit(-999.0))
+    extra = (events.limit(50)
+             .withColumn("event_id", F.col("event_id") + 10**12))
+    seed.unionByName(extra).write.mode("overwrite").parquet(target)
+
+    real_rename = os.rename
+
+    def crash_before_stage_lands(src, dst):
+        if str(src) == stage and str(dst) == target:
+            raise OSError("injected crash between the swap renames")
+        return real_rename(src, dst)
+
+    ck = str(tmp_path / "ck")
+    monkeypatch.setattr(os, "rename", crash_before_stage_lands)
+    q = foreach_batch_upsert(events_stream(spark, events_dir), target,
+                             key_cols=["event_id"], checkpoint_dir=ck) \
+        .trigger(availableNow=True).start()
+    with pytest.raises(Exception):
+        q.awaitTermination()
+    monkeypatch.setattr(os, "rename", real_rename)
+    assert not os.path.exists(target)
+    assert os.path.exists(os.path.join(stage, "_SUCCESS"))
+    assert os.path.exists(old)
+    if survivor == "old":
+        shutil.rmtree(stage)
+
+    q = foreach_batch_upsert(events_stream(spark, events_dir), target,
+                             key_cols=["event_id"], checkpoint_dir=ck) \
+        .trigger(availableNow=True).start()
+    q.awaitTermination()
+
+    final = spark.read.parquet(target)
+    n = events.count() + 50
+    assert final.count() == n
+    assert final.select("event_id").distinct().count() == n
+    assert final.filter(F.col("value") == -999.0).count() == 0
+    assert not os.path.exists(stage) and not os.path.exists(old)
+
+
 def test_late_data_drop_policy(spark, sf_smoke):
     """Watermark semantics sanity on batch: rows older than the horizon
     would be dropped in streaming; here we verify the windowing itself
