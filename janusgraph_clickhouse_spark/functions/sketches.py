@@ -15,7 +15,6 @@ that can md5 — determinism as a design property, not a test accident
 from __future__ import annotations
 
 import functools
-import math
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -100,15 +99,6 @@ def _kmv_hashes(df: DataFrame, col: str) -> DataFrame:
     return (df.filter(F.col(col).isNotNull())
             .select(md5_long60(F.col(col).cast("string")).alias("h"))
             .distinct())
-
-
-def kmv_sketch(df: DataFrame, col: str, k: int = 32) -> DataFrame:
-    """The k minimum distinct hash values of ``col`` (ClickHouse
-    uniqCombined's KMV half / the theta-sketch idiom).  orderBy+limit
-    compiles to TakeOrderedAndProject — each partition keeps its local
-    k minima and the driver merges k-sized heaps, so the sketch build
-    is one distinct-aggregate plus an O(k) fold at any corpus size."""
-    return _kmv_hashes(df, col).orderBy("h").limit(k)
 
 
 def _kmv_stats(sketch: DataFrame) -> DataFrame:

@@ -2,14 +2,24 @@
 
 The reference system computes these by exporting the edgestore to an
 external graph computer (JanusGraph's SparkGraphComputer path); here they
-are native DataFrame iteration via the pregel kernel:
+are native DataFrame iteration.  Fixpoints that check convergence run on
+the pregel kernel (`pregel.py`: the caller writes `step(state)` and marks
+changed rows; the kernel observes their count on its checkpoint job):
 
-- degrees          — one hash aggregate
-- pagerank         — score-push iteration, damping 0.85
-- connected_components — min-id label propagation (converges to the
-                     minimum vertex id per component)
-- bfs_distances    — frontier expansion with min-distance aggregation
-- triangle_count   — self-join on canonical undirected edges
+- pagerank / personalized_pagerank — score-push iteration, damping 0.85
+- connected_components — `_edge_components`: min-id label propagation
+                     with pointer jumping, the one components loop
+                     (also behind `_component_split` and
+                     llm.dedup.pairs_to_clusters); `_bipartite_components`
+                     runs the same update over an incidence
+- shortest_paths / longest_path_levels — min / max edge relaxation
+- strongly_connected_components — forward coloring + backward reach,
+                     both lazily batched on the kernel
+
+Loops with one materializing action per round, or a fixed round count
+chained lazily (bfs_distances, k_core, hits, label_propagation,
+harmonic_centrality, betweenness_approx, _frontier_min_fixpoint), keep
+their own drivers.
 """
 
 from __future__ import annotations
@@ -30,10 +40,10 @@ def pagerank(graph: PropertyGraph, max_iter: int = 10,
 
     tol: early-exit convergence threshold — stop when no vertex's rank
     moved by more than tol in a superstep.  None (default) runs exactly
-    max_iter supersteps: the probe costs one old-vs-new join per round,
-    and a FIXED superstep count is what makes the result reproducible
-    against a bounded-iteration oracle; pass tol when iterating to a
-    fixpoint matters more than a deterministic step count.
+    max_iter supersteps: a FIXED superstep count is what makes the
+    result reproducible against a bounded-iteration oracle; pass tol
+    when iterating to a fixpoint matters more than a deterministic step
+    count.
     """
     v = graph.vertices.select("id")
     n_total = v.count()  # scalar; one tiny job, reused every superstep
@@ -41,53 +51,47 @@ def pagerank(graph: PropertyGraph, max_iter: int = 10,
     # state: id, rank, out_deg (out_deg=0 → dangling)
     state = (v.join(deg, "id", "left")
               .fillna(0, subset=["out_deg"])
-              .withColumn("rank", F.lit(1.0)))
+              .withColumn("rank", F.lit(1.0))
+              .localCheckpoint(eager=True))
     # cache the edge set partitioned on the message-join key: every
     # superstep joins contribs on src, so hash-partitioning edges once
     # lets each round reuse the layout (measured 22s → 15.5s at sf0.1)
     width = graph.edges.sparkSession.sparkContext.defaultParallelism
     edges = graph.edges.select("src", "dst").repartition(width, "src").cache()
 
-    def make_messages(st: DataFrame, e: DataFrame) -> DataFrame:
+    def step(st: DataFrame) -> DataFrame:
         contrib = (st.filter(F.col("out_deg") > 0)
                      .select(F.col("id").alias("src"),
                              (F.col("rank") / F.col("out_deg")).alias("msg")))
-        return e.join(contrib, "src").select("dst", "msg")
-
-    def agg_messages(msgs: DataFrame) -> DataFrame:
-        return msgs.groupBy("dst").agg(F.sum("msg").alias("msg_sum"))
-
-    def update(st: DataFrame, agg: DataFrame) -> DataFrame:
+        agg = (edges.join(contrib, "src")
+               .groupBy(F.col("dst").alias("id"))
+               .agg(F.sum("msg").alias("msg_sum")))
         # dangling mass (rank at out_deg=0 vertices) folds in as a 1-row
         # broadcast cross join — keeping it inside the plan instead of a
         # per-superstep driver collect saves one Spark job per iteration
         dang = (st.filter(F.col("out_deg") == 0)
                   .agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("_dang")))
-        return (st.select("id", "out_deg")
-                  .join(agg.withColumnRenamed("dst", "id"), "id", "left")
-                  .fillna(0.0, subset=["msg_sum"])
-                  .crossJoin(F.broadcast(dang))
-                  .withColumn("rank",
-                              F.lit(1.0 - damping)
-                              + F.lit(damping) * F.col("_dang") / F.lit(n_total)
-                              + F.lit(damping) * F.col("msg_sum"))
-                  .select("id", "rank", "out_deg"))
-
-    def converged(old: DataFrame, new: DataFrame) -> bool:
-        moved = (old.select("id", F.col("rank").alias("r_old"))
-                 .join(new, "id")
-                 .filter(F.abs(F.col("rank") - F.col("r_old")) > tol)
-                 .limit(1).count())
-        return moved == 0
+        new = (st.select("id", "out_deg", F.col("rank").alias("_old"))
+               .join(agg, "id", "left")
+               .fillna(0.0, subset=["msg_sum"])
+               .crossJoin(F.broadcast(dang))
+               .withColumn("rank",
+                           F.lit(1.0 - damping)
+                           + F.lit(damping) * F.col("_dang") / F.lit(n_total)
+                           + F.lit(damping) * F.col("msg_sum")))
+        cols = ["id", "rank", "out_deg"]
+        if tol is not None:
+            cols.append((F.abs(F.col("rank") - F.col("_old")) > tol)
+                        .cast("int").alias("changed"))
+        return new.select(*cols)
 
     # eager checkpoints every other superstep: each update references the
     # previous state twice (messages + dangling agg), so unbounded lineage
     # would re-execute the whole chain; every-2 keeps recompute bounded
-    # while halving checkpoint jobs
-    out = pregel(state, edges, make_messages, agg_messages, update,
-                 max_iter=max_iter,
-                 converged=converged if tol is not None else None,
-                 checkpoint_interval=2 if tol is None else 1)
+    # while halving checkpoint jobs.  With tol, every round is checkpointed
+    # so each one's moved-vertex count is observed.
+    out, _ = pregel(state, step, max_iter,
+                    checkpoint_interval=2 if tol is None else 1)
     edges.unpersist()
     return out.select("id", "rank")
 
@@ -96,58 +100,24 @@ def connected_components(graph: PropertyGraph, max_iter: int = 20) -> DataFrame:
     """Undirected connected components; returns (id, component) where
     component == min vertex id in the component.
 
-    Min-id label propagation over the symmetrized edge set; converges in
-    O(diameter) supersteps with an early-exit probe (changed-count == 0).
-    For graphs with huge diameter swap in large-star/small-star; the star
-    schema graphs here have diameter ≤ 4.
+    `_edge_components` (min-label propagation + pointer jumping, O(log
+    diameter) supersteps) over the canonical undirected edge set; a
+    vertex with no edge is its own component.  Raises when the labels
+    do not converge within max_iter supersteps — unconverged labels can
+    split a true component.
     """
-    sym = graph.undirected_edges()
     width = graph.edges.sparkSession.sparkContext.defaultParallelism
-    edges = (sym.unionAll(sym.select(F.col("dst").alias("src"),
-                                     F.col("src").alias("dst")))
-             .repartition(width, "src").cache())
-    state = graph.vertices.select("id", F.col("id").alias("component"))
-
-    def make_messages(st: DataFrame, e: DataFrame) -> DataFrame:
-        return (e.join(st.select(F.col("id").alias("src"), "component"), "src")
-                 .select("dst", F.col("component").alias("msg")))
-
-    def agg_messages(msgs: DataFrame) -> DataFrame:
-        return msgs.groupBy("dst").agg(F.min("msg").alias("min_nbr"))
-
-    def update(st: DataFrame, agg: DataFrame) -> DataFrame:
-        merged = (st.join(agg.withColumnRenamed("dst", "id"), "id", "left")
-                  .select("id", F.least(
-                      F.col("component"),
-                      F.coalesce(F.col("min_nbr"), F.col("component"))
-                  ).alias("component")))
-        # pointer jumping (path halving): component ← component(component).
-        # Plain label propagation needs O(diameter) rounds — a 1M-hop
-        # chain would need 1M supersteps; composing the label map with
-        # itself each round gives O(log diameter) convergence.
-        lookup = merged.select(F.col("id").alias("component"),
-                               F.col("component").alias("cc2"))
-        return (merged.join(lookup, "component", "left")
-                .select("id", F.least(
-                    F.col("component"),
-                    F.coalesce(F.col("cc2"), F.col("component"))
-                ).alias("component")))
-
-    def converged(old: DataFrame, new: DataFrame) -> bool:
-        changed = (old.select("id", F.col("component").alias("c_old"))
-                   .join(new, "id")
-                   .filter(F.col("component") != F.col("c_old"))
-                   .limit(1).count())
-        return changed == 0
-
-    # checkpoint_interval=1: the convergence probe joins old vs new state
-    # every round — without eager truncation it re-executes the whole
-    # un-checkpointed chain each probe
-    out = pregel(state, edges, make_messages, agg_messages, update,
-                 max_iter=max_iter, converged=converged,
-                 checkpoint_interval=1)
-    edges.unpersist()
-    return out
+    sym = graph.undirected_edges().repartition(width, "src").cache()
+    labels = _edge_components(sym, max_iter)
+    sym.unpersist()
+    if labels is None:
+        raise RuntimeError(
+            f"connected_components did not converge within "
+            f"max_iter={max_iter} supersteps; raise max_iter")
+    return (graph.vertices.select("id")
+            .join(labels.withColumnRenamed("n", "id"), "id", "left")
+            .select("id", F.coalesce(F.col("c"), F.col("id"))
+                    .alias("component")))
 
 
 # Frontier rows above which BFS stops broadcasting and shuffle-joins
@@ -234,8 +204,9 @@ def shortest_paths(graph: PropertyGraph, source_ids: list[int],
 
     Bellman-Ford-on-Pregel: each superstep relaxes every edge once
     (message = dist[src] + w), min-aggregates at dst, and keeps the
-    smaller of old/new distance.  Converges in ≤ |longest shortest path|
-    supersteps with an early-exit probe; unweighted BFS is the w=1
+    smaller of old/new distance.  Stops after the first superstep that
+    lowers no distance (≤ |longest shortest path| + 1), or after
+    max_iter supersteps with the bounded result; unweighted BFS is the w=1
     special case (bfs_distances is the cheaper frontier form for that).
     """
     e = graph.edges
@@ -251,33 +222,20 @@ def shortest_paths(graph: PropertyGraph, source_ids: list[int],
     state = graph.vertices.select(
         "id",
         F.when(F.col("id").isin([int(s) for s in source_ids]), F.lit(0.0))
-         .otherwise(F.lit(inf)).alias("dist"))
+         .otherwise(F.lit(inf)).alias("dist")).localCheckpoint(eager=True)
 
-    def make_messages(st: DataFrame, ed: DataFrame) -> DataFrame:
+    def step(st: DataFrame) -> DataFrame:
         reach = st.filter(F.col("dist") != inf)
-        return (ed.join(reach.select(F.col("id").alias("src"), "dist"), "src")
-                .select("dst", (F.col("dist") + F.col("w")).alias("msg")))
+        agg = (edges.join(reach.select(F.col("id").alias("src"), "dist"),
+                          "src")
+               .groupBy(F.col("dst").alias("id"))
+               .agg(F.min(F.col("dist") + F.col("w")).alias("new_dist")))
+        return st.join(agg, "id", "left").select(
+            "id",
+            F.least("dist", F.coalesce("new_dist", "dist")).alias("dist"),
+            (F.col("new_dist") < F.col("dist")).cast("int").alias("changed"))
 
-    def agg_messages(msgs: DataFrame) -> DataFrame:
-        return msgs.groupBy("dst").agg(F.min("msg").alias("new_dist"))
-
-    def update(st: DataFrame, agg: DataFrame) -> DataFrame:
-        return (st.join(agg.withColumnRenamed("dst", "id"), "id", "left")
-                .select("id", F.least(
-                    F.col("dist"),
-                    F.coalesce(F.col("new_dist"), F.col("dist"))
-                ).alias("dist")))
-
-    def converged(old: DataFrame, new: DataFrame) -> bool:
-        changed = (old.select("id", F.col("dist").alias("d_old"))
-                   .join(new, "id")
-                   .filter(F.col("dist") < F.col("d_old"))
-                   .limit(1).count())
-        return changed == 0
-
-    out = pregel(state, edges, make_messages, agg_messages, update,
-                 max_iter=max_iter, converged=converged,
-                 checkpoint_interval=1)
+    out, _ = pregel(state, step, max_iter)
     edges.unpersist()
     return out.filter(F.col("dist") != inf)
 
@@ -288,37 +246,25 @@ def longest_path_levels(graph: PropertyGraph, max_iter: int = 20) -> DataFrame:
     depth).  Returns (id, level INT).
 
     Max-propagation on the Pregel kernel: every superstep relaxes each
-    edge with level[src]+1 and max-aggregates at dst; converges in
-    ≤ depth(DAG) supersteps (the early-exit probe stops it).  On a cyclic
+    edge with level[src]+1 and max-aggregates at dst; stops after the
+    first superstep that raises no level (≤ depth(DAG) + 1).  On a cyclic
     graph levels on cycles would grow forever — max_iter bounds it; pass
     a DAG.
     """
     edges = graph.edges.select("src", "dst").cache()
-    state = graph.vertices.select("id", F.lit(0).alias("level"))
+    state = (graph.vertices.select("id", F.lit(0).alias("level"))
+             .localCheckpoint(eager=True))
 
-    def make_messages(st: DataFrame, e: DataFrame) -> DataFrame:
-        return (e.join(st.select(F.col("id").alias("src"), "level"), "src")
-                .select("dst", (F.col("level") + 1).alias("msg")))
+    def step(st: DataFrame) -> DataFrame:
+        agg = (edges.join(st.select(F.col("id").alias("src"), "level"), "src")
+               .groupBy(F.col("dst").alias("id"))
+               .agg(F.max(F.col("level") + 1).alias("cand")))
+        return st.join(agg, "id", "left").select(
+            "id",
+            F.greatest("level", F.coalesce("cand", "level")).alias("level"),
+            (F.col("cand") > F.col("level")).cast("int").alias("changed"))
 
-    def agg_messages(msgs: DataFrame) -> DataFrame:
-        return msgs.groupBy("dst").agg(F.max("msg").alias("cand"))
-
-    def update(st: DataFrame, agg: DataFrame) -> DataFrame:
-        return (st.join(agg.withColumnRenamed("dst", "id"), "id", "left")
-                .select("id", F.greatest(
-                    F.col("level"),
-                    F.coalesce(F.col("cand"), F.col("level"))
-                ).alias("level")))
-
-    def converged(old: DataFrame, new: DataFrame) -> bool:
-        return (old.select("id", F.col("level").alias("l_old"))
-                .join(new, "id")
-                .filter(F.col("level") > F.col("l_old"))
-                .limit(1).count()) == 0
-
-    out = pregel(state, edges, make_messages, agg_messages, update,
-                 max_iter=max_iter, converged=converged,
-                 checkpoint_interval=1)
+    out, _ = pregel(state, step, max_iter)
     edges.unpersist()
     return out.select("id", F.col("level").cast("int").alias("level"))
 
@@ -338,7 +284,7 @@ def k_core(graph: PropertyGraph, k: int, max_iter: int = 30) -> DataFrame:
     materializing action per round; its double consumption next round
     (both semi-join sides) re-reads the checkpoint.  That same double
     consumption is why rounds can NOT be lazily batched here (the SCC
-    K-rounds-per-probe recipe needs single-consumption state; a
+    K-rounds-per-checkpoint recipe needs single-consumption state; a
     decrement-propagation rewrite would share the subplan twice per
     level too) — the per-round barrier stays, intrinsic to peeling."""
     sym = graph.undirected_edges()
@@ -554,53 +500,63 @@ AA_COMP_CAP = 4096
 TRI_COMP_CAP = 4096
 
 
+def _pull_min_label(cs: DataFrame, pulled: DataFrame) -> DataFrame:
+    """One min-label round: c ← min(c, pulled c2), then one path-halving
+    pointer jump c ← min(c, c(c)); (n, c, changed).  The update both
+    component loops share.  Plain propagation needs O(diameter) rounds;
+    composing the label map with itself each round gives O(log
+    diameter)."""
+    new = (cs.join(pulled, "n", "left")
+           .select("n", F.col("c").alias("_old"),
+                   F.least("c", F.coalesce("c2", "c")).alias("c")))
+    hop = new.select(F.col("n").alias("_k"), F.col("c").alias("_cc"))
+    c = F.least("c", F.coalesce("_cc", "c"))
+    return (new.join(hop, new["c"] == hop["_k"], "left")
+            .select("n", c.alias("c"),
+                    (c != F.col("_old")).cast("int").alias("changed")))
+
+
 def _edge_components(sym: DataFrame, max_iter: int = 15):
-    """Connected-component labels of a canonical undirected edge set:
-    (n, c) with c = min vertex id in n's component, or None when the
-    propagation cannot PROVE convergence within ``max_iter`` rounds
-    (callers must then keep their fully-distributed path — an
-    unconverged labeling can split a true component and silently
-    corrupt anything computed per label).
+    """Connected-component labels of an undirected edge set (either
+    orientation per edge): (n, c) with c = min vertex id in n's
+    component, or None when the propagation cannot PROVE convergence
+    within ``max_iter`` progress rounds (callers must then refuse or
+    keep their fully-distributed path — an unconverged labeling can
+    split a true component and silently corrupt anything computed per
+    label).  The one min-label components loop: `connected_components`,
+    `_component_split` and `pairs_to_clusters` all run it.
 
     Min-label propagation + path-halving pointer jumps (labels are
     vertex ids, so label-of-label is one self-join) — O(log diameter)
-    rounds.  A zero-change fixpoint round proves per-component label
-    uniformity: adjacent vertices still differing would both be pulling
-    the smaller label.  Every join against the |E|-scaled edge relation
-    hints merge (the checkpoint-child estimate mis-broadcast class)."""
-    # `both` stays LAZY: the callers hand in an already-checkpointed
-    # edge set, so each round re-derives the union as a narrow read of
-    # that checkpoint — materializing 2·|E| here on top of the caller's
-    # |E| is what OOM'd the first x30 g24 attempt on the 8g heap
-    both = sym.select("src", "dst").unionAll(
-        sym.select(F.col("dst").alias("src"),
-                   F.col("src").alias("dst")))
-    cs = (both.select(F.col("src").alias("n")).distinct()
+    rounds on the pregel kernel.  A zero-change fixpoint round proves
+    per-component label uniformity: adjacent vertices still differing
+    would both be pulling the smaller label.
+
+    Messages flow both ways along each edge through two joins of `sym`
+    itself (src → dst and dst → src), never a symmetrized union: a
+    src-partitioned input keeps its layout for the first join, and a
+    join hint on `sym` reaches both joins — `_component_split` hints
+    merge, since its checkpoint-child edge set carries a tiny size
+    estimate (the mis-broadcast class).  Nothing |E|-sized is
+    materialized here on top of the caller's copy (a 2·|E| copy is what
+    OOM'd the first x30 g24 attempt on the 8g heap)."""
+    e = sym.select("src", "dst")
+    cs = (e.select(F.col("src").alias("n"))
+          .unionAll(e.select(F.col("dst").alias("n"))).distinct()
           .select("n", F.col("n").alias("c"))
           .localCheckpoint(eager=True))
-    for _ in range(max_iter):
-        msgs = (both.hint("merge")
-                .join(cs.select(F.col("n").alias("src"), "c"), "src")
-                .groupBy(F.col("dst").alias("n"))
-                .agg(F.min("c").alias("c2")))
-        new = (cs.join(msgs, "n", "left")
-               .select("n", F.least(
-                   F.col("c"),
-                   F.coalesce(F.col("c2"), F.col("c"))).alias("c")))
-        hop = new.select(F.col("n").alias("_k"), F.col("c").alias("_cc"))
-        new = (new.join(hop, new["c"] == hop["_k"], "left")
-               .select("n", F.least(
-                   F.col("c"),
-                   F.coalesce(F.col("_cc"), F.col("c"))).alias("c"))
-               .localCheckpoint(eager=True))
-        changed = (cs.select("n", F.col("c").alias("_old"))
-                   .join(new, "n")
-                   .filter(F.col("c") != F.col("_old"))
-                   .limit(1).count())
-        cs = new
-        if changed == 0:
-            return cs
-    return None
+
+    def step(cs: DataFrame) -> DataFrame:
+        c = cs.select(F.col("n").alias("_u"), "c")
+        msgs = (e.join(c, e["src"] == c["_u"])
+                .select(F.col("dst").alias("n"), "c")
+                .unionAll(e.join(c, e["dst"] == c["_u"])
+                          .select(F.col("src").alias("n"), "c"))
+                .groupBy("n").agg(F.min("c").alias("c2")))
+        return _pull_min_label(cs, msgs)
+
+    cs, converged = pregel(cs, step, max_iter)
+    return cs if converged else None
 
 
 def _component_split(sym: DataFrame, comp_cap: int):
@@ -612,7 +568,7 @@ def _component_split(sym: DataFrame, comp_cap: int):
     instead of globally), join_edges = the rest, or None when the
     component labeling did not converge.  Edges never span components,
     so labeling the src endpoint labels the edge."""
-    labels = _edge_components(sym)
+    labels = _edge_components(sym.hint("merge"))
     if labels is None:
         return None
     both = sym.unionAll(sym.select(F.col("dst").alias("src"),
@@ -636,9 +592,8 @@ def _component_split(sym: DataFrame, comp_cap: int):
     join_edges = (sym.hint("merge")
                   .join(lbl.filter(~F.col("dense")).select("src"),
                         "src", "left_semi"))
-    has_dense = lbl.filter(F.col("dense")).limit(1).count() > 0
-    has_join = lbl.filter(~F.col("dense")).limit(1).count() > 0
-    return dense_edges, join_edges, has_dense, has_join
+    routes = {r.dense for r in lbl.select("dense").distinct().collect()}
+    return dense_edges, join_edges, True in routes, False in routes
 
 
 def _adamic_adar_comp_dense(dense_edges: DataFrame, top: int) -> DataFrame:
@@ -1452,8 +1407,6 @@ def _bipartite_components(inc: DataFrame, max_iter: int = 15):
     fixpoint round with zero changes) IMPLIES per-group label
     consistency: two members of one group with different labels would
     both still be pulling the group min, i.e. not a fixpoint."""
-    import pandas as pd  # noqa: F401 (kept with the numpy block style)
-
     # EVERY join against `inc` hints merge: inc is |incidence|-scaled
     # BY CONSTRUCTION and arrives as a checkpoint child, whose size
     # estimate Catalyst reads as tiny — the un-hinted first cut of this
@@ -1464,29 +1417,16 @@ def _bipartite_components(inc: DataFrame, max_iter: int = 15):
     cs = (inc.select("n").distinct()
           .select("n", F.col("n").alias("c"))
           .localCheckpoint(eager=True))
-    for _ in range(max_iter):
+
+    def step(cs: DataFrame) -> DataFrame:
         cg = (inc.hint("merge").join(cs, "n")
               .groupBy("g").agg(F.min("c").alias("gc")))
         pulled = (inc.hint("merge").join(cg, "g").groupBy("n")
                   .agg(F.min("gc").alias("c2")))
-        new = (cs.join(pulled, "n", "left")
-               .select("n", F.least(
-                   F.col("c"),
-                   F.coalesce(F.col("c2"), F.col("c"))).alias("c")))
-        hop = new.select(F.col("n").alias("_k"), F.col("c").alias("_cc"))
-        new = (new.join(hop, new["c"] == hop["_k"], "left")
-               .select("n", F.least(
-                   F.col("c"),
-                   F.coalesce(F.col("_cc"), F.col("c"))).alias("c"))
-               .localCheckpoint(eager=True))
-        changed = (cs.select("n", F.col("c").alias("_old"))
-                   .join(new, "n")
-                   .filter(F.col("c") != F.col("_old"))
-                   .limit(1).count())
-        cs = new
-        if changed == 0:
-            return cs
-    return None
+        return _pull_min_label(cs, pulled)
+
+    cs, converged = pregel(cs, step, max_iter)
+    return cs if converged else None
 
 
 # per-COMPONENT dense cap for the grouped bit-matrix triangle count:
@@ -1622,24 +1562,6 @@ def co_occurrence_triangles_by_component(
     allp = _ft.reduce(DataFrame.unionByName, parts)
     return allp.agg(F.coalesce(F.sum("t"), F.lit(0))
                     .cast("long").alias("triangles"))
-
-
-def triangles_per_vertex(graph: PropertyGraph) -> DataFrame:
-    """Per-vertex triangle participation; returns (id, triangles)."""
-    e = graph.undirected_edges().select("src", "dst").cache()
-    e1 = e.select(F.col("src").alias("a"), F.col("dst").alias("b"))
-    e2 = e.select(F.col("src").alias("b"), F.col("dst").alias("c"))
-    e3 = e.select(F.col("src").alias("a"), F.col("dst").alias("c"))
-    tri = e1.join(e2, "b").join(e3, ["a", "c"])
-    per = (tri.select(F.col("a").alias("id"))
-           .unionAll(tri.select(F.col("b").alias("id")))
-           .unionAll(tri.select(F.col("c").alias("id")))
-           .groupBy("id").agg(F.count(F.lit(1)).alias("triangles"))
-           # materialize while e is cached: the caller executes later,
-           # after unpersist, and would re-derive e THREE times (e1/e2/e3)
-           .localCheckpoint(eager=True))
-    e.unpersist()
-    return per
 
 
 # |V| at or below which hits runs its broadcast-state half-steps (see
@@ -1817,24 +1739,22 @@ def personalized_pagerank(graph: PropertyGraph, source_ids: list[int],
     state = (v.join(deg, "id", "left")
               .fillna(0, subset=["out_deg"])
               .withColumn("p", F.when(src_set, F.lit(p0)).otherwise(F.lit(0.0)))
-              .withColumn("rank", F.col("p")))
+              .withColumn("rank", F.col("p"))
+              .localCheckpoint(eager=True))
     width = graph.edges.sparkSession.sparkContext.defaultParallelism
     edges = graph.edges.select("src", "dst").repartition(width, "src").cache()
 
-    def make_messages(st: DataFrame, e: DataFrame) -> DataFrame:
+    def step(st: DataFrame) -> DataFrame:
         contrib = (st.filter((F.col("out_deg") > 0) & (F.col("rank") != 0.0))
                      .select(F.col("id").alias("src"),
                              (F.col("rank") / F.col("out_deg")).alias("msg")))
-        return e.join(contrib, "src").select("dst", "msg")
-
-    def agg_messages(msgs: DataFrame) -> DataFrame:
-        return msgs.groupBy("dst").agg(F.sum("msg").alias("msg_sum"))
-
-    def update(st: DataFrame, agg: DataFrame) -> DataFrame:
+        agg = (edges.join(contrib, "src")
+               .groupBy(F.col("dst").alias("id"))
+               .agg(F.sum("msg").alias("msg_sum")))
         dang = (st.filter(F.col("out_deg") == 0)
                   .agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("_dang")))
         return (st.select("id", "out_deg", "p")
-                  .join(agg.withColumnRenamed("dst", "id"), "id", "left")
+                  .join(agg, "id", "left")
                   .fillna(0.0, subset=["msg_sum"])
                   .crossJoin(F.broadcast(dang))
                   .withColumn("rank",
@@ -1843,8 +1763,7 @@ def personalized_pagerank(graph: PropertyGraph, source_ids: list[int],
                               + F.lit(damping) * F.col("msg_sum"))
                   .select("id", "rank", "out_deg", "p"))
 
-    out = pregel(state, edges, make_messages, agg_messages, update,
-                 max_iter=max_iter, checkpoint_interval=2)
+    out, _ = pregel(state, step, max_iter, checkpoint_interval=2)
     edges.unpersist()
     return out.select("id", "rank")
 
@@ -2050,9 +1969,13 @@ def biased_random_walks(graph: PropertyGraph,
     return trace
 
 
+# rounds the SCC loops chain lazily between kernel checkpoints: one
+# Spark job per batch instead of one per round (PERF.md round 9)
+SCC_ROUNDS_PER_CHECKPOINT = 4
+
+
 def strongly_connected_components(edges: DataFrame, max_phases: int = 25,
-                                  max_iter: int = 50,
-                                  probe_every: int = 4) -> DataFrame:
+                                  max_iter: int = 50) -> DataFrame:
     """Strongly connected components of a directed edge set; returns
     (id, component) where component == the MAX vertex id in the SCC.
 
@@ -2085,26 +2008,29 @@ def strongly_connected_components(edges: DataFrame, max_phases: int = 25,
     Job economy (the r9 restructure — adjudicated 13.85 → 10.14 s
     warm best-of-3 at sf0.1 in PERF.md, where the per-step cost is
     pure job-scheduling overhead on a broadcast-sized graph): both
-    inner loops are SINGLE-CONSUMPTION
-    chains, so `probe_every` rounds run LAZILY between convergence
-    probes — one Spark job per K rounds instead of one per round.
-    That needs two shapes the old eager-per-round form didn't have:
+    inner loops run on the pregel kernel with
+    `SCC_ROUNDS_PER_CHECKPOINT` rounds chained LAZILY between eager
+    checkpoints — one Spark job per batch of rounds instead of one per
+    round.  That needs single-consumption steps:
 
     - SELF-LOOP AUGMENTATION: appending (v, v) for every remaining
       vertex turns "keep my value ∪ take neighbor messages" into ONE
       join + groupBy-max over the augmented edges — the state is
-      consumed exactly once per round, so K lazily-chained rounds stay
-      a linear plan (a state consumed twice per round would double the
-      subplan per level: 2^K duplicated work — the reason the old form
-      HAD to materialize every round);
-    - AGGREGATE PROBES, never old-vs-new joins: colors only ever grow,
-      so sum(color) (exact, decimal(38,0)) is strictly increasing
-      until the fixpoint and equal sums across a batch prove
-      convergence; likewise count(reached) for the backward loop.
-      Pointer jumping (color ← color(color(v)), sound because
-      color(v) reaches v) is applied once per batch boundary where the
-      state is checkpointed — a double consumption of a CHECKPOINTED
-      frame costs one cheap re-read, not a recompute.
+      consumed exactly once per round, so lazily-chained rounds stay a
+      linear plan (a state consumed twice per round would double the
+      subplan per level: 2^K duplicated work);
+    - CONVERGENCE FROM THE SAME AGGREGATE: the self-loop message
+      carries each vertex's previous color (previous membership, in
+      the backward loop), so the step's own groupBy yields the
+      `changed` flag the kernel sums on its checkpoint job — no probe
+      job, no old-vs-new join.  Pointer jumping (color ←
+      color(color(v)), sound because color(v) reaches v) is applied on
+      the first round of each batch, whose input is the kernel's
+      checkpoint — a double consumption of a CHECKPOINTED frame costs
+      one cheap re-read, not a recompute.  `changed` compares against
+      the color the step was GIVEN, so a jump is progress like any
+      other change and a fixpoint is never declared over un-jumped
+      colors.
 
     The backward loop joins the REACHED SET (not a frontier) against
     the same-color edge subgraph built ONCE per phase (two equi-joins
@@ -2125,20 +2051,12 @@ def strongly_connected_components(edges: DataFrame, max_phases: int = 25,
 
     All state is (id, color) pairs or bare ids; every join is an
     equi-join keyed on vertex id.  At 100 TB each lazy round is still
-    one keyed shuffle of ≤16-byte rows; `probe_every` then trades
-    ≤K-1 rounds of no-op overshoot work after the fixpoint against K×
-    fewer driver barriers — set probe_every=1 to recover per-round
-    probing when per-round data cost dwarfs barrier cost.  Convergence
-    must be CONFIRMED by an equal-sum/-count probe: `max_iter` bounds
-    PROGRESS rounds only, and a fixpoint that lands inside the final
-    batch (progress since the last probe, so the batch's own probe
-    can't confirm) gets ONE extra confirmation-only round beyond
-    max_iter before the loud non-convergence path fires (r9 ADVICE —
-    previously the effective bound tightened by up to probe_every
-    rounds).
+    one keyed shuffle of ≤16-byte rows; batching trades ≤K-1 rounds of
+    no-op overshoot work after the fixpoint against K× fewer driver
+    barriers.  `max_iter` bounds PROGRESS rounds in each loop: a
+    fixpoint reached by round max_iter is confirmed by one extra round
+    (the kernel's rule) before the loud non-convergence path fires.
     """
-    if probe_every < 1:
-        raise ValueError(f"probe_every must be >= 1, got {probe_every}")
     spark = edges.sparkSession
     width = spark.sparkContext.defaultParallelism
     # the vertex UNIVERSE comes from the raw edge endpoints (self-loops
@@ -2157,67 +2075,49 @@ def strongly_connected_components(edges: DataFrame, max_phases: int = 25,
         self_loops = remaining.select(F.col("id").alias("src"),
                                       F.col("id").alias("dst"))
         # src-oriented augmented edges for the forward color loop (the
-        # per-round join keys on src); lazy — the first probe job
+        # per-round join keys on src); lazy — the first checkpoint job
         # materializes it, and every later round re-reads it in place
         e_aug = (e_cur.unionAll(self_loops)
                  .repartition(width, "src")
                  .localCheckpoint(eager=False))
         # (1) color(v) = max id reaching v, incl. itself (self-loop):
         # messages flow src→dst — one join keyed on src, one
-        # groupBy-max on dst, per round, probe_every rounds per job
-        colors = remaining.select("id", F.col("id").alias("color"))
-        prev_sum = None
-        converged = False
-        steps = 0
-        while steps < max_iter:
-            for _ in range(min(probe_every, max_iter - steps)):
-                colors = (e_aug.join(
-                              colors.select(F.col("id").alias("src"),
-                                            "color"), "src")
-                          .groupBy(F.col("dst").alias("id"))
-                          .agg(F.max("color").alias("color")))
-                steps += 1
-            colors = colors.localCheckpoint(eager=False)
-            # exact monotone probe: colors only grow, so an unchanged
-            # sum across a whole batch (incl. its boundary jump) proves
-            # one full edge-step changed nothing == the fixpoint.
-            # Empty graph: sum is NULL == initial prev_sum — converged
-            # on the first probe, correctly.
-            csum = (colors.agg(F.sum(F.col("color").cast("decimal(38,0)"))
-                               .alias("s")).first()[0])
-            if csum == prev_sum:
-                converged = True
-                break
-            prev_sum = csum
-            # pointer jumping at the batch boundary only — `colors` is
-            # checkpointed here, so the double consumption (data +
-            # lookup side) re-reads instead of recomputing
-            look = colors.select(F.col("id").alias("color"),
-                                 F.col("color").alias("c_jump"))
-            colors = (colors.join(look, "color", "left")
-                      .select("id",
-                              F.greatest(F.col("color"),
-                                         F.coalesce(F.col("c_jump"),
-                                                    F.col("color")))
-                              .alias("color")))
-        if not converged:
-            # max_iter bounds PROGRESS rounds, not the confirming
-            # probe: a fixpoint landing inside the final batch made
-            # progress since the last probe (csum != prev_sum), so the
-            # batch's own probe cannot confirm it.  Colors grow
-            # monotonically, so ONE extra edge-step (after the
-            # boundary pointer jump, which is a no-op at the fixpoint)
-            # leaving the exact sum unchanged proves the fixpoint —
-            # run a single confirmation-only round before refusing.
-            colors = (e_aug.join(
-                          colors.select(F.col("id").alias("src"),
-                                        "color"), "src")
-                      .groupBy(F.col("dst").alias("id"))
-                      .agg(F.max("color").alias("color"))
-                      .localCheckpoint(eager=False))
-            csum = (colors.agg(F.sum(F.col("color").cast("decimal(38,0)"))
-                               .alias("s")).first()[0])
-            converged = csum == prev_sum
+        # groupBy-max on dst per round.  The self-loop message carries
+        # v's INPUT color, so "changed" (new color vs the color this
+        # step was given, jump included) falls out of the same aggregate
+        rounds = 0
+
+        def color_step(colors: DataFrame) -> DataFrame:
+            nonlocal rounds
+            prev = F.col("color").alias("prev")
+            if rounds and rounds % SCC_ROUNDS_PER_CHECKPOINT == 0:
+                # pointer jumping on a round whose input is a kernel
+                # checkpoint — the double consumption (data + lookup
+                # side) re-reads it instead of recomputing.  The jump
+                # is sound on any round; the schedule only picks cheap
+                # ones, since `changed` is counted against `prev`
+                look = colors.select(F.col("id").alias("color"),
+                                     F.col("color").alias("c_jump"))
+                colors = (colors.join(look, "color", "left")
+                          .select("id", F.greatest(
+                              "color", F.coalesce("c_jump", "color"))
+                              .alias("color"), prev))
+            else:
+                colors = colors.select("id", "color", prev)
+            rounds += 1
+            return (e_aug.join(colors.withColumnRenamed("id", "src"),
+                               "src")
+                    .groupBy(F.col("dst").alias("id"))
+                    .agg(F.max("color").alias("color"),
+                         F.max(F.when(F.col("src") == F.col("dst"),
+                                      F.col("prev"))).alias("_own"))
+                    .select("id", "color",
+                            (F.col("color") != F.col("_own")).cast("int")
+                            .alias("changed")))
+
+        colors, converged = pregel(
+            remaining.select("id", F.col("id").alias("color")), color_step,
+            max_iter, checkpoint_interval=SCC_ROUNDS_PER_CHECKPOINT)
         if not converged:
             # extraction from a non-fixpoint coloring returns WRONG
             # components, not merely fewer — refuse loudly
@@ -2232,8 +2132,9 @@ def strongly_connected_components(edges: DataFrame, max_phases: int = 25,
         # ONCE to the edges (two joins per phase) instead of once per
         # hop; self-loops keep current members in the reached set, so
         # the state is a bare id column consumed once per round —
-        # lazily batchable exactly like the color loop.  dst-oriented:
-        # the per-hop join keys on dst, edges stay put.
+        # lazily batchable exactly like the color loop, and a vertex
+        # without its self-loop message is newly reached.
+        # dst-oriented: the per-hop join keys on dst, edges stay put.
         c_src = colors.select(F.col("id").alias("src"),
                               F.col("color").alias("c_s"))
         c_dst = colors.select(F.col("id").alias("dst"),
@@ -2244,40 +2145,22 @@ def strongly_connected_components(edges: DataFrame, max_phases: int = 25,
                   .unionAll(self_loops)
                   .repartition(width, "dst")
                   .localCheckpoint(eager=False))
-        reached = colors.filter(F.col("id") == F.col("color")).select("id")
-        prev_cnt = None
-        grown = True
-        hops = 0
-        while hops < max_iter:
-            for _ in range(min(probe_every, max_iter - hops)):
-                reached = (e_same.join(reached.select(F.col("id")
-                                                      .alias("dst")),
-                                       "dst")
-                           .select(F.col("src").alias("id"))
-                           .distinct())
-                hops += 1
-            reached = reached.localCheckpoint(eager=False)
-            cnt = reached.count()
-            if cnt == prev_cnt:
-                grown = False
-                break
-            prev_cnt = cnt
-        if grown:
-            # same confirmation-only round as the color loop: the
-            # reached set only grows (self-loops keep members), so
-            # one extra hop with an unchanged count proves the
-            # fixpoint even when it landed inside the final batch
-            reached = (e_same.join(reached.select(F.col("id")
-                                                  .alias("dst")),
-                                   "dst")
-                       .select(F.col("src").alias("id"))
-                       .distinct()
-                       .localCheckpoint(eager=False))
-            grown = reached.count() != prev_cnt
-        if grown:
+
+        def reach_step(reached: DataFrame) -> DataFrame:
+            return (e_same.join(reached.select(F.col("id").alias("dst")),
+                                "dst")
+                    .groupBy(F.col("src").alias("id"))
+                    .agg((1 - F.max((F.col("src") == F.col("dst"))
+                                    .cast("int"))).alias("changed")))
+
+        reached, converged = pregel(
+            colors.filter(F.col("id") == F.col("color")).select("id"),
+            reach_step, max_iter,
+            checkpoint_interval=SCC_ROUNDS_PER_CHECKPOINT)
+        if not converged:
             raise RuntimeError(
                 f"SCC containment propagation still expanding after "
-                f"{hops} hops run (bound max_iter={max_iter} plus one "
+                f"{max_iter} hops run (bound max_iter={max_iter} plus one "
                 f"confirmation-only hop; an SCC cycle longer than "
                 f"max_iter); raise max_iter")
         # membership: v reaches its root within the class ⇔ v ∈ SCC;
@@ -2322,7 +2205,7 @@ def strongly_connected_components(edges: DataFrame, max_phases: int = 25,
 DENSE_LCC_MAX_NODES = 65536
 
 
-def _triangles_per_vertex_dense(sym: DataFrame, n_nodes: int) -> DataFrame:
+def _vertex_triangles_dense(sym: DataFrame, n_nodes: int) -> DataFrame:
     """Per-vertex triangle counts for a dense small-id-space graph:
     (id, triangles).  `sym` must be canonical (src < dst, distinct).
 
@@ -2385,10 +2268,10 @@ def _triangles_per_vertex_dense(sym: DataFrame, n_nodes: int) -> DataFrame:
             .localCheckpoint(eager=True))
 
 
-def _triangles_per_vertex_dense_dist(sym: DataFrame,
+def _vertex_triangles_dense_dist(sym: DataFrame,
                                      n_nodes: int) -> DataFrame:
     """Per-vertex triangle counts via DISTRIBUTED bit-matrix tiles —
-    the mid-size companion to _triangles_per_vertex_dense (the
+    the mid-size companion to _vertex_triangles_dense (the
     _adamic_adar_dense_dist broadcast/tile pattern): broadcast the
     packed n²-bit adjacency (≤128 MB at 32768), fan upper-triangle
     tile pairs out as Spark tasks, and per tile enumerate its ADJACENT
@@ -2501,7 +2384,7 @@ def local_clustering(graph: PropertyGraph) -> DataFrame:
     - bounded dimension (n ≤ 32768) but per-edge masks too big (the
       mask path ships |E|·⌈n/8⌉ bytes through Arrow — 20 GB at 15k
       vertices / 11M edges, the r11 scale-study g24 timeout):
-      DISTRIBUTED bit-matrix tiles (`_triangles_per_vertex_dense_dist`,
+      DISTRIBUTED bit-matrix tiles (`_vertex_triangles_dense_dist`,
       the _adamic_adar_dense_dist pattern) — broadcast packed matrix,
       tile matmuls as Spark tasks, per-vertex credit rows out.
     - larger id spaces: degree-ordered orientation — wedges only out of
@@ -2573,7 +2456,7 @@ def local_clustering(graph: PropertyGraph) -> DataFrame:
     # so the mask bound counts `sym` directly.
     if dense_remap is not None and len(dense_remap[1]) > 0:
         if sym.count() * ((len(dense_remap[1]) + 7) // 8) <= (2 << 30):
-            per = _tier(_triangles_per_vertex_dense)
+            per = _tier(_vertex_triangles_dense)
     sum_d2 = None
     if per is None:
         sum_d2 = _sum_deg_sq(sym)
@@ -2590,7 +2473,7 @@ def local_clustering(graph: PropertyGraph) -> DataFrame:
         # biases toward tiles — the mistake it can make is bounded by
         # the n ≤ 32768 cap, while a wedge explosion is not)
         if 0 < n <= 32768 and _prefer_dense_tiles(sum_d2, n):
-            per = _tier(_triangles_per_vertex_dense_dist)
+            per = _tier(_vertex_triangles_dense_dist)
     if per is None:
         per = _lcc_join_triangles(sym)
     # degree from the SAME canonical edge set the triangles were counted

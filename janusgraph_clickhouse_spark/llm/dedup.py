@@ -637,24 +637,20 @@ def pairs_to_clusters(pairs: DataFrame, a_col: str = "doc_a",
     embedding pairs — the pair graph is tiny relative to the corpus
     (only thresholded near-dups), and CC is min-id pointer jumping:
     O(diameter) supersteps, keyed shuffles only."""
-    from ..graph.algorithms import connected_components
-    from ..graph.model import PropertyGraph
-    # Truncate the pair-derivation lineage ONCE: the CC loop's edge cache,
-    # the vertex set, and pregel's initial state checkpoint each otherwise
-    # re-execute the full upstream pipeline (a MinHash pass costs more
-    # than the entire component propagation on the tiny pair graph —
-    # measured 11.9s → 4.7s for l18 at sf0.1)
+    from ..graph.algorithms import _edge_components
+    # Truncate the pair-derivation lineage ONCE: the labeling loop reads
+    # the pairs every round and would otherwise re-execute the full
+    # upstream pipeline (a MinHash pass costs more than the entire
+    # component propagation on the tiny pair graph — measured 11.9s →
+    # 4.7s for l18 at sf0.1)
     pairs = (pairs.select(F.col(a_col).alias("src"),
                           F.col(b_col).alias("dst"))
              .localCheckpoint(eager=True))
-    edges = (pairs
-             .withColumn("label", F.lit("dup"))
-             .withColumn("weight", F.lit(1.0)))
-    verts = (edges.select(F.col("src").alias("id"))
-             .unionAll(edges.select(F.col("dst").alias("id"))).distinct()
-             .withColumn("label", F.lit("doc"))
-             .withColumn("name", F.col("id").cast("string")))
-    cc = connected_components(PropertyGraph(verts, edges))
+    labels = _edge_components(pairs, max_iter=20)
+    if labels is None:
+        raise RuntimeError("pairs_to_clusters: component labels did not "
+                           "converge within 20 supersteps")
+    cc = labels.select(F.col("n").alias("id"), F.col("c").alias("component"))
     return (cc.groupBy(F.col("component").alias("cluster_id"))
             .agg(F.count(F.lit(1)).alias("n_members"),
                  F.array_join(

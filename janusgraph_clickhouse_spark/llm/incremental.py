@@ -18,9 +18,7 @@ All three are APPEND-ONLY: absorbing a batch appends the novel docs'
 rows; existing part files are never rewritten (pytest-pinned by file
 listing + mtime).  `compact_index` is the offline maintenance pass that
 rewrites the accumulated per-batch part files clustered by each table's
-join key (and `compact_index_catalog` writes catalog-bucketed tables so
-the per-batch candidate join shuffles ONLY the batch side — the
-MergeTree ``ORDER BY (k,c)`` analog, graph/persistence.py discipline).
+join key (the MergeTree ``ORDER BY (k,c)`` analog).
 
 CRASH RECOVERY / AT-LEAST-ONCE STORY (the contract the streaming absorb
 relies on):
@@ -387,9 +385,7 @@ def compact_index(spark: SparkSession, path: str,
     Not concurrency-safe with a live absorb (the swap is
     rewrite-then-rename): run it as the ingest pipeline's scheduled
     maintenance window, the same operational slot as the reference's
-    OPTIMIZE TABLE.  (compact_index_catalog builds bucketed CATALOG
-    copies for plan-shape wins in read-side jobs; absorb itself always
-    reads/appends the parquet directories.)
+    OPTIMIZE TABLE.
 
     Crash recovery (r7 review): entry first HEALS a previous crash —
     a live dir missing with its `_<t>.old` present (killed between the
@@ -414,44 +410,6 @@ def compact_index(spark: SparkSession, path: str,
         os.rename(src, old)
         os.rename(tmp, src)
         shutil.rmtree(old, ignore_errors=True)
-
-
-def compact_index_catalog(spark: SparkSession, path: str,
-                          prefix: str = "jcs_fp_index",
-                          num_buckets: int = 16) -> dict[str, DataFrame]:
-    """Compact the parquet index into catalog-BUCKETED tables (one per
-    fingerprint table, bucketed+sorted by its join key) and
-    return handles usable as the `index` argument of
-    incremental_dedup_pairs (a READ-SIDE copy: absorb_batch always
-    reads and appends the parquet directories, so re-run this after
-    absorbing to refresh the catalog copy — it does not track the live
-    index).  With the session's shuffle width equal to
-    `num_buckets`, the per-batch candidate join then shuffles ONLY the
-    batch side: the bucketed index scan already satisfies the join's
-    hash-partitioning requirement, so the 100 TB-side Exchange
-    disappears from the plan (pytest-pinned)."""
-    import shutil
-
-    out: dict[str, DataFrame] = {}
-    wh = spark.conf.get("spark.sql.warehouse.dir", "")
-    for t in INDEX_TABLES:
-        keys = INDEX_KEYS[t]
-        name = f"{prefix}_{t}"
-        # a prior session's table may have died with the catalog but
-        # left its warehouse directory — saveAsTable then refuses with
-        # LOCATION_ALREADY_EXISTS; drop both halves first
-        spark.sql(f"DROP TABLE IF EXISTS {name}")
-        loc = os.path.join(wh.removeprefix("file:"), name)
-        if wh and os.path.isdir(loc):
-            shutil.rmtree(loc)
-        (spark.read.parquet(os.path.join(path, t)).distinct()
-         .repartition(num_buckets, *[F.col(k) for k in keys])
-         .write.mode("overwrite")
-         .bucketBy(num_buckets, keys[0], *keys[1:])
-         .sortBy(*keys)
-         .saveAsTable(name))
-        out[t] = spark.table(name)
-    return out
 
 
 def snapshot_diff(old: DataFrame, new: DataFrame, id_col: str,

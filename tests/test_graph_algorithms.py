@@ -191,6 +191,16 @@ def test_cc_long_path_converges_fast(spark):
     assert len(cc) == 61
 
 
+def test_cc_raises_when_not_converged(spark):
+    """An exhausted max_iter refuses loudly instead of returning labels
+    that may split a component: one superstep cannot resolve a 60-hop
+    chain."""
+    import pytest
+    g = graph_from_edge_list(spark, [(i, i + 1) for i in range(60)])
+    with pytest.raises(RuntimeError, match="raise max_iter"):
+        connected_components(g, max_iter=1)
+
+
 def test_graph_persistence_roundtrip(spark, sf_smoke, tmp_path):
     from janusgraph_clickhouse_spark.graph.model import star_schema_graph
     from janusgraph_clickhouse_spark.graph.persistence import (

@@ -432,33 +432,15 @@ def test_dense_triangle_cap_raises_loudly(spark):
         co_occurrence_triangles(inc, "g", "n", DENSE_TRI_MAX_NODES + 1)
 
 
-def test_scc_probe_every_one_matches_default(spark):
-    """probe_every=1 (per-round probing, the documented 100 TB dial)
-    must produce the identical partition as the batched default — the
-    batching is an execution schedule, never a semantics change."""
-    from janusgraph_clickhouse_spark.graph.algorithms import (
-        strongly_connected_components)
-    edges = [(1, 2), (2, 3), (3, 1), (3, 10), (10, 11), (11, 10),
-             (5, 5), (7, 8)]
-    e = spark.createDataFrame(edges, "src long, dst long")
-    want = {1: 3, 2: 3, 3: 3, 10: 11, 11: 11, 5: 5, 7: 7, 8: 8}
-    got_default = {r.id: r.component
-                   for r in strongly_connected_components(e).collect()}
-    got_one = {r.id: r.component
-               for r in strongly_connected_components(
-                   e, probe_every=1).collect()}
-    assert got_default == got_one == want
-
-
 def test_scc_fixpoint_inside_final_batch(spark):
     """r9 ADVICE regression: max_iter bounds PROGRESS rounds, not the
-    confirming probe.  On a directed 6-cycle with probe_every=4 and
-    max_iter=5, both fixpoints (color sum at round 5, backward count
-    at hop 5) land INSIDE the final batch — progress since the last
-    probe means the batch's own probe reads a changed sum/count, so
-    the pre-fix loops exited unconverged and raised RuntimeError
-    despite actual convergence.  The confirmation-only round beyond
-    max_iter now certifies both; max_iter=4 must still refuse loudly
+    confirming round.  On a directed 6-cycle with 4 rounds per
+    checkpoint and max_iter=5, both fixpoints (colors at round 5,
+    backward reach at hop 5) land INSIDE the final batch — progress in
+    that batch means its checkpoint observes changes, so loops that
+    stopped there exited unconverged and raised RuntimeError despite
+    actual convergence.  The confirmation-only round beyond max_iter
+    certifies both; max_iter=4 must still refuse loudly
     (genuine non-convergence: round 5 makes real progress)."""
     import pytest
     from janusgraph_clickhouse_spark.graph.algorithms import (
@@ -467,14 +449,14 @@ def test_scc_fixpoint_inside_final_batch(spark):
                               "src long, dst long")
     got = {r.id: r.component
            for r in strongly_connected_components(
-               e, max_iter=5, probe_every=4).collect()}
+               e, max_iter=5).collect()}
     assert got == {i: 5 for i in range(6)}
     with pytest.raises(RuntimeError, match="did not converge"):
-        strongly_connected_components(e, max_iter=4, probe_every=4)
+        strongly_connected_components(e, max_iter=4)
 
 
 def test_scc_deep_cycle_and_bounds(spark):
-    """A 40-cycle (class diameter ≫ probe_every) beside a 2-cycle, a
+    """A 40-cycle (class diameter ≫ rounds per checkpoint) beside a 2-cycle, a
     self-loop singleton and a one-way tail resolves exactly; max_iter
     bounds progress hops only (a 6-cycle needs 5 progress rounds + 1
     confirmation in BOTH loops, so max_iter=5 passes and max_iter=4
@@ -498,6 +480,27 @@ def test_scc_deep_cycle_and_bounds(spark):
     assert got == {i: 5 for i in range(6)}
     with pytest.raises(RuntimeError, match="raise max_iter"):
         strongly_connected_components(six, max_iter=4)
+
+
+def test_scc_jump_on_confirming_round_is_progress(spark):
+    """A directed 9-cycle 100→1→2→3→50→5→6→7→8→100 at max_iter=4:
+    after four rounds 5-8 hold color 50, and the pointer jump on the
+    confirming round lifts them to 100 while the edge step then
+    changes nothing.  That jump is progress, so the call must refuse
+    loudly, never extract the un-jumped colors as nine singletons;
+    with room to converge it is one component."""
+    import pytest
+    from janusgraph_clickhouse_spark.graph.algorithms import (
+        strongly_connected_components)
+    ring = [100, 1, 2, 3, 50, 5, 6, 7, 8]
+    e = spark.createDataFrame(
+        [(a, ring[(i + 1) % 9]) for i, a in enumerate(ring)],
+        "src long, dst long")
+    with pytest.raises(RuntimeError, match="did not converge"):
+        strongly_connected_components(e, max_iter=4).collect()
+    got = {r.id: r.component
+           for r in strongly_connected_components(e, max_iter=9).collect()}
+    assert got == {v: 100 for v in ring}
 
 
 def test_hits_periodic_checkpoint_boundary(spark):
@@ -607,13 +610,13 @@ def test_local_clustering_identity_range_routes_by_cardinality(
     match the closed form."""
     import janusgraph_clickhouse_spark.graph.algorithms as GA
     calls = []
-    real = GA._triangles_per_vertex_dense
+    real = GA._vertex_triangles_dense
 
     def spy(sym, n_nodes):
         calls.append(n_nodes)
         return real(sym, n_nodes)
 
-    monkeypatch.setattr(GA, "_triangles_per_vertex_dense", spy)
+    monkeypatch.setattr(GA, "_vertex_triangles_dense", spy)
     # square 0-19-38-57 plus diagonal (0,38): tri = 2, sparse in [0,58)
     ids = [0, 19, 38, 57]
     edges = [(ids[0], ids[1]), (ids[1], ids[2]), (ids[2], ids[3]),
@@ -709,7 +712,7 @@ def test_triangles_per_vertex_tile_path_matches_mask_path(spark):
     |E|*n/8 bytes through Arrow — the r11 scale-study g24 timeout)."""
     import random
     from janusgraph_clickhouse_spark.graph.algorithms import (
-        _triangles_per_vertex_dense, _triangles_per_vertex_dense_dist)
+        _vertex_triangles_dense, _vertex_triangles_dense_dist)
     rng = random.Random(411)
     n = 60
     edges = sorted({(a, b) for a, b in
@@ -717,9 +720,9 @@ def test_triangles_per_vertex_tile_path_matches_mask_path(spark):
                      for _ in range(400)) if a < b})
     sym = spark.createDataFrame(edges, "src long, dst long")
     mask = {r.id: r.triangles
-            for r in _triangles_per_vertex_dense(sym, n).collect()}
+            for r in _vertex_triangles_dense(sym, n).collect()}
     tile = {r.id: r.triangles
-            for r in _triangles_per_vertex_dense_dist(sym, n).collect()}
+            for r in _vertex_triangles_dense_dist(sym, n).collect()}
     # the mask path emits a row per edge endpoint (0-credit rows
     # included); the tile path emits only positive credits — compare on
     # the union with 0 default

@@ -220,45 +220,6 @@ def test_compact_index_equivalent_fewer_files(spark, tmp_path):
         == {(200, 101), (201, 1)}
 
 
-def test_compact_index_catalog_bucketed_join_plan(spark, tmp_path):
-    """The catalog-bucketed compaction must yield a candidate join whose
-    INDEX side is the bucketed scan with no Exchange above it (the
-    zero-shuffle-on-the-corpus-side plan absorb wants at 100 TB)."""
-    path = str(tmp_path / "fpindex")
-    I.bootstrap_index(_df(spark, A_DOCS + [(3, "p q r s t u v w")]),
-                      "doc_id", "text", path)
-    old_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    old_bc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        idx = I.compact_index_catalog(spark, path, num_buckets=8)
-        batch = _df(spark, [(11, "a b c d e f g h")])
-        fp = I.fingerprint_tables(batch, "doc_id", "text")
-        join = (fp["buckets"].select(F.col("id").alias("doc_id"),
-                                     "band", "bucket")
-                .join(idx["buckets"].select(F.col("id").alias("dup_of"),
-                                            "band", "bucket"),
-                      ["band", "bucket"]))
-        plan = join._jdf.queryExecution().explainString(
-            spark._jvm.org.apache.spark.sql.execution
-            .ExplainMode.fromString("formatted"))
-        assert "Bucketed: true" in plan, plan
-        # the index branch — bucketed scan up to the join — has NO
-        # Exchange: only the batch side reshuffles
-        idx_branch = plan.split("jcs_fp_index_buckets")[-1] \
-                         .split("SortMergeJoin")[0]
-        assert "Exchange" not in idx_branch, plan
-        # verdicts still correct through the bucketed handles
-        got = {(r.doc_id, r.dup_of, r.jaccard)
-               for r in I.incremental_dedup_pairs(
-                   batch, "doc_id", "text", idx).collect()}
-        assert got == {(11, 1, 1.0)}
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_sp)
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_bc)
-
-
 def test_replay_emits_no_batch_internal_pairs(spark, tmp_path):
     """Two novel near-identical docs in ONE batch: the first run emits
     no verdicts; a replay (docs now in the index from the first

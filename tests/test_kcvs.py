@@ -196,17 +196,6 @@ def test_multi_key_slice_dataframe_keys(spark):
     assert sorted((r.k, r.c) for r in out) == [(1, 1), (1, 2), (3, 1), (3, 2)]
 
 
-def test_aggregate_neighbors_helper(spark):
-    from janusgraph_clickhouse_spark.graph.pregel import aggregate_neighbors
-    state = spark.createDataFrame(
-        [(1, 10.0), (2, 20.0), (3, 30.0)], "id long, val double")
-    edges = spark.createDataFrame(
-        [(1, 3), (2, 3), (1, 2)], "src long, dst long")
-    out = {r.dst: r.s for r in aggregate_neighbors(
-        state, edges, "val", F.sum("val").alias("s")).collect()}
-    assert out == {3: 30.0, 2: 10.0}
-
-
 def test_geo_predicates_closed_form(spark):
     """Geo surface (Geoshape analog): haversine distance against known
     city pairs, box containment/intersection truth tables."""

@@ -259,14 +259,14 @@ def test_local_clustering_routes_dense_to_bitset(spark, monkeypatch):
     from janusgraph_clickhouse_spark.graph import algorithms as A
     from janusgraph_clickhouse_spark.graph.model import graph_from_edge_list
     calls = []
-    orig_dense = A._triangles_per_vertex_dense
+    orig_dense = A._vertex_triangles_dense
     # r14: the join path funnels through the sym-level orientation
     # helper (`_lcc_join_triangles` → `_degree_oriented_edges_sym`),
     # so spy there — the graph-level wrapper no longer sits on g24's
     # route
     orig_oriented = A._degree_oriented_edges_sym
     monkeypatch.setattr(
-        A, "_triangles_per_vertex_dense",
+        A, "_vertex_triangles_dense",
         lambda sym, n: (calls.append("dense"), orig_dense(sym, n))[1])
     monkeypatch.setattr(
         A, "_degree_oriented_edges_sym",
