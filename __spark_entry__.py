@@ -1,9 +1,10 @@
-"""Driver contract for the spark-graft builder (PySpark target).
+"""Entry points for running the registered queries against DuckDB oracles.
 
-The driver's verify runs ``entry(spark)`` as a smoke check, runs each
+A checker runs ``entry(spark)`` as a smoke check, runs each
 ``queries()[name]`` at sf=0.01 and compares it against the matching
 ``oracle_sql()[name]`` via DuckDB (row-count + schema + order-insensitive
-value-hash → CORRECTNESS_r{N}.json).
+value-hash).  ``tests/test_oracle_parity.py`` does this for every
+registered query.
 
 The actual inventory lives in ``janusgraph_clickhouse_spark.plans`` — one
 registered entry per implemented operator from SURVEY.md §2.

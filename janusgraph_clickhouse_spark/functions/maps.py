@@ -1,4 +1,4 @@
-"""ClickHouse map-aggregate analogs: sumMap / maxMap / minMap.
+"""ClickHouse map-aggregate analogs: sumMap / maxMap.
 
 ClickHouse's sumMap((k, v)) aggregates a per-group MAP whose values sum
 per key (SummingMergeTree's nested-column rollup; reference users lean
@@ -44,12 +44,6 @@ def max_map(df: DataFrame, group_cols: list[str], key_col: str,
             val_col: str | Column, out_col: str = "max_map") -> DataFrame:
     """Per group, a key-sorted map key -> MAX(val): ClickHouse maxMap."""
     return _map_agg(df, group_cols, key_col, val_col, F.max, out_col)
-
-
-def min_map(df: DataFrame, group_cols: list[str], key_col: str,
-            val_col: str | Column, out_col: str = "min_map") -> DataFrame:
-    """Per group, a key-sorted map key -> MIN(val): ClickHouse minMap."""
-    return _map_agg(df, group_cols, key_col, val_col, F.min, out_col)
 
 
 def map_as_string(map_col: str | Column) -> Column:

@@ -90,17 +90,6 @@ def _cms_bucket(row: Column, key: Column) -> Column:
 KMV_M = float(1 << 60)
 
 
-def _kmv_hashes(df: DataFrame, col: str) -> DataFrame:
-    """Distinct md5_long60 hashes of a column — the KMV input stream.
-    NULLs are filtered (count(DISTINCT) semantics): a NULL hash would
-    sort NULLS-FIRST in Spark but NULLS-LAST in DuckDB, stealing a
-    sketch slot on one engine only — a cross-engine divergence AND a
-    wasted minimum."""
-    return (df.filter(F.col(col).isNotNull())
-            .select(md5_long60(F.col(col).cast("string")).alias("h"))
-            .distinct())
-
-
 def _kmv_stats(sketch: DataFrame) -> DataFrame:
     """(n rows kept, kth minimum hash) of a sketch as a 1-row DF."""
     return sketch.agg(F.count(F.lit(1)).alias("n"),
@@ -429,7 +418,7 @@ def weighted_quantiles(df: DataFrame, val_col: str, weight_col: str,
     engines agree exactly.
 
     NULL values are FILTERED before ranking (count(DISTINCT)-style,
-    the _kmv_hashes discipline): Spark windows sort NULLS FIRST but
+    as kmv_set_ops filters its inputs): Spark windows sort NULLS FIRST but
     DuckDB sorts NULLS LAST, so a NULL value row would shift every
     cumulative weight differently per engine.  Negative weights are
     REJECTED per row (raise_error branch): they break cum-weight

@@ -215,18 +215,6 @@ def derive_star_graph(spark: SparkSession, sf_dir: str,
     return PropertyGraph(vertices, edf)
 
 
-def props_map(*cols: str):
-    """Build a MAP<STRING,STRING> props column from named columns — the
-    Spark shape of JanusGraph's dynamic vertex properties (SURVEY §1.3:
-    `props MAP<STRING,STRING>` beside typed columns).  Access compiles to
-    element_at(props, 'key'), which Catalyst folds like any expression."""
-    pairs = []
-    for c in cols:
-        pairs.append(F.lit(c))
-        pairs.append(F.col(c).cast("string"))
-    return F.create_map(*pairs)
-
-
 def interaction_graph(spark: SparkSession, sf_dir: str,
                       window: str = "10 minutes") -> PropertyGraph:
     """Temporal interaction graph sessionized from the events stream

@@ -81,9 +81,3 @@ def find(graph: PropertyGraph, pattern: list[tuple[str, str | None, str]],
             result = result.filter(F.col(a) != F.col(b))
     return result.select(*sorted(bound))
 
-
-def count_motif(graph: PropertyGraph,
-                pattern: list[tuple[str, str | None, str]],
-                distinct_vertices: bool = False) -> DataFrame:
-    return (find(graph, pattern, distinct_vertices)
-            .agg(F.count(F.lit(1)).alias("matches")))

@@ -476,7 +476,8 @@ def simhash_pairs(df: DataFrame, id_col: str, text_col: str,
     `sub_bands=m` (m > max_hamming) switches to combination blocking
     (Manku et al., "Detecting Near-Duplicates for Web Crawling"): split
     into m sub-bands and emit one key per C(m, m-h) combination of
-    (m-h) sub-bands, each key the concatenation of those sub-band values.
+    (m-h) sub-bands, each key the hash with every other sub-band masked
+    out (one literal bit mask per combination).
     A pair within Hamming h differs in ≤h sub-bands, so ≥(m-h) agree and
     at least one chosen combination matches entirely — still complete,
     but each key is (m-h)·(64/m) bits wide (e.g. h=8, m=10 → 45 keys of
@@ -519,25 +520,24 @@ def simhash_pairs(df: DataFrame, id_col: str, text_col: str,
     if n_bands <= max_hamming:
         raise ValueError(
             f"need more bands than max_hamming: {n_bands} <= {max_hamming}")
+    from itertools import combinations
     base, rem = divmod(64, n_bands)
     widths = [base + 1 if b < rem else base for b in range(n_bands)]
     starts = [sum(widths[:b]) for b in range(n_bands)]
-
-    def _band(b: int):
-        mask = (1 << widths[b]) - 1 if widths[b] < 64 else -1
-        return (F.shiftrightunsigned("simhash", starts[b])
-                .bitwiseAND(F.lit(mask)))
-
-    if sub_bands is None:
-        keys = [_band(b) for b in range(n_bands)]
-    else:
-        from itertools import combinations
-        pick = n_bands - max_hamming
-        keys = [F.xxhash64(*(_band(b) for b in combo))
-                for combo in combinations(range(n_bands), pick)]
-    bands = sh.select(
-        "id", "simhash",
-        F.posexplode(F.array(*keys)).alias("band", "val"))
+    band_masks = [((1 << w) - 1) << s for w, s in zip(widths, starts)]
+    # one bit mask per combination of (n_bands - max_hamming) bands (the
+    # pigeonhole split is the one-band case), as signed longs; disjoint
+    # bands, so the sum is the OR
+    masks = [sum(c) for c in combinations(band_masks,
+                                          n_bands - max_hamming)]
+    masks = [m - (1 << 64) if m >> 63 else m for m in masks]
+    # a literal array, so the key count never grows generated code
+    bands = (sh.select("id", "simhash", F.posexplode(
+                F.array(*map(F.lit, masks)).cast("array<bigint>"))
+                .alias("band", "mask"))
+             .select("id", "simhash", "band",
+                     F.col("simhash").bitwiseAND(F.col("mask"))
+                     .alias("val")))
     x = bands.select(F.col("id").alias("doc_a"),
                      F.col("simhash").alias("sim_a"), "band", "val")
     y = bands.select(F.col("id").alias("doc_b"),

@@ -16,12 +16,10 @@ Index layout — three parquet tables under one root directory:
 
 All three are APPEND-ONLY: absorbing a batch appends the novel docs'
 rows; existing part files are never rewritten (pytest-pinned by file
-listing + mtime).  `compact_index` is the offline maintenance pass that
-rewrites the accumulated per-batch part files clustered by each table's
-join key (the MergeTree ``ORDER BY (k,c)`` analog).
+listing + mtime).
 
-CRASH RECOVERY / AT-LEAST-ONCE STORY (the contract the streaming absorb
-relies on):
+CRASH RECOVERY / AT-LEAST-ONCE STORY (the contract a replaying caller,
+e.g. a foreachBatch sink, relies on):
 
 - absorb_batch treats a doc as NOVEL only if it has no dup verdict AND
   no row in the `sizes` table, and `sizes` is written LAST of the three
@@ -34,10 +32,6 @@ relies on):
   bucket/shingle rows the tear left behind are neutralized at READ time
   — incremental_dedup_pairs dedups the index side AFTER restricting it
   to candidate docs, so the distinct costs O(candidates), not O(index).
-- Verdict emission is idempotent per batch: the streaming absorb writes
-  verdicts to a `batch_id=<n>` partition directory with overwrite
-  semantics and records a `_absorbed/batch_<n>` marker AFTER the index
-  append; a replay of a fully-absorbed batch is skipped outright.
 
 Why exact rerank against index shingles rather than signature-estimated
 Jaccard: the verdicts stay exactly reproducible (and DuckDB-oracle-able
@@ -60,12 +54,6 @@ from .dedup import shingle_sets, signatures_from_shingles
 # append/read order is load-bearing: `sizes` is the novelty sentinel and
 # must be the LAST table absorb appends (see crash-recovery story above)
 INDEX_TABLES = ("buckets", "shingles", "sizes")
-
-# each table's equi-join key in incremental_dedup_pairs — what
-# compaction clusters by
-INDEX_KEYS = {"buckets": ["band", "bucket"],
-              "shingles": ["shingle"],
-              "sizes": ["id"]}
 
 
 def fingerprint_tables(df: DataFrame, id_col: str, text_col: str,
@@ -125,9 +113,9 @@ def incremental_dedup_pairs(new_df: DataFrame, id_col: str, text_col: str,
     dups are the caller's composition with minhash_dedup_pairs).
 
     Robust to a torn/replayed index: the old side excludes EVERY id in
-    the current batch (not just self-pairs) — a crash between the index
-    append and the caller's marker write means a replay sees the
-    batch's own docs in the index, and without this exclusion two
+    the current batch (not just self-pairs) — a replay of a batch whose
+    absorb already reached the index sees the batch's own docs there,
+    and without this exclusion two
     novel near-dups in one batch would suddenly emit verdicts against
     each other on replay only, diverging from the first run (the
     module's replay-converges contract).  The index side is also
@@ -285,12 +273,7 @@ def _check_meta(path: str, n: int, num_hashes: int, bands: int) -> None:
 def bootstrap_index(df: DataFrame, id_col: str, text_col: str, path: str,
                     n: int = 3, num_hashes: int = 48,
                     bands: int = 16) -> None:
-    """Overwrite-build the index.  Clears any `_absorbed` batch markers
-    from a previous stream: batch ids are only meaningful within one
-    checkpoint lineage, and stale markers would silently skip the new
-    stream's first batches (their docs never deduped, never absorbed)."""
-    import shutil
-    shutil.rmtree(os.path.join(path, "_absorbed"), ignore_errors=True)
+    """Overwrite-build the index and stamp its fingerprint parameters."""
     write_index(fingerprint_tables(df, id_col, text_col, n, num_hashes,
                                    bands, materialize=True),
                 path, mode="overwrite")
@@ -328,88 +311,6 @@ def absorb_batch(new_df: DataFrame, id_col: str, text_col: str,
                                    bands, materialize=True),
                 index_path, mode="append")
     return verdicts
-
-
-def incremental_dedup_stream(stream_df: DataFrame, id_col: str,
-                             text_col: str, index_path: str,
-                             verdicts_path: str,
-                             checkpoint_dir: str,
-                             threshold: float = 0.4, n: int = 3,
-                             num_hashes: int = 48, bands: int = 16):
-    """Streaming ingest: per micro-batch, dedup against the index, emit
-    dup verdicts to `verdicts_path`, absorb novel docs into the index.
-    foreachBatch because the batch must both read AND append the index —
-    the per-micro-batch work is O(batch) by the absorb_batch shape.
-
-    Effectively-once under foreachBatch's at-least-once contract:
-    verdicts land in a per-batch `batch_id=<n>` partition directory with
-    overwrite semantics (a replayed batch overwrites its own partition,
-    never duplicates it), and a `_absorbed/batch_<n>` marker — written
-    only after BOTH the verdict write and the index append succeeded —
-    short-circuits fully-processed replays.  A crash anywhere before
-    the marker replays the batch; every step is individually idempotent
-    (overwrite partition / sizes-probed append), so the replay
-    converges to the same index and verdict state."""
-    # NOTE: markers use driver-local filesystem APIs — for an index on
-    # distributed storage (s3a://, hdfs://) route marker existence
-    # through the Hadoop FileSystem API; on a replaced driver, local
-    # markers vanish and every batch replays (each step is idempotent,
-    # so that is a cost, not a correctness loss)
-    marker_dir = os.path.join(index_path, "_absorbed")
-
-    def _step(batch_df: DataFrame, batch_id: int) -> None:
-        marker = os.path.join(marker_dir, f"batch_{batch_id}")
-        if os.path.exists(marker):
-            return
-        verdicts = absorb_batch(batch_df, id_col, text_col, index_path,
-                                threshold, n, num_hashes, bands)
-        (verdicts.write.mode("overwrite")
-         .parquet(os.path.join(verdicts_path, f"batch_id={batch_id}")))
-        os.makedirs(marker_dir, exist_ok=True)
-        with open(marker, "w"):
-            pass
-
-    return (stream_df.writeStream.foreachBatch(_step)
-            .option("checkpointLocation", checkpoint_dir))
-
-
-def compact_index(spark: SparkSession, path: str,
-                  num_files: int = 8) -> None:
-    """Offline index maintenance: rewrite each table's accumulated
-    per-batch part files as `num_files` files clustered + sorted by the
-    table's equi-join key, dropping the duplicate rows a torn append
-    may have left.  Verdict-equivalent by construction (the index is
-    semantically a row set; clustering changes layout only) — the
-    equivalence is pytest-pinned.
-
-    Not concurrency-safe with a live absorb (the swap is
-    rewrite-then-rename): run it as the ingest pipeline's scheduled
-    maintenance window, the same operational slot as the reference's
-    OPTIMIZE TABLE.
-
-    Crash recovery (r7 review): entry first HEALS a previous crash —
-    a live dir missing with its `_<t>.old` present (killed between the
-    two renames) is restored by renaming the old back; a leftover
-    `.old` beside an intact live dir (killed before the cleanup) is
-    swept, so scheduled maintenance can never wedge on ENOTEMPTY."""
-    import shutil
-
-    for t in INDEX_TABLES:
-        keys = INDEX_KEYS[t]
-        src = os.path.join(path, t)
-        old = os.path.join(path, f"_{t}.old")
-        if os.path.exists(old) and not os.path.exists(src):
-            os.rename(old, src)           # heal: crash between renames
-        elif os.path.exists(old):
-            shutil.rmtree(old)            # sweep: crash before cleanup
-        tmp = os.path.join(path, f"_{t}.compacting")
-        (spark.read.parquet(src).distinct()
-         .repartition(num_files, *[F.col(k) for k in keys])
-         .sortWithinPartitions(*keys)
-         .write.mode("overwrite").parquet(tmp))
-        os.rename(src, old)
-        os.rename(tmp, src)
-        shutil.rmtree(old, ignore_errors=True)
 
 
 def snapshot_diff(old: DataFrame, new: DataFrame, id_col: str,

@@ -1,8 +1,8 @@
 """Multimodal columns: opaque binary blobs + typed metadata.
 
 Images/audio/video ride through the engine as `BinaryType` columns with a
-typed metadata struct; decode / feature-extraction / resize / frame-sample
-run as Arrow-batched `mapInPandas` stages so each Python batch sees a
+typed metadata struct; decode / feature-extraction / resize run as
+Arrow-batched `mapInPandas` stages so each Python batch sees a
 columnar chunk, never a row at a time.  Decode is REAL for the
 uncompressed formats a pure-numpy parser can read — PPM P6, 24-bit BMP,
 PCM-16 WAV (`decode_image` / `decode_audio`, exercised end-to-end by
@@ -278,28 +278,6 @@ def resize(media: DataFrame, target_bytes: int = 64) -> DataFrame:
             yield pd.DataFrame(out)
 
     return media.mapInPandas(shrink, schema=schema)
-
-
-def frame_sample(media: DataFrame, every_n_bytes: int = 64) -> DataFrame:
-    """'Frame sampling' shape over binary columns: emit one row per sampled
-    offset per blob (mapInPandas fan-out — the row-multiplying batch shape
-    a real video frame sampler has).  Sampled byte stands in for a frame."""
-    schema = "media_id long, frame_no int, offset long, value int"
-
-    def sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {"media_id": [], "frame_no": [], "offset": [], "value": []}
-            for mid, blob in zip(pdf["media_id"], pdf["blob"]):
-                if blob is None:
-                    continue
-                for fno, off in enumerate(range(0, len(blob), every_n_bytes)):
-                    rows["media_id"].append(mid)
-                    rows["frame_no"].append(fno)
-                    rows["offset"].append(off)
-                    rows["value"].append(int(blob[off]))
-            yield pd.DataFrame(rows)
-
-    return media.mapInPandas(sample, schema=schema)
 
 
 def encode_wav_pcm16(samples, rate: int) -> bytes:

@@ -46,21 +46,6 @@ def train_val_test_split(df: DataFrame, key_col: str,
     return df.withColumn("bucket", b).withColumn("split", split)
 
 
-def stratified_sample(df: DataFrame, strata_col: str,
-                      fractions: dict, seed: int = 42) -> DataFrame:
-    """Per-stratum sampling (class-balanced subsets) via Spark sampleBy.
-
-    DETERMINISM CAVEAT (r7 review): sampleBy draws rand(seed) seeded
-    PER PARTITION in row order, so the kept set is stable only for an
-    identical partitioning of identical input — re-sharding the same
-    data selects a DIFFERENT subset.  When membership must be a pure
-    function of the record (the module-header contract), use
-    domain_sample, whose keep decision is hash_bucket(key) — that is
-    also why domain_sample is the registered, oracle-checked form and
-    this wrapper is not."""
-    return df.sampleBy(strata_col, fractions, seed)
-
-
 def domain_sample(df: DataFrame, key_col: str, domain_col: str,
                   rates: dict[str, float], default_rate: float = 0.1,
                   salt: str = "mix", n_buckets: int = 10000) -> DataFrame:

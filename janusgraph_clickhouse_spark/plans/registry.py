@@ -31,418 +31,9 @@ def query(name: str, oracle: str | None = None):
     return deco
 
 
-# The correctness driver evaluates only the FIRST 50 entries of
-# ``queries()`` in dict order (round-1 lesson: registration order put all
-# llm/streaming queries past the cut — 20 queries got no correctness row).
-#
-# ROTATION POLICY (round 3+): with >50 registered queries the window must
-# rotate every round so no query's newest driver row is >1 round old.
-# Each round the window is rebuilt from, in order of precedence:
-#   1. queries with NO driver row from the previous round (the stale set);
-#   2. queries whose implementation/oracle changed this round;
-#   3. queries red or no_oracle in the previous round's CORRECTNESS;
-#   4. newly registered queries;
-#   5. family sentinels (≥2 per q/g/l/s family) from last round's greens.
-# Everything else goes to the tail — it keeps local pytest parity
-# coverage (tests/test_oracle_parity.py sweeps ALL queries) and returns
-# to the window next round under rule 1.
-#
-# Round-6 window.  CORRECTNESS_r05.json NEVER LANDED (driver gate
-# hiccup — the round-5 window of 46-stale+l02+g22/l32/l33 got no
-# driver rows).  The rotation test measures staleness in FILES
-# (union of greens over the last ceil(N/50)=3 CORRECTNESS files), so
-# with r5's file missing the r3 rows of the old window names stay
-# "recent" one extra round — the binding constraint is instead the 82
-# names whose newest (possibly virtual) row is r4: the 49 r4-greens
-# from the r4 window plus all 33 REGISTERED_ROUND=5 names (virtual r4;
-# g22/l32/l33 were windowed in r5 but, with the file missing, never
-# got a REAL row either).  Stalest-first among those: the 33 virtuals
-# (zero real driver evidence, rule 4) then 17 of the 49 reals chosen
-# for plan complexity + family spread; the remaining 32 reals spill
-# to round 7.  This choice stays inside the staleness bound in BOTH
-# contingencies: if r5's file never appears, r7 must (and can) window
-# the 47 old-window names (their r3 file leaves the 3-file horizon
-# once r7's file lands) + 3 spills, r8 the other 29 spills; if the
-# file appears late, the 47 are r5-fresh and r7 windows the 32 spills
-# with 18 slots spare.  A typo here would silently drop a query from
-# the window — get_queries() asserts every name resolves.
-# ROUND-7 WINDOW (the pre-derived r5-file-still-missing branch, with
-# one correction made against the ACTUAL correctness files: the r3-row
-# cohort is 46 names, not 47 — q13 and l02 have r4 rows (the old
-# comment's ranges q09-q16 / "l02" were off by those two; they belong
-# with the r4 spills).  Rule 1: all 46 r3-row names go first — their
-# r3 evidence leaves the 3-file horizon {r4,r6,r7} the moment
-# CORRECTNESS_r07 lands.  Then rule 3+2: s10 (the one r6 red; its
-# oracle's HUGEINT version cast fixed this round), rule 2: s15 (same
-# cast fix reaches its state_version output), l47 (entropy regex
-# '[^\n]' alignment — behavioral if any doc carries \r), and l50
-# (the n_planes="auto" DEFAULT change; rule 2 outranks rule 4, so it
-# displaced the new q46 from the last slot — q46 and the other r7
-# registrations are parity-swept at two scales and due r9).
-# Changed-but-latent fixes (l48 malformed-URL
-# guard, g31 shared max_levels — both no-ops on this fixture) and the
-# l51 (identical changed machinery to the windowed l50) stay in the
-# tail under the local parity sweep; l51 is due a real row by r8.
-# LATE-r7 rule-2 candidates that arrived after this window was frozen
-# (q42/q53 weight_col param, l30 candidate checkpoint, s12 stamp
-# refactor, g32/g05-adjacent fixpoint extraction): result-identical
-# changes, each re-verified green at both scales in fresh driver-sims
-# the day they landed, all covered by the full local parity sweep —
-# they queue behind the r8 pre-derivation like any other tail name.
-# ROUND-8 WINDOW (derived fresh from the correctness files this round,
-# per the standing rule — the r7 pre-derivation's "13 unwindowed r6
-# names" was wrong by one: l50 IS in CORRECTNESS_r07 (green), so the
-# real unwindowed-r6 cohort is 12.  Re-verified by script over
-# CORRECTNESS_r0{1,2,3,4,6,7}.json: newest-row histogram is 50×r7 +
-# 49×r6 + 33×r4 = 132 with real rows; 48 registered names have none).
-# Window, in order:
-# 1. the 33 names whose newest real row is r4 — they leave the
-#    4-file horizon when r9's file lands; windowing them now keeps
-#    actual staleness minimal (stalest-first rule);
-# 2. the 12 REGISTERED_ROUND=6 names never windowed (virtual r5 rows,
-#    zero real driver evidence, also horizon-critical at r9);
-# 3. rule 2: g06_pagerank — its ORACLE changed this round (every CTE
-#    marked AS MATERIALIZED after the r8 fixture regen sent DuckDB's
-#    inlined plan to 200 s; g12's oracle also changed — closed-form
-#    pair count — but g12 is already in cohort 1).  The other r8 code
-#    changes are result-identical on the fixtures (guard-only/latent
-#    fixes to weighted_quantiles, cms_heavy_hitters,
-#    segment_overlap_matrix, _check_meta; the g18 substrate/loop
-#    restructure), re-verified by the full local parity sweep — they
-#    stay in the tail per the r7 precedent.
-# 4. four rule-4 spares to REGISTERED_ROUND=7 names, chosen for
-#    most-novel machinery per the r7 verdict: s20 incremental HLL,
-#    l62 winnowing, g32 weighted SSSP, q46 (displaced from r7 by
-#    l50).  g33 lost its slot to the rule-2 g06 and is due r9 with
-#    the rest of its cohort.
-# (The r8 list itself is preserved in git history at tag-commit
-# f44123b; replaced below by the ROUND-9 window.)
-#
-# ROUND-9 WINDOW (derived fresh from the correctness files this
-# round, per the standing rule; the re-derivation MATCHED the r9
-# pre-derivation below exactly — first round that happened).
-# Verified by script over CORRECTNESS_r0{1,2,3,4,6,7,8}.json:
-# newest-real-green-row histogram is 50×r8 + 49×r7 + 49×r6 + 32
-# with no real row; CORRECTNESS_r08 is 50/50 green (no rule-3
-# traffic).  Window, in order:
-# 1. HORIZON-CRITICAL: the 32 REGISTERED_ROUND=7 names with no real
-#    driver row (36 r7 registrations − the 4 windowed at r8: s20 l62
-#    g32 q46).  Their virtual r6 rows leave the 4-file horizon
-#    {r6,r7,r8,r9} the moment CORRECTNESS_r09 lands — cannot slip.
-# 2. rule 2: no oracle changes this round.  Implementations touched
-#    in r9: g23 (batched fixpoints) and the bfs/harmonic lazy
-#    checkpoints (g05/g21/g27) were in this window; HITS periodic
-#    truncation was NOT — g18 is a tail name whose newest row (r7)
-#    predates BOTH the r8 substrate restructure and the r9 change
-#    (the r9 note originally claimed "all already in this window";
-#    the r9 judge caught the falsehood — g18 heads the r10 rule-2
-#    cohort).  The LATE-r9 changes landed after this window froze —
-#    the LPA single-consumption rewrite (g16, and g30 which consumes
-#    LPA labels), the k-core lazy probe checkpoint (g15), and the
-#    try_divide zero-norm fix in cosine_expr/KMV (q43 and every
-#    cosine consumer without an r9 row: l05 l06 l11 l12 l17 l18 l19
-#    l27 l50 l51).  All dual-scale parity-green the day they changed
-#    (the r7 late-change precedent), and windowed at r10 under
-#    rule 2.
-# 3. 18 spares from the 49 r6-row names (stalest cohort; they fall
-#    out of the horizon at r10), per the r8 pre-derivation's
-#    suggestion, re-verified against the files: all 12 r6-row g
-#    names (the iterative family where fresh evidence is worth
-#    most), q41 q42 (sketches.py carried the r8 cms weight-guard
-#    change postdating their newest rows), s11 s12 (s12's shared
-#    crash protocol got the r8 failure-injection test), l30 (changed
-#    in BOTH r8 — _check_meta — and r9 — the ALL-pre-meta
-#    stamp_index_params gate; its r9 row covers both), l04 (the
-#    documented variance query — a fresh driver row aids
-#    adjudication).
-# Family sentinels in-window: 14 q, 13 g, 16 l, 7 s (≥2 each).
-# (The r9 list itself is preserved in git history at the r9 closing
-# commit; replaced below by the ROUND-10 window.)
-#
-# ROUND-10 WINDOW (derived fresh from the correctness files this
-# round, per the standing rule; the recount MATCHED the r10
-# pre-derivation — second time running).  Verified by script over
-# CORRECTNESS_r0{1,2,3,4,6,7,8,9}.json: newest-real-green-row
-# histogram is 50×r9 + 50×r8 + 49×r7 + 31×r6 = 180; CORRECTNESS_r09
-# is 50/50 green (no rule-3 traffic); REGISTERED_ROUND=9 is empty.
-# Window, in order:
-# 1. LEAD COHORT: the 31 r6-row names r9 left unwindowed — their r6
-#    rows leave the 4-file horizon {r7,r8,r9,r10} when r10's file
-#    lands (ZERO g names: every r6-row g was windowed at r9, so the
-#    g sentinels come from rules 2/5);
-# 2. rule 2, LATE-r9 changes postdating their newest rows (the r9
-#    judge's list, re-derived here by grepping cosine_expr callers):
-#    g18_hits FIRST (restructured r8 AND r9, newest row r7 — the r9
-#    note's bookkeeping error), the LPA single-consumption rewrite
-#    (g16 r7, g30 r8 which consumes LPA labels), the k-core lazy
-#    probe (g15 r7), and the try_divide zero-norm fix (q43 r8 + the
-#    cosine_expr consumers without r9 rows: l05/l06/l51 r8,
-#    l11/l12/l17/l18/l19/l27/l50 r7);
-# 3. rule 2, r10 changes: g23_scc — the r9 ADVICE fixes landed this
-#    round (confirmation-only probe beyond max_iter in both loops,
-#    full-count phase-exit probe — interleaved A/B: perf-neutral),
-#    plus the backward="frontier" deep-cycle mode (since removed:
-#    dense won at every measured scale), postdating its r9 row;
-# 4. 3 spares from the 49 r7-row names (stalest pool; they fall out
-#    at r11): g04 connected components + g19 personalized pagerank
-#    (iterative-family evidence is worth most; also lifts the g
-#    sentinel count) and s10 scd2 (the only name in history with a
-#    red hash row, r6 — fresh rows aid adjudication).
-# Family sentinels in-window: 8 q, 7 g, 29 l, 6 s (≥2 each).
-# (The r10 list itself is preserved in git history at the r10 closing
-# commit; replaced below by the ROUND-11 window.)
-#
-# ROUND-11 WINDOW (derived fresh from the correctness files this
-# round, per the standing rule; `python tools/rotation.py` — now the
-# mechanical recount — MATCHED the r11 pre-derivation name-for-name,
-# third time running).  Verified over
-# ROUND-14 WINDOW (re-derived from the correctness files via
-# `python tools/rotation.py` this round; recount MATCHED the r13
-# pre-derivation name-for-name, sixth round running).  Verified over
-# CORRECTNESS_r0{1,2,3,4,6,7,8,9}+r10..r13.json:
-# newest-real-green-row histogram is 50xr13 + 50xr12 + 50xr11 +
-# 30xr10 = 180; CORRECTNESS_r13 is 50/50 green (no rule-3 traffic);
-# zero registrations rounds 8-13, N stays 180, horizon lag stays
-# ceil(180/50) = 4 files.  Window:
-# 1. LEAD COHORT: the 30 r10-row names r13 left unwindowed — their
-#    r10 rows leave the horizon {r11,r12,r13,r14} when r14's file
-#    lands (4 g / 6 q / 4 s / 16 l — every family clears the >=2
-#    sentinel bar from the lead cohort alone);
-# 2. rule 2, pre-declared mid-r13 (the x30 broadcast-death fixes:
-#    explicit merge/shuffle_hash hints on every |E|-scaled-by-
-#    construction join side in the wedge/superstep/support/label/
-#    frontier paths, the motif connected-order compiler, and q30's
-#    spill-safe exact-percentile fold — results identical, dual-scale
-#    parity re-verified fresh-process + property-pinned at change
-#    time): g03 g12 g17 g24 g31 q30 — the changed names NOT already
-#    in the lead cohort (g16/g30 changed too but are lead names;
-#    g25/l19/l55/g23 drew post-change r13 rows).  No rule-3 traffic
-#    (zero reds in CORRECTNESS_r13).
-# 3. 14 spares from the 50 r11-row names (stalest pool — all tied at
-#    r11, so picked for family balance): g01 g02 g06 g14,
-#    q02 q03 q04, s01 s02 s03, l02 l04 l07 l08.  The 36 r11-row
-#    names left unwindowed are r15's lead cohort.
-# Family sentinels in-window: 10 q, 13 g, 20 l, 7 s (>=2 each).
-# ROUND-15 WINDOW (installed early r15; re-derived from the
-# correctness files via `python tools/rotation.py` — recount MATCHED
-# the r14 pre-derivation's lead cohort name-for-name, seventh round
-# running).  Histogram after r14: 50xr14 + 50xr13 + 44xr12 + 36xr11;
-# zero reds, no rule-3 traffic.  Window:
-# 1. LEAD COHORT (36): the r11-row names r14 left unwindowed — 22 q,
-#    11 l, 3 s, ZERO g (all four r11-row g names were r14 spares), so
-#    the g sentinel comes from the spares.
-# 2. rule 2 (11): s03 (oracle boundary fix THIS round: Spark merges
-#    sessions at exact gap equality, lag-flag `>=` -> `>`;
-#    result-identical on every fixture — zero exact-300s adjacent
-#    pairs at any SF — but the driver should re-verify), plus 9 of
-#    the r14-changed names that were NOT in the r14 window
-#    (l03 l19 l32 l34 l40 l50 l55 l56 l62; l21/l25/l26 are changed
-#    AND lead names already), plus l30 (stalest l + a planned r15
-#    materialize-once target).  The r14-changed names left out are
-#    covered by inheritance and full local parity: l46 inherits
-#    l02's internals (l02 drew a post-change r14 row), l18 inherits
-#    l03's, l31 is the same text-family materialize-once pattern as
-#    in-window l25/l26.  l34/l50/l62 double as the VERDICT-r14
-#    fixture-regression repairs this round.
-# 3. spares (3): g07 g08 g05 — stalest g names (r12 rows), family
-#    sentinel; g05 is also a small-input shuffle-width target this
-#    round.  Family sentinels in-window: 22 q, 3 g, 21 l, 4 s.
-# ROUND-16 WINDOW (re-derived from the correctness files via
-# `python tools/rotation.py`).  Histogram after r15: 50xr15 + 49xr14 +
-# 45xr13 + 36xr12; zero reds, no rule-3 traffic.  Window:
-# 1. LEAD COHORT (36): the r12-row names r15 left unwindowed — their
-#    r12 rows leave the horizon {r13,r14,r15,r16} when r16's file lands.
-# 2. rule 2 (14): the queries whose plans changed this round and that
-#    are not lead names, r13 rows first, then r14.  Graph: the
-#    full-graph readers now scan the etype-partitioned edges/ parquet
-#    instead of the src/dst bucketed tables, and SCC lost its frontier
-#    mode — g18 g20 g21 g22 g23 g27 (r13), g06 g14 g19 (r14).  LLM:
-#    the literal-vector dot/L2 in lsh_bucket_expr and
-#    _nearest_cell_expr lost the expanded codegen form and always run
-#    the HOF fold — l17 l27 (r13), l11 l12 l51 (r14).  g05, l50 and l55
-#    changed too but hold r15 rows; g10/g32 changed but are lead names.
-# Family sentinels in-window: 12 q, 15 g, 18 l, 5 s.
-DRIVER_PRIORITY: list[str] = [
-    # rule 1: the 36 horizon-critical r12-row names
-    "g09_in_traversal", "g10_weighted_sssp", "g11_interaction_degree",
-    "g13_topo_levels", "g29_copurchase_lift", "g32_weighted_sssp",
-    "l13_hash_split", "l14_groupwise_normalize", "l15_label_centroids",
-    "l16_pipeline_composed", "l18_dedup_clusters",
-    "l31_boilerplate_score", "l46_lsh_banding_audit",
-    "l48_url_canonical_dedup", "l49_fuzzy_linkage",
-    "l52_source_report", "l57_audio_rms", "l63_embedding_outliers",
-    "l67_leakage_free_split",
-    "q18_json_extract", "q20_group_collect", "q21_array_functions",
-    "q26_rollup", "q29_pivot", "q35_range_step", "q37_geo_within",
-    "q41_hll_distinct", "q42_cms_heavy_hitters", "q44_delta_sum",
-    "q45_ttl_partition_prune", "q46_hll_mergeable_rollup",
-    "s11_stateful_running_totals", "s12_incremental_rollup",
-    "s14_gap_fill", "s16_lttb_downsample", "s20_incremental_hll",
-    # rule 2: queries whose plans changed this round (r13, then r14)
-    "g18_hits", "g20_random_walks", "g21_harmonic_centrality",
-    "g22_biased_walks", "g23_scc", "g27_diameter",
-    "l17_lsh_blocked_near_dup", "l27_semantic_dedup_clusters",
-    "g06_pagerank", "g14_repeat_until", "g19_personalized_pagerank",
-    "l11_ann_lsh_topk", "l12_ivf_ann_topk", "l51_hard_negatives",
-]
-# SATURATION AMENDMENT (late r5): the registry crossed 100 queries
-# (g23/g24/l34 registered mid-round, landing in the TAIL — the r5
-# window was already the mandated 46-stale+l02+3-new set).  At N
-# registered queries and a 50-query driver window, every query can get
-# a driver row at most every ceil(N/50) rounds, so the rotation test
-# now enforces staleness ≤ ceil(N/50) rounds (still 1 while N ≤ 100)
-# instead of a flat 1 — exactly the relaxation CLAUDE.md's saturation
-# warning pre-announced.  Queries registered mid-round carry their
-# registration round in REGISTERED_ROUND and are treated as having a
-# virtual driver row from the round before registration (they are
-# parity-swept locally from the moment they register).  The full
-# every-round local sweep (test_oracle_parity) remains the invariant
-# that makes the longer driver cadence safe.
-REGISTERED_ROUND: dict[str, int] = {
-    "g22_biased_walks": 5, "l32_containment_pairs": 5, "l33_pii_scrub": 5,
-    "g23_scc": 5, "g24_local_clustering": 5, "l34_bloom_decontaminate": 5,
-    "l35_sq8_topk": 5, "l36_domain_cap": 5, "g25_ktruss": 5,
-    "l37_shared_spans": 5, "l38_cdc_chunk_dedup": 5,
-    "l39_gopher_rules": 5, "s08_trending_topk": 5, "l40_pq_topk": 5,
-    "s09_interval_left_join": 5,
-    "q38_argmax_latest": 5, "g26_assortativity": 5,
-    "l41_dsir_weights": 5, "l42_weighted_sample": 5,
-    "s10_scd2_versions": 5, "q39_window_funnel": 5, "q40_retention": 5,
-    "l43_bpe_merges": 5, "g27_diameter": 5, "q41_hll_distinct": 5,
-    "q42_cms_heavy_hitters": 5, "s11_stateful_running_totals": 5,
-    "s12_incremental_rollup": 5, "l44_curation_pipeline": 5,
-    "l45_bpe_token_counts": 5, "g28_mis": 5, "s13_decayed_score": 5,
-    "l46_lsh_banding_audit": 5,
-    # round-6 registrations (virtual r5 row; real row due by round 8)
-    "q43_kmv_set_ops": 6, "q44_delta_sum": 6,
-    "s14_gap_fill": 6, "s15_pit_enrich": 6,
-    "g29_copurchase_lift": 6,
-    "l47_entropy_quality": 6, "l48_url_canonical_dedup": 6,
-    "l49_fuzzy_linkage": 6, "l50_knn_classify": 6,
-    "g30_modularity": 6, "l51_hard_negatives": 6,
-    "s16_lttb_downsample": 6, "g31_betweenness": 6,
-    "q45_ttl_partition_prune": 6, "l52_source_report": 6,
-    # round-7 registrations (virtual r6 row; real row due by round 9)
-    "q46_hll_mergeable_rollup": 7,
-    "q47_map_aggregates": 7, "q48_histogram_quantiles": 7,
-    "s17_sequence_match": 7, "l53_paragraph_dedup": 7,
-    "l54_stratified_split": 7, "l55_ann_recall_eval": 7,
-    "q49_weighted_quantiles": 7, "l56_source_overlap_matrix": 7,
-    "s18_sequence_count": 7, "l57_audio_rms": 7,
-    "q50_range_frame_windows": 7, "l58_snapshot_diff": 7,
-    "s19_stream_enrich": 7,
-    "q51_bitmap_segments": 7, "q52_grouping_sets": 7,
-    "l59_vocab_js_drift": 7, "l60_priority_dedup": 7,
-    "l61_overlap_chunks": 7,
-    "g32_weighted_sssp": 7, "q53_topk_weighted": 7,
-    "l62_winnow_pairs": 7,
-    "s20_incremental_hll": 7, "l63_embedding_outliers": 7,
-    "q54_top_event_paths": 7, "q55_conditional_aggregates": 7,
-    "l64_source_keyness": 7, "g33_temporal_reachability": 7,
-    "s21_interval_full_join": 7, "l65_langid_confusion": 7,
-    "s22_incremental_scd1": 7, "q56_sliding_hll": 7,
-    "l66_length_ks_drift": 7, "l67_leakage_free_split": 7,
-    "q57_jsonl_roundtrip": 7, "q58_unpivot_measures": 7,
-}
-
-# ROUND-14 ROTATION, pre-derived (assuming CORRECTNESS_r13 lands
-# with the window above; rounds 8-13 registered nothing, N stays 180,
-# lag stays ceil(180/50) = 4 files).  At r14 the horizon is
-# {r11,r12,r13,r14}.  Window, in order:
-# 1. LEAD COHORT: the 30 r10-row names r13 left unwindowed — their
-#    r10 rows leave the horizon when r14's file lands:
-#      g15 g16 g19 g30,
-#      q17 q19 q38 q39 q40 q43,
-#      s07 s08 s09 s10,
-#      l01 l05 l10 l11 l12 l33 l35 l36 l37 l38 l39 l41 l42 l44 l45 l51
-#    (30 = 44 r10-rows − the 14 windowed at r13: rule-2 members
-#    l06 l17 l19 l27 g23 + spares l43 l40 l50 g04 g18 q01 q06 s06 s13;
-#    4 g / 6 q / 4 s / 16 l — every family clears the ≥2 sentinel
-#    bar from the lead cohort alone).
-# 2. rule 2, PRE-DECLARED mid-r13 (the x30 broadcast-death fixes:
-#    join-strategy hints on every |E|-scaled join in the AA wedge
-#    path, triangle/LCC wedge enumeration, LPA superstep, k-truss
-#    support, modularity label joins, betweenness frontier joins
-#    and the motif compiler (+ its connected-order rewrite) — results
-#    identical, all
-#    sf0.01+sf0.001 parity re-verified fresh-process and
-#    property-pinned at change time; fixture pins flat):
-#    g03 g16 g17 g24 g30 g12 g31 q30 — the changed names NOT in the r13
-#    window
-#    (g25/l19/l55/g23 changed too but sit in the r13 window, so their
-#    r13 rows already cover the post-change code).  + any red from
-#    r13's file.
-# 3. ~15 spares from the 50 r11-row names, stalest-first.
-# As always: re-derive every cohort from REGISTERED_ROUND ∪ the
-# correctness files at r14 with `python tools/rotation.py` — the
-# r7/r8 pre-derivations were each off by one until recounted
-# (r9/r10/r11/r12/r13's survived the recount).
-#
-# ROUND-15 ROTATION, pre-derived (assuming CORRECTNESS_r14 lands with
-# the window above; N stays 180, horizon {r12,r13,r14,r15}):
-# 1. LEAD COHORT: the 36 r11-row names r14 left unwindowed —
-#      q05 q07-q16 q22-q25 q27 q28 q31-q34 q36 (22 q),
-#      l09 l20-l26 l28 l29 l47 (11 l), s04 s05 s15 (3 s), ZERO g
-#    (all four r11-row g names were r14 spares) — the g sentinel must
-#    come from rule-2/spares.
-# 2. rule 2, PRE-DECLARED mid-r14 (changed names NOT in the r14
-#    window; every change dual-scale parity re-verified fresh-process
-#    + property-pinned at change time, x10/x30 rows recorded):
-#    l19 l55 — the brute_force_topk_join chunk-path rework (probe
-#    release + eager per-chunk broadcast lifecycle), the NaN/inf
-#    element-class alignment (JVM form filters NaN cosines), and the
-#    LATE-r14 whole-matrix superset cut + tie-band trim (the x100
-#    l19 find: per-query lexsort loop allocation-bound, 138.7→7.5 s;
-#    property-pinned incl. a dup-heavy tie generator).  l05
-#    consumes cosine_expr paths too but is an r14 lead name.
-#    l04 — corpus-scaled Manku sub_bands auto tier (_auto_sub_bands)
-#    + the merge hint on the checkpoint-fed bands self-join (the
-#    x100 re-plan broadcast death; fixture pin 1.36 s, x30 28.3,
-#    x100 74.8 — parity green fresh-process both scales).
-#    l21 l34 — merge hint in _containment_report (l34's bench side
-#    is checkpoint-fed, the same estimator-blind class; pins
-#    1.12/1.45 flat, x30 6.5/7.6 flat).
-#    l56 — merge hint on the checkpoint-fed shingle self-join (pin
-#    2.41 flat, x30 13.5).
-#    OPTIMIZATION-ROUND ADDITIONS (late r14, the materialize-once
-#    program — every multiply-referenced expensive subplan now an
-#    eager localCheckpoint with strategy hints on its checkpoint-fed
-#    consumer joins; results identical, parity re-verified at
-#    sf0.01, x30 rows in PERF_scale_r14_opt_x30*.json; see
-#    OPTIMIZATION_r14.md):
-#    l03 l18 — shared shingle pass between signatures and rerank +
-#      candidate/restricted-set materialization in jaccard_pairs;
-#    l32 — containment_pairs materialize-once (plan 3651→245 lines);
-#    l21 l34 — one shingle pass for the train/bench split (further
-#      change on top of the mid-r14 hint);
-#    l62 — winnow fingerprint set materialized, pair join hinted;
-#    l25 l26 l31 — tf / bigram-instance / shingle-df materialize-once;
-#    l40 l35 — PQ/SQ8 codes projected as a column once (the inlined
-#      codes expression previously re-evaluated 8×/3× per row);
-#    l46 — inherits the jaccard_pairs internals;
-#    l50 l55 — bucketed-frame materialization + shuffle_hash
-#      enrichment builds (l50's n_candidates now rides the top-k
-#      window, one consumption; l51 same machinery, in-window).
-#    + any red from r14's file.
-# 3. ~12 spares from the 50 r12-row names, stalest-first, including
-#    ≥2 g names (g07 g08 ... candidates) for the family sentinel.
-assert len(DRIVER_PRIORITY) == 50, len(DRIVER_PRIORITY)
-assert len(set(DRIVER_PRIORITY)) == 50, "duplicate name in window"
-
-
-def _ordered(d: dict) -> dict:
-    missing = [n for n in DRIVER_PRIORITY if n not in QUERIES]
-    assert not missing, f"DRIVER_PRIORITY names not registered: {missing}"
-    out = {n: d[n] for n in DRIVER_PRIORITY if n in d}
-    for n, v in d.items():
-        if n not in out:
-            out[n] = v
-    return out
-
-
 def get_queries() -> dict[str, QueryFn]:
-    return _ordered(QUERIES)
+    return dict(QUERIES)
 
 
 def get_oracles() -> dict[str, str]:
-    return _ordered(ORACLES)
+    return dict(ORACLES)

@@ -244,43 +244,3 @@ def register_views(spark: SparkSession, sf_dir: str,
         df.createOrReplaceTempView(prefix + name)
     return dfs
 
-
-def table_exists(spark: SparkSession, name: str) -> bool:
-    """Analog of the reference's EXISTS TABLE probe
-    (``QueryHelper.java:119-129``)."""
-    return spark.catalog.tableExists(name)
-
-
-def create_tables(spark: SparkSession, sf_dir: str,
-                  names: list[str] | None = None) -> list[str]:
-    """Bootstrap catalog tables over the parquet files — the analog of the
-    reference's batched ``CREATE TABLE IF NOT EXISTS`` loop
-    (``QueryHelper.java:57,137-143``, gated by AUTO_CREATE_TABLE at
-    ``ClickhouseConfiguration.java:34-38``).  External tables: the catalog
-    entry points at the existing parquet, schema explicit."""
-    created = []
-    for name in (names or list(TABLES)):
-        if table_exists(spark, name):
-            continue
-        path = os.path.join(sf_dir, f"{name}.parquet")
-        ddl = ", ".join(f"{f.name} {f.dataType.simpleString()}"
-                        for f in TABLES[name].fields)
-        spark.sql(f"CREATE TABLE IF NOT EXISTS {name} ({ddl}) "
-                  f"USING parquet LOCATION '{path}'")
-        created.append(name)
-    return created
-
-
-def drop_table(spark: SparkSession, name: str) -> None:
-    """dropTable/clearStorage analog (``QueryHelper.java:206-209``,
-    ``ClickhouseStoreManager.java:114-120``) — drops the catalog entry
-    (external data untouched)."""
-    spark.sql(f"DROP TABLE IF EXISTS {name}")
-
-
-def check_exists(spark: SparkSession,
-                 names: list[str] | None = None) -> list[str]:
-    """checkExists analog (``ClickhouseStoreManager.java:171-177``):
-    returns the subset of expected tables missing from the catalog."""
-    return [n for n in (names or list(TABLES))
-            if not table_exists(spark, n)]

@@ -1,9 +1,9 @@
-"""Additional source/sink formats beyond parquet.
+"""JSON-lines corpus I/O beside the parquet tables.
 
-The reference's only I/O is its JDBC table surface; a full engine needs
-the common lake formats.  All readers take EXPLICIT schemas — schema
-inference is a full extra pass over the data at 100 TB and produces
-unstable types; never rely on it in production paths.
+The LLM-corpus interchange format is one JSON document per line.  The
+reader takes an EXPLICIT schema — schema inference is a full extra pass
+over the data at 100 TB and produces unstable types; never rely on it
+in production paths.
 """
 
 from __future__ import annotations
@@ -12,89 +12,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 
-def read_csv(spark: SparkSession, path: str, schema: T.StructType,
-             header: bool = True, delimiter: str = ",") -> DataFrame:
-    """CSV with explicit schema; malformed rows land in PERMISSIVE mode's
-    null columns rather than failing the scan (swap to FAILFAST when the
-    pipeline should halt on bad input)."""
-    return (spark.read.schema(schema)
-            .option("header", str(header).lower())
-            .option("delimiter", delimiter)
-            .option("mode", "PERMISSIVE")
-            .csv(path))
-
-
-def read_json(spark: SparkSession, path: str,
-              schema: T.StructType) -> DataFrame:
-    """JSON-lines with explicit schema (no inference pass)."""
-    return spark.read.schema(schema).json(path)
-
-
-def write_csv(df: DataFrame, path: str, header: bool = True) -> None:
-    df.write.mode("overwrite").option("header", str(header).lower()).csv(path)
-
-
 def write_json(df: DataFrame, path: str,
                compression: str | None = None) -> None:
     w = df.write.mode("overwrite")
     if compression:
         w = w.option("compression", compression)
     w.json(path)
-
-
-def read_orc(spark: SparkSession, path: str,
-             schema: T.StructType | None = None) -> DataFrame:
-    """ORC read (built into Spark, columnar + predicate pushdown like
-    parquet — the other common lake format).  Schema optional: ORC
-    files self-describe, so unlike CSV/JSON no inference pass is
-    needed; pass one to pin types across heterogeneous file sets."""
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.orc(path)
-
-
-def write_orc(df: DataFrame, path: str) -> None:
-    df.write.mode("overwrite").orc(path)
-
-
-def read_jdbc(spark: SparkSession, url: str, table: str,
-              partition_column: str | None = None,
-              num_partitions: int = 8, lower_bound=None,
-              upper_bound=None, **options) -> DataFrame:
-    """JDBC source — the Spark-native replacement for the reference's
-    HikariCP pool + hand-rolled statement batching
-    (ClickhouseDatasource.java, QueryHelper.java:224-317): executors read
-    `num_partitions` bounded range slices in parallel instead of one
-    synchronous connection.  Exercised end-to-end in
-    tests/test_formats.py against embedded Apache Derby (the JDBC engine
-    Spark itself ships for its metastore) — a real executed round-trip,
-    including the partitioned-range path."""
-    reader = spark.read.format("jdbc").option("url", url) \
-        .option("dbtable", table)
-    if partition_column is not None:
-        reader = (reader.option("partitionColumn", partition_column)
-                  .option("numPartitions", str(num_partitions))
-                  .option("lowerBound", str(lower_bound))
-                  .option("upperBound", str(upper_bound)))
-    for k, v in options.items():
-        reader = reader.option(k, v)
-    return reader.load()
-
-
-def write_jdbc(df: DataFrame, url: str, table: str,
-               mode: str = "append", batchsize: int = 10000,
-               **options) -> None:
-    """JDBC sink — batched prepared-statement inserts per partition (the
-    reference's mutateMany write path, QueryHelper.java:224-317, without
-    the hand-rolled pool).  `batchsize` is the rows-per-roundtrip knob
-    the reference exposes as batch dimensions."""
-    writer = (df.write.format("jdbc").mode(mode)
-              .option("url", url).option("dbtable", table)
-              .option("batchsize", str(batchsize)))
-    for k, v in options.items():
-        writer = writer.option(k, v)
-    writer.save()
 
 
 def read_jsonl_corpus(spark: SparkSession, path: str,

@@ -6,7 +6,7 @@ delete-before-insert mutate contract
 (ClickhouseKeyColumnValueStore.java:118-121,133-171).  Spark-native
 replacements:
 
-- change streams       → `readStream` file/Kafka source over the events
+- change streams       → `readStream` file source over the events
                          table; checkpointing replaces the WAL role
 - windowed analytics   → watermark + tumbling/sliding/session windows
 - exactly-once-ish     → `dropDuplicatesWithinWatermark` (bounded state)
@@ -28,10 +28,8 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from ..operators.kcvs import mutate
-from ..sources.catalog import TABLES
 
 
 def events_stream(spark: SparkSession, events_path: str,
@@ -49,97 +47,6 @@ def events_stream(spark: SparkSession, events_path: str,
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
     return convert_events_ts(reader.parquet(events_path), unit)
-
-
-def parse_kafka_events(raw: DataFrame) -> DataFrame:
-    """Decode Kafka wire rows (key/value BINARY + topic/partition/offset/
-    timestamp — the fixed schema of Spark's kafka source) into the typed
-    events schema: value carries one JSON event per record, `ts` arrives
-    as epoch-nanos (a change log preserves the writer's precision) and
-    narrows to µs with the SAME integer-div rule as the batch loader.
-
-    Split out from the source builder so the parse stage is unit-testable
-    without a broker: any DataFrame with the kafka wire columns (batch or
-    stream — unified API) goes through the identical plan."""
-    return (raw
-            .select(F.from_json(F.col("value").cast("string"),
-                                TABLES["events"]).alias("e"),
-                    F.col("timestamp").alias("kafka_ts"))
-            .select("e.*", "kafka_ts")
-            .withColumn("ts", F.timestamp_micros(F.expr("ts div 1000"))))
-
-
-def encode_kafka_events(events: DataFrame,
-                        topic: str = "events.txlog",
-                        n_partitions: int = 4) -> DataFrame:
-    """Producer-side wire encoding — the exact inverse of
-    parse_kafka_events: typed event rows → the kafka source's fixed
-    schema (key/value BINARY, topic, partition, offset, timestamp).
-    value = one JSON event per record with `ts` as epoch NANOS (a
-    change log preserves writer precision); key = the event_id bytes
-    (per-key ordering on the broker); partition = hash of the key.
-
-    What it's for: producing to a real broker in a full deployment, and
-    — in this broker-less sandbox — materializing the txlog as FILES so
-    the entire consume path (wire rows → parse → ordered idempotent
-    apply) runs end-to-end over the identical bytes a broker would
-    deliver (tests/test_streaming.py txlog replay).  parse(encode(x))
-    round-trips every column µs-exactly: µs → ns → `div 1000` → µs."""
-    from pyspark.sql import Window
-
-    part = F.pmod(F.hash("event_id"), F.lit(n_partitions)).cast("int")
-    payload = F.struct(
-        F.col("event_id"), F.col("user_id"), F.col("event_type"),
-        F.col("value"), F.col("props"),
-        (F.unix_micros(F.col("ts")) * F.lit(1000)).alias("ts"))
-    return events.select(
-        F.encode(F.col("event_id").cast("string"), "utf-8").alias("key"),
-        F.encode(F.to_json(payload), "utf-8").alias("value"),
-        F.lit(topic).alias("topic"),
-        part.alias("partition"),
-        F.row_number().over(Window.partitionBy(part).orderBy("event_id"))
-        .cast("long").alias("offset"),
-        F.col("ts").alias("timestamp"))
-
-
-def events_kafka_stream(spark: SparkSession, bootstrap_servers: str,
-                        topic: str = "events.txlog",
-                        starting_offsets: str = "earliest",
-                        fail_on_data_loss: bool = True) -> DataFrame:
-    """Kafka change-stream source — the analog of the reference's
-    `txlog`/`systemlog` change-log stores (QueryHelper.java:101-102),
-    which JanusGraph writes as an ordered mutation log.
-
-    Exactly-once recipe (the WAL contract the reference gets from its
-    log tables):
-    - **source**: consumed offsets are tracked in the streaming
-      checkpoint (`writeStream.option("checkpointLocation", ...)`) —
-      restart resumes from the last committed micro-batch, never
-      re-consuming acknowledged offsets;
-    - **sink**: pair with `foreach_batch_upsert` keyed on `event_id`
-      (idempotent merge — replayed micro-batches converge) or a
-      transactional table format; at-least-once delivery + idempotent
-      sink = effectively-once end-to-end.
-
-    `fail_on_data_loss` defaults to TRUE: if broker retention ages out
-    (or topic recreation removes) offsets the checkpoint still
-    references, the query fails loudly instead of silently skipping
-    the gap — a silent skip breaks the at-least-once leg the recipe
-    above depends on.  Opt into False only when gaps are an accepted
-    policy (e.g. a best-effort metrics topic).
-
-    Contract-level in this environment (no broker): the option surface
-    is the standard spark-sql-kafka source; `parse_kafka_events` (the
-    part with logic in it) is unit-tested against the wire schema.
-    """
-    raw = (spark.readStream.format("kafka")
-           .option("kafka.bootstrap.servers", bootstrap_servers)
-           .option("subscribe", topic)
-           .option("startingOffsets", starting_offsets)
-           .option("failOnDataLoss",
-                   "true" if fail_on_data_loss else "false")
-           .load())
-    return parse_kafka_events(raw)
 
 
 def tumbling_counts(events: DataFrame, width: str = "10 minutes",
@@ -213,10 +120,10 @@ def foreach_batch_upsert(stream: DataFrame, target_path: str,
     partition-overwrite discipline; the operator shape (anti-join ∪
     additions inside foreachBatch) is identical.
 
-    At-least-once transport (Kafka redelivery) can duplicate a key
-    WITHIN one micro-batch; a keyed table must still end with one row
+    At-least-once transport (a log redelivering records) can duplicate a
+    key WITHIN one micro-batch; a keyed table must still end with one row
     per key, so each batch is deduplicated on `key_cols` first —
-    last-wins by `order_col` (e.g. the kafka offset) when given,
+    last-wins by `order_col` (e.g. a log offset or event time) when given,
     arbitrary-among-identical otherwise.  Cross-batch duplicates were
     always absorbed by the delete-before-insert merge itself.
     """
@@ -818,83 +725,3 @@ def incremental_scd1(spark: SparkSession, events_dir: str,
          .option("checkpointLocation", checkpoint_dir)
          .trigger(availableNow=True).start())
     q.awaitTermination()
-
-
-def foreach_batch_jdbc_apply(spark: SparkSession, batch_df: DataFrame,
-                             batch_id: int, url: str, table: str,
-                             **jdbc_options) -> bool:
-    """One effectively-once micro-batch apply into a JDBC sink — the
-    reference's txlog→JDBC write path (QueryHelper.java:224-317 batched
-    inserts) with the exactly-once recipe the Kafka source docstring
-    promises, executed for real:
-
-    - an append-only LEDGER table (`<table>_ledger`, one row per
-      applied batch id) is consulted first: a replayed batch id ≤ the
-      ledger max is SKIPPED — foreachBatch is at-least-once, and
-      without the guard a replay double-appends;
-    - the batch's rows append with their batch_id (audit lineage);
-      read-side, the current state is the argMax-(ts, event_id) row
-      per key (read_jdbc_current_state) — append-only writes +
-      latest-wins reads make the sink idempotent without needing JDBC
-      DELETE support, the same immutable-versions idea as the parquet
-      rollups.
-
-    The ledger append commits AFTER the data append: a crash between
-    the two replays the batch, the guard misses (ledger has no row),
-    the data appends AGAIN — and latest-wins reads still return the
-    same state because the duplicate rows tie on (batch_id, ts,
-    event_id) and carry identical payloads.  Returns True if the batch
-    was applied, False if skipped (so tests can pin the guard)."""
-    from ..sources.formats import read_jdbc, write_jdbc
-    ledger = f"{table}_ledger"
-    try:
-        cur = (read_jdbc(spark, url, ledger, **jdbc_options)
-               .agg(F.max("batch_id").alias("b")).collect()[0]["b"])
-    except Exception as exc:
-        # ONLY table-absence means "first batch".  A blanket catch
-        # would treat a transient read failure (lock timeout, network
-        # blip, bad option) during a REPLAY as first-batch too,
-        # silently disabling the replay guard and double-appending —
-        # any other failure must surface.
-        msg = str(exc).lower()
-        # match backend missing-table signals tightly: SQLStates
-        # (Derby 42X05, MySQL 42S02, Postgres 42P01), Spark's error
-        # class, and the common phrasings INCLUDING the contracted
-        # one MySQL uses — a generic 'not found' alone matched any
-        # stack trace containing those words
-        if not any(p in msg for p in
-                   ("42x05", "42s02", "42p01",
-                    "table_or_view_not_found",
-                    "does not exist", "doesn't exist",
-                    "table or view not found")):
-            raise
-        cur = None  # first batch: ledger doesn't exist yet
-    if cur is not None and batch_id <= cur:
-        return False
-    rows = batch_df.withColumn("batch_id", F.lit(int(batch_id)))
-    write_jdbc(rows, url, table, mode="append", **jdbc_options)
-    one = spark.createDataFrame([(int(batch_id),)], "batch_id long")
-    write_jdbc(one, url, ledger, mode="append", **jdbc_options)
-    return True
-
-
-def read_jdbc_current_state(spark: SparkSession, url: str, table: str,
-                            key: str = "user_id",
-                            **jdbc_options) -> DataFrame:
-    """Latest-wins read over the append-only JDBC apply log: one row
-    per key, the argMax-(ts, event_id) version.  EVENT time, not batch
-    id, decides the winner — micro-batches are not guaranteed to be
-    time-ordered across the log (a file source chunks arbitrarily; a
-    Kafka source orders only within a partition), so ranking by
-    batch_id first would resurrect an old state whenever an older
-    event arrived in a later batch.  Duplicate appends from a
-    crash-replay collapse here too (identical rows; dropDuplicates
-    removes the copies)."""
-    from pyspark.sql import Window
-
-    from ..sources.formats import read_jdbc
-    df = read_jdbc(spark, url, table, **jdbc_options).dropDuplicates()
-    w = Window.partitionBy(key).orderBy(
-        F.col("ts").desc(), F.col("event_id").desc())
-    return (df.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1).drop("_rn"))

@@ -18,6 +18,9 @@ SF_ORACLE = "/root/testdata/sf0.01"
 @pytest.fixture(scope="session")
 def spark():
     s = get_spark("jcs-tests", cpus=8)
+    # a generated method that fails to compile fails the test that built
+    # it, instead of silently falling back to the interpreted path
+    s.conf.set("spark.sql.codegen.fallback", "false")
     yield s
 
 

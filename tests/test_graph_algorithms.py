@@ -159,19 +159,18 @@ def test_weighted_shortest_paths(spark):
 
 
 def test_motif_finding(spark):
-    from janusgraph_clickhouse_spark.graph.motif import count_motif, find
+    from janusgraph_clickhouse_spark.graph.motif import find
     # triangle 1→2→3→1 plus chord 1→4
     g = graph_from_edge_list(spark, [(1, 2), (2, 3), (3, 1), (1, 4)])
     chains = find(g, [("a", None, "b"), ("b", None, "c")]).collect()
     assert sorted(tuple(r) for r in chains) == [
         (1, 2, 3), (2, 3, 1), (3, 1, 2), (3, 1, 4)]
-    cycles = count_motif(
+    cycles = find(
         g, [("x", None, "y"), ("y", None, "z"), ("z", None, "x")],
-        distinct_vertices=True).first()["matches"]
+        distinct_vertices=True).count()
     assert cycles == 3  # the 3 rotations of the one directed triangle
     # repeated-variable pattern: out-and-back (none in this DAG-ish graph)
-    assert count_motif(g, [("a", None, "b"), ("b", None, "a")]) \
-        .first()["matches"] == 0
+    assert find(g, [("a", None, "b"), ("b", None, "a")]).count() == 0
 
 
 def test_traversal_edge_steps(spark):
@@ -216,20 +215,6 @@ def test_graph_persistence_roundtrip(spark, sf_smoke, tmp_path):
     want = Traversal.V(g, 42 + 1_000_000_000).out("placed")
     assert sorted(r.id for r in t.to_df().collect()) == \
         sorted(r.id for r in want.to_df().collect())
-
-
-def test_props_map_column(spark, sf_smoke):
-    from janusgraph_clickhouse_spark.graph.model import props_map
-    from janusgraph_clickhouse_spark.sources import load_table
-    c = load_table(spark, sf_smoke, "customer")
-    v = c.select(F.col("c_custkey").alias("id"),
-                 props_map("c_mktsegment", "c_acctbal").alias("props"))
-    # dynamic property access: g.V().has('mktsegment', 'BUILDING')
-    hit = v.filter(F.element_at("props", "c_mktsegment") == "BUILDING")
-    want = c.filter(F.col("c_mktsegment") == "BUILDING").count()
-    assert hit.count() == want
-    row = v.first()
-    assert set(row.props.keys()) == {"c_mktsegment", "c_acctbal"}
 
 
 def test_longest_path_levels_micro(spark):

@@ -1,11 +1,10 @@
 """Incremental dedup against a persisted fingerprint index: verdicts,
-append-only index discipline, and the streaming absorb path (per-batch
-cost O(batch) — the corpus is never re-fingerprinted)."""
+append-only index discipline and replay safety (per-batch cost
+O(batch) — the corpus is never re-fingerprinted)."""
 
 from __future__ import annotations
 
 import os
-import time
 
 from pyspark.sql import functions as F
 
@@ -75,39 +74,7 @@ def test_absorb_batches_append_only(spark, tmp_path):
         _df(spark, [(31, "m n o p mm nn oo pp")]), "doc_id", "text",
         path).collect()}
     assert vd == {(31, 12)}
-
-
-def test_incremental_stream_matches_sequential_absorb(spark, tmp_path):
-    """The foreachBatch streaming form must produce exactly the
-    sequential absorb verdicts — one O(batch) step per micro-batch."""
-    src = tmp_path / "src"
-    src.mkdir()
-    _df(spark, B_DOCS).coalesce(1).write.parquet(str(src / "b0"))
-    time.sleep(1.1)  # file-source orders micro-batches by mtime
-    _df(spark, C_DOCS).coalesce(1).write.parquet(str(src / "b1"))
-
-    path = str(tmp_path / "fpindex")
-    I.bootstrap_index(_df(spark, A_DOCS), "doc_id", "text", path)
-    baseline = _index_files(path)
-
-    stream = (spark.readStream.schema("doc_id long, text string")
-              .option("maxFilesPerTrigger", 1)
-              .parquet(str(src / "*")))
-    verdicts_path = str(tmp_path / "verdicts")
-    q = (I.incremental_dedup_stream(
-            stream, "doc_id", "text", path, verdicts_path,
-            checkpoint_dir=str(tmp_path / "ck"))
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
-
-    got = spark.read.parquet(verdicts_path)
-    rows = {(r.doc_id, r.dup_of, r.jaccard) for r in got.collect()}
-    assert rows == {(11, 1, 1.0), (21, 12, 1.0)}
-    # two distinct micro-batches actually ran
-    assert got.select("batch_id").distinct().count() == 2
-    final = _index_files(path)
-    assert all(final[f] == m for f, m in baseline.items())
-    # index absorbed exactly the novel doc 12 (21 was a dup)
+    # the index absorbed exactly the novel doc 12 (21 and 31 were dups)
     ids = {r.id for r in
            I.read_index(spark, path)["sizes"].select("id").collect()}
     assert ids == {1, 2, 12}
@@ -154,70 +121,6 @@ def test_torn_append_heals_on_replay(spark, tmp_path):
     got = {(r.doc_id, r.dup_of, r.jaccard) for r in I.absorb_batch(
         probe, "doc_id", "text", path).collect()}
     assert got == {(21, 12, 1.0)}
-
-
-def test_stream_replay_skipped_by_markers(spark, tmp_path):
-    """A fresh checkpoint replays every file; the _absorbed markers must
-    short-circuit the replay — verdicts and index stay byte-stable."""
-    src = tmp_path / "src"
-    src.mkdir()
-    _df(spark, B_DOCS).coalesce(1).write.parquet(str(src / "b0"))
-    time.sleep(1.1)
-    _df(spark, C_DOCS).coalesce(1).write.parquet(str(src / "b1"))
-    path = str(tmp_path / "fpindex")
-    I.bootstrap_index(_df(spark, A_DOCS), "doc_id", "text", path)
-    verdicts_path = str(tmp_path / "verdicts")
-
-    def _run(ck):
-        q = (I.incremental_dedup_stream(
-                stream := spark.readStream
-                .schema("doc_id long, text string")
-                .option("maxFilesPerTrigger", 1).parquet(str(src / "*")),
-                "doc_id", "text", path, verdicts_path,
-                checkpoint_dir=str(tmp_path / ck))
-             .trigger(availableNow=True).start())
-        q.awaitTermination()
-
-    _run("ck1")
-    idx_after = _index_files(path)
-    rows = {(r.doc_id, r.dup_of) for r in
-            spark.read.parquet(verdicts_path).collect()}
-    assert rows == {(11, 1), (21, 12)}
-    _run("ck2")  # fresh checkpoint = full replay, markers must skip it
-    assert _index_files(path) == idx_after
-    assert {(r.doc_id, r.dup_of) for r in
-            spark.read.parquet(verdicts_path).collect()} == rows
-
-
-def test_compact_index_equivalent_fewer_files(spark, tmp_path):
-    """Compaction rewrites the accumulated per-batch part files clustered
-    by join key: identical verdicts, strictly fewer files, duplicate
-    rows from torn appends dropped."""
-    path = str(tmp_path / "fpindex")
-    I.bootstrap_index(_df(spark, A_DOCS), "doc_id", "text", path)
-    for i, txt in enumerate(["m n o p mm nn oo pp",
-                             "aa bb cc dd ee ff gg hh",
-                             "k1 k2 k3 k4 k5 k6 k7 k8"]):
-        I.absorb_batch(_df(spark, [(100 + i, txt)]), "doc_id", "text",
-                       path)
-    probe = _df(spark, [(200, "aa bb cc dd ee ff gg hh"),
-                        (201, "a b c d e f g h")])
-    before = {(r.doc_id, r.dup_of, r.jaccard)
-              for r in I.incremental_dedup_pairs(
-                  probe, "doc_id", "text",
-                  I.read_index(spark, path)).collect()}
-    n_before = len(_index_files(path))
-    I.compact_index(spark, path, num_files=1)
-    after = {(r.doc_id, r.dup_of, r.jaccard)
-             for r in I.incremental_dedup_pairs(
-                 probe, "doc_id", "text",
-                 I.read_index(spark, path)).collect()}
-    assert after == before == {(200, 101, 1.0), (201, 1, 1.0)}
-    assert len(_index_files(path)) < n_before
-    # absorb still works against the compacted layout
-    assert {(r.doc_id, r.dup_of) for r in I.absorb_batch(
-        probe, "doc_id", "text", path).collect()} \
-        == {(200, 101), (201, 1)}
 
 
 def test_replay_emits_no_batch_internal_pairs(spark, tmp_path):
@@ -313,27 +216,3 @@ def test_shingle_less_docs_become_known(spark, tmp_path):
     files_after_replay = sorted(
         os.listdir(os.path.join(idx, "sizes")))
     assert files_after_first == files_after_replay
-
-
-def test_compact_index_heals_crash_leftovers(spark, tmp_path):
-    """A leftover _<t>.old (crash before cleanup) is swept, and a
-    missing live dir with .old present (crash between renames) is
-    restored - compaction can never wedge on ENOTEMPTY (r7 review)."""
-    import os
-    import shutil
-    from janusgraph_clickhouse_spark.llm.incremental import (
-        bootstrap_index, compact_index, read_index)
-    idx = str(tmp_path / "fpidx")
-    df = spark.createDataFrame(
-        [(i, f"document number {i} with words {i % 3} {i % 5} etc")
-         for i in range(20)], "doc_id long, text string")
-    bootstrap_index(df, "doc_id", "text", idx)
-    # simulate crash-between-renames: live dir moved to .old
-    os.rename(os.path.join(idx, "sizes"), os.path.join(idx, "_sizes.old"))
-    # and a stale .old beside an intact live dir
-    shutil.copytree(os.path.join(idx, "buckets"),
-                    os.path.join(idx, "_buckets.old"))
-    compact_index(spark, idx)
-    assert read_index(spark, idx)["sizes"].count() == 20
-    assert not os.path.exists(os.path.join(idx, "_sizes.old"))
-    assert not os.path.exists(os.path.join(idx, "_buckets.old"))

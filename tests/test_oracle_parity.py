@@ -39,53 +39,6 @@ def test_every_oracle_has_query():
     assert set(ORACLES) <= set(QUERIES)
 
 
-def test_driver_window_rotation_policy():
-    """The driver checks only the FIRST 50 registry entries; the window
-    rotates each round (CLAUDE.md policy).  Enforced invariants: exactly
-    50 priority names forming the registry prefix; ≥2 sentinels per
-    family in-window; and NO query goes more than ceil(N/50) rounds
-    without driver evidence (the tightest bound a 50-query window can
-    honor at N registered queries — a flat 1 until N crossed 100 in
-    round 5).  Every tail query must have a green row within the last
-    ceil(N/50) CORRECTNESS files, where a query registered mid-round R
-    counts as having a virtual row at round R−1 (REGISTERED_ROUND);
-    the full local parity sweep in this file covers every query every
-    round regardless."""
-    import glob
-    import json
-    import math
-    import os
-    import re
-
-    from janusgraph_clickhouse_spark.plans.registry import (
-        DRIVER_PRIORITY, REGISTERED_ROUND)
-
-    names = list(QUERIES)
-    assert len(DRIVER_PRIORITY) == 50
-    assert names[: len(DRIVER_PRIORITY)] == DRIVER_PRIORITY
-    window = set(names[:50])
-    for fam in ("q", "g", "l", "s"):
-        assert len({n for n in window if n.startswith(fam)}) >= 2, \
-            f"family {fam} has <2 sentinels in the driver window"
-    root = os.path.join(os.path.dirname(__file__), "..")
-    files = sorted(glob.glob(os.path.join(root, "CORRECTNESS_r*.json")))
-    lag = max(1, math.ceil(len(names) / 50))
-    latest_round = int(re.search(r"_r(\d+)", files[-1]).group(1))
-    recent: dict[str, dict] = {}
-    for path in files[-lag:]:
-        with open(path) as f:
-            for n, row in json.load(f).items():
-                if row.get("hash_match") or row.get("rows_match"):
-                    recent[n] = row
-    floor_round = latest_round - lag + 1
-    stale = [n for n in names[50:]
-             if n not in recent
-             and REGISTERED_ROUND.get(n, 0) - 1 < floor_round]
-    assert not stale, (
-        f"tail queries with no driver row in the last {lag} rounds "
-        f"(rotate them into DRIVER_PRIORITY): {stale}")
-
-
 def test_no_unmaterialized_oracle_ctes():
     """Every CTE in every oracle must be AS MATERIALIZED.  DuckDB
     inlines plain CTEs at every reference site, and the optimizer's

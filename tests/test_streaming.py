@@ -166,24 +166,6 @@ def test_apply_in_pandas_with_state(spark, events_dir, sf_smoke):
     assert final == want
 
 
-def test_catalog_bootstrap_ddl(spark, sf_smoke):
-    """create/drop/exists analogs of the reference's table bootstrap."""
-    from janusgraph_clickhouse_spark.sources.catalog import (
-        check_exists, create_tables, drop_table, table_exists)
-    for n in ("region", "nation"):
-        drop_table(spark, n)
-    missing = check_exists(spark, ["region", "nation"])
-    assert missing == ["region", "nation"]
-    created = create_tables(spark, sf_smoke, ["region", "nation"])
-    assert created == ["region", "nation"]
-    assert table_exists(spark, "region")
-    assert spark.table("region").count() == 5
-    # idempotent (IF NOT EXISTS): second call creates nothing
-    assert create_tables(spark, sf_smoke, ["region", "nation"]) == []
-    for n in ("region", "nation"):
-        drop_table(spark, n)
-
-
 def test_stream_static_enrich(spark, events_dir, sf_smoke):
     from janusgraph_clickhouse_spark.streaming.ops import enrich_stream
     stream = events_stream(spark, events_dir)
@@ -251,72 +233,28 @@ def test_foreach_batch_upsert_multiple_microbatches(spark, sf_smoke, tmp_path):
     assert final.select("event_id").distinct().count() == events.count()
 
 
-def test_kafka_parse_contract(spark):
-    """Kafka wiring is contract-level (no broker in env): the parse stage
-    must turn the kafka source's exact wire schema (key/value BINARY,
-    topic/partition/offset/timestamp) into typed events, with the same
-    ns→µs integer-div rule as the batch loader."""
-    import json
-
-    from janusgraph_clickhouse_spark.streaming.ops import parse_kafka_events
-
-    ns = 1_700_000_000_123_456_789  # non-ms-aligned: catches float div
-    payload = {"event_id": 7, "ts": ns, "user_id": 42,
-               "event_type": "view", "value": 1.5, "props": "{}"}
-    wire = spark.createDataFrame(
-        [(b"k", json.dumps(payload).encode(), "events.txlog", 0, 123,
-          __import__("datetime").datetime(2023, 11, 14, 22, 13, 20))],
-        "key binary, value binary, topic string, partition int, "
-        "offset long, timestamp timestamp")
-    out = parse_kafka_events(wire)
-    row = out.collect()[0]
-    assert row.event_id == 7 and row.user_id == 42
-    assert row.event_type == "view" and row.value == 1.5
-    # exact µs truncation of the ns value (123456789 ns → 123456 µs)
-    assert row.ts.microsecond == 123456
-    assert out.schema["ts"].dataType.typeName() == "timestamp"
-
-
-def test_events_kafka_stream_builds_unresolved(spark):
-    """The source builder itself needs the kafka connector jar + broker —
-    absent here; assert it fails only at that layer (option surface OK),
-    not with a Python error."""
-    from janusgraph_clickhouse_spark.streaming.ops import events_kafka_stream
-
-    try:
-        events_kafka_stream(spark, "localhost:9092")
-    except Exception as e:  # noqa: BLE001 — jar missing is the expected path
-        msg = str(e)
-        assert "kafka" in msg.lower()
-
-
 def test_txlog_replay_end_to_end(spark, sf_smoke, tmp_path):
-    """The txlog/systemlog analog END-TO-END minus only the broker
-    socket: typed events → encode_kafka_events (producer wire bytes) →
-    file-backed transport with a planted REDELIVERY (the same wire rows
-    appear again in a later 'fetch') → parse_kafka_events → ordered
-    idempotent apply (foreach_batch_upsert).  The store must converge
-    to exactly-once state and every column must round-trip µs-exactly."""
+    """The txlog/systemlog analog end-to-end: typed events land as
+    parquet files in a change-log directory with a planted REDELIVERY
+    (the same 40 rows appear again in a later file, as at-least-once
+    transport delivers them) and stream through the ordered idempotent
+    apply (foreach_batch_upsert with order_col).  The store must
+    converge to exactly-once state and every column must round-trip
+    µs-exactly."""
     import time
-
-    from janusgraph_clickhouse_spark.streaming.ops import (
-        encode_kafka_events, parse_kafka_events)
 
     events = (load_table(spark, sf_smoke, "events")
               .orderBy("event_id").limit(200).cache())
-    wire = encode_kafka_events(events)
-    wire_dir = tmp_path / "wire"
-    wire.coalesce(1).write.parquet(str(wire_dir / "fetch0"))
+    log_dir = tmp_path / "txlog"
+    events.coalesce(1).write.parquet(str(log_dir / "fetch0"))
     time.sleep(1.1)  # file source orders batches by mtime
     # at-least-once: 40 records redelivered in a later fetch
-    wire.orderBy("key").limit(40).coalesce(1) \
-        .write.parquet(str(wire_dir / "fetch1"))
+    events.limit(40).coalesce(1).write.parquet(str(log_dir / "fetch1"))
 
-    stream = (spark.readStream.schema(wire.schema)
+    stream = (spark.readStream.schema(events.schema)
               .option("maxFilesPerTrigger", 1)
-              .parquet(str(wire_dir / "*")))
-    parsed = parse_kafka_events(stream).drop("kafka_ts")
-    q = (foreach_batch_upsert(parsed, str(tmp_path / "store"),
+              .parquet(str(log_dir / "*")))
+    q = (foreach_batch_upsert(stream, str(tmp_path / "store"),
                               key_cols=["event_id"],
                               checkpoint_dir=str(tmp_path / "ck"),
                               order_col="ts")
@@ -328,7 +266,7 @@ def test_txlog_replay_end_to_end(spark, sf_smoke, tmp_path):
     assert store.count() == 200  # redelivery absorbed, one row per key
     exp = {tuple(r) for r in events.select(*cols).collect()}
     got = {tuple(r) for r in store.select(*cols).collect()}
-    assert got == exp  # parse(encode(x)) == x, µs timestamps included
+    assert got == exp  # every column µs-exact, timestamps included
     events.unpersist()
 
 
@@ -780,67 +718,3 @@ def test_as_of_join_subsecond_tolerance(spark):
                       tolerance_seconds=0.5).collect()}
     assert out[10].rv is None     # 0.9 s old: outside 0.5 s tolerance
     assert out[11].rv == 8        # 0.1 s old: inside
-
-
-def test_streaming_jdbc_apply_exactly_once(spark, tmp_path):
-    """The full txlog→JDBC apply path, executed against embedded Derby:
-    3 real micro-batches stream through the ledger-guarded foreachBatch
-    apply; the read-side current state equals the batch argMax; a
-    REPLAYED batch id is skipped; and even a crash-shaped double-append
-    (data written, ledger row lost) leaves the current state
-    unchanged."""
-    import pytest
-
-    from janusgraph_clickhouse_spark.sources.formats import write_jdbc
-    from janusgraph_clickhouse_spark.streaming.ops import (
-        events_stream, foreach_batch_jdbc_apply, read_jdbc_current_state)
-
-    url = f"jdbc:derby:{tmp_path}/sinkdb;create=true"
-    props = {"driver": "org.apache.derby.jdbc.EmbeddedDriver"}
-    ev = _attr_events(spark, [
-        (1, 0, 7, "click"), (2, 120, 7, "purchase"),
-        (3, 60, 8, "view"), (4, 200, 8, "error"),
-        (5, 10, 9, "signup"), (6, 300, 9, "view"),
-    ])
-    d = str(tmp_path / "jdbc_events")
-    ev.repartition(3).write.parquet(d)
-    try:
-        write_jdbc(ev.limit(0), url, "probe", mode="overwrite", **props)
-    except Exception as e:  # noqa: BLE001
-        if "derby" in str(e).lower() and "driver" in str(e).lower():
-            pytest.skip(f"embedded Derby unavailable: {e}")
-        raise
-
-    stream = events_stream(spark, d, max_files_per_trigger=1)
-    q = (stream.writeStream
-         .foreachBatch(lambda b, bid: foreach_batch_jdbc_apply(
-             spark, b, bid, url, "state", **props))
-         .option("checkpointLocation", str(tmp_path / "ckpt"))
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
-
-    got = {r.user_id: (r.event_id, r.event_type) for r in
-           read_jdbc_current_state(spark, url, "state", **props).collect()}
-    assert got == {7: (2, "purchase"), 8: (4, "error"), 9: (6, "view")}
-
-    # replayed batch id (at-least-once delivery) must be skipped
-    applied = foreach_batch_jdbc_apply(spark, ev.limit(2), 0, url,
-                                       "state", **props)
-    assert applied is False
-    got2 = {r.user_id: (r.event_id, r.event_type) for r in
-            read_jdbc_current_state(spark, url, "state", **props).collect()}
-    assert got2 == got
-
-    # crash shape: data appended twice for one batch (ledger row lost
-    # between the appends) — latest-wins + dropDuplicates still yields
-    # the same state
-    from janusgraph_clickhouse_spark.sources.formats import read_jdbc
-    max_b = (read_jdbc(spark, url, "state_ledger", **props)
-             .agg(__import__("pyspark.sql.functions", fromlist=["F"])
-                  .max("batch_id")).collect()[0][0])
-    dup = read_jdbc(spark, url, "state", **props) \
-        .filter(f"batch_id = {max_b}")
-    write_jdbc(dup, url, "state", mode="append", **props)
-    got3 = {r.user_id: (r.event_id, r.event_type) for r in
-            read_jdbc_current_state(spark, url, "state", **props).collect()}
-    assert got3 == got

@@ -25,7 +25,7 @@ clean here stays clean; anything flagged here deserves eyes):
   ReadSchema width (column-pruning visibility), SortMergeJoin count.
 
 Exit code 1 if any un-allowlisted ERROR was found (wireable into a
-round checklist next to rotation.py --check).
+pre-merge checklist).
 """
 from __future__ import annotations
 
