@@ -22,6 +22,7 @@ from __future__ import annotations
 
 import hashlib
 import os
+from itertools import combinations
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame
@@ -520,7 +521,6 @@ def simhash_pairs(df: DataFrame, id_col: str, text_col: str,
     if n_bands <= max_hamming:
         raise ValueError(
             f"need more bands than max_hamming: {n_bands} <= {max_hamming}")
-    from itertools import combinations
     base, rem = divmod(64, n_bands)
     widths = [base + 1 if b < rem else base for b in range(n_bands)]
     starts = [sum(widths[:b]) for b in range(n_bands)]
