@@ -14,8 +14,8 @@ over ClickHouse — see SURVEY.md) as an idiomatic Spark DataFrame/SQL engine:
                    MinHash-LSH, SimHash, n-gram Jaccard, embedding near-dup),
                    similarity search, text analysis, multimodal columns.
 - ``streaming``  — Structured Streaming ops: watermarks, windows, sessionize,
-                   stateful dedup, foreachBatch upsert (the analog of the
-                   reference's mutate/txlog semantics).
+                   foreachBatch upsert (the analog of the reference's
+                   mutate/txlog semantics).
 - ``functions``  — scalar predicate/function library (JanusGraph predicate →
                    Spark Column mapping).
 

@@ -1,3 +1,3 @@
-from .predicates import P, apply_predicate
+from .predicates import P
 
-__all__ = ["P", "apply_predicate"]
+__all__ = ["P"]

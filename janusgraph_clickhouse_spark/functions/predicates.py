@@ -158,21 +158,3 @@ class P:
                                     lon_max1, lat_min2, lat_max2,
                                     lon_min2, lon_max2)
 
-
-_DISPATCH = {
-    "eq": P.eq, "neq": P.neq, "gt": P.gt, "gte": P.gte, "lt": P.lt,
-    "lte": P.lte, "within": P.within, "without": P.without,
-    "textContains": P.text_contains, "textPrefix": P.text_prefix,
-    "textRegex": P.text_regex, "textFuzzy": P.text_fuzzy,
-    "geoWithinCircle": P.geo_within_circle,
-    "geoWithinBox": P.geo_within_box,
-}
-
-
-def apply_predicate(name: str, col: str, *args) -> Column:
-    """Dynamic form: apply_predicate("gt", "age", 30)."""
-    if name in ("between", "inside", "outside"):
-        return getattr(P, name)(col, *args)
-    if name not in _DISPATCH:
-        raise ValueError(f"unknown predicate: {name}")
-    return _DISPATCH[name](col, *args)

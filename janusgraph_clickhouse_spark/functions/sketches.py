@@ -210,7 +210,7 @@ def cms_heavy_hitters(df: DataFrame, col: str, k: int = 20,
     quantize floats first — the q44 discipline) instead of row counts;
     the CMS min-over-rows guarantee holds for any non-negative
     additive weight exactly as it does for counts.  Both preconditions
-    are ENFORCED per row (raise_error branch, the zorder_key idiom): a
+    are ENFORCED per row (a raise_error branch on each bad row): a
     fractional weight would silently truncate under a bare long cast
     and diverge from a floor(x·100+0.5) oracle, and a negative weight
     silently voids the never-underestimate guarantee — pre-quantize

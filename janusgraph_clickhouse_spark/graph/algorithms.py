@@ -9,9 +9,10 @@ changed rows; the kernel observes their count on its checkpoint job):
 - pagerank / personalized_pagerank — score-push iteration, damping 0.85
 - connected_components — `_edge_components`: min-id label propagation
                      with pointer jumping, the one components loop
-                     (also behind `_component_split` and
-                     llm.dedup.pairs_to_clusters); `_bipartite_components`
-                     runs the same update over an incidence
+                     (also behind `_component_split`,
+                     llm.dedup.pairs_to_clusters and
+                     `_bipartite_components`, which runs it over
+                     per-group star edges)
 - shortest_paths / longest_path_levels — min / max edge relaxation
 - strongly_connected_components — forward coloring + backward reach,
                      both lazily batched on the kernel
@@ -24,7 +25,7 @@ their own drivers.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .model import PropertyGraph
@@ -370,7 +371,6 @@ def label_propagation(graph: PropertyGraph, max_iter: int = 4) -> DataFrame:
     vertex self-loops), so a ghost endpoint would vote and appear in
     the result where the pre-r9 join-back form restricted output to
     the vertex set."""
-    from pyspark.sql import Window
     width = graph.edges.sparkSession.sparkContext.defaultParallelism
     sym = graph.undirected_edges()
     both = sym.unionAll(sym.select(F.col("dst").alias("src"),
@@ -500,22 +500,6 @@ AA_COMP_CAP = 4096
 TRI_COMP_CAP = 4096
 
 
-def _pull_min_label(cs: DataFrame, pulled: DataFrame) -> DataFrame:
-    """One min-label round: c ← min(c, pulled c2), then one path-halving
-    pointer jump c ← min(c, c(c)); (n, c, changed).  The update both
-    component loops share.  Plain propagation needs O(diameter) rounds;
-    composing the label map with itself each round gives O(log
-    diameter)."""
-    new = (cs.join(pulled, "n", "left")
-           .select("n", F.col("c").alias("_old"),
-                   F.least("c", F.coalesce("c2", "c")).alias("c")))
-    hop = new.select(F.col("n").alias("_k"), F.col("c").alias("_cc"))
-    c = F.least("c", F.coalesce("_cc", "c"))
-    return (new.join(hop, new["c"] == hop["_k"], "left")
-            .select("n", c.alias("c"),
-                    (c != F.col("_old")).cast("int").alias("changed")))
-
-
 def _edge_components(sym: DataFrame, max_iter: int = 15):
     """Connected-component labels of an undirected edge set (either
     orientation per edge): (n, c) with c = min vertex id in n's
@@ -524,7 +508,8 @@ def _edge_components(sym: DataFrame, max_iter: int = 15):
     keep their fully-distributed path — an unconverged labeling can
     split a true component and silently corrupt anything computed per
     label).  The one min-label components loop: `connected_components`,
-    `_component_split` and `pairs_to_clusters` all run it.
+    `_component_split`, `_bipartite_components` and `pairs_to_clusters`
+    all run it.
 
     Min-label propagation + path-halving pointer jumps (labels are
     vertex ids, so label-of-label is one self-join) — O(log diameter)
@@ -535,11 +520,12 @@ def _edge_components(sym: DataFrame, max_iter: int = 15):
     Messages flow both ways along each edge through two joins of `sym`
     itself (src → dst and dst → src), never a symmetrized union: a
     src-partitioned input keeps its layout for the first join, and a
-    join hint on `sym` reaches both joins — `_component_split` hints
-    merge, since its checkpoint-child edge set carries a tiny size
-    estimate (the mis-broadcast class).  Nothing |E|-sized is
-    materialized here on top of the caller's copy (a 2·|E| copy is what
-    OOM'd the first x30 g24 attempt on the 8g heap)."""
+    join hint on `sym` reaches both joins — `_component_split` and
+    `_bipartite_components` hint merge, since their checkpoint-child
+    edge sets carry a tiny size estimate (the mis-broadcast class).
+    Nothing |E|-sized is materialized here on top of the caller's copy
+    (a 2·|E| copy is what OOM'd the first x30 g24 attempt on the 8g
+    heap)."""
     e = sym.select("src", "dst")
     cs = (e.select(F.col("src").alias("n"))
           .unionAll(e.select(F.col("dst").alias("n"))).distinct()
@@ -553,7 +539,15 @@ def _edge_components(sym: DataFrame, max_iter: int = 15):
                 .unionAll(e.join(c, e["dst"] == c["_u"])
                           .select(F.col("src").alias("n"), "c"))
                 .groupBy("n").agg(F.min("c").alias("c2")))
-        return _pull_min_label(cs, msgs)
+        new = (cs.join(msgs, "n", "left")
+               .select("n", F.col("c").alias("_old"),
+                       F.least("c", F.coalesce("c2", "c")).alias("c")))
+        hop = new.select(F.col("n").alias("_k"), F.col("c").alias("_cc"))
+        jumped = F.least("c", F.coalesce("_cc", "c"))
+        return (new.join(hop, new["c"] == hop["_k"], "left")
+                .select("n", jumped.alias("c"),
+                        (jumped != F.col("_old")).cast("int")
+                        .alias("changed")))
 
     cs, converged = pregel(cs, step, max_iter)
     return cs if converged else None
@@ -1208,73 +1202,6 @@ def _oriented_wedges(oriented: DataFrame) -> DataFrame:
     return o1.join(o2.hint("shuffle_hash"), "a").filter(rank_lt)
 
 
-def triangle_count_dense(edges: DataFrame, n_nodes: int) -> DataFrame:
-    """Triangle count for DENSE graphs over a small id space — returns a
-    1-row DF (triangles BIGINT).
-
-    The generic join enumeration (triangle_count) materializes one row per
-    wedge — on a near-complete graph that is Θ(n³) rows and join
-    throughput becomes the bottleneck (measured: 166M wedges ≈ 25s on
-    local[32], vs ~1s here).  This specialization packs each vertex's
-    out-neighborhood (canonical src<dst orientation) into an n_nodes-bit
-    bitset and counts triangles as Σ_(u,v)∈E popcount(out[u] & out[v]) —
-    vectorized numpy byte ops in an Arrow-batched mapInPandas, no wedge
-    materialization.
-
-    Use when the projected dimension is bounded (here: suppliers — a
-    fixed-size dimension regardless of fact-table scale).  Memory is
-    |V|·|V|/8 bytes of adjacency total (≤ ~0.5GB up to |V| ≈ 64k); beyond
-    that fall back to the join form with degree orientation.
-
-    `edges` must be canonical (src < dst, distinct) with ids in
-    [0, n_nodes).
-    """
-    import numpy as np
-    import pandas as pd
-
-    n_bytes = (n_nodes + 7) // 8
-    spark = edges.sparkSession
-
-    adj = edges.groupBy("src").agg(F.collect_list("dst").alias("nbrs"))
-
-    def pack(batches):
-        for pdf in batches:
-            out = []
-            for nbrs in pdf["nbrs"]:
-                mask = np.zeros(n_bytes, dtype=np.uint8)
-                idx = np.asarray(nbrs, dtype=np.int64)
-                np.bitwise_or.at(mask, idx // 8,
-                                 (1 << (idx % 8)).astype(np.uint8))
-                out.append(mask.tobytes())
-            yield pd.DataFrame({"id": pdf["src"], "mask": out})
-
-    masks = adj.mapInPandas(pack, schema="id long, mask binary")
-
-    mu = masks.select(F.col("id").alias("src"), F.col("mask").alias("mask_u"))
-    mv = masks.select(F.col("id").alias("dst"), F.col("mask").alias("mask_v"))
-    paired = (edges.join(F.broadcast(mu), "src")
-              .join(F.broadcast(mv), "dst"))
-
-    popcount_lut = np.unpackbits(
-        np.arange(256, dtype=np.uint8)[:, None], axis=1).sum(axis=1).astype(np.uint8)  # uint8 LUT: an int64 LUT made lut[bytes] 8x the byte matrix (measured 214 us/pair -> see r11 PERF note)
-
-    def count_partition(batches):
-        lut = popcount_lut
-        for pdf in batches:
-            if len(pdf) == 0:
-                yield pd.DataFrame({"c": [0]})
-                continue
-            a = np.stack([np.frombuffer(m, dtype=np.uint8)
-                          for m in pdf["mask_u"]])
-            b = np.stack([np.frombuffer(m, dtype=np.uint8)
-                          for m in pdf["mask_v"]])
-            yield pd.DataFrame({"c": [int(lut[a & b].sum())]})
-
-    partials = paired.select("mask_u", "mask_v").mapInPandas(
-        count_partition, schema="c long")
-    return partials.agg(F.sum("c").cast("long").alias("triangles"))
-
-
 # driver-side dense triangle count unpacks ~8·n² bytes (two float32
 # matrices) — 2 GB at this cap; beyond it use the edge self-join
 DENSE_TRI_MAX_NODES = 16384
@@ -1394,39 +1321,22 @@ def _bipartite_components(inc: DataFrame, max_iter: int = 15):
     """Node-side connected-component labels of a bipartite incidence
     (``g``, ``n`` columns): returns (n, c) with c = min node id in the
     node's component of the CO-OCCURRENCE projection, or None if the
-    alternating propagation did not PROVABLY converge in ``max_iter``
-    rounds (the caller must then keep its fully-distributed path — an
-    unconverged labeling can SPLIT a true component and silently
-    undercount whatever is computed per label).
+    propagation did not PROVABLY converge in ``max_iter`` rounds (the
+    caller must then keep its fully-distributed path — an unconverged
+    labeling can SPLIT a true component and silently undercount
+    whatever is computed per label).
 
-    Alternating min-label propagation: group label = min member label,
-    node label = min over its groups, plus pointer-jumping path halving
-    on the node labels (labels ARE node ids, so label-of-label
-    composition is one self-join) — O(log diameter) rounds, each round
-    three shuffles of |inc| + one |nodes| join.  Convergence (a
-    fixpoint round with zero changes) IMPLIES per-group label
-    consistency: two members of one group with different labels would
-    both still be pulling the group min, i.e. not a fixpoint."""
-    # EVERY join against `inc` hints merge: inc is |incidence|-scaled
-    # BY CONSTRUCTION and arrives as a checkpoint child, whose size
-    # estimate Catalyst reads as tiny — the un-hinted first cut of this
-    # loop was broadcast-BUILT at x30 and died exactly as the r13 rule
-    # predicts (CLAUDE.md: hint |E|-scaled sides, never trust
-    # pre-materialization estimates; 2-table equi-joins, so the
-    # reordering-suppression corollary doesn't bite)
-    cs = (inc.select("n").distinct()
-          .select("n", F.col("n").alias("c"))
-          .localCheckpoint(eager=True))
-
-    def step(cs: DataFrame) -> DataFrame:
-        cg = (inc.hint("merge").join(cs, "n")
-              .groupBy("g").agg(F.min("c").alias("gc")))
-        pulled = (inc.hint("merge").join(cg, "g").groupBy("n")
-                  .agg(F.min("gc").alias("c2")))
-        return _pull_min_label(cs, pulled)
-
-    cs, converged = pregel(cs, step, max_iter)
-    return cs if converged else None
+    Reduced to `_edge_components` over star edges (min member of g, n),
+    one per incidence row: each star spans its group, so two nodes
+    connect exactly when a chain of groups links them.  The stars are
+    checkpointed because every superstep joins them twice, and hinted
+    merge as in `_component_split`: a checkpoint child's size estimate
+    reads tiny, and the un-hinted first cut of the group loop was
+    broadcast-BUILT at x30."""
+    star = (inc.select(F.min("n").over(Window.partitionBy("g")).alias("src"),
+                       F.col("n").alias("dst"))
+            .localCheckpoint(eager=True))
+    return _edge_components(star.hint("merge"), max_iter)
 
 
 # per-COMPONENT dense cap for the grouped bit-matrix triangle count:
@@ -1475,7 +1385,6 @@ def co_occurrence_triangles_by_component(
     import pandas as pd
 
     spark = incidence.sparkSession
-    from pyspark.sql import Window
 
     inc = (incidence
            .select(F.col(group_col).alias("g"), F.col(node_col).alias("n"))
@@ -1791,8 +1700,6 @@ def seeded_random_walks(graph: PropertyGraph,
     no `.collect()` on the driver), which is the form any corpus-scale
     caller must use: a literal id list grows with the corpus and turns
     the driver into the bottleneck."""
-    from pyspark.sql import Window
-
     spark = graph.edges.sparkSession
     edges = (graph.edges.select("src", "dst")
              .repartition(spark.sparkContext.defaultParallelism, "src")
@@ -1919,8 +1826,6 @@ def biased_random_walks(graph: PropertyGraph,
     candidates, one LEFT join against edges on (prev, v) to classify
     the triangle case, one per-walk top-1 window — frontier rows =
     #walks.  Returns (walk_id, step, vertex); step 0 = source."""
-    from pyspark.sql import Window
-
     spark = graph.edges.sparkSession
     edges = (graph.edges.select("src", "dst")
              .repartition(spark.sparkContext.defaultParallelism, "src")
@@ -2200,8 +2105,8 @@ def strongly_connected_components(edges: DataFrame, max_phases: int = 25,
     return out.select("id", "component")
 
 
-# Same |V|²-bit adjacency budget as triangle_count_dense: 0.5 GB of
-# masks at 64k nodes; beyond that the oriented-wedge join path wins.
+# |V|²-bit adjacency budget: 0.5 GB of masks at 64k nodes; beyond
+# that the oriented-wedge join path wins.
 DENSE_LCC_MAX_NODES = 65536
 
 
@@ -2209,9 +2114,9 @@ def _vertex_triangles_dense(sym: DataFrame, n_nodes: int) -> DataFrame:
     """Per-vertex triangle counts for a dense small-id-space graph:
     (id, triangles).  `sym` must be canonical (src < dst, distinct).
 
-    Full-neighborhood n_nodes-bit masks per vertex (NOT the out-oriented
-    masks of triangle_count_dense — per-vertex credit needs the count on
-    EVERY incident edge, and with full masks |N(u) ∩ N(v)| on edge (u,v)
+    Full-neighborhood n_nodes-bit masks per vertex (NOT out-oriented
+    masks — per-vertex credit needs the count on EVERY incident edge,
+    and with full masks |N(u) ∩ N(v)| on edge (u,v)
     counts each triangle through that edge exactly once, so summing over
     a vertex's incident edges counts its triangles twice).  One
     mapInPandas over the broadcast-joined edge list; numpy byte-AND +
@@ -2379,8 +2284,8 @@ def local_clustering(graph: PropertyGraph) -> DataFrame:
       one Arrow-batched mapInPandas over the edge list, NO wedge
       materialization.  A near-complete co-activity graph has Θ(n³)
       wedges (72 s measured at sf0.1) but only n²/8 bytes of adjacency
-      (280 KB at n=1500, broadcast) — the same economics as
-      triangle_count_dense, kept per-edge instead of summed.
+      (280 KB at n=1500, broadcast) — the economics of a bit-matrix
+      triangle count, kept per-edge instead of summed.
     - bounded dimension (n ≤ 32768) but per-edge masks too big (the
       mask path ships |E|·⌈n/8⌉ bytes through Arrow — 20 GB at 15k
       vertices / 11M edges, the r11 scale-study g24 timeout):

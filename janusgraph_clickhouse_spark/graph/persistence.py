@@ -31,6 +31,7 @@ import hashlib
 import os
 import shutil
 import tempfile
+from collections.abc import Callable
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
@@ -146,13 +147,31 @@ def _publish(tmp: str, path: str) -> None:
             raise
 
 
-def clustered_graph_path(sf_dir: str, base_dir: str | None = None) -> str:
+def _cache_path(key: str, base_dir: str | None) -> str:
+    """The cache directory for a key string: its md5 prefix under
+    `base_dir` (default: the temp dir's `jcs_graph_cache`)."""
     root = base_dir or os.path.join(tempfile.gettempdir(), "jcs_graph_cache")
-    key = hashlib.md5(
-        f"{os.path.abspath(sf_dir)}:v{LAYOUT_VERSION}"
-        f":{_source_fingerprint(sf_dir)}".encode()
-    ).hexdigest()[:12]
-    return os.path.join(root, key)
+    return os.path.join(root, hashlib.md5(key.encode()).hexdigest()[:12])
+
+
+def _build_once(path: str, write: Callable[[str], None]) -> str:
+    """Return `path` if its `_BUILT` marker exists; else run
+    `write(tmp)` into a (pid, uuid)-suffixed temp dir, mark it built and
+    publish it atomically.  Concurrent builders (threads OR processes)
+    race safely: the loser of the rename discards its copy."""
+    if os.path.exists(os.path.join(path, "_BUILT")):
+        return path
+    _sweep_stale_tmp(path)
+    tmp = f"{path}.tmp{_build_token()}"
+    write(tmp)
+    open(os.path.join(tmp, "_BUILT"), "w").close()
+    _publish(tmp, path)
+    return path
+
+
+def clustered_graph_path(sf_dir: str, base_dir: str | None = None) -> str:
+    return _cache_path(f"{os.path.abspath(sf_dir)}:v{LAYOUT_VERSION}"
+                       f":{_source_fingerprint(sf_dir)}", base_dir)
 
 
 def ensure_clustered_graph(spark: SparkSession, sf_dir: str,
@@ -160,31 +179,21 @@ def ensure_clustered_graph(spark: SparkSession, sf_dir: str,
                            num_files: int = 8) -> str:
     """Build the clustered adjacency for `sf_dir` if absent; return path.
 
-    Concurrent builders (threads OR processes) race safely: each writes
-    to a (pid, uuid)-suffixed temp dir and atomically renames into
-    place; the loser discards its copy.  `num_files` applies at BUILD
-    time only — a warm cache serves whatever granularity its builder
-    chose (it is deliberately not part of the cache key: content is
-    identical either way)."""
-    path = clustered_graph_path(sf_dir, base_dir)
-    marker = os.path.join(path, "_BUILT")
-    if os.path.exists(marker):
-        return path
+    `num_files` applies at BUILD time only — a warm cache serves
+    whatever granularity its builder chose (it is deliberately not part
+    of the cache key: content is identical either way)."""
+    def write(tmp: str) -> None:
+        g = derive_star_graph(spark, sf_dir, None, with_etype=True)
+        (g.edges.repartition(num_files, "src")
+         .sortWithinPartitions("etype", "src", "dst")
+         .write.mode("overwrite").partitionBy("etype")
+         .parquet(os.path.join(tmp, "edges")))
+        (g.vertices.repartition(num_files, "id")
+         .sortWithinPartitions("label", "id")
+         .write.mode("overwrite").partitionBy("label")
+         .parquet(os.path.join(tmp, "vertices")))
 
-    _sweep_stale_tmp(path)
-    g = derive_star_graph(spark, sf_dir, None, with_etype=True)
-    tmp = f"{path}.tmp{_build_token()}"
-    (g.edges.repartition(num_files, "src")
-     .sortWithinPartitions("etype", "src", "dst")
-     .write.mode("overwrite").partitionBy("etype")
-     .parquet(os.path.join(tmp, "edges")))
-    (g.vertices.repartition(num_files, "id")
-     .sortWithinPartitions("label", "id")
-     .write.mode("overwrite").partitionBy("label")
-     .parquet(os.path.join(tmp, "vertices")))
-    open(os.path.join(tmp, "_BUILT"), "w").close()
-    _publish(tmp, path)
-    return path
+    return _build_once(clustered_graph_path(sf_dir, base_dir), write)
 
 
 def clustered_star_graph(spark: SparkSession, sf_dir: str,
@@ -217,12 +226,9 @@ def _events_fingerprint(sf_dir: str) -> str:
 
 def interaction_graph_path(sf_dir: str, window: str,
                            base_dir: str | None = None) -> str:
-    root = base_dir or os.path.join(tempfile.gettempdir(), "jcs_graph_cache")
-    key = hashlib.md5(
-        f"ig:{os.path.abspath(sf_dir)}:w{window}:v{LAYOUT_VERSION}"
-        f":{_events_fingerprint(sf_dir)}".encode()
-    ).hexdigest()[:12]
-    return os.path.join(root, key)
+    return _cache_path(f"ig:{os.path.abspath(sf_dir)}:w{window}"
+                       f":v{LAYOUT_VERSION}:{_events_fingerprint(sf_dir)}",
+                       base_dir)
 
 
 def ensure_interaction_graph(spark: SparkSession, sf_dir: str,
@@ -233,21 +239,16 @@ def ensure_interaction_graph(spark: SparkSession, sf_dir: str,
     (sf_dir, window): the distinct + window self-join is a full pass over
     the event log, which k-core / LPA / link-prediction / degree queries
     would otherwise each repeat.  Persisted as (src, dst)-sorted clustered
-    parquet (row-group pruning on src), same build discipline as the
-    star-schema cache: content fingerprint key, pid-suffixed temp dir,
-    atomic rename."""
-    path = interaction_graph_path(sf_dir, window, base_dir)
-    marker = os.path.join(path, "_BUILT")
-    if os.path.exists(marker):
-        return path
+    parquet (row-group pruning on src) through the star-schema cache's
+    build-once path."""
     from .model import derive_interaction_graph
-    _sweep_stale_tmp(path)
-    g = derive_interaction_graph(spark, sf_dir, window)
-    tmp = f"{path}.tmp{_build_token()}"
-    save_graph(g, tmp, num_files=num_files)
-    open(os.path.join(tmp, "_BUILT"), "w").close()
-    _publish(tmp, path)
-    return path
+
+    def write(tmp: str) -> None:
+        save_graph(derive_interaction_graph(spark, sf_dir, window), tmp,
+                   num_files=num_files)
+
+    return _build_once(interaction_graph_path(sf_dir, window, base_dir),
+                       write)
 
 
 def clustered_interaction_graph(spark: SparkSession, sf_dir: str,

@@ -239,21 +239,14 @@ def jaccard_pairs(df: DataFrame, id_col: str, text_col: str, n: int = 3,
 
 # -- MinHash + LSH ----------------------------------------------------------
 
-def minhash_signatures(df: DataFrame, id_col: str, text_col: str,
-                       n: int = 3, num_hashes: int = 48) -> DataFrame:
-    """(id, sig ARRAY<LONG>[num_hashes]): sig[i] = min over shingles of
-    xxhash64(i, shingle).  One explode + ONE groupBy with H min-aggregates
-    (a single shuffle; signature width is a constant column count)."""
-    sh = shingle_sets(df, id_col, text_col, n)
-    return signatures_from_shingles(sh, num_hashes)
-
-
 def signatures_from_shingles(sh: DataFrame,
                              num_hashes: int = 48) -> DataFrame:
-    """Signatures from an existing (id, shingle-hash) set — lets a caller
-    that already materialized the shingle pass (llm.incremental) derive
-    signatures WITHOUT re-scanning the corpus.  Values are identical to
-    minhash_signatures (same per-shingle hash family, same min-agg)."""
+    """(id, sig ARRAY<LONG>[num_hashes]) from an (id, shingle-hash) set:
+    sig[i] = min over shingles of xxhash64(i, shingle).  ONE groupBy
+    with H min-aggregates (a single shuffle; signature width is a
+    constant column count), so a caller that already materialized the
+    shingle pass (llm.incremental) signs WITHOUT re-scanning the
+    corpus."""
     aggs = [F.min(F.xxhash64(F.lit(i), F.col("shingle"))).alias(f"h{i}")
             for i in range(num_hashes)]
     sig = sh.groupBy("id").agg(*aggs)
@@ -1358,11 +1351,8 @@ def winnow_fingerprints(df: DataFrame, id_col: str, text_col: str,
     output.  Documents shorter than k + window − 1 words emit no
     fingerprints (no full window exists — documented MOSS behavior).
 
-    SPLIT with text.rolling_fingerprints — the same scheme as a
-    per-document column expression (xxhash64 array ops, zero shuffles,
-    no SQL oracle possible); THIS form uses engine-portable md5 and a
-    window pass so the cross-document pair join is hash-checkable
-    (l62).  Keep tie/selection rules in sync if either changes.
+    Engine-portable md5 and a window pass, so the cross-document pair
+    join is hash-checkable (l62).
 
     Scale shape: shingle hashing is scan-side codegen over the word
     array; the window min is ONE ordered window pass keyed on the

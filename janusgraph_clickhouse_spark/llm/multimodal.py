@@ -1,15 +1,13 @@
 """Multimodal columns: opaque binary blobs + typed metadata.
 
 Images/audio/video ride through the engine as `BinaryType` columns with a
-typed metadata struct; decode / feature-extraction / resize run as
+typed metadata struct; decode and feature extraction run as
 Arrow-batched `mapInPandas` stages so each Python batch sees a
-columnar chunk, never a row at a time.  Decode is REAL for the
-uncompressed formats a pure-numpy parser can read — PPM P6, 24-bit BMP,
-PCM-16 WAV (`decode_image` / `decode_audio`, exercised end-to-end by
-`decode_image_stats` / `decode_audio_stats`) — and STUBBED only for
-codec formats (JPEG/PNG/compressed audio: entropy decoders aren't in
-this container; those rows surface as ok=false audit rows, never job
-failures).
+columnar chunk, never a row at a time.  Audio decode is REAL for
+PCM-16 WAV, the uncompressed format a pure-numpy parser can read
+(`decode_audio`, exercised end-to-end by `decode_audio_stats`), and
+STUBBED for compressed audio (entropy decoders aren't available here;
+those rows surface as ok=false audit rows, never job failures).
 
 At 100 TB the governing constraint is partition sizing: blobs make rows
 huge, so `spark.sql.files.maxPartitionBytes` and an explicit repartition
@@ -46,77 +44,6 @@ def attach_binary(df: DataFrame, id_col: str, text_col: str,
                      F.octet_length(blob).cast("long").alias("n_bytes"))
 
 
-def decode_image(blob: bytes):
-    """Decode a blob to an (H, W, 3) uint8 numpy array.
-
-    REAL for the uncompressed formats a pure-numpy decoder can handle —
-    PPM P6 and 24-bit BI_RGB BMP (byte-layout parsing, no codec
-    library); STUBBED for codec formats (JPEG/PNG/WebP/…): entropy
-    decoding needs libs not present in this container — swap the
-    NotImplementedError arm for PIL/torchvision/ffmpeg in a full
-    deployment.  The mapInPandas plumbing downstream is identical
-    either way."""
-    if blob is None or len(blob) < 2:
-        raise ValueError("empty blob")
-    if blob[:2] == b"P6":
-        return _decode_ppm_p6(blob)
-    if blob[:2] == b"BM":
-        return _decode_bmp24(blob)
-    raise NotImplementedError(
-        "codec-format decode (JPEG/PNG/...) is stubbed in this "
-        "environment; PPM P6 and 24-bit BMP decode natively")
-
-
-def _decode_ppm_p6(blob: bytes):
-    """PPM P6: ASCII header (magic, width, height, maxval; '#' comments)
-    then raw RGB bytes."""
-    import numpy as np
-
-    pos, fields = 2, []
-    while len(fields) < 3:
-        while pos < len(blob) and blob[pos:pos + 1].isspace():
-            pos += 1
-        if blob[pos:pos + 1] == b"#":
-            while pos < len(blob) and blob[pos] != 0x0A:
-                pos += 1
-            continue
-        start = pos
-        while pos < len(blob) and not blob[pos:pos + 1].isspace():
-            pos += 1
-        fields.append(int(blob[start:pos]))
-    pos += 1  # single whitespace after maxval
-    w, h, maxval = fields
-    if maxval != 255:
-        raise NotImplementedError("PPM maxval != 255")
-    return (np.frombuffer(blob, np.uint8, count=w * h * 3, offset=pos)
-            .reshape(h, w, 3))
-
-
-def _decode_bmp24(blob: bytes):
-    """Uncompressed 24-bit BI_RGB BMP: little-endian header fields, rows
-    padded to 4 bytes, stored bottom-up in BGR order."""
-    import struct
-
-    import numpy as np
-
-    data_off, = struct.unpack_from("<I", blob, 10)
-    w, h = struct.unpack_from("<ii", blob, 18)
-    bpp, = struct.unpack_from("<H", blob, 28)
-    compression, = struct.unpack_from("<I", blob, 30)
-    if bpp != 24 or compression != 0:
-        raise NotImplementedError(
-            f"only uncompressed 24-bit BMP (got bpp={bpp}, "
-            f"compression={compression})")
-    flip = h > 0
-    h = abs(h)
-    row = (w * 3 + 3) // 4 * 4
-    arr = (np.frombuffer(blob, np.uint8, count=row * h, offset=data_off)
-           .reshape(h, row)[:, :w * 3].reshape(h, w, 3))
-    if flip:
-        arr = arr[::-1]
-    return arr[:, :, ::-1]  # BGR → RGB
-
-
 def decode_audio(blob: bytes):
     """Decode a RIFF/WAVE PCM-16 blob to (samples int16 [n, channels],
     sample_rate).  Pure chunk-walk + numpy frombuffer — real decode for
@@ -146,42 +73,6 @@ def decode_audio(blob: bytes):
     return samples, rate
 
 
-DECODE_SCHEMA = ("media_id long, ok boolean, width int, height int, "
-                 "channels int, pixel_mean double")
-
-
-def decode_image_stats(media: DataFrame) -> DataFrame:
-    """The REAL decode stage end-to-end: mapInPandas batches of blobs →
-    per-image (width, height, channels, mean pixel) through
-    decode_image.  Rows whose format only a codec library could read
-    come back ok=false with null dims — a decode failure must not kill
-    the 100 TB job, it must be auditable (the scrub_pii counting
-    discipline applied to media)."""
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {"media_id": [], "ok": [], "width": [], "height": [],
-                    "channels": [], "pixel_mean": []}
-            for mid, blob in zip(pdf["media_id"], pdf["blob"]):
-                rows["media_id"].append(mid)
-                try:
-                    arr = decode_image(blob)
-                    rows["ok"].append(True)
-                    rows["height"].append(arr.shape[0])
-                    rows["width"].append(arr.shape[1])
-                    rows["channels"].append(arr.shape[2])
-                    rows["pixel_mean"].append(
-                        round(float(arr.mean()), 6))
-                except (NotImplementedError, ValueError):
-                    rows["ok"].append(False)
-                    rows["height"].append(None)
-                    rows["width"].append(None)
-                    rows["channels"].append(None)
-                    rows["pixel_mean"].append(None)
-            yield pd.DataFrame(rows)
-
-    return media.mapInPandas(stats, schema=DECODE_SCHEMA)
-
-
 AUDIO_SCHEMA = ("media_id long, ok boolean, n_samples long, channels int, "
                 "sample_rate int, rms double")
 
@@ -189,7 +80,9 @@ AUDIO_SCHEMA = ("media_id long, ok boolean, n_samples long, channels int, "
 def decode_audio_stats(media: DataFrame) -> DataFrame:
     """PCM-16 WAV decode end-to-end: per-clip sample count, channel
     count, rate and RMS amplitude via decode_audio; non-WAV blobs come
-    back ok=false (same audit discipline as decode_image_stats)."""
+    back ok=false — a decode failure must not kill the 100 TB job, it
+    must be auditable (the scrub_pii counting discipline applied to
+    media)."""
     def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import numpy as np
         for pdf in batches:
@@ -254,30 +147,6 @@ def _moment_vector(b: bytes | None, dim: int) -> list[float]:
     return [float(sum(b[i * chunk:(i + 1) * chunk])
                   / max(1, len(b[i * chunk:(i + 1) * chunk])))
             for i in range(dim)]
-
-
-def resize(media: DataFrame, target_bytes: int = 64) -> DataFrame:
-    """'Resize' shape over binary columns: emit a fixed-size downsampled
-    blob per row (the 1:1 blob→smaller-blob batch shape of a real image
-    resize; the resampling itself is a deterministic byte stride —
-    the codec call it stands in for is `decode_image`, stubbed here)."""
-    schema = "media_id long, blob binary, n_bytes long"
-
-    def shrink(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"media_id": [], "blob": [], "n_bytes": []}
-            for mid, blob in zip(pdf["media_id"], pdf["blob"]):
-                if blob is None:
-                    small = b""
-                else:
-                    stride = max(1, len(blob) // target_bytes)
-                    small = bytes(blob[::stride][:target_bytes])
-                out["media_id"].append(mid)
-                out["blob"].append(small)
-                out["n_bytes"].append(len(small))
-            yield pd.DataFrame(out)
-
-    return media.mapInPandas(shrink, schema=schema)
 
 
 def encode_wav_pcm16(samples, rate: int) -> bytes:

@@ -206,7 +206,8 @@ def dsir_weights(df: DataFrame, id_col: str, text_col: str,
     # three branches — without this the corpus gram explode runs 3x
     # (measured: 3 Generate nodes in the executed plan).  Checkpointing
     # the compact (id, bucket, cnt) table makes the expensive pass run
-    # exactly once (the l30/absorb_batch fingerprint-once discipline).
+    # exactly once (the fingerprint-once discipline of
+    # llm.incremental.fingerprint_tables).
     per_doc = per_doc.localCheckpoint()
     marg = (per_doc.groupBy("tgt", "bucket").agg(F.sum("cnt").alias("c"))
             .groupBy("bucket")

@@ -108,40 +108,6 @@ def content_fingerprint(text_col: str | Column) -> Column:
     return F.md5(F.trim(F.lower(c)))
 
 
-def rolling_fingerprints(text_col: str | Column, k: int = 5,
-                         window: int = 4) -> Column:
-    """Winnowing-style fingerprint set: xxhash64 over word k-shingles,
-    then the min hash of each sliding window of `window` consecutive
-    shingle hashes (array expressions only; dedup via array_distinct).
-
-    SPLIT with dedup.winnow_fingerprints — two deliberate variants of
-    the same scheme: this one is a scan-side COLUMN expression
-    (xxhash64, array ops — zero shuffles, used per-doc in l09-style
-    projections, not SQL-rederivable since DuckDB lacks xxhash64); the
-    dedup module's is a DataFrame operator (engine-portable md5, one
-    window pass) whose fingerprints feed a cross-document pair join
-    and a hash-checked oracle (l62).  Keep tie/selection rules in sync
-    if either changes."""
-    t = tokens(text_col)
-    n = F.size(t)
-    empty = F.array().cast("array<bigint>")
-    # short-doc guards (the word_shingles F.when pattern): without
-    # them sequence(0, -1) yields [0, -1] (step defaults to -1 when
-    # start > stop) and slice(t, 0, k) raises INVALID_PARAMETER_VALUE
-    # at runtime — one sub-k-token document killed the whole job
-    shingles = F.when(n >= k, F.transform(
-        F.sequence(F.lit(0), n - k),
-        lambda i: F.xxhash64(F.array_join(F.slice(t, i + 1, k), " "))
-    )).otherwise(empty)
-    mins = F.when(F.size(shingles) >= window, F.transform(
-        F.sequence(F.lit(0), F.size(shingles) - window),
-        lambda i: F.array_min(F.slice(shingles, i + 1, window))
-    )).otherwise(F.when(F.size(shingles) > 0,
-                        F.array(F.array_min(shingles)))
-                 .otherwise(empty))
-    return F.array_distinct(mins)
-
-
 def text_stats(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Per-document stats block (token count, diversity, stopword ratio,
     avg token length, composite quality score).  THE implementation

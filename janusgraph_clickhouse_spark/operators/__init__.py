@@ -2,7 +2,6 @@ from .kcvs import (
     slice_query,
     multi_key_slice,
     key_range_scan,
-    unordered_scan,
     multi_range_scan,
     mutate,
     top_k,
@@ -12,7 +11,6 @@ __all__ = [
     "slice_query",
     "multi_key_slice",
     "key_range_scan",
-    "unordered_scan",
     "multi_range_scan",
     "mutate",
     "top_k",

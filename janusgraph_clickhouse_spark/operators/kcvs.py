@@ -24,6 +24,8 @@ vanish into a single distributed pass:
   no N sequential round trips;
 - the key-range scan is `filter + dropDuplicates + sort` — the N+1 pattern
   disappears because the "slice per key" is just a groupBy over the same scan;
+- the unordered key scan is the plain table scan itself, needing no
+  operator (plans.relational.q05_unordered_scan_topk ranks one);
 - mutate is an anti-join + union (or partition overwrite at scale), keeping
   the reference's contract that deletions apply strictly before additions
   (ClickhouseKeyColumnValueStore.java:118-121).
@@ -122,16 +124,6 @@ def key_range_scan(df: DataFrame, key_col: str, key_start=None,
     if key_end is not None:
         out = out.filter(F.col(key_col) < F.lit(key_end))
     return out.select(key_col).distinct().orderBy(key_col)
-
-
-def unordered_scan(df: DataFrame,
-                   projection: Sequence[str] | None = None) -> DataFrame:
-    """Full unordered scan — UnsupportedOperationException in the reference
-    (ClickhouseKeyColumnValueStore.java:213-215), trivial in Spark."""
-    # `is not None`, matching the siblings: an explicitly EMPTY
-    # projection surfaces the caller's bug as a zero-column frame
-    # instead of silently returning the full schema
-    return df.select(*projection) if projection is not None else df
 
 
 def multi_range_scan(df: DataFrame, col_col: str,

@@ -263,8 +263,8 @@ def l08_language_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def l09_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Content fingerprint (md5 of normalized text); the winnowing-style
-    rolling fingerprint is pytest-covered (no cross-engine hash)."""
+    """Content fingerprint (md5 of normalized text); the winnowing
+    fingerprints are l62's."""
     docs = load_table(spark, sf_dir, "documents")
     return docs.select("doc_id",
                        X.content_fingerprint("text").alias("fingerprint"))
@@ -282,9 +282,8 @@ def l09_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 def l10_multimodal_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multimodal plumbing end-to-end: build binary blobs + metadata, run
     the Arrow-batched mapInPandas feature extractor, project the metadata
-    the oracle can recompute (byte length, first byte).  Real codec decode
-    is stubbed (multimodal.decode_image) — the batch shape is what's
-    under test."""
+    the oracle can recompute (byte length, first byte).  Image decode
+    is stubbed — the batch shape is what's under test."""
     docs = load_table(spark, sf_dir, "documents")
     media = M.attach_binary(docs, "doc_id", "text", mime="text/plain")
     feats = M.extract_features(media)
@@ -1099,8 +1098,7 @@ def l30_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     (MinHash bands + hashed shingles) and joined against the corpus's
     fingerprint index — per-batch work is O(batch), the corpus
     contributes only equi-join lookups, and NOTHING is compared within
-    the batch or within the corpus (llm/incremental.py; the streaming
-    absorb form is pytest-exercised with a live index directory).
+    the batch or within the corpus (llm/incremental.py).
 
     Hash-checked: the oracle recomputes the exact cross-side 3-gram
     Jaccard — valid because the 16×3 LSH banding has recall 1 on the
@@ -1109,14 +1107,12 @@ def l30_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     new = docs.filter(F.col("doc_id") % 10 == 0)
     old = docs.filter(F.col("doc_id") % 10 != 0)
-    # materialize=True (r15 materialize-once sweep): the three derived
-    # index tables each re-ran the old-corpus shingle pass (scan +
-    # explode + hash + distinct over 90% of the corpus, 3× — the plan
-    # read 8 scans / 40 Exchange / 543 lines).  Production reads the
-    # index from parquet (read_index), so the fixture-only lazy
-    # derivation was the last triple-pass; absorb_batch already
-    # materializes.
-    idx = I.fingerprint_tables(old, "doc_id", "text", materialize=True)
+    # fingerprint_tables materializes its shingle pass (r15
+    # materialize-once sweep): lazily, the three derived index tables
+    # each re-ran the old-corpus shingle pass (scan + explode + hash +
+    # distinct over 90% of the corpus, 3× — the plan read 8 scans / 40
+    # Exchange / 543 lines).
+    idx = I.fingerprint_tables(old, "doc_id", "text")
     return I.incremental_dedup_pairs(new, "doc_id", "text", idx,
                                      threshold=0.4)
 

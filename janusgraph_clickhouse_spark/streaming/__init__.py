@@ -3,7 +3,6 @@ from .ops import (
     tumbling_counts,
     sliding_counts,
     session_stats,
-    stateful_dedup,
     foreach_batch_upsert,
     run_to_memory,
 )
@@ -13,7 +12,6 @@ __all__ = [
     "tumbling_counts",
     "sliding_counts",
     "session_stats",
-    "stateful_dedup",
     "foreach_batch_upsert",
     "run_to_memory",
 ]

@@ -9,7 +9,6 @@ replacements:
 - change streams       → `readStream` file source over the events
                          table; checkpointing replaces the WAL role
 - windowed analytics   → watermark + tumbling/sliding/session windows
-- exactly-once-ish     → `dropDuplicatesWithinWatermark` (bounded state)
 - mutate / mutateMany  → `foreachBatch` upsert keeping deletions strictly
                          before additions, batched per micro-batch (the
                          reference batches per 1000 rows,
@@ -84,14 +83,6 @@ def session_stats(events: DataFrame, gap: str = "5 minutes",
             .select("user_id",
                     F.unix_timestamp(F.col("w.start")).alias("session_start"),
                     "n_events", "sum_value"))
-
-
-def stateful_dedup(events: DataFrame, keys: list[str],
-                   watermark: str = "30 minutes") -> DataFrame:
-    """Stateful dedup with bounded state: duplicates arriving within the
-    watermark horizon are dropped; state for older keys is evicted."""
-    return (events.withWatermark("ts", watermark)
-            .dropDuplicatesWithinWatermark(keys))
 
 
 def foreach_batch_upsert(stream: DataFrame, target_path: str,

@@ -54,15 +54,12 @@ def test_triangle_count(spark):
 
 def test_dense_triangle_variants_match_generic(spark):
     from janusgraph_clickhouse_spark.graph.algorithms import (
-        co_occurrence_triangles, triangle_count_dense)
+        co_occurrence_triangles)
     # K5 minus one edge: C(5,3)=10 triangles minus the 3 through (1,2) = 7
     edges = [(a, b) for a in range(5) for b in range(a + 1, 5)
              if (a, b) != (1, 2)]
     g = graph_from_edge_list(spark, edges)
-    expect = triangle_count(g)
-    dense = triangle_count_dense(
-        g.undirected_edges(), n_nodes=5).first()["triangles"]
-    assert dense == expect == 7
+    assert triangle_count(g) == 7
     # co-occurrence: groups {0,1,2},{2,3,4} → two triangles
     inc = spark.createDataFrame(
         [(10, 0), (10, 1), (10, 2), (20, 2), (20, 3), (20, 4)], "g long, n long")

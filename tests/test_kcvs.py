@@ -5,7 +5,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from janusgraph_clickhouse_spark.functions import P, apply_predicate
+from janusgraph_clickhouse_spark.functions import P
 from janusgraph_clickhouse_spark.operators import kcvs
 from janusgraph_clickhouse_spark.sources.layout import (
     write_sorted_parquet,
@@ -93,7 +93,6 @@ def test_predicate_library(spark):
     assert df.filter(P.text_regex("txt", "hel.*")).count() == 2
     assert df.filter(P.text_regex("txt", "hel")).count() == 0     # whole match
     assert df.filter(P.text_fuzzy("txt", "goodby")).count() == 1
-    assert df.filter(apply_predicate("gt", "x", 15)).count() == 2
 
 
 def test_sorted_parquet_layout_prunes(spark, tmp_path):
@@ -108,36 +107,6 @@ def test_sorted_parquet_layout_prunes(spark, tmp_path):
     assert [r.c for r in out.collect()] == [1, 2, 3]
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "PushedFilters" in plan or "pushed" in plan.lower()
-
-
-def test_salted_aggregate_matches_plain(spark, sf_smoke):
-    from janusgraph_clickhouse_spark.operators.skew import salted_aggregate
-    from janusgraph_clickhouse_spark.sources import load_table
-    li = load_table(spark, sf_smoke, "lineitem")
-    plain = {(r.l_returnflag,): (r.s, r.c, r.mn, r.mx) for r in
-             li.groupBy("l_returnflag")
-               .agg(F.round(F.sum("l_quantity"), 6).alias("s"),
-                    F.count("l_quantity").alias("c"),
-                    F.min("l_quantity").alias("mn"),
-                    F.max("l_quantity").alias("mx")).collect()}
-    salted = salted_aggregate(
-        li, ["l_returnflag"],
-        {"s": ("l_quantity", "sum"), "c": ("l_quantity", "count"),
-         "mn": ("l_quantity", "min"), "mx": ("l_quantity", "max")},
-        n_salts=8)
-    got = {(r.l_returnflag,): (round(r.s, 6), r.c, r.mn, r.mx)
-           for r in salted.collect()}
-    assert got == plain
-
-
-def test_salted_join_matches_plain(spark, sf_smoke):
-    from janusgraph_clickhouse_spark.operators.skew import salted_join
-    from janusgraph_clickhouse_spark.sources import load_table
-    o = load_table(spark, sf_smoke, "orders").select("o_orderkey", "o_custkey")
-    c = (load_table(spark, sf_smoke, "customer")
-         .select(F.col("c_custkey").alias("o_custkey"), "c_name"))
-    plain = o.join(c, "o_custkey").count()
-    assert salted_join(o, c, "o_custkey", n_salts=4).count() == plain
 
 
 def test_as_of_join_micro(spark):
@@ -232,10 +201,6 @@ def test_geo_predicates_closed_form(spark):
         "lat_min", "lat_max", "lon_min", "lon_max",
         4.0, 9.0, 8.0, 15.0)).collect()}
     assert miss == {2}
-    # dispatch form
-    assert df.filter(apply_predicate(
-        "geoWithinCircle", "lat", "lon", 51.5074, -0.1278, 400.0)
-    ).count() == 2
 
 
 def test_multi_range_scan_none_bounds_and_empty(spark, sf_smoke):

@@ -231,40 +231,6 @@ def test_multimodal_features_deterministic(spark, sf_smoke):
         assert len(row.feature) == 4
 
 
-def test_multimodal_decode_is_stubbed():
-    """Codec formats (here: PNG magic) stay stubbed — only uncompressed
-    formats decode natively."""
-    import pytest
-    with pytest.raises(NotImplementedError):
-        M.decode_image(b"\x89PNG\r\n\x1a\n" + b"\0" * 64)
-
-
-def _ppm_bytes(w, h):
-    """P6 with a deterministic gradient; includes a header comment."""
-    px = bytearray()
-    for y in range(h):
-        for x in range(w):
-            px += bytes([(x * 7) % 256, (y * 11) % 256, (x + y) % 256])
-    return b"P6\n# test fixture\n%d %d\n255\n" % (w, h) + bytes(px)
-
-
-def _bmp_bytes(w, h):
-    """24-bit BI_RGB bottom-up BMP of the same gradient."""
-    import struct
-    row_pad = (w * 3 + 3) // 4 * 4
-    px = bytearray()
-    for y in range(h - 1, -1, -1):          # bottom-up
-        row = bytearray()
-        for x in range(w):
-            row += bytes([(x + y) % 256, (y * 11) % 256, (x * 7) % 256])
-        row += b"\0" * (row_pad - len(row))  # pad to 4 bytes
-        px += row
-    off = 14 + 40
-    return (b"BM" + struct.pack("<IHHI", off + len(px), 0, 0, off)
-            + struct.pack("<IiiHHIIiiII", 40, w, h, 1, 24, 0, len(px),
-                          2835, 2835, 0, 0) + bytes(px))
-
-
 def _wav_bytes(n, rate=8000, channels=1):
     """PCM-16 mono WAV: a deterministic sawtooth."""
     import struct
@@ -275,36 +241,6 @@ def _wav_bytes(n, rate=8000, channels=1):
     return (b"RIFF" + struct.pack("<I", 36 + len(samples)) + b"WAVE"
             + b"fmt " + struct.pack("<I", len(fmt)) + fmt
             + b"data" + struct.pack("<I", len(samples)) + samples)
-
-
-def test_decode_image_real_formats():
-    """PPM P6 and 24-bit BMP of the SAME gradient must decode to the
-    identical RGB array — byte-exact, no codec library involved."""
-    import numpy as np
-    a = M.decode_image(_ppm_bytes(13, 7))   # odd width exercises padding
-    b = M.decode_image(_bmp_bytes(13, 7))
-    assert a.shape == b.shape == (7, 13, 3)
-    assert np.array_equal(a, b)
-    assert tuple(a[2, 3]) == ((3 * 7) % 256, (2 * 11) % 256, (3 + 2) % 256)
-
-
-def test_decode_image_stats_end_to_end(spark):
-    """The decode stage runs for real through mapInPandas: mixed batch of
-    PPM, BMP, and a codec-format blob — decodable rows carry true dims
-    and pixel means, the JPEG row comes back ok=false, job survives."""
-    import numpy as np
-    rows = [(1, bytearray(_ppm_bytes(8, 4)), "image/x-ppm"),
-            (2, bytearray(_bmp_bytes(5, 5)), "image/bmp"),
-            (3, bytearray(b"\xff\xd8\xff\xe0" + b"\0" * 32), "image/jpeg")]
-    media = spark.createDataFrame(
-        [(i, bytes(b), m, len(b)) for i, b, m in rows],
-        "media_id long, blob binary, mime string, n_bytes long")
-    got = {r.media_id: r for r in M.decode_image_stats(media).collect()}
-    assert got[1].ok and (got[1].width, got[1].height) == (8, 4)
-    assert got[2].ok and (got[2].width, got[2].height) == (5, 5)
-    exp = float(np.asarray(M.decode_image(_ppm_bytes(8, 4))).mean())
-    assert abs(got[1].pixel_mean - exp) < 1e-6
-    assert not got[3].ok and got[3].width is None
 
 
 def test_decode_audio_stats_end_to_end(spark):
@@ -321,19 +257,6 @@ def test_decode_audio_stats_end_to_end(spark):
     exp = float(np.sqrt((samples.astype(np.float64) ** 2).mean()))
     assert abs(got[1].rms - exp) < 1e-6
     assert not got[2].ok
-
-
-def test_rolling_fingerprints_detect_overlap(spark):
-    df = spark.createDataFrame(
-        [(1, "alpha beta gamma delta epsilon zeta eta theta iota kappa"),
-         (2, "alpha beta gamma delta epsilon zeta eta theta iota kappa"),
-         (3, "one two three four five six seven eight nine ten")],
-        "id long, text string")
-    fp = df.select("id", X.rolling_fingerprints("text", k=3, window=2)
-                   .alias("fps"))
-    rows = {r.id: set(r.fps) for r in fp.collect()}
-    assert rows[1] == rows[2]
-    assert not (rows[1] & rows[3])
 
 
 def test_quality_score_range(spark, sf_smoke):
@@ -360,16 +283,6 @@ def test_ivf_topk_recall(spark, sf_oracle):
     for r in S.ivf_topk(emb, "vec_id", "embedding", qv, k=10,
                         n_cells=16, n_probe=6, exclude_id=0).collect():
         assert abs(exact_scores[r.id] - r.cosine) < 1e-9
-
-
-def test_multimodal_resize_fixed_width(spark, sf_smoke):
-    docs = _docs(spark, sf_smoke).limit(10)
-    media = M.attach_binary(docs, "doc_id", "text")
-    small = M.resize(media, target_bytes=64).collect()
-    assert len(small) == 10
-    for r in small:
-        assert r.n_bytes <= 64 and r.n_bytes == len(r.blob)
-        assert r.n_bytes > 0
 
 
 def test_hash_split_stability_and_proportions(spark, sf_oracle):
@@ -559,7 +472,7 @@ def test_lsh_hot_bucket_cap(spark):
     rows += [(100, "alpha beta gamma delta epsilon zeta"),
              (101, "alpha beta gamma delta epsilon zeta")]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    sig = D.minhash_signatures(df, "doc_id", "text")
+    sig = D.signatures_from_shingles(D.shingle_sets(df, "doc_id", "text"))
     full = {(r.doc_a, r.doc_b) for r in D.lsh_candidates(sig).collect()}
     capped = {(r.doc_a, r.doc_b) for r in D.lsh_candidates(
         sig, max_bucket_rows=10).collect()}
@@ -1444,24 +1357,6 @@ def test_lsh_banding_audit_clean_sample_scores_ones(spark):
     r = lsh_banding_audit(df, "doc_id", "text", sample=6).collect()[0]
     assert r.n_true == 0 and r.n_cand == 0
     assert r.precision == 1.0 and r.recall == 1.0 and r.f1 == 1.0
-
-
-def test_rolling_fingerprints_short_docs_no_crash(spark):
-    """Docs shorter than k (or with fewer shingles than the window)
-    previously crashed the whole job via sequence(0,-1) -> slice start
-    0 (r7 review, reproduced); now: empty set for sub-k docs, one min
-    for sub-window shingle counts."""
-    from pyspark.sql import functions as F
-    from janusgraph_clickhouse_spark.llm.text import rolling_fingerprints
-    df = spark.createDataFrame(
-        [(1, "a b"), (2, "a b c d e"), (3, "a b c d e f g h i j")],
-        "doc_id long, text string")
-    out = {r.doc_id: r.fp for r in
-           df.select("doc_id", rolling_fingerprints("text")
-                     .alias("fp")).collect()}
-    assert out[1] == []          # < k tokens: no shingles
-    assert len(out[2]) == 1      # exactly k tokens: 1 shingle, 1 min
-    assert len(out[3]) >= 1
 
 
 def test_entropy_stats_keeps_one_sided_docs(spark):

@@ -190,18 +190,17 @@ def test_incremental_dedup_scans_index_not_resignatures(spark, tmp_path):
     """The per-batch plan must touch the index through scans + equi-joins
     only: no pandas/python eval stage and no signature aggregate may run
     over the index side (only the batch's shingle explode aggregates)."""
-    from pyspark.sql import functions as F
-
     from janusgraph_clickhouse_spark.llm import incremental as I
     corpus = spark.createDataFrame(
         [(i, f"w{i} x{i} y{i} z{i} a b c") for i in range(20)],
         "doc_id long, text string")
-    path = str(tmp_path / "idx")
-    I.bootstrap_index(corpus, "doc_id", "text", path)
+    index = {}
+    for t, tbl in I.fingerprint_tables(corpus, "doc_id", "text").items():
+        tbl.write.parquet(str(tmp_path / t))
+        index[t] = spark.read.parquet(str(tmp_path / t))
     new = spark.createDataFrame([(100, "w1 x1 y1 z1 a b c")],
                                 "doc_id long, text string")
-    df = I.incremental_dedup_pairs(new, "doc_id", "text",
-                                   I.read_index(spark, path))
+    df = I.incremental_dedup_pairs(new, "doc_id", "text", index)
     plan = _plan(df)
     # shingles + sizes index tables come in as plain parquet scans (the
     # buckets scan runs inside the eager candidate-pair checkpoint job,

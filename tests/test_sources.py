@@ -61,46 +61,6 @@ def test_mutate_matches_dict_model(spark, base, additions, deletions):
     assert got == model
 
 
-def test_zorder_layout_clusters_both_dims(spark, tmp_path):
-    """Z-order property: files cover tight ranges in BOTH dimensions
-    (multi-dim pruning), where an x-sorted layout leaves y unclustered."""
-    from pyspark.sql import functions as F
-
-    from janusgraph_clickhouse_spark.sources.layout import (
-        write_zordered_parquet, zorder_key)
-
-    n = 256
-    grid = spark.range(n * n).select(
-        (F.col("id") % n).cast("int").alias("x"),
-        (F.col("id") / n).cast("int").alias("y"))
-
-    # key is a bijective interleave: distinct count preserved
-    keyed = grid.select(zorder_key(["x", "y"], bits=8).alias("z"))
-    assert keyed.distinct().count() == n * n
-
-    zpath = str(tmp_path / "zorder")
-    write_zordered_parquet(grid, zpath, ["x", "y"], bits=8, num_files=16)
-    xpath = str(tmp_path / "xsort")
-    (grid.repartitionByRange(16, "x").sortWithinPartitions("x")
-     .write.mode("overwrite").parquet(xpath))
-
-    def extents(path):
-        df = (spark.read.parquet(path)
-              .withColumn("f", F.input_file_name())
-              .groupBy("f")
-              .agg((F.max("x") - F.min("x")).alias("ex"),
-                   (F.max("y") - F.min("y")).alias("ey")))
-        r = df.agg(F.avg("ex"), F.avg("ey")).first()
-        return float(r[0]), float(r[1])
-
-    zx, zy = extents(zpath)
-    sx, sy = extents(xpath)
-    # x-sorted: tight in x, unclustered in y (≈ full range)
-    assert sy > 0.9 * (n - 1)
-    # z-ordered: materially tighter than the full range in BOTH dims
-    assert zx < 0.5 * (n - 1) and zy < 0.5 * (n - 1), (zx, zy, sx, sy)
-
-
 def test_events_ts_unit_probe(spark, tmp_path):
     """The footer probe distinguishes the three on-disk ts conventions the
     fixture/driver have produced: logical µs, raw INT64 nanos, and
@@ -208,23 +168,6 @@ def test_apply_ttl_drops_whole_partitions_only(spark, tmp_path):
     plan = (left.filter(F.col("d") >= 4)
             ._jdf.queryExecution().executedPlan().toString())
     assert "PartitionFilters" in plan
-
-
-def test_zorder_key_rejects_out_of_domain(spark):
-    """Out-of-range values raise loudly instead of silently colliding
-    distant rows into one Z-key (r7 review)."""
-    import pytest
-    from pyspark.sql import functions as F
-    from janusgraph_clickhouse_spark.sources.layout import zorder_key
-    df = spark.createDataFrame([(300, 1)], "x long, y long")
-    with pytest.raises(Exception, match="out of"):
-        df.select(zorder_key(["x", "y"], bits=8).alias("z")).collect()
-    with pytest.raises(ValueError, match="at least one"):
-        zorder_key([], bits=8)
-    # in-domain still works
-    ok = spark.createDataFrame([(3, 1)], "x long, y long")
-    assert ok.select(zorder_key(["x", "y"], bits=8).alias("z")) \
-             .collect()[0].z == 0b111
 
 
 def test_jsonl_corpus_corrupt_record_policies(spark, tmp_path):

@@ -16,7 +16,6 @@ from janusgraph_clickhouse_spark.streaming import (
     foreach_batch_upsert,
     run_to_memory,
     session_stats,
-    stateful_dedup,
     tumbling_counts,
 )
 
@@ -46,17 +45,6 @@ def test_streaming_sessions_equal_batch(spark, events_dir, sf_smoke):
     got = run_to_memory(session_stats(stream), mode="complete")
     want = session_stats(load_table(spark, sf_smoke, "events"))
     assert _rows(got) == _rows(want)
-
-
-def test_stateful_dedup_stream(spark, events_dir, sf_smoke):
-    stream = events_stream(spark, events_dir)
-    got = run_to_memory(stateful_dedup(stream, ["user_id", "event_type"]),
-                        mode="append")
-    # streaming keep-first is arrival-order — only the (key → one row)
-    # property is stable, so check cardinality, not which row survived
-    want = (load_table(spark, sf_smoke, "events")
-            .select("user_id", "event_type").distinct().count())
-    assert got.count() == want
 
 
 def test_foreach_batch_upsert_delete_before_add(spark, events_dir, tmp_path):
