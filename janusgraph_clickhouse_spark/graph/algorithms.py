@@ -21,9 +21,30 @@ Loops with one materializing action per round, or a fixed round count
 chained lazily (bfs_distances, k_core, hits, label_propagation,
 harmonic_centrality, betweenness_approx, _frontier_min_fixpoint), keep
 their own drivers.
+
+The dense family — `adamic_adar`, `local_clustering` and
+`co_occurrence_triangles` — picks a physical plan per input by vertex
+CARDINALITY (`_dense_id_index` remaps sparse or offset ids monotonely),
+never by id values.  AA and LCC share one router, `_route_dense`:
+id-range shortcut → cardinality probe → small tier (driver-dense AA
+tiles, LCC per-edge masks) → Σd² → `_component_split` attempt
+(per-component kernels) → distributed bit-matrix tiles → wedge join,
+the kernels mapping dense indices back to original ids.  Co-occurrence
+routes global dense → remapped dense → by-component.  Every global bit
+matrix comes from one builder (`_packed_bits`: per-partition packing,
+one in-Spark OR-reduce) with an edge or a group fill; the
+per-component kernels fill their local matrices with `_local_adjacency`
+or the same group fill.  The tiers' limits are module constants
+(AA_DENSE_MAX_NODES, DENSE_TILE_MAX_NODES, DENSE_LCC_MAX_NODES,
+LCC_MASK_MAX_BYTES, DENSE_TRI_MAX_NODES, the per-component caps
+AA_COMP_CAP, TRI_COMP_CAP and DENSE_TRI_COMP_CAP,
+EDGE_COMP_ATTEMPT_MIN_WEDGES, AA_TILE_BLOCK, AA_HUB_DEGREE and
+AA_HUB_SALT, CC_MAX_ITER); tests force a tier by monkeypatching them.
 """
 
 from __future__ import annotations
+
+import functools
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -97,7 +118,14 @@ def pagerank(graph: PropertyGraph, max_iter: int = 10,
     return out.select("id", "rank")
 
 
-def connected_components(graph: PropertyGraph, max_iter: int = 20) -> DataFrame:
+# superstep bound of the one components loop (`_edge_components`): the
+# star form of `_bipartite_components` has needed up to 14 rounds on
+# sparse random 150-row incidences, so 20 leaves slack above it
+CC_MAX_ITER = 20
+
+
+def connected_components(graph: PropertyGraph,
+                         max_iter: int = CC_MAX_ITER) -> DataFrame:
     """Undirected connected components; returns (id, component) where
     component == min vertex id in the component.
 
@@ -143,15 +171,14 @@ def _next_frontier(edges: DataFrame, frontier: DataFrame, visited: DataFrame,
 
 
 def bfs_distances(graph: PropertyGraph, source_ids: list[int],
-                  max_hops: int, directed: bool = True,
-                  broadcast_threshold: int = BFS_BROADCAST_MAX) -> DataFrame:
+                  max_hops: int, directed: bool = True) -> DataFrame:
     """Unweighted shortest-path hop counts from the source set; returns
     (id, distance) for vertices reached within max_hops.
 
     Frontier-join iteration: only the most-recently-discovered frontier is
     joined against edges each round (not the whole visited set).  The
     frontier is broadcast ONLY while its known row count is under
-    `broadcast_threshold` (the count falls out of the per-hop exit check
+    BFS_BROADCAST_MAX (the count falls out of the per-hop exit check
     on checkpointed data — no extra job); large frontiers shuffle-join,
     so a hub fan-out can't OOM the driver.
 
@@ -180,7 +207,7 @@ def bfs_distances(graph: PropertyGraph, source_ids: list[int],
     frontier_n = len(source_ids)
     for hop in range(1, max_hops + 1):
         nxt = _next_frontier(edges, frontier, visited, hop,
-                             use_broadcast=frontier_n <= broadcast_threshold)
+                             use_broadcast=frontier_n <= BFS_BROADCAST_MAX)
         nxt = nxt.localCheckpoint(eager=False)
         frontier_n = nxt.count()  # materializes nxt AND probes the exit
         if frontier_n == 0:
@@ -473,16 +500,18 @@ def _sum_deg_sq(sym: DataFrame) -> int:
     return int(v or 0)
 
 
-def _prefer_dense_tiles(sum_d2: int, n_nodes: int) -> bool:
-    """Cost gate between the distributed bit-matrix tiles and the
-    distributed join for mid-size dimensions.  Tile work is ~4n³ FLOPs
-    regardless of sparsity; join work is ~Σ deg² wedge rows.  Measured
-    r11 (PERF.md scale study): joins stream ~4.7e7 wedge-rows/s and
-    tiles ~2.7e11 FLOP/s on this box, crossing at Σd² ≈ n³/1436 — the
-    gate uses n³/1000 and both measured regimes sit 3 orders of
-    magnitude clear of it (sparse 15k-vertex: Σd²=1.9e6 vs 3.4e9 →
-    join, 5.3 s vs 64.5 s; near-complete block-diagonal 15k: Σd²=3.4e10
-    → tiles, 50 s vs a >300 s/8.3 GiB-broadcast join death)."""
+def _prefer_dense_tiles(sum_d2, n_nodes):
+    """Cost gate between the bit-matrix tiles and the join for mid-size
+    dimensions — the one density gate: the global tile tier calls it on
+    Python ints, the per-component routings on Spark Columns.  Tile work
+    is ~4n³ FLOPs regardless of sparsity; join work is ~Σ deg² wedge
+    rows.  Measured r11 (PERF.md scale study): joins stream ~4.7e7
+    wedge-rows/s and tiles ~2.7e11 FLOP/s on this box, crossing at Σd² ≈
+    n³/1436 — the gate uses n³/1000 and both measured regimes sit 3
+    orders of magnitude clear of it (sparse 15k-vertex: Σd²=1.9e6 vs
+    3.4e9 → join, 5.3 s vs 64.5 s; near-complete block-diagonal 15k:
+    Σd²=3.4e10 → tiles, 50 s vs a >300 s/8.3 GiB-broadcast join
+    death)."""
     return sum_d2 * 1000 > n_nodes ** 3
 
 
@@ -492,15 +521,29 @@ def _prefer_dense_tiles(sum_d2: int, n_nodes: int) -> bool:
 # so fixture-scale and genuinely-sparse plans are byte-identical
 EDGE_COMP_ATTEMPT_MIN_WEDGES = 1_000_000_000
 # per-component dense caps: one applyInPandas task holds the
-# component's n_c² float matrices — AA peaks at ~4 n_c² floats
-# (A/W/S/C ≈ 380 MB at 4096), the per-vertex triangle kernel at ~2
-# (A/T ≈ 130 MB) — bounded per TASK, so a 4-core/8 GB executor runs
-# 4 concurrent dense components comfortably
+# component's n_c² adjacency plus its float tiles — AA's block-tiled
+# scorer peaks at ~5 block·n_c floats, the per-vertex triangle kernel
+# at ~2 n_c² (A/T ≈ 130 MB at 4096) — bounded per TASK, so a
+# 4-core/8 GB executor runs 4 concurrent dense components comfortably
 AA_COMP_CAP = 4096
 TRI_COMP_CAP = 4096
+# driver-dense AA: distinct vertices up to which the whole scoring runs
+# in driver BLAS over one OR-reduced n²-bit matrix (8 MB packed, ~220 MB
+# peak unpacked + tiles at 8192)
+AA_DENSE_MAX_NODES = 8192
+# distributed bit-matrix tiles (AA and LCC): the broadcast packed matrix
+# is n²/8 bytes — 128 MB at this cap
+DENSE_TILE_MAX_NODES = 32768
+# output-row height of AA's float64 tile matmuls (driver and
+# per-component kernels): three block×n tiles live at once
+AA_TILE_BLOCK = 1024
+# AA's wedge join salts centers of degree ≥ AA_HUB_DEGREE AA_HUB_SALT
+# ways (see _adamic_adar_join_scores)
+AA_HUB_DEGREE = 5000
+AA_HUB_SALT = 32
 
 
-def _edge_components(sym: DataFrame, max_iter: int = 15):
+def _edge_components(sym: DataFrame, max_iter: int = CC_MAX_ITER):
     """Connected-component labels of an undirected edge set (either
     orientation per edge): (n, c) with c = min vertex id in n's
     component, or None when the propagation cannot PROVE convergence
@@ -557,11 +600,10 @@ def _component_split(sym: DataFrame, comp_cap: int):
     """Split a canonical edge set by per-component dense eligibility:
     returns (dense_edges, join_edges, has_dense, has_join) where
     dense_edges = (c, src, dst) of components that pass BOTH the size
-    cap and the r11-measured density gate (component Σd²·1000 > n_c³ —
-    the same crossover `_prefer_dense_tiles` uses, per component
-    instead of globally), join_edges = the rest, or None when the
-    component labeling did not converge.  Edges never span components,
-    so labeling the src endpoint labels the edge."""
+    cap and the density gate (`_prefer_dense_tiles` on the component's
+    Σd² and n_c), join_edges = the rest, or None when the component
+    labeling did not converge.  Edges never span components, so
+    labeling the src endpoint labels the edge."""
     labels = _edge_components(sym.hint("merge"))
     if labels is None:
         return None
@@ -575,7 +617,7 @@ def _component_split(sym: DataFrame, comp_cap: int):
                   F.sum(F.col("d") * F.col("d")).alias("d2")))
     routed = stats.withColumn(
         "dense", (F.col("n_c") <= comp_cap)
-        & (F.col("d2") * 1000 > F.col("n_c") ** 3))
+        & _prefer_dense_tiles(F.col("d2"), F.col("n_c")))
     lbl = (labels.join(routed.select("c", "dense"), "c")
            .select(F.col("n").alias("src"), "c", "dense")
            .localCheckpoint(eager=True))
@@ -590,52 +632,373 @@ def _component_split(sym: DataFrame, comp_cap: int):
     return dense_edges, join_edges, True in routes, False in routes
 
 
-def _adamic_adar_comp_dense(dense_edges: DataFrame, top: int) -> DataFrame:
-    """Per-component dense Adamic-Adar: ONE applyInPandas task per
-    component builds its n_c×n_c adjacency (local indices via
-    np.unique — SORTED original ids, so the (score, u, v) order on
-    indices equals the order on ids, the `_dense_id_index` monotonicity
-    argument), scores S = (A·diag(1/ln deg))·Aᵀ and common-neighbor
-    counts C = A·Aᵀ with BLAS, masks adjacent pairs and the diagonal,
-    and emits its own top-`top` under the FINAL (rounded score desc,
-    u, v) order.  Degrees computed inside the component ARE true
-    degrees — neighborhoods never cross components."""
+def _route_dense(sym: DataFrame, *, range_cap: int, probe_cap: int,
+                 small_fits, small, tiles, comp_cap: int, comp_kernel,
+                 join, finish) -> DataFrame:
+    """The tier ladder `adamic_adar` and `local_clustering` share, run
+    once over a checkpointed canonical edge set:
+
+    1. id range: ids already inside [0, range_cap) run `small` on the
+       identity index with no cardinality probe;
+    2. cardinality probe (`_dense_id_index`, ≤ probe_cap distinct ids):
+       the identity index when the ids fill [0, n), else the monotone
+       remap; `small` runs when `small_fits(n)`;
+    3. Σd² (the join's wedge rows); above EDGE_COMP_ATTEMPT_MIN_WEDGES
+       a `_component_split` attempt — a block-diagonal graph (the x10/
+       x30 multi-tenant shape) runs `comp_kernel` per component that
+       fits `comp_cap` and the density gate, `join` on the rest; a
+       single-component graph yields no dense component and falls
+       through unchanged;
+    4. the distributed tiles when the probe succeeded, n ≤
+       DENSE_TILE_MAX_NODES and `_prefer_dense_tiles` accepts;
+    5. `join` over the whole edge set.
+
+    `small` and `tiles` take (edges, n, index) — index None for the
+    identity, (map_df, ids) for the remap — and return ORIGINAL ids.
+    The component kernels index locally on original ids, so the remap
+    is never paid there.  `finish` runs on the join and per-component
+    results (AA's global top cut; pairs never span components, and each
+    component emits its own top under the final order, so the cut over
+    the union is exact)."""
+    b = sym.agg(F.min(F.least("src", "dst")).alias("lo"),
+                F.max(F.greatest("src", "dst")).alias("hi")).first()
+    lo, hi = (0, 0) if b.hi is None else (int(b.lo), int(b.hi))
+    if 0 <= lo and hi < range_cap:
+        return small(sym, hi + 1, None)
+    probe = (None if b.hi is None
+             else _dense_id_index(sym, ["src", "dst"], probe_cap))
+    if probe is not None:
+        map_df, ids = probe
+        n = len(ids)
+        if ids[0] == 0 and ids[-1] == n - 1:
+            # fully-populated identity range: no remap joins
+            edges, index = sym, None
+        else:
+            edges, index = _remap_edges(sym, map_df), probe
+        if small_fits(n):
+            return small(edges, n, index)
+    sum_d2 = _sum_deg_sq(sym)
+    if sum_d2 > EDGE_COMP_ATTEMPT_MIN_WEDGES:
+        split = _component_split(sym, comp_cap)
+        if split is not None and split[2]:
+            dense_edges, join_edges, _, has_join = split
+            parts = [comp_kernel(dense_edges)]
+            if has_join:
+                parts.append(join(join_edges.localCheckpoint(eager=True)))
+            return finish(functools.reduce(DataFrame.unionByName, parts))
+    if (probe is not None and n <= DENSE_TILE_MAX_NODES
+            and _prefer_dense_tiles(sum_d2, n)):
+        return tiles(edges, n, index)
+    return finish(join(sym))
+
+
+def _row_popcounts(packed):
+    """Set bits per row of a packed uint8 bit matrix, as int64 — the one
+    popcount: np.bitwise_count when numpy ≥ 2.0, else a uint8 byte LUT
+    (an int64 LUT made lut[bytes] 8× the byte matrix; measured 214
+    us/pair, r11 PERF note)."""
+    import numpy as np
+
+    pop = getattr(np, "bitwise_count", None)
+    if pop is not None:
+        return pop(packed).sum(axis=1, dtype=np.int64)
+    lut = np.unpackbits(np.arange(256, dtype=np.uint8)[:, None],
+                        axis=1).sum(axis=1).astype(np.uint8)
+    return lut[packed].sum(axis=1, dtype=np.int64)
+
+
+def _unpack_bits(packed, n_nodes: int):
+    """Packed rows → 0/1 uint8 columns [0, n_nodes); LSB-first, the
+    order every fill below packs in."""
+    import numpy as np
+
+    return np.unpackbits(packed, axis=1, bitorder="little")[:, :n_nodes]
+
+
+def _bitmask(idx, n_bytes: int):
+    """One packed row with the bits `idx` set."""
+    import numpy as np
+
+    mask = np.zeros(n_bytes, dtype=np.uint8)
+    np.bitwise_or.at(mask, idx // 8, (1 << (idx % 8)).astype(np.uint8))
+    return mask
+
+
+def _fill_edges(A, pdf) -> bool:
+    """Edge fill for `_packed_bits`: set A[a, b] and A[b, a] for each
+    (a, b) row; True when a bit was set."""
+    import numpy as np
+
+    a = pdf["a"].to_numpy(dtype=np.int64)
+    b = pdf["b"].to_numpy(dtype=np.int64)
+    np.bitwise_or.at(A, (a, b // 8), (1 << (b % 8)).astype(np.uint8))
+    np.bitwise_or.at(A, (b, a // 8), (1 << (a % 8)).astype(np.uint8))
+    return len(a) > 0
+
+
+def _fill_groups(A, pdf) -> bool:
+    """Group fill for `_packed_bits` and the per-component co-occurrence
+    kernel: every member row of a group gets the group's member mask
+    (the co-occurrence clique); True when a group of ≥ 2 set bits."""
+    import numpy as np
+
+    touched = False
+    for members in pdf["members"]:
+        idx = np.unique(np.asarray(members, dtype=np.int64))
+        if len(idx) < 2:
+            continue
+        A[idx] |= _bitmask(idx, A.shape[1])
+        touched = True
+    return touched
+
+
+def _packed_bits(df: DataFrame, n_nodes: int, fill):
+    """The one packed bit-matrix builder: each partition packs its rows
+    into a partial (n_nodes × ⌈n/8⌉)-byte matrix with `fill(A, pdf)`,
+    and ONE in-Spark OR-reduce task folds the partials, so the driver
+    collects exactly one n²/8-byte blob whatever the partition count
+    (8 MB at n=8192, 128 MB at the tile cap 32768).
+
+    The partial count adapts to matrix size: parallelism when matrices
+    are small (n≈1000 → 125 KB, 32-way packing), bounded residency when
+    they are big (≤2 partials near 0.5 GB) so the reduce task and the
+    driver stay ~1 GB.  The fold is a repartition (shuffle), NOT a
+    coalesce: coalesce(1) is a narrow dependency that would merge every
+    partial build into the single reduce task and serialize the packing
+    stage; only ≤k blobs cross the shuffle."""
     import numpy as np
     import pandas as pd
 
+    n_bytes = (n_nodes + 7) // 8
+
+    def partial(batches):
+        A = np.zeros((n_nodes, n_bytes), dtype=np.uint8)
+        touched = False
+        for pdf in batches:
+            touched |= fill(A, pdf)
+        if touched:
+            yield pd.DataFrame({"adj": [A.tobytes()]})
+        else:
+            yield pd.DataFrame({"adj": pd.array([], dtype=object)})
+
+    def or_reduce(batches):
+        acc = np.zeros(n_nodes * n_bytes, dtype=np.uint8)
+        touched = False
+        for pdf in batches:
+            for blob in pdf["adj"]:
+                acc |= np.frombuffer(blob, dtype=np.uint8)
+                touched = True
+        if touched:
+            yield pd.DataFrame({"adj": [acc.tobytes()]})
+        else:
+            yield pd.DataFrame({"adj": pd.array([], dtype=object)})
+
+    k = max(1, min(32, (1 << 30) // max(1, n_nodes * n_bytes)))
+    reduced = (df.coalesce(k).mapInPandas(partial, schema="adj binary")
+               .repartition(1)
+               .mapInPandas(or_reduce, schema="adj binary").collect())
+    assert len(reduced) <= 1, "OR-reduce must yield exactly one matrix"
+    A = np.zeros((n_nodes, n_bytes), dtype=np.uint8)
+    for row in reduced:
+        A |= np.frombuffer(row.adj, dtype=np.uint8).reshape(n_nodes, n_bytes)
+    return A
+
+
+def _packed_adjacency(sym: DataFrame, n_nodes: int):
+    """Packed symmetric adjacency of an edge set over ids [0, n_nodes),
+    self-loops cleared (a self-loop must not count as a common
+    neighbor): `_packed_bits` with the edge fill over the distinct
+    canonical pairs."""
+    import numpy as np
+
+    e = (sym.select("src", "dst").distinct()
+         .select(F.least("src", "dst").alias("a"),
+                 F.greatest("src", "dst").alias("b")).distinct())
+    A = _packed_bits(e, n_nodes, _fill_edges)
+    ii = np.arange(n_nodes, dtype=np.int64)
+    A[ii, ii // 8] &= ~(1 << (ii % 8)).astype(np.uint8)
+    return A
+
+
+def _tile_fanout(sym: DataFrame, n_nodes: int):
+    """Setup of the distributed bit-matrix tiles (AA and LCC): the packed
+    adjacency broadcast once (≤128 MB at DENSE_TILE_MAX_NODES), a tile
+    height that keeps each task's unpacked tiles ≤ ~256 MB, and one row
+    per upper-triangle tile pair spread over the cluster.  Returns
+    (A, bc, block, tiles_df); A is the driver copy, for callers that
+    derive more from it before dropping it."""
+    spark = sym.sparkSession
+    A = _packed_adjacency(sym, n_nodes)
+    block = int(max(256, min(2048, (256 << 20) // max(1, 24 * n_nodes))))
+    bc = spark.sparkContext.broadcast(A.tobytes())
+    tiles = [(u0, v0) for u0 in range(0, n_nodes, block)
+             for v0 in range(u0, n_nodes, block)]
+    tiles_df = spark.createDataFrame(tiles, "u0 int, v0 int").repartition(
+        max(len(tiles) // 2, spark.sparkContext.defaultParallelism))
+    return A, bc, block, tiles_df
+
+
+def _local_adjacency(pdf):
+    """Component-local adjacency of one applyInPandas group's (src, dst)
+    edges: (ids, bits) with ids the SORTED original ids (np.unique — so
+    an order on local indices equals the order on ids, the
+    `_dense_id_index` monotonicity argument) and bits the n_c×n_c 0/1
+    uint8 symmetric matrix, self-loops cleared.  Degrees inside a
+    component ARE true degrees — neighborhoods never cross components."""
+    import numpy as np
+
+    s = pdf["src"].to_numpy(dtype=np.int64)
+    d = pdf["dst"].to_numpy(dtype=np.int64)
+    ids = np.unique(np.concatenate([s, d]))
+    si = np.searchsorted(ids, s)
+    di = np.searchsorted(ids, d)
+    bits = np.zeros((len(ids), len(ids)), dtype=np.uint8)
+    bits[si, di] = 1
+    bits[di, si] = 1
+    np.fill_diagonal(bits, 0)
+    return ids, bits
+
+
+def _aa_weights(deg):
+    """1/ln(deg) per middle vertex, 0 below degree 2: a common neighbor
+    has degree ≥ 2 by construction, so the mask changes no score (and
+    avoids 1/ln 1)."""
+    import numpy as np
+
+    deg = np.asarray(deg, dtype=np.float64)
+    return np.where(deg >= 2, 1.0 / np.log(np.maximum(deg, 2)), 0.0)
+
+
+def _aa_tile(bits_u, bits_v, wgt, u0: int, v0: int, top: int):
+    """The one AA tile scorer: rows [u0, u0+|bits_u|) against rows
+    [v0, v0+|bits_v|) of a 0/1 adjacency (full width n, diagonal clear)
+    → (u, v, common_neighbors, score) arrays for the non-adjacent u < v
+    pairs with ≥1 common neighbor, pruned to `top` under the FINAL
+    (rounded score desc, u, v) order — a global winner is inside its own
+    tile's top.  Full inner product over all n middle vertices in
+    float64: S[u,v] = Σ_{w∈N(u)∩N(v)} 1/ln deg(w), C exact counts
+    (< 2^53)."""
+    import numpy as np
+
+    Bu = bits_u.astype(np.float64)
+    Bv = bits_v.astype(np.float64)
+    S = (Bu * wgt) @ Bv.T
+    C = Bu @ Bv.T
+    uu, vv = np.nonzero((bits_u[:, v0:v0 + len(bits_v)] == 0) & (C > 0.5))
+    gu, gv = uu + u0, vv + v0
+    keep = gu < gv
+    gu, gv = gu[keep], gv[keep]
+    score = np.round(S[uu, vv][keep], 6)
+    cnt = C[uu, vv][keep].astype(np.int64)
+    order = np.lexsort((gv, gu, -score))[:top]
+    return gu[order], gv[order], cnt[order], score[order]
+
+
+def _aa_top(bits, top: int, block: int):
+    """Top-`top` AA pairs of an unpacked 0/1 adjacency (diagonal clear):
+    `_aa_tile` over every upper-triangle block pair, merged under the
+    final order — local indices (u, v, common_neighbors, score).
+
+    Memory: each tile holds three block×n float64 arrays (Bu, Bu·w, Bv)
+    plus two block² products — ≈ 220 MB at n=8192 with block=1024; the
+    untiled form (S, C, Af each full n² float64) peaked at ~1.6 GB
+    there.  The merge holds ≤ top·(n/block)²/2 rows."""
+    import numpy as np
+
+    n = len(bits)
+    wgt = _aa_weights(bits.sum(axis=1, dtype=np.int64))
+    parts = [_aa_tile(bits[u0:u0 + block], bits[v0:v0 + block], wgt,
+                      u0, v0, top)
+             for u0 in range(0, n, block) for v0 in range(u0, n, block)]
+    if not parts:
+        return (np.zeros(0, np.int64),) * 3 + (np.zeros(0),)
+    u, v, cnt, score = (np.concatenate(x) for x in zip(*parts))
+    order = np.lexsort((v, u, -score))[:top]
+    return u[order], v[order], cnt[order], score[order]
+
+
+def _aa_frame(spark, rows, index) -> DataFrame:
+    """Driver-side AA rows (u, v, common_neighbors, score) → DataFrame in
+    ORIGINAL ids: index (map_df, ids) inverts the monotone remap — the
+    (score, u, v) order on indices equals the order on ids, so mapping
+    after the cut is exact."""
+    emit = (lambda x: int(index[1][x])) if index is not None else int
+    return spark.createDataFrame(
+        [(emit(u), emit(v), int(c), float(s)) for u, v, c, s in rows],
+        "u long, v long, common_neighbors long, adamic_adar double")
+
+
+def _adamic_adar_dense(sym: DataFrame, n_nodes: int, top: int,
+                       index) -> DataFrame:
+    """Driver-dense Adamic-Adar for n ≤ AA_DENSE_MAX_NODES: one
+    OR-reduced n²-bit adjacency (≈ 8 MB at the cap), unpacked on the
+    driver and scored by `_aa_top` in block-tiled BLAS.  On a
+    near-complete 1500-vertex graph the join path materializes Σ deg² ≈
+    3.4e9 wedge rows (measured 72 s at sf0.1) vs ~2 s here."""
+    bits = _unpack_bits(_packed_adjacency(sym, n_nodes), n_nodes)
+    return _aa_frame(sym.sparkSession,
+                     zip(*_aa_top(bits, top, AA_TILE_BLOCK)), index)
+
+
+def _adamic_adar_dense_dist(sym: DataFrame, n_nodes: int, top: int,
+                            index) -> DataFrame:
+    """Adamic-Adar for mid-size dimensions (AA_DENSE_MAX_NODES < n ≤
+    DENSE_TILE_MAX_NODES): the `_tile_fanout` tiles run `_aa_tile` AS
+    SPARK TASKS, each pruning to its own top-`top`; the global cut is a
+    Spark TakeOrderedAndProject over ≤ top·(n/block)²/2 candidate rows.
+
+    Why this exists: the driver-dense path does all (n/block)²/2 tile
+    matmuls serially on the driver — ~13.6 TFLOP at n=15000, minutes of
+    single-node BLAS and O(n²) driver RAM; the salted wedge join is
+    Θ(Σ deg²) rows (intractable on near-complete graphs — the r11 scale
+    study's g17@x10 blew a 300 s budget).  Distributing the tiles keeps
+    driver memory at ONE packed matrix and scales the FLOPs out with
+    executors.  Results equal both other tiers: same float64 sums, 6dp
+    rounding and tiebreaks."""
+    import numpy as np
+
+    spark = sym.sparkSession
+    A, bc, block, tiles_df = _tile_fanout(sym, n_nodes)
+    bw = spark.sparkContext.broadcast(_aa_weights(_row_popcounts(A)))
+    del A
+
+    def tile_scores(batches):
+        import pandas as pd
+        Ap = np.frombuffer(bc.value, dtype=np.uint8).reshape(n_nodes, -1)
+        for pdf in batches:
+            for u0, v0 in zip(pdf["u0"], pdf["v0"]):
+                u0, v0 = int(u0), int(v0)
+                u, v, c, s = _aa_tile(
+                    _unpack_bits(Ap[u0:u0 + block], n_nodes),
+                    _unpack_bits(Ap[v0:v0 + block], n_nodes),
+                    bw.value, u0, v0, top)
+                if len(u):
+                    yield pd.DataFrame({"u": u, "v": v,
+                                        "common_neighbors": c,
+                                        "adamic_adar": s})
+
+    cand = tiles_df.mapInPandas(
+        tile_scores,
+        schema="u long, v long, common_neighbors long, adamic_adar double")
+    out = (cand.orderBy(F.col("adamic_adar").desc(), "u", "v").limit(top)
+           .collect())  # ≤ top rows by construction
+    return _aa_frame(spark, out, index)
+
+
+def _adamic_adar_comp_dense(dense_edges: DataFrame, top: int) -> DataFrame:
+    """Per-component dense Adamic-Adar: ONE applyInPandas task per
+    component builds its `_local_adjacency`, scores it with `_aa_top`
+    and emits its own top-`top` under the FINAL (rounded score desc,
+    u, v) order in original ids."""
+    import pandas as pd
+
+    block = AA_TILE_BLOCK
+
     def aa(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        empty = pd.DataFrame({"u": pd.array([], dtype="int64"),
-                              "v": pd.array([], dtype="int64"),
-                              "common_neighbors": pd.array(
-                                  [], dtype="int64"),
-                              "adamic_adar": pd.array(
-                                  [], dtype="float64")})
-        if len(pdf) == 0:
-            return empty
-        s = pdf["src"].to_numpy(dtype=np.int64)
-        d = pdf["dst"].to_numpy(dtype=np.int64)
-        ids = np.unique(np.concatenate([s, d]))
-        n = len(ids)
-        si = np.searchsorted(ids, s)
-        di = np.searchsorted(ids, d)
-        A = np.zeros((n, n), dtype=np.float32)
-        A[si, di] = 1.0
-        A[di, si] = 1.0
-        np.fill_diagonal(A, 0.0)
-        deg = A.sum(axis=1, dtype=np.int64).astype(np.float64)
-        with np.errstate(divide="ignore"):
-            wgt = np.where(deg >= 2,
-                           1.0 / np.log(np.maximum(deg, 2)), 0.0)
-        S = (A * wgt) @ A.T          # float64: A*wgt upcasts
-        C = (A @ A.T).astype(np.int64)  # counts ≤ n < 2^24: f32 exact
-        uu, vv = np.nonzero(np.triu((A == 0) & (C > 0), 1))
-        if len(uu) == 0:
-            return empty
-        score = np.round(S[uu, vv], 6)
-        order = np.lexsort((vv, uu, -score))[:top]
-        return pd.DataFrame({"u": ids[uu[order]], "v": ids[vv[order]],
-                             "common_neighbors": C[uu, vv][order],
-                             "adamic_adar": score[order]})
+        ids, bits = _local_adjacency(pdf)
+        u, v, c, s = _aa_top(bits, top, block)
+        return pd.DataFrame({"u": ids[u], "v": ids[v],
+                             "common_neighbors": c, "adamic_adar": s})
 
     return dense_edges.groupBy("c").applyInPandas(
         aa, schema="u long, v long, common_neighbors long, "
@@ -667,27 +1030,16 @@ def _lcc_join_triangles(sym: DataFrame) -> DataFrame:
 
 def _tri_per_vertex_comp_dense(dense_edges: DataFrame) -> DataFrame:
     """Per-component dense per-vertex triangle counts: one
-    applyInPandas task per component, tri(v) = ½ Σ_u (A ∘ A²)[v, u] —
-    emits (id, triangles) in original ids (components partition the
-    vertex set, so the union across components needs no re-agg)."""
+    applyInPandas task per component, tri(v) = ½ Σ_u (A ∘ A²)[v, u] on
+    its `_local_adjacency` — emits (id, triangles) in original ids
+    (components partition the vertex set, so the union across
+    components needs no re-agg)."""
     import numpy as np
     import pandas as pd
 
     def tri(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        if len(pdf) == 0:
-            return pd.DataFrame({"id": pd.array([], dtype="int64"),
-                                 "triangles": pd.array([],
-                                                       dtype="int64")})
-        s = pdf["src"].to_numpy(dtype=np.int64)
-        d = pdf["dst"].to_numpy(dtype=np.int64)
-        ids = np.unique(np.concatenate([s, d]))
-        n = len(ids)
-        si = np.searchsorted(ids, s)
-        di = np.searchsorted(ids, d)
-        A = np.zeros((n, n), dtype=np.float32)
-        A[si, di] = 1.0
-        A[di, si] = 1.0
-        np.fill_diagonal(A, 0.0)
+        ids, bits = _local_adjacency(pdf)
+        A = bits.astype(np.float32)
         T = A @ A.T
         # per-row float64 accumulation: entries are exact (< 2^24) but
         # a row SUM at n=4096 can pass float32's integer range
@@ -699,164 +1051,72 @@ def _tri_per_vertex_comp_dense(dense_edges: DataFrame) -> DataFrame:
         tri, schema="id long, triangles long")
 
 
-def adamic_adar(graph: PropertyGraph, top: int = 100,
-                dense_max_nodes: int = 8192,
-                dist_max_nodes: int = 32768,
-                hub_degree_threshold: int = 5000,
-                hub_salt: int = 32) -> DataFrame:
+def adamic_adar(graph: PropertyGraph, top: int = 100) -> DataFrame:
     """Link prediction over the undirected graph: for every NON-adjacent
     vertex pair (u, v) with ≥1 common neighbor, the common-neighbor count
     and the Adamic-Adar score Σ_{w ∈ N(u)∩N(v)} 1/ln(deg(w)); top-`top`
     pairs by (rounded score desc, u, v).
 
-    One self-join on the middle vertex (the two-hop expansion), one
-    degree join, one hash aggregate, one anti-join against existing
-    edges, TakeOrderedAndProject for the cut.  The two-hop fanout is
-    Σ_w deg(w)² — hub-dominated; on power-law graphs the handful of hub
-    keys serialize the wedge shuffle, so wedge centers with
-    deg(w) ≥ `hub_degree_threshold` are SALTED `hub_salt` ways: the
-    (u,w) leg gets salt = hash(u) mod s, the (w,v) leg is replicated
-    across all s salts, and the join key becomes (w, salt).  Row output
-    is identical (every (u,w,v) wedge still meets exactly once — u's
-    salt picks one of v's s replicas); the Σ deg(w_hub)² rows just land
-    in s× more tasks instead of one straggler.  Extra cost is the
-    replication, Σ_hub deg(w)·s rows — linear, not quadratic.
-    (deg(w) ≥ 2 always holds for a common neighbor, so the 1/ln(deg)
-    term is finite by construction.)
-
     Score ordering uses the ROUNDED score with the (u, v) tiebreaker so
     cross-engine float-sum noise can't reorder the cut (the l05/l06
     discipline).
 
-    DENSE specializations (the g03 bit-matrix pattern), three tiers by
-    DIMENSION CARDINALITY (sparse/offset id spaces are first remapped
-    through the monotone `_dense_id_index`, so only the number of
-    distinct vertices matters — not their values; NEGATIVE or huge ids
-    no longer force the join path):
+    Tiers by DIMENSION CARDINALITY through `_route_dense` (sparse/offset
+    id spaces are remapped through the monotone `_dense_id_index`, so
+    NEGATIVE or huge ids no longer force the join path):
 
-    - n ≤ dense_max_nodes: driver-local block-tiled BLAS triple-product
-      S = (A·diag(1/ln deg))·Aᵀ over the OR-reduced bit-matrix — on a
-      near-complete 1500-vertex graph the join path materializes
-      Σ deg² ≈ 3.4e9 wedge rows (measured 72 s at sf0.1) vs ~2 s here;
-    - n ≤ dist_max_nodes: the SAME tile matmuls fanned out as Spark
-      tasks over the broadcast packed matrix (≤128 MB at 32768) —
-      driver holds one packed matrix, FLOPs scale out with executors
-      (`_adamic_adar_dense_dist`; the r11 scale study's g17@x10 blew a
-      300 s budget on the join path at 15k near-complete vertices);
-    - beyond: the salted wedge join below, the fully-distributed form
-      for unbounded dimensions (Θ(Σ deg²) rows — intrinsic to exact
-      all-pairs AA).
+    - n ≤ AA_DENSE_MAX_NODES: driver-dense tiles (`_adamic_adar_dense`);
+    - per-component kernels when Σd² makes the join expensive and the
+      graph is block-diagonal (`_adamic_adar_comp_dense`);
+    - n ≤ DENSE_TILE_MAX_NODES and the density gate: the same tile
+      scorer fanned out as Spark tasks (`_adamic_adar_dense_dist`);
+    - beyond: the salted wedge join (`_adamic_adar_join_scores`), the
+      fully-distributed form for unbounded dimensions (Θ(Σ deg²) rows —
+      intrinsic to exact all-pairs AA).
 
-    Scores are identical across all paths under the 6dp rounding
-    (float64 everywhere; path-equivalence pytest-pinned)."""
+    Scores are identical across all tiers under the 6dp rounding
+    (float64 everywhere; tier equivalence pytest-pinned)."""
     # undirected_edges ends in a dropDuplicates shuffle and is consumed
-    # by the bounds probe plus (on the join path) deg/left/right/
-    # existing — materialize once instead of re-running the dedup per
-    # consumer (the pagerank/triangle_count cache discipline)
+    # by the probes plus (on the join path) deg/left/right/existing —
+    # materialize once instead of re-running the dedup per consumer
     sym = graph.undirected_edges().localCheckpoint(eager=True)
-    bounds = sym.agg(F.least(F.min("src"), F.min("dst")).alias("lo"),
-                     F.greatest(F.max("src"), F.max("dst")).alias("hi")
-                     ).first()
-    n_nodes = int(bounds["hi"] if bounds["hi"] is not None else 0) + 1
-    min_id = int(bounds["lo"] if bounds["lo"] is not None else 0)
-    sum_d2 = None
-
-    def _try_components():
-        """Per-component dispatch (r14): dense kernels for components
-        that fit, the restricted join for the rest; None when labeling
-        failed or nothing routes dense.  Works on ORIGINAL ids — the
-        kernels index locally via np.unique, no remap pass."""
-        split = _component_split(sym, AA_COMP_CAP)
-        if split is None or not split[2]:
-            return None
-        dense_edges, join_edges, _, has_join = split
-        parts = [_adamic_adar_comp_dense(dense_edges, top)]
-        if has_join:
-            parts.append(_adamic_adar_join_scores(
-                join_edges.localCheckpoint(eager=True),
-                hub_degree_threshold, hub_salt))
-        import functools as _ft
-        allp = _ft.reduce(DataFrame.unionByName, parts)
-        # pairs never span components, and each component emitted its
-        # own top-`top` under the FINAL order — the global cut over
-        # the union is exact
-        return (allp.orderBy(F.col("adamic_adar").desc(), "u", "v")
-                .limit(top))
-
-    if 0 <= min_id and n_nodes <= dense_max_nodes:
-        # already-dense id space: identity mapping, no remap pass
-        return _adamic_adar_dense(sym, n_nodes, top)
-    if bounds["hi"] is not None:
-        # BOUNDED-dimension probe FIRST, identity ranges included:
-        # CARDINALITY picks the tier, never the id range (r12, from the
-        # r11 ADVICE — the old flow probed identity mid-size ranges only
-        # on cost-gate REJECTION, so a sparsely populated [0, n) range
-        # that the gate accepted paid tile FLOPs at n = max_id+1 even
-        # when its cardinality fit the driver-dense tier, up to
-        # (n/cardinality)³ extra work).  The probe is one bounded
-        # distinct-collect — noise next to either dense tier.
-        dense = _dense_id_index(sym, ["src", "dst"], dist_max_nodes)
-        if dense is not None:
-            map_df, ids = dense
-            n = len(ids)
-            # fully-populated identity range: remap is the identity —
-            # skip the two map joins (keeps the returned plan identical
-            # to the pre-probe flow on dense-id inputs)
-            identity = ids[0] == 0 and ids[-1] == n - 1
-            if n <= dense_max_nodes:
-                if identity:
-                    return _adamic_adar_dense(sym, n, top)
-                return _adamic_adar_dense(_remap_edges(sym, map_df),
-                                          n, top, id_map=ids)
-            sum_d2 = _sum_deg_sq(sym)
-            # component attempt BEFORE the global tiles (r14): a
-            # block-diagonal mid-size graph (10 near-complete 1.5k
-            # tenants at x10) passes the global tile gate and pays
-            # global-n³ FLOPs when per-component kernels do ~100×
-            # less; a single-component graph yields no dense comps
-            # and falls through to tiles unchanged
-            if sum_d2 > EDGE_COMP_ATTEMPT_MIN_WEDGES:
-                comp = _try_components()
-                if comp is not None:
-                    return comp
-            if _prefer_dense_tiles(sum_d2, n):
-                if identity:
-                    return _adamic_adar_dense_dist(sym, n, top)
-                return _adamic_adar_dense_dist(_remap_edges(sym, map_df),
-                                               n, top, id_map=ids)
-    # component attempt before the wedge join (r14): when the join's
-    # wedge-row bill is already expensive, the graph may be
-    # block-diagonal (multi-tenant/multi-shard corpora — the x30
-    # weak-scaling shape, where 30 near-complete 1.5k-vertex tenants
-    # made the global join's Σd² = 4.1e10 rows "intrinsic" while each
-    # BLOCK fits a dense kernel).  Labeling costs O(log diameter)
-    # |E|-shuffle rounds — noise next to the Σd² it competes with, and
-    # skipped entirely when the join is cheap.
-    if sum_d2 is None:
-        sum_d2 = _sum_deg_sq(sym)
-        if sum_d2 > EDGE_COMP_ATTEMPT_MIN_WEDGES:
-            comp = _try_components()
-            if comp is not None:
-                return comp
-    return (_adamic_adar_join_scores(sym, hub_degree_threshold,
-                                     hub_salt)
-            .orderBy(F.col("adamic_adar").desc(), "u", "v")
-            .limit(top))
+    return _route_dense(
+        sym, range_cap=AA_DENSE_MAX_NODES, probe_cap=DENSE_TILE_MAX_NODES,
+        small_fits=lambda n: n <= AA_DENSE_MAX_NODES,
+        small=lambda e, n, index: _adamic_adar_dense(e, n, top, index),
+        tiles=lambda e, n, index: _adamic_adar_dense_dist(e, n, top, index),
+        comp_cap=AA_COMP_CAP,
+        comp_kernel=lambda e: _adamic_adar_comp_dense(e, top),
+        join=_adamic_adar_join_scores,
+        finish=lambda df: (df.orderBy(F.col("adamic_adar").desc(), "u", "v")
+                           .limit(top)))
 
 
-def _adamic_adar_join_scores(sym: DataFrame, hub_degree_threshold: int,
-                             hub_salt: int) -> DataFrame:
-    """The fully-distributed salted wedge-join AA scorer over a
-    canonical edge set (pre-limit: every non-adjacent pair with ≥1
-    common neighbor) — split out of `adamic_adar` (r14) so the
-    per-component tier can run it on a RESTRICTED edge set."""
+def _adamic_adar_join_scores(sym: DataFrame) -> DataFrame:
+    """The fully-distributed wedge-join AA scorer over a canonical edge
+    set (pre-limit: every non-adjacent pair with ≥1 common neighbor).
+
+    One self-join on the middle vertex (the two-hop expansion), one
+    degree join, one hash aggregate, one anti-join against existing
+    edges.  The two-hop fanout is Σ_w deg(w)² — hub-dominated; on
+    power-law graphs the handful of hub keys serialize the wedge
+    shuffle, so wedge centers with deg(w) ≥ AA_HUB_DEGREE are SALTED
+    AA_HUB_SALT ways: the (u,w) leg gets salt = hash(u) mod s, the
+    (w,v) leg is replicated across all s salts, and the join key
+    becomes (w, salt).  Row output is identical (every (u,w,v) wedge
+    still meets exactly once — u's salt picks one of v's s replicas);
+    the Σ deg(w_hub)² rows just land in s× more tasks instead of one
+    straggler.  Extra cost is the replication, Σ_hub deg(w)·s rows —
+    linear, not quadratic.  (deg(w) ≥ 2 always holds for a common
+    neighbor, so the 1/ln(deg) term is finite by construction.)"""
+    hub_degree, hub_salt = AA_HUB_DEGREE, AA_HUB_SALT
     edges = sym.unionAll(sym.select(F.col("dst").alias("src"),
                                     F.col("src").alias("dst")))
     deg = edges.groupBy(F.col("src").alias("w")).agg(
         F.count(F.lit(1)).alias("d"))
     # hub salting: the hub set is tiny by definition (deg ≥ threshold ⇒
     # ≤ 2m/threshold hubs) — broadcast it to tag both legs scan-side
-    hubs = F.broadcast(deg.filter(F.col("d") >= hub_degree_threshold)
+    hubs = F.broadcast(deg.filter(F.col("d") >= hub_degree)
                        .select("w", F.lit(True).alias("_hub")))
     left = (edges.select(F.col("src").alias("u"), F.col("dst").alias("w"))
             .join(hubs, "w", "left")
@@ -899,229 +1159,6 @@ def _adamic_adar_join_scores(sym: DataFrame, hub_degree_threshold: int,
                           F.greatest("src", "dst").alias("v")).distinct()
     return scores.join(existing.hint("shuffle_hash"), ["u", "v"],
                        "left_anti")
-
-
-def _packed_adjacency(sym: DataFrame, n_nodes: int):
-    """OR-reduced packed symmetric adjacency of a canonical edge set:
-    one (n_nodes × ⌈n/8⌉)-byte uint8 matrix on the driver.
-
-    Per-partition packed partials → in-Spark OR-reduce to ONE blob (the
-    co_occurrence_triangles discipline) — the driver receives exactly
-    one n²/8-byte matrix regardless of partition count (8 MB at n=8192,
-    128 MB at the distributed-tile cap 32768)."""
-    import numpy as np
-    import pandas as pd
-
-    n_bytes = (n_nodes + 7) // 8
-    e = (sym.select("src", "dst").distinct()
-         .select(F.least("src", "dst").alias("a"),
-                 F.greatest("src", "dst").alias("b")).distinct())
-
-    def partial_adj(batches):
-        A = np.zeros((n_nodes, n_bytes), dtype=np.uint8)
-        touched = False
-        for pdf in batches:
-            a = pdf["a"].to_numpy(dtype=np.int64)
-            b = pdf["b"].to_numpy(dtype=np.int64)
-            if len(a):
-                # symmetric set-bit: A[a,b] and A[b,a]
-                np.bitwise_or.at(A, (a, b // 8),
-                                 (1 << (b % 8)).astype(np.uint8))
-                np.bitwise_or.at(A, (b, a // 8),
-                                 (1 << (a % 8)).astype(np.uint8))
-                touched = True
-        if touched:
-            yield pd.DataFrame({"adj": [A.tobytes()]})
-        else:
-            yield pd.DataFrame({"adj": pd.array([], dtype=object)})
-
-    def or_reduce(batches):
-        acc = np.zeros(n_nodes * n_bytes, dtype=np.uint8)
-        touched = False
-        for pdf in batches:
-            for blob in pdf["adj"]:
-                acc |= np.frombuffer(blob, dtype=np.uint8)
-                touched = True
-        if touched:
-            yield pd.DataFrame({"adj": [acc.tobytes()]})
-        else:
-            yield pd.DataFrame({"adj": pd.array([], dtype=object)})
-
-    matrix_bytes = n_nodes * n_bytes
-    k = max(1, min(32, (1 << 30) // max(1, matrix_bytes)))
-    reduced = (e.coalesce(k).mapInPandas(partial_adj, schema="adj binary")
-               .repartition(1)
-               .mapInPandas(or_reduce, schema="adj binary").collect())
-    A = np.zeros((n_nodes, n_bytes), dtype=np.uint8)
-    for row in reduced:
-        A |= np.frombuffer(row.adj, dtype=np.uint8).reshape(n_nodes, n_bytes)
-    return A
-
-
-def _adamic_adar_dense_dist(sym: DataFrame, n_nodes: int, top: int,
-                            id_map: list[int] | None = None) -> DataFrame:
-    """Adamic-Adar for MID-SIZE bounded dimensions (driver-dense cap <
-    n ≤ 32768): the packed n²-bit adjacency is broadcast (≤128 MB) and
-    the block-tiled matmuls FAN OUT AS SPARK TASKS — one task per
-    upper-triangle tile pair, each doing the identical float64
-    S = (Bu·diag(wgt))·Bvᵀ / C = Bu·Bvᵀ math as the driver-dense path
-    and pruning to its own top-`top` under the final (rounded score
-    desc, u, v) order (a tile's global winners are inside its local
-    top).  The global cut is a Spark TakeOrderedAndProject over ≤
-    top·(n/block)²/2 candidate rows.
-
-    Why this exists: the driver-dense path does all (n/block)²/2 tile
-    matmuls serially on the driver — ~13.6 TFLOP at n=15000, minutes of
-    single-node BLAS and O(n²) driver RAM; the salted wedge join is
-    Θ(Σ deg²) rows (intractable on near-complete graphs — the r11
-    scale study's g17@x10 blew a 300 s budget).  Distributing the tiles
-    keeps driver memory at ONE packed matrix, bounds each task at
-    ~3·block·n·8 bytes of unpacked tile (block auto-sized to ≤256 MB),
-    and scales the FLOPs out with executors.  Results are identical to
-    both other paths: same float64 sums, same 6dp rounding, same
-    tiebreaks (covered by the path-equivalence pytest)."""
-    import numpy as np
-
-    spark = sym.sparkSession
-    A = _packed_adjacency(sym, n_nodes)
-    # clear the diagonal in packed form (self-loops must not count as
-    # common neighbors; the driver-dense path clears it after unpack)
-    ii = np.arange(n_nodes, dtype=np.int64)
-    A[ii, ii // 8] &= ~(1 << (ii % 8)).astype(np.uint8)
-    lut = np.unpackbits(
-        np.arange(256, dtype=np.uint8)[:, None], axis=1).sum(axis=1).astype(np.uint8)  # uint8 LUT: an int64 LUT made lut[bytes] 8x the byte matrix (measured 214 us/pair -> see r11 PERF note)
-    deg = lut[A].sum(axis=1).astype(np.float64)
-    with np.errstate(divide="ignore"):
-        wgt = np.where(deg >= 2, 1.0 / np.log(np.maximum(deg, 2)), 0.0)
-    block = int(max(256, min(2048, (256 << 20) // max(1, 24 * n_nodes))))
-    bc = spark.sparkContext.broadcast(
-        (A.tobytes(), int(n_nodes), wgt.tobytes()))
-    del A
-    tiles = [(u0, v0) for u0 in range(0, n_nodes, block)
-             for v0 in range(u0, n_nodes, block)]
-    tiles_df = spark.createDataFrame(tiles, "u0 int, v0 int").repartition(
-        max(len(tiles) // 2, spark.sparkContext.defaultParallelism))
-
-    def tile_scores(batches):
-        import pandas as pd
-        blob, n, wbytes = bc.value
-        nb = (n + 7) // 8
-        Ap = np.frombuffer(blob, dtype=np.uint8).reshape(n, nb)
-        w = np.frombuffer(wbytes, dtype=np.float64)
-        for pdf in batches:
-            for u0, v0 in zip(pdf["u0"], pdf["v0"]):
-                u0, v0 = int(u0), int(v0)
-                u1 = min(u0 + block, n)
-                v1 = min(v0 + block, n)
-                bits_u = np.unpackbits(Ap[u0:u1], axis=1,
-                                       bitorder="little")[:, :n]
-                bits_v = np.unpackbits(Ap[v0:v1], axis=1,
-                                       bitorder="little")[:, :n]
-                Bu = bits_u.astype(np.float64)
-                Bv = bits_v.astype(np.float64)
-                S = (Bu * w) @ Bv.T
-                C = Bu @ Bv.T
-                uu, vv = np.nonzero((bits_u[:, v0:v1] == 0) & (C > 0.5))
-                gu, gv = uu + u0, vv + v0
-                keep = gu < gv
-                if not keep.any():
-                    continue
-                gu, gv = gu[keep], gv[keep]
-                score = np.round(S[uu, vv][keep], 6)
-                cnt = C[uu, vv][keep].astype(np.int64)
-                order = np.lexsort((gv, gu, -score))[:top]
-                yield pd.DataFrame({"u": gu[order], "v": gv[order],
-                                    "common_neighbors": cnt[order],
-                                    "adamic_adar": score[order]})
-
-    cand = tiles_df.mapInPandas(
-        tile_scores,
-        schema="u long, v long, common_neighbors long, adamic_adar double")
-    out = (cand.orderBy(F.col("adamic_adar").desc(), "u", "v").limit(top)
-           .collect())  # ≤ top rows by construction
-    if id_map is not None:
-        out = [(int(id_map[r.u]), int(id_map[r.v]),
-                r.common_neighbors, r.adamic_adar) for r in out]
-    else:
-        out = [(r.u, r.v, r.common_neighbors, r.adamic_adar) for r in out]
-    return spark.createDataFrame(
-        out, "u long, v long, common_neighbors long, adamic_adar double")
-
-
-def _adamic_adar_dense(sym: DataFrame, n_nodes: int, top: int,
-                       block: int = 1024,
-                       id_map: list[int] | None = None) -> DataFrame:
-    """Bounded-id-space Adamic-Adar: distinct edges → per-partition packed
-    adjacency bitmatrix → in-Spark OR-reduce to ONE n²-bit matrix (the
-    co_occurrence_triangles discipline — the driver receives exactly one
-    n²/8-byte blob, ≈ 8 MB at the 8192-node cap) → BLOCK-TILED float64
-    matmuls for common-neighbor counts and Σ 1/ln(deg) weights →
-    top-`top` by (rounded score desc, u, v).  Exact same semantics and
-    rounding as the join path.
-
-    Driver memory, honestly: the unpacked 0/1 matrix is n² uint8 bytes
-    (67 MB at n=8192) and each matmul tile is block×n float64 — three
-    tiles live (Bu, Bu·w, Bv) plus two block² products, ≈ 220 MB peak at
-    the cap with block=1024.  The tiling exists because the untiled form
-    (S, C, Af each full n² float64) peaked at ~1.6 GB at n=8192 — 200×
-    the old docstring's claim; candidates are pruned to `top` per tile
-    pair under the final (rounded score desc, u, v) order, so the merge
-    holds ≤ top·(n/block)²/2 rows."""
-    import numpy as np
-
-    spark = sym.sparkSession
-    A = _packed_adjacency(sym, n_nodes)
-    bits = np.unpackbits(A, axis=1, bitorder="little")[:, :n_nodes]
-    del A
-    np.fill_diagonal(bits, 0)
-    deg = bits.sum(axis=1, dtype=np.int64).astype(np.float64)
-    # a common neighbor has deg ≥ 2 by construction, so masking deg < 2
-    # to weight 0 changes nothing (and avoids 1/ln(1))
-    with np.errstate(divide="ignore"):
-        wgt = np.where(deg >= 2, 1.0 / np.log(np.maximum(deg, 2)), 0.0)
-    cand_u, cand_v, cand_c, cand_s = [], [], [], []
-    for u0 in range(0, n_nodes, block):
-        u1 = min(u0 + block, n_nodes)
-        Bu = bits[u0:u1].astype(np.float64)
-        BuW = Bu * wgt
-        for v0 in range(u0, n_nodes, block):
-            v1 = min(v0 + block, n_nodes)
-            Bv = bits[v0:v1].astype(np.float64)
-            # full inner product over all n middle vertices — identical
-            # math to the untiled matmul, tiled only over output rows
-            S = BuW @ Bv.T     # S[u,v] = Σ_{w∈N(u)∩N(v)} 1/ln deg(w)
-            C = Bu @ Bv.T      # exact common-neighbor counts (< 2^53)
-            uu, vv = np.nonzero((bits[u0:u1, v0:v1] == 0) & (C > 0.5))
-            gu, gv = uu + u0, vv + v0
-            keep = gu < gv
-            if not keep.any():
-                continue
-            gu, gv = gu[keep], gv[keep]
-            score = np.round(S[uu, vv][keep], 6)
-            cnt = C[uu, vv][keep].astype(np.int64)
-            # per-tile prune under the FINAL order — the global top can't
-            # contain a row outside its own tile's top
-            order = np.lexsort((gv, gu, -score))[:top]
-            cand_u.append(gu[order])
-            cand_v.append(gv[order])
-            cand_c.append(cnt[order])
-            cand_s.append(score[order])
-    if not cand_u:
-        return spark.createDataFrame(
-            [], "u long, v long, common_neighbors long, adamic_adar double")
-    u = np.concatenate(cand_u)
-    v = np.concatenate(cand_v)
-    cnt = np.concatenate(cand_c)
-    score = np.concatenate(cand_s)
-    order = np.lexsort((v, u, -score))[:top]
-    # id_map: inverse of the monotone dense remap — the (score, u, v)
-    # order computed on indices equals the order on original ids, so
-    # mapping AFTER the cut is exact
-    emit = (lambda x: int(id_map[x])) if id_map is not None else int
-    rows = [(emit(u[i]), emit(v[i]), int(cnt[i]), float(score[i]))
-            for i in order]
-    return spark.createDataFrame(
-        rows, "u long, v long, common_neighbors long, adamic_adar double")
 
 
 def triangle_count(graph: PropertyGraph) -> int:
@@ -1203,125 +1240,85 @@ def _oriented_wedges(oriented: DataFrame) -> DataFrame:
 
 
 # driver-side dense triangle count unpacks ~8·n² bytes (two float32
-# matrices) — 2 GB at this cap; beyond it use the edge self-join
+# matrices) — 2 GB at this cap; beyond it co_occurrence_triangles runs
+# by component
 DENSE_TRI_MAX_NODES = 16384
+# per-COMPONENT dense cap for the grouped bit-matrix triangle count:
+# one applyInPandas group peaks at ~9·n_c² bytes (unpacked uint8 bits +
+# two float32 matrices) = 600 MB at 8192 — bounded per TASK, so a
+# 4-core/8 GB executor holds ≤4 concurrent dense components (~2.4 GB)
+# and the driver holds none at all (the counts reduce executor-side).
+DENSE_TRI_COMP_CAP = 8192
+
+
+def _bits_triangles(A, n_nodes: int) -> int:
+    """Triangles of the graph a packed symmetric bit matrix holds (the
+    global and per-component co-occurrence paths): sum((B@B)∘B) over
+    the upper triangle B via BLAS.  Matmul ENTRIES are exact in float32
+    (common-neighbor counts ≤ n ≤ 2^24), but the SUM is not — a dense
+    projection can hold >2^24 triangles, where float32 accumulation
+    silently loses integers — so it accumulates in float64 (exact <
+    2^53); C is reused in place to keep the peak at ~2 float32
+    matrices."""
+    import numpy as np
+
+    bits = _unpack_bits(A, n_nodes)
+    np.fill_diagonal(bits, 0)
+    B = np.triu(bits, 1).astype(np.float32)
+    del bits
+    C = B @ B
+    C *= B
+    return int(C.sum(dtype=np.float64))
 
 
 def co_occurrence_triangles(incidence: DataFrame, group_col: str,
-                            node_col: str, n_nodes: int) -> DataFrame:
+                            node_col: str) -> DataFrame:
     """Triangles of the co-occurrence projection of a bipartite incidence
     (nodes linked iff they share a group) — 1-row DF (triangles BIGINT).
 
     Enumerating projection edges via a per-group self-join is Θ(Σ_g
     |g|²) rows (67M at sf0.1 for supplier co-supply) before the distinct
-    collapses them.  When the projected dimension is bounded (n_nodes ≤
-    ~64k — dimension tables), the entire adjacency is an n²-BIT matrix
-    (125KB for 1000 nodes), so instead:
+    collapses them.  When the projected dimension is bounded, the whole
+    adjacency is an n²-BIT matrix (125KB for 1000 nodes), so instead:
 
-      distinct(group, node) → groupBy group: node-set bitmask (numpy)
-      → ≤ 4 partial adjacency matrices (coalesced partial stage)
-      → one in-Spark OR-reduce task folds them into ONE matrix
-      → the driver collects exactly one n²-bit matrix and counts
-        triangles as sum((B@B)*B) on the upper triangle via BLAS.
+      groupBy group: collect_set members (ONE shuffle; np.unique in the
+      group fill tolerates any residue) → `_packed_bits` with the group
+      fill (partial matrices, one in-Spark OR-reduce) → the driver
+      counts `_bits_triangles`.
 
-    Distributed work is one shuffle of the distinct incidence.  Memory
-    honestly: the PACKED matrix is n²/8 bytes, but the driver-side
-    triangle count unpacks to two float32 matrices (~8·n² bytes peak —
-    2 GB at n=16384), so the hard cap is n ≤ DENSE_TRI_MAX_NODES =
-    16384 and the function REFUSES loudly beyond it (use the
-    triangle_count edge self-join instead — loud beats a silent
-    driver OOM; the old docstring's "0.5 GB at n≈64k" counted only the
-    packed form).  The bounded partial/OR-reduce staging keeps every
-    executor and the driver at ≤1 packed matrix regardless.
-    """
-    import numpy as np
-    import pandas as pd
-
-    if not 0 < n_nodes <= DENSE_TRI_MAX_NODES:
-        raise ValueError(
-            f"n_nodes={n_nodes} outside (0, {DENSE_TRI_MAX_NODES}]: the "
-            f"dense bit-matrix triangle count unpacks ~8*n^2 bytes on "
-            f"the driver; project the incidence and use triangle_count "
-            f"(edge self-join) for larger dimensions")
-    n_bytes = (n_nodes + 7) // 8
-    spark = incidence.sparkSession
-
-    # collect_set dedupes inside the aggregate → ONE shuffle instead of
-    # distinct + groupBy (two); np.unique below tolerates any residue
-    groups = (incidence
-              .select(F.col(group_col).alias("g"), F.col(node_col).alias("n"))
-              .groupBy("g").agg(F.collect_set("n").alias("members")))
-
-    def partial_adj(batches):
-        A = np.zeros((n_nodes, n_bytes), dtype=np.uint8)
-        touched = False
-        for pdf in batches:
-            for members in pdf["members"]:
-                idx = np.unique(np.asarray(members, dtype=np.int64))
-                if len(idx) < 2:
-                    continue
-                mask = np.zeros(n_bytes, dtype=np.uint8)
-                np.bitwise_or.at(mask, idx // 8,
-                                 (1 << (idx % 8)).astype(np.uint8))
-                A[idx] |= mask
-                touched = True
-        if touched:
-            yield pd.DataFrame({"adj": [A.tobytes()]})
-        else:
-            yield pd.DataFrame({"adj": pd.array([], dtype=object)})
-
-    def or_reduce(batches):
-        acc = np.zeros(n_nodes * n_bytes, dtype=np.uint8)
-        touched = False
-        for pdf in batches:
-            for blob in pdf["adj"]:
-                acc |= np.frombuffer(blob, dtype=np.uint8)
-                touched = True
-        if touched:
-            yield pd.DataFrame({"adj": [acc.tobytes()]})
-        else:
-            yield pd.DataFrame({"adj": pd.array([], dtype=object)})
-
-    # partial count adapts to matrix size: parallelism when matrices are
-    # small (n≈1000 → 125 KB, keep 32-way packing), bounded residency when
-    # they're big (n≈64k → 0.5 GB, ≤2 partials so the reduce task and the
-    # driver stay ~1 GB)
-    matrix_bytes = n_nodes * n_bytes
-    k = max(1, min(32, (1 << 30) // max(1, matrix_bytes)))
-    partials = (groups.coalesce(k)
-                .mapInPandas(partial_adj, schema="adj binary"))
-    # repartition (shuffle), NOT coalesce: coalesce(1) is a narrow dep that
-    # would merge all k partial_adj builds into the single reduce task,
-    # serializing the partial stage.  Only ≤k adjacency blobs cross the
-    # shuffle, so the exchange is cheap.
-    reduced = (partials.repartition(1)
-               .mapInPandas(or_reduce, schema="adj binary").collect())
-    assert len(reduced) <= 1, "OR-reduce must yield exactly one matrix"
-
-    A = np.zeros((n_nodes, n_bytes), dtype=np.uint8)
-    for row in reduced:
-        A |= np.frombuffer(row.adj, dtype=np.uint8).reshape(n_nodes, n_bytes)
-    # bitorder must match the LSB-first packing above
-    bits = np.unpackbits(A, axis=1, bitorder="little")[:, :n_nodes]
-    np.fill_diagonal(bits, 0)
-    B = np.triu(bits, 1).astype(np.float32)
-    del bits
-    # matmul ENTRIES are exact in float32 (common-neighbor counts ≤ n ≤
-    # 2^24), but the SUM is not — a dense projection can hold >2^24
-    # triangles, where float32 accumulation silently loses integers.
-    # Accumulate in float64 (exact < 2^53); C computed then reused
-    # in-place to keep the peak at ~2 float32 matrices.
-    C = B @ B
-    C *= B
-    tri = int(C.sum(dtype=np.float64))
-    return spark.createDataFrame([(tri,)], "triangles long")
+    Tiers by node CARDINALITY: ids already in [0, DENSE_TRI_MAX_NODES)
+    index the matrix directly; a sparse/offset id space with ≤
+    DENSE_TRI_MAX_NODES distinct nodes goes through the monotone
+    `_dense_id_index` remap (the count is relabel-invariant, so no
+    inverse map; without it, +1e7 key offsets pushed the r11 3×
+    fixture from the ~2 s dense path to the 46 s pair enumeration);
+    anything larger runs `_co_occurrence_by_component`.  The cap exists
+    because the driver-side count unpacks ~8·n² bytes (2 GB at 16384)."""
+    inc = incidence.select(F.col(group_col).alias("g"),
+                           F.col(node_col).alias("n"))
+    b = inc.agg(F.min("n").alias("lo"), F.max("n").alias("hi")).first()
+    lo, hi = (0, 0) if b.hi is None else (int(b.lo), int(b.hi))
+    n_nodes = hi + 1
+    if not (0 <= lo and hi < DENSE_TRI_MAX_NODES):
+        dense = _dense_id_index(inc, ["n"], DENSE_TRI_MAX_NODES)
+        if dense is None:
+            return _co_occurrence_by_component(inc)
+        map_df, ids = dense
+        n_nodes = len(ids)
+        inc = (inc.join(F.broadcast(map_df.select(
+                   F.col("orig").alias("n"), "idx")), "n")
+               .select("g", F.col("idx").alias("n")))
+    groups = inc.groupBy("g").agg(F.collect_set("n").alias("members"))
+    A = _packed_bits(groups, n_nodes, _fill_groups)
+    return incidence.sparkSession.createDataFrame(
+        [(_bits_triangles(A, n_nodes),)], "triangles long")
 
 
-def _bipartite_components(inc: DataFrame, max_iter: int = 15):
+def _bipartite_components(inc: DataFrame):
     """Node-side connected-component labels of a bipartite incidence
     (``g``, ``n`` columns): returns (n, c) with c = min node id in the
     node's component of the CO-OCCURRENCE projection, or None if the
-    propagation did not PROVABLY converge in ``max_iter`` rounds (the
+    propagation did not PROVABLY converge in CC_MAX_ITER rounds (the
     caller must then keep its fully-distributed path — an unconverged
     labeling can SPLIT a true component and silently undercount
     whatever is computed per label).
@@ -1336,65 +1333,45 @@ def _bipartite_components(inc: DataFrame, max_iter: int = 15):
     star = (inc.select(F.min("n").over(Window.partitionBy("g")).alias("src"),
                        F.col("n").alias("dst"))
             .localCheckpoint(eager=True))
-    return _edge_components(star.hint("merge"), max_iter)
+    return _edge_components(star.hint("merge"))
 
 
-# per-COMPONENT dense cap for the grouped bit-matrix triangle count:
-# one applyInPandas group peaks at ~9·n_c² bytes (unpacked uint8 bits +
-# two float32 matrices) = 600 MB at 8192 — bounded per TASK, so a
-# 4-core/8 GB executor holds ≤4 concurrent dense components (~2.4 GB)
-# and the driver holds none at all (the counts reduce executor-side).
-DENSE_TRI_COMP_CAP = 8192
+def _co_occurrence_by_component(inc: DataFrame) -> DataFrame:
+    """`co_occurrence_triangles`' tier past the global dense cap, over a
+    (g, n) incidence: label connected components (triangles and
+    co-occurrence pairs never span components — every group's members
+    share one component by definition), then count each component with
+    the machinery its own size/density deserves:
 
-
-def co_occurrence_triangles_by_component(
-        incidence: DataFrame, group_col: str, node_col: str,
-        comp_cap: int = DENSE_TRI_COMP_CAP,
-        cc_max_iter: int = 15) -> DataFrame:
-    """Co-occurrence triangle count for dimensions PAST the global
-    dense cap: label connected components (triangles and co-occurrence
-    pairs never span components — every group's members share one
-    component by definition), then count each component with the
-    machinery its own size/density deserves:
-
-    - n_c ≤ ``comp_cap`` AND the r11-measured density gate prefers
-      dense (`_prefer_dense_tiles` fed the component's Σ|g|²
-      pair-enumeration row count): ONE applyInPandas task builds the
-      component's n_c-bit adjacency from its per-group member lists and
-      counts sum((B@B)∘B) upper-triangle — executor-side, never the
-      driver, components in parallel;
+    - n_c ≤ DENSE_TRI_COMP_CAP AND the density gate prefers dense
+      (`_prefer_dense_tiles` fed the component's Σ|g|² pair-enumeration
+      row count): ONE applyInPandas task fills the component's n_c-bit
+      adjacency with the group fill and counts `_bits_triangles` —
+      executor-side, never the driver, components in parallel;
     - everything else (oversize or sparse-enough-to-join components):
       ONE pair-enumeration + canonical triple join over the incidence
-      restricted (semi-join) to those components — the same
-      fully-distributed fallback the caller would have used globally.
+      restricted (semi-join) to those components.
 
-    Why this exists (r13 x30, VERDICT task): a block-diagonal corpus —
-    30 replicated sf0.1 tenants, 30k suppliers total, every BLOCK tiny
-    — fails the global 16384 cap and fell to the 3e10-wedge-row join;
-    per-component dispatch runs 30 independent 1000-node bit matrices
-    instead.  That block-diagonal shape is what multi-tenant /
-    multi-shard production data actually looks like at 100 TB.
+    Why this exists (r13 x30): a block-diagonal corpus — 30 replicated
+    sf0.1 tenants, 30k suppliers total, every BLOCK tiny — fails the
+    global 16384 cap and fell to the 3e10-wedge-row join; per-component
+    dispatch runs 30 independent 1000-node bit matrices instead.
 
     If the component labeling cannot prove convergence
     (`_bipartite_components` → None, pathological diameter), the whole
     input takes the join path — correct over fast.  NULL group/node
     ids never co-occur with anything (SQL join semantics) and are
-    dropped with a loud one-time filter here, matching the oracle's
-    equi-join behavior."""
+    dropped here, matching the oracle's equi-join behavior."""
     import numpy as np
     import pandas as pd
 
-    spark = incidence.sparkSession
-
-    inc = (incidence
-           .select(F.col(group_col).alias("g"), F.col(node_col).alias("n"))
-           .filter(F.col("g").isNotNull() & F.col("n").isNotNull())
+    inc = (inc.filter(F.col("g").isNotNull() & F.col("n").isNotNull())
            .distinct()
            .localCheckpoint(eager=True))  # consumed by CC + both tiers
 
-    labels = _bipartite_components(inc, max_iter=cc_max_iter)
+    labels = _bipartite_components(inc)
+    parts = []
     if labels is None:
-        dense_members = None
         join_inc = inc
     else:
         sizes = labels.groupBy("c").agg(F.count(F.lit(1)).alias("n_c"))
@@ -1406,53 +1383,33 @@ def co_occurrence_triangles_by_component(
             F.sum(F.col("k") * F.col("k")).alias("d2"))
         routed = (sizes.join(d2, "c")
                   .withColumn("dense",
-                              (F.col("n_c") <= comp_cap)
-                              & (F.col("d2") * 1000
-                                 > F.col("n_c") ** 3)))
+                              (F.col("n_c") <= DENSE_TRI_COMP_CAP)
+                              & _prefer_dense_tiles(F.col("d2"),
+                                                    F.col("n_c"))))
         lbl = labels.join(routed.select("c", "n_c", "dense"), "c")
-        dense_lbl = lbl.filter(F.col("dense"))
-        join_lbl = lbl.filter(~F.col("dense"))
         # per-component dense index: relabel-invariant count, so any
         # bijection works; row_number keeps it deterministic
         widx = Window.partitionBy("c").orderBy("n")
-        dense_idx = dense_lbl.withColumn(
+        dense_idx = lbl.filter(F.col("dense")).withColumn(
             "idx", F.row_number().over(widx) - 1)
         dense_members = (inc.hint("merge").join(dense_idx, "n")
                          .groupBy("c", "g")
                          .agg(F.collect_set("idx").alias("members"),
                               F.max("n_c").alias("n_c")))
-        join_inc = (inc.hint("merge")
-                    .join(join_lbl.select("n"), "n", "left_semi"))
 
-    parts = []
-    if dense_members is not None:
         def comp_tri(pdf: "pd.DataFrame") -> "pd.DataFrame":
-            if len(pdf) == 0:
-                return pd.DataFrame({"t": pd.array([], dtype="int64")})
             n_c = int(pdf["n_c"].iloc[0])
-            n_bytes = (n_c + 7) // 8
-            A = np.zeros((n_c, n_bytes), dtype=np.uint8)
-            for members in pdf["members"]:
-                idx = np.unique(np.asarray(members, dtype=np.int64))
-                if len(idx) < 2:
-                    continue
-                mask = np.zeros(n_bytes, dtype=np.uint8)
-                np.bitwise_or.at(mask, idx // 8,
-                                 (1 << (idx % 8)).astype(np.uint8))
-                A[idx] |= mask
-            bits = np.unpackbits(A, axis=1, bitorder="little")[:, :n_c]
-            np.fill_diagonal(bits, 0)
-            B = np.triu(bits, 1).astype(np.float32)
-            del bits
-            C = B @ B
-            C *= B
+            A = np.zeros((n_c, (n_c + 7) // 8), dtype=np.uint8)
+            _fill_groups(A, pdf)
             # n_c ≤ 8192 ⇒ count ≤ n³/6 < 2^53: float64 sum is exact
-            return pd.DataFrame({"t": [int(C.sum(dtype=np.float64))]})
+            return pd.DataFrame({"t": [_bits_triangles(A, n_c)]})
 
         parts.append(dense_members.groupBy("c")
                      .applyInPandas(comp_tri, schema="t long"))
-    # the join tier (unconverged, oversize, or sparse components):
-    # identical shape to the global fallback, restricted incidence
+        join_inc = (inc.hint("merge")
+                    .join(lbl.filter(~F.col("dense")).select("n"), "n",
+                          "left_semi"))
+    # the join tier (unconverged, oversize, or sparse components)
     sp = join_inc.select("g", "n")
     pairs = (sp.alias("a").join(sp.alias("b").hint("merge"), "g")
              .filter(F.col("a.n") < F.col("b.n"))
@@ -1467,8 +1424,7 @@ def co_occurrence_triangles_by_component(
                       & (F.col("e3.dst") == F.col("e2.dst")))
                 .agg(F.count(F.lit(1)).alias("t")))
     parts.append(tri_join)
-    import functools as _ft
-    allp = _ft.reduce(DataFrame.unionByName, parts)
+    allp = functools.reduce(DataFrame.unionByName, parts)
     return allp.agg(F.coalesce(F.sum("t"), F.lit(0))
                     .cast("long").alias("triangles"))
 
@@ -2108,9 +2064,28 @@ def strongly_connected_components(edges: DataFrame, max_phases: int = 25,
 # |V|²-bit adjacency budget: 0.5 GB of masks at 64k nodes; beyond
 # that the oriented-wedge join path wins.
 DENSE_LCC_MAX_NODES = 65536
+# the per-edge mask tier ships |E|·⌈n/8⌉ bytes of masks through Arrow;
+# past this the distributed tiles take over (20 GB at 15k vertices / 11M
+# edges was the r11 scale-study g24 timeout)
+LCC_MASK_MAX_BYTES = 2 << 30
 
 
-def _vertex_triangles_dense(sym: DataFrame, n_nodes: int) -> DataFrame:
+def _vertex_triangles(credits: DataFrame, index) -> DataFrame:
+    """Per-vertex triangle credits (id, c) → (id, triangles = ½ Σ c),
+    checkpointed, in ORIGINAL ids: index (map_df, ids) maps dense
+    indices back through a bounded broadcast join."""
+    per = (credits.groupBy("id")
+           .agg((F.sum("c") / 2).cast("long").alias("triangles"))
+           .localCheckpoint(eager=True))
+    if index is None:
+        return per
+    return (per.join(F.broadcast(index[0].select(
+                F.col("idx").alias("id"), "orig")), "id")
+            .select(F.col("orig").alias("id"), "triangles"))
+
+
+def _vertex_triangles_dense(sym: DataFrame, n_nodes: int,
+                            index) -> DataFrame:
     """Per-vertex triangle counts for a dense small-id-space graph:
     (id, triangles).  `sym` must be canonical (src < dst, distinct).
 
@@ -2120,7 +2095,7 @@ def _vertex_triangles_dense(sym: DataFrame, n_nodes: int) -> DataFrame:
     counts each triangle through that edge exactly once, so summing over
     a vertex's incident edges counts its triangles twice).  One
     mapInPandas over the broadcast-joined edge list; numpy byte-AND +
-    popcount LUT per Arrow batch."""
+    `_row_popcounts` per Arrow batch."""
     import numpy as np
     import pandas as pd
 
@@ -2131,13 +2106,8 @@ def _vertex_triangles_dense(sym: DataFrame, n_nodes: int) -> DataFrame:
 
     def pack(batches):
         for pdf in batches:
-            out = []
-            for nbrs in pdf["nbrs"]:
-                mask = np.zeros(n_bytes, dtype=np.uint8)
-                idx = np.asarray(nbrs, dtype=np.int64)
-                np.bitwise_or.at(mask, idx // 8,
-                                 (1 << (idx % 8)).astype(np.uint8))
-                out.append(mask.tobytes())
+            out = [_bitmask(np.asarray(nbrs, dtype=np.int64),
+                            n_bytes).tobytes() for nbrs in pdf["nbrs"]]
             yield pd.DataFrame({"id": pdf["src"], "mask": out})
 
     # materialize once: both broadcast sides below would otherwise
@@ -2149,9 +2119,6 @@ def _vertex_triangles_dense(sym: DataFrame, n_nodes: int) -> DataFrame:
     paired = (sym.join(F.broadcast(mu), "src")
               .join(F.broadcast(mv), "dst"))
 
-    lut = np.unpackbits(
-        np.arange(256, dtype=np.uint8)[:, None], axis=1).sum(axis=1).astype(np.uint8)  # uint8 LUT: an int64 LUT made lut[bytes] 8x the byte matrix (measured 214 us/pair -> see r11 PERF note)
-
     def per_edge(batches):
         for pdf in batches:
             if len(pdf) == 0:
@@ -2160,32 +2127,26 @@ def _vertex_triangles_dense(sym: DataFrame, n_nodes: int) -> DataFrame:
                           for m in pdf["mask_u"]])
             b = np.stack([np.frombuffer(m, dtype=np.uint8)
                           for m in pdf["mask_v"]])
-            c = lut[a & b].sum(axis=1).astype(np.int64)
             yield pd.DataFrame({"src": pdf["src"], "dst": pdf["dst"],
-                                "c": c})
+                                "c": _row_popcounts(a & b)})
 
     cnt = paired.select("src", "dst", "mask_u", "mask_v").mapInPandas(
         per_edge, schema="src long, dst long, c long")
-    return (cnt.select(F.col("src").alias("id"), "c")
-            .unionAll(cnt.select(F.col("dst").alias("id"), "c"))
-            .groupBy("id")
-            .agg((F.sum("c") / 2).cast("long").alias("triangles"))
-            .localCheckpoint(eager=True))
+    return _vertex_triangles(
+        cnt.select(F.col("src").alias("id"), "c")
+        .unionAll(cnt.select(F.col("dst").alias("id"), "c")), index)
 
 
-def _vertex_triangles_dense_dist(sym: DataFrame,
-                                     n_nodes: int) -> DataFrame:
+def _vertex_triangles_dense_dist(sym: DataFrame, n_nodes: int,
+                                 index) -> DataFrame:
     """Per-vertex triangle counts via DISTRIBUTED bit-matrix tiles —
-    the mid-size companion to _vertex_triangles_dense (the
-    _adamic_adar_dense_dist broadcast/tile pattern): broadcast the
-    packed n²-bit adjacency (≤128 MB at 32768), fan upper-triangle
-    tile pairs out as Spark tasks, and per tile enumerate its ADJACENT
-    pairs locally and popcount exactly those mask ANDs — only adjacent
-    pairs earn credit (unlike AA, where non-adjacent pairs are the
-    output), so no C = Bu·Bvᵀ matmul is ever needed: total work is
-    |E| pair rows of ⌈n/8⌉ bytes (np.bitwise_count when numpy ≥ 2, a
-    byte LUT otherwise), chunked by row-width so each in-flight array
-    stays ≤ ~128 MB at every n.  tri(v) = ½ Σ credits.
+    the mid-size companion to _vertex_triangles_dense, on the
+    `_tile_fanout` tiles: per tile enumerate its ADJACENT pairs locally
+    and popcount exactly those mask ANDs — only adjacent pairs earn
+    credit (unlike AA, where non-adjacent pairs are the output), so no
+    C = Bu·Bvᵀ matmul is ever needed: total work is |E| pair rows of
+    ⌈n/8⌉ bytes, chunked by row width so each in-flight array stays ≤
+    ~128 MB at every n.  tri(v) = ½ Σ credits.
     Identical math to the per-edge-mask form, which ships |E|·n/8
     bytes of masks through Arrow (≈20 GB at 15k vertices / 11M edges —
     blew the r11 scale-study budget, and an intermediate matmul form
@@ -2193,45 +2154,18 @@ def _vertex_triangles_dense_dist(sym: DataFrame,
     the broadcast and Arrow carries only per-vertex credit rows."""
     import numpy as np
 
-    spark = sym.sparkSession
-    A = _packed_adjacency(sym, n_nodes)
-    ii = np.arange(n_nodes, dtype=np.int64)
-    A[ii, ii // 8] &= ~(1 << (ii % 8)).astype(np.uint8)
-    block = int(max(256, min(2048, (256 << 20) // max(1, 24 * n_nodes))))
-    bc = spark.sparkContext.broadcast((A.tobytes(), int(n_nodes)))
+    A, bc, block, tiles_df = _tile_fanout(sym, n_nodes)
     del A
-    tiles = [(u0, v0) for u0 in range(0, n_nodes, block)
-             for v0 in range(u0, n_nodes, block)]
-    tiles_df = spark.createDataFrame(tiles, "u0 int, v0 int").repartition(
-        max(len(tiles) // 2, spark.sparkContext.defaultParallelism))
-
-    lut = np.unpackbits(
-        np.arange(256, dtype=np.uint8)[:, None], axis=1).sum(axis=1).astype(np.uint8)  # uint8 LUT: an int64 LUT made lut[bytes] 8x the byte matrix (measured 214 us/pair -> see r11 PERF note)
-    # popcount(row) via np.bitwise_count when available (numpy ≥ 2.0),
-    # else the byte LUT — same result, the LUT is ~2-3× slower
-    pop = getattr(np, "bitwise_count", None)
 
     def tile_credits(batches):
         import pandas as pd
-        blob, n = bc.value
-        nb = (n + 7) // 8
-        Ap = np.frombuffer(blob, dtype=np.uint8).reshape(n, nb)
+        Ap = np.frombuffer(bc.value, dtype=np.uint8).reshape(n_nodes, -1)
+        nb = Ap.shape[1]
         for pdf in batches:
             for u0, v0 in zip(pdf["u0"], pdf["v0"]):
                 u0, v0 = int(u0), int(v0)
-                u1 = min(u0 + block, n)
-                # only ADJACENT pairs earn credit, so the tile never
-                # needs the full C matmul (that is the AA case, where
-                # NON-adjacent pairs are the output): enumerate the
-                # tile's adjacent pairs from the packed matrix and
-                # popcount exactly those mask ANDs — Σ over tiles is
-                # |E| pair rows of ⌈n/8⌉ bytes, with NO per-edge mask
-                # columns ever shipped (the measured 128 s x10 matmul
-                # form drops to the pure byte cost)
-                v1 = min(v0 + block, n)
-                adj = np.unpackbits(
-                    Ap[u0:u1], axis=1,
-                    bitorder="little")[:, v0:v1]
+                adj = _unpack_bits(Ap[u0:u0 + block],
+                                   n_nodes)[:, v0:v0 + block]
                 if u0 == v0:
                     # within-tile pairs: upper triangle only, so each
                     # unordered adjacent pair is credited exactly once
@@ -2241,20 +2175,17 @@ def _vertex_triangles_dense_dist(sym: DataFrame,
                     continue
                 gu = (uu + u0).astype(np.int64)
                 gv = (vv + v0).astype(np.int64)
-                credit = np.zeros(n, dtype=np.int64)
+                credit = np.zeros(n_nodes, dtype=np.int64)
                 # chunk rows scale INVERSELY with the packed row width
                 # so peak chunk memory stays ~flat (~3×128 MB for the
                 # Ap[cu]/Ap[cv]/both triple) at every n — a fixed 65536
                 # rows is ~768 MB of in-flight arrays at the n=32768
                 # cap, an OOM risk across 32 concurrent tasks
-                # (r11 ADVICE)
                 step = max(4096, (128 << 20) // nb)
                 for c0 in range(0, len(gu), step):
                     cu = gu[c0:c0 + step]
                     cv = gv[c0:c0 + step]
-                    both = Ap[cu] & Ap[cv]
-                    c = (pop(both).sum(axis=1, dtype=np.int64) if pop
-                         else lut[both].sum(axis=1).astype(np.int64))
+                    c = _row_popcounts(Ap[cu] & Ap[cv])
                     np.add.at(credit, cu, c)
                     np.add.at(credit, cv, c)
                 keep = np.nonzero(credit)[0]
@@ -2262,10 +2193,8 @@ def _vertex_triangles_dense_dist(sym: DataFrame,
                     continue
                 yield pd.DataFrame({"id": keep, "c": credit[keep]})
 
-    return (tiles_df.mapInPandas(tile_credits, schema="id long, c long")
-            .groupBy("id")
-            .agg((F.sum("c") / 2).cast("long").alias("triangles"))
-            .localCheckpoint(eager=True))
+    return _vertex_triangles(
+        tiles_df.mapInPandas(tile_credits, schema="id long, c long"), index)
 
 
 def local_clustering(graph: PropertyGraph) -> DataFrame:
@@ -2273,114 +2202,38 @@ def local_clustering(graph: PropertyGraph) -> DataFrame:
     (id, degree, lcc) with lcc = 2·tri(v) / (deg(v)·(deg(v)−1)),
     0.0 for degree < 2, rounded to 6 decimals (oracle discipline).
 
-    Three-tier routing, the g17/g03 discipline (sparse/offset id
-    spaces first pass through the monotone `_dense_id_index` remap, so
+    Triangles by DIMENSION CARDINALITY through `_route_dense` (sparse/
+    offset id spaces pass the monotone `_dense_id_index` remap, so
     CARDINALITY routes, not id values):
 
-    - bounded dimension AND |E|·⌈n/8⌉ ≤ 2 GB: per-edge
-      FULL-neighborhood bitsets.  Per canonical edge (u,v),
-      |N(u) ∩ N(v)| counts every triangle through that edge, so
-      tri(v) = ½ Σ_{(u,v)∋v} popcount — vectorized numpy byte-ANDs in
-      one Arrow-batched mapInPandas over the edge list, NO wedge
+    - n ≤ DENSE_LCC_MAX_NODES AND |E|·⌈n/8⌉ ≤ LCC_MASK_MAX_BYTES:
+      per-edge FULL-neighborhood bitsets (`_vertex_triangles_dense`).
+      Per canonical edge (u,v), |N(u) ∩ N(v)| counts every triangle
+      through that edge, so tri(v) = ½ Σ_{(u,v)∋v} popcount — NO wedge
       materialization.  A near-complete co-activity graph has Θ(n³)
       wedges (72 s measured at sf0.1) but only n²/8 bytes of adjacency
-      (280 KB at n=1500, broadcast) — the economics of a bit-matrix
-      triangle count, kept per-edge instead of summed.
-    - bounded dimension (n ≤ 32768) but per-edge masks too big (the
-      mask path ships |E|·⌈n/8⌉ bytes through Arrow — 20 GB at 15k
-      vertices / 11M edges, the r11 scale-study g24 timeout):
-      DISTRIBUTED bit-matrix tiles (`_vertex_triangles_dense_dist`,
-      the _adamic_adar_dense_dist pattern) — broadcast packed matrix,
-      tile matmuls as Spark tasks, per-vertex credit rows out.
-    - larger id spaces: degree-ordered orientation — wedges only out of
-      each vertex's O(√m) oriented neighborhood, closed by a (b, c)
-      equi-join, keeping all three corners so each triangle credits
-      each endpoint.  Nothing is quadratic in any vertex's raw degree,
-      so hubs cost O(m^1.5) total like everyone else."""
+      (280 KB at n=1500, broadcast);
+    - per-component kernels when Σd² makes the join expensive and the
+      graph is block-diagonal (`_tri_per_vertex_comp_dense`);
+    - n ≤ DENSE_TILE_MAX_NODES and the density gate: DISTRIBUTED
+      bit-matrix tiles (`_vertex_triangles_dense_dist`).  Σd²/2
+      UPPER-bounds the degree-ORIENTED wedge count, so the gate biases
+      toward tiles — the mistake it can make is bounded by the cap,
+      while a wedge explosion is not;
+    - beyond: degree-ordered orientation (`_lcc_join_triangles`) —
+      wedges only out of each vertex's O(√m) oriented neighborhood,
+      closed by a (b, c) equi-join, keeping all three corners so each
+      triangle credits each endpoint.  Nothing is quadratic in any
+      vertex's raw degree, so hubs cost O(m^1.5) total."""
     sym = graph.undirected_edges().localCheckpoint(eager=True)
-    b = sym.agg(F.min(F.least("src", "dst")).alias("mn"),
-                F.max(F.greatest("src", "dst")).alias("mx")).first()
-    n_nodes = int(b.mx) + 1 if b.mx is not None else 0
-    # the dense path requires the FULL id range [0, n): a negative id
-    # would wrap numpy fancy indexing into phantom adjacency bits (the
-    # adamic_adar guard, applied here too — previously only max was
-    # checked)
-    def _try_components(s: DataFrame):
-        """Per-component triangle dispatch (r14, the adamic_adar twin):
-        dense kernels for components that fit, the restricted wedge
-        join for the rest; None when labeling failed or nothing routes
-        dense.  Per-vertex rows union WITHOUT re-agg — components
-        partition the vertex set."""
-        split = _component_split(s, TRI_COMP_CAP)
-        if split is None or not split[2]:
-            return None
-        dense_edges, join_edges, _, has_join = split
-        parts = [_tri_per_vertex_comp_dense(dense_edges)]
-        if has_join:
-            parts.append(_lcc_join_triangles(
-                join_edges.localCheckpoint(eager=True)))
-        import functools as _ft
-        return _ft.reduce(DataFrame.unionByName, parts)
-
-    per = None
-    dense_remap = None
-    if b.mn is not None:
-        # CARDINALITY probe FIRST, identity ranges included (r12: the
-        # adamic_adar probe-order fix applied symmetrically — a
-        # sparsely populated [0, n) range used to pay mask/tile costs
-        # at n = max_id+1 even when its distinct count was tiny; id
-        # values are arbitrary in production, cardinality is what the
-        # bit-matrix needs).  One bounded distinct-collect; a NULL id
-        # declines the remap and falls to the join path.
-        dense_remap = _dense_id_index(sym, ["src", "dst"],
-                                      DENSE_LCC_MAX_NODES)
-
-    def _tier(kernel):
-        """Run a [0, n)-id dense kernel on the (possibly remapped)
-        edges and return per-vertex triangles in ORIGINAL ids."""
-        map_df, ids = dense_remap
-        n = len(ids)
-        if b.mn >= 0 and ids[0] == 0 and ids[-1] == n - 1:
-            # fully-populated identity range: no remap joins — the
-            # returned plan matches the pre-probe flow
-            return kernel(sym, n)
-        per_idx = kernel(_remap_edges(sym, map_df), n)
-        # inverse map back to original ids (bounded broadcast)
-        return (per_idx.join(F.broadcast(map_df.select(
-                    F.col("idx").alias("id"), F.col("orig"))), "id")
-                .select(F.col("orig").alias("id"), "triangles"))
-
-    # tier order (r14): mask → per-component → tiles → join.  The mask
-    # path ships |E|·⌈n/8⌉ bytes of per-edge masks through Arrow (fine
-    # at small n·E, 20 GB at 15k vertices / 11M edges — the r11
-    # scale-study g24 timeout); the component attempt runs between the
-    # mask and tile tiers because a block-diagonal mid-size graph pays
-    # global-n³ tile FLOPs when per-component kernels do orders of
-    # magnitude less (a single-component graph yields no dense comps
-    # and falls through to tiles unchanged); |E| is remap-invariant,
-    # so the mask bound counts `sym` directly.
-    if dense_remap is not None and len(dense_remap[1]) > 0:
-        if sym.count() * ((len(dense_remap[1]) + 7) // 8) <= (2 << 30):
-            per = _tier(_vertex_triangles_dense)
-    sum_d2 = None
-    if per is None:
-        sum_d2 = _sum_deg_sq(sym)
-        if sum_d2 > EDGE_COMP_ATTEMPT_MIN_WEDGES:
-            # original ids — the component kernels index locally, so
-            # the remap (and its per-iteration join re-execution) is
-            # never paid here
-            per = _try_components(sym)
-    if per is None and dense_remap is not None:
-        n = len(dense_remap[1])
-        # tile tier: packed broadcast ≤ 128 MB (the AA-dist cap), and
-        # only when tile FLOPs beat the join path's wedge rows (Σd²/2
-        # UPPER-bounds the degree-ORIENTED wedge count, so this gate
-        # biases toward tiles — the mistake it can make is bounded by
-        # the n ≤ 32768 cap, while a wedge explosion is not)
-        if 0 < n <= 32768 and _prefer_dense_tiles(sum_d2, n):
-            per = _tier(_vertex_triangles_dense_dist)
-    if per is None:
-        per = _lcc_join_triangles(sym)
+    # |E| is remap-invariant, so the mask bound counts `sym` directly
+    per = _route_dense(
+        sym, range_cap=0, probe_cap=DENSE_LCC_MAX_NODES,
+        small_fits=lambda n: (sym.count() * ((n + 7) // 8)
+                              <= LCC_MASK_MAX_BYTES),
+        small=_vertex_triangles_dense, tiles=_vertex_triangles_dense_dist,
+        comp_cap=TRI_COMP_CAP, comp_kernel=_tri_per_vertex_comp_dense,
+        join=_lcc_join_triangles, finish=lambda df: df)
     # degree from the SAME canonical edge set the triangles were counted
     # on (distinct-neighbor degree, robust to non-canonical inputs)
     deg = (sym.select(F.col("src").alias("id"))
@@ -2873,8 +2726,7 @@ def betweenness_approx(edges: DataFrame, n_sources: int = 4,
 
 
 def _frontier_min_fixpoint(state, make_candidates,
-                           max_iter: int, broadcast_threshold: int,
-                           op_name: str):
+                           max_iter: int, op_name: str):
     """Shared monotone-minimum frontier fixpoint (the sparse "SPFA"
     skeleton of sssp_weighted and temporal_reachability): each round,
     only vertices whose value IMPROVED last round generate candidates
@@ -2882,13 +2734,13 @@ def _frontier_min_fixpoint(state, make_candidates,
     into the reached-state by least(); terminates when nothing
     improves, raises loudly on max_iter exhaustion.  The frontier is
     broadcast while its known row count (free from the exit probe) is
-    under the threshold; localCheckpoint per round keeps lineage
+    ≤ BFS_BROADCAST_MAX; localCheckpoint per round keeps lineage
     flat."""
     state = state.localCheckpoint(eager=True)
     frontier = state
     frontier_n = state.count()
     for _ in range(max_iter):
-        f = (F.broadcast(frontier) if frontier_n <= broadcast_threshold
+        f = (F.broadcast(frontier) if frontier_n <= BFS_BROADCAST_MAX
              else frontier)
         cand = make_candidates(f)
         merged = (state.join(cand, "id", "full_outer")
@@ -2915,8 +2767,7 @@ def _frontier_min_fixpoint(state, make_candidates,
 
 def sssp_weighted(graph: PropertyGraph, source_ids: list[int],
                   weight_col: str = "weight", max_iter: int = 20,
-                  directed: bool = True,
-                  broadcast_threshold: int = BFS_BROADCAST_MAX) -> DataFrame:
+                  directed: bool = True) -> DataFrame:
     """Weighted single-source shortest paths — Bellman-Ford in the
     sparse frontier ("SPFA") form: each round relaxes only the edges
     out of vertices whose tentative distance IMPROVED last round, not
@@ -2961,16 +2812,14 @@ def sssp_weighted(graph: PropertyGraph, source_ids: list[int],
 
     try:
         out = _frontier_min_fixpoint(state, make_candidates,
-                                     max_iter, broadcast_threshold,
-                                     "sssp_weighted")
+                                     max_iter, "sssp_weighted")
     finally:
         edges.unpersist()
     return out.select("id", F.col("val").alias("dist"))
 
 
 def temporal_reachability(edges: DataFrame, source_ids: list[int],
-                          start_ts: int = 0, max_iter: int = 20,
-                          broadcast_threshold: int = BFS_BROADCAST_MAX
+                          start_ts: int = 0, max_iter: int = 20
                           ) -> DataFrame:
     """Earliest-arrival TIME-RESPECTING reachability over a temporal
     edge list (src, dst, ts): a vertex v is reached at time t iff some
@@ -3002,8 +2851,7 @@ def temporal_reachability(edges: DataFrame, source_ids: list[int],
 
     try:
         out = _frontier_min_fixpoint(state, make_candidates,
-                                     max_iter, broadcast_threshold,
-                                     "temporal_reachability")
+                                     max_iter, "temporal_reachability")
     finally:
         e.unpersist()
     return out.select("id", F.col("val").alias("arrival"))

@@ -630,7 +630,7 @@ def pairs_to_clusters(pairs: DataFrame, a_col: str = "doc_a",
     embedding pairs — the pair graph is tiny relative to the corpus
     (only thresholded near-dups), and CC is min-id pointer jumping:
     O(diameter) supersteps, keyed shuffles only."""
-    from ..graph.algorithms import _edge_components
+    from ..graph.algorithms import CC_MAX_ITER, _edge_components
     # Truncate the pair-derivation lineage ONCE: the labeling loop reads
     # the pairs every round and would otherwise re-execute the full
     # upstream pipeline (a MinHash pass costs more than the entire
@@ -639,10 +639,10 @@ def pairs_to_clusters(pairs: DataFrame, a_col: str = "doc_a",
     pairs = (pairs.select(F.col(a_col).alias("src"),
                           F.col(b_col).alias("dst"))
              .localCheckpoint(eager=True))
-    labels = _edge_components(pairs, max_iter=20)
+    labels = _edge_components(pairs)
     if labels is None:
-        raise RuntimeError("pairs_to_clusters: component labels did not "
-                           "converge within 20 supersteps")
+        raise RuntimeError(f"pairs_to_clusters: component labels did not "
+                           f"converge within {CC_MAX_ITER} supersteps")
     cc = labels.select(F.col("n").alias("id"), F.col("c").alias("component"))
     return (cc.groupBy(F.col("component").alias("cluster_id"))
             .agg(F.count(F.lit(1)).alias("n_members"),

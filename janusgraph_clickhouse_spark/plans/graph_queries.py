@@ -87,43 +87,15 @@ def g03_supplier_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     linked when they supply the same part).  Canonical (src<dst)
     orientation → each triangle counted exactly once, no /3 division
     (SURVEY §2.3 triangle row)."""
-    li = load_table(spark, sf_dir, "lineitem")
     # Suppliers are a bounded dimension, and the co-supply projection is
     # near-complete (K~1000 at sf0.1) — both the per-part pair-enumeration
     # join (67M rows) and the generic wedge join (166M rows) are
-    # throughput-bound.  The bit-matrix specialization does one shuffle of
-    # the distinct incidence and finishes on kilobytes
-    # (graph.algorithms.co_occurrence_triangles; measured 25s → ~2s).
-    from janusgraph_clickhouse_spark.graph.algorithms import (
-        DENSE_TRI_MAX_NODES, _dense_id_index)
-    n_nodes = int(li.agg(F.max("l_suppkey")).first()[0] or 0) + 1
-    if n_nodes <= DENSE_TRI_MAX_NODES:
-        return co_occurrence_triangles(li, "l_partkey", "l_suppkey",
-                                       n_nodes)
-    # sparse/offset supplier ids over a still-bounded dimension: the
-    # max-key probe above sees id VALUES, not cardinality — a monotone
-    # dense remap keeps the bit-matrix path alive (triangle COUNT is
-    # relabel-invariant, so no inverse map is needed).  Measured (r11
-    # scale study): without this, +1e7 key offsets pushed the 3×
-    # fixture from the ~2 s dense path to the 46 s pair-enumeration.
-    dense = _dense_id_index(li, ["l_suppkey"], DENSE_TRI_MAX_NODES)
-    if dense is not None:
-        map_df, ids = dense
-        li_idx = (li.select(F.col("l_partkey").alias("p"),
-                            F.col("l_suppkey").alias("orig"))
-                  .join(F.broadcast(map_df), "orig")
-                  .select("p", F.col("idx").alias("s")))
-        return co_occurrence_triangles(li_idx, "p", "s", len(ids))
-    # past the global dense cap (~sf10+ supplier counts): label
-    # components and dispatch each at its own size — a block-diagonal
-    # corpus (multi-tenant shards; the x30 weak-scaling shape) runs as
-    # independent per-component bit matrices in executors, and only
-    # genuinely large/sparse components pay the distributed
-    # pair-enumeration + canonical 3-way join (r14, VERDICT task 3)
-    from janusgraph_clickhouse_spark.graph.algorithms import (
-        co_occurrence_triangles_by_component)
-    return co_occurrence_triangles_by_component(li, "l_partkey",
-                                                "l_suppkey")
+    # throughput-bound.  co_occurrence_triangles routes by supplier
+    # cardinality: the global bit matrix here (one shuffle of the distinct
+    # incidence, finishes on kilobytes; measured 25s → ~2s), the remapped
+    # one for sparse/offset ids, per-component kernels past the cap.
+    return co_occurrence_triangles(load_table(spark, sf_dir, "lineitem"),
+                                   "l_partkey", "l_suppkey")
 
 
 @query(

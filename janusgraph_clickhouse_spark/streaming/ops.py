@@ -414,13 +414,26 @@ def incremental_rollup(spark: SparkSession, events_dir: str,
     the replayed low batch-ids (rollup frozen) or double-count events
     already merged.  Mismatch raises loudly; recover by clearing BOTH
     dirs together."""
-    _bind_state_to_checkpoint(rollup_dir, checkpoint_dir)
+    _run_versioned_state(spark, events_dir, rollup_dir, checkpoint_dir,
+                         max_files_per_trigger, _rollup_reduce,
+                         _rollup_merge)
+
+
+def _run_versioned_state(spark: SparkSession, events_dir: str,
+                         state_dir: str, checkpoint_dir: str,
+                         max_files_per_trigger: int, reduce,
+                         merge) -> None:
+    """The one driver of the version-pointer incremental states (count/
+    sum rollup, HLL registers, SCD1): bind the state dir to its
+    checkpoint, stream the events, fold every micro-batch with
+    `_merge_state_batch`, and wait for availableNow to drain."""
+    _bind_state_to_checkpoint(state_dir, checkpoint_dir)
     stream = events_stream(spark, events_dir,
                            max_files_per_trigger=max_files_per_trigger)
     q = (stream.writeStream
          .foreachBatch(lambda batch_df, batch_id:
-                       _merge_rollup_batch(spark, batch_df, batch_id,
-                                           rollup_dir))
+                       _merge_state_batch(spark, batch_df, batch_id,
+                                          state_dir, reduce, merge))
          .option("checkpointLocation", checkpoint_dir)
          .trigger(availableNow=True).start())
     q.awaitTermination()
@@ -483,27 +496,42 @@ def _commit_state_version(state_dir: str, batch_id: int,
                           ignore_errors=True)
 
 
-def _merge_rollup_batch(spark: SparkSession, batch_df: DataFrame,
-                        batch_id: int, rollup_dir: str) -> None:
-    """One idempotent merge step (see incremental_rollup)."""
+def _merge_state_batch(spark: SparkSession, batch_df: DataFrame,
+                       batch_id: int, state_dir: str, reduce,
+                       merge) -> None:
+    """One idempotent merge step of a version-pointer state (see
+    incremental_rollup): skip a replayed batch, `reduce(batch_df)` the
+    new rows, `merge(current, new)` them into the committed version
+    when one exists, and commit the result as v<batch_id>."""
     import os
 
-    os.makedirs(rollup_dir, exist_ok=True)
-    cur = _rollup_current(rollup_dir)
+    os.makedirs(state_dir, exist_ok=True)
+    cur = _rollup_current(state_dir)
     if cur is not None and batch_id <= cur:
         return  # at-least-once replay of an already-committed batch
-    agg = (batch_df.groupBy(
+    new = reduce(batch_df)
+    if cur is not None:
+        new = merge(spark.read.parquet(os.path.join(state_dir, f"v{cur}")),
+                    new)
+    _commit_state_version(state_dir, batch_id, cur, new)
+
+
+def _rollup_reduce(batch_df: DataFrame) -> DataFrame:
+    """Count/sum rollup state of one micro-batch: (h, event_type) →
+    (cnt, sum_raw)."""
+    return (batch_df.groupBy(
         F.unix_timestamp(F.date_trunc("hour", F.col("ts")))
         .alias("h"), "event_type")
         .agg(F.count(F.lit(1)).alias("cnt"),
              F.sum("value").alias("sum_raw")))
-    if cur is not None:
-        current = spark.read.parquet(os.path.join(rollup_dir, f"v{cur}"))
-        agg = (current.unionByName(agg)
-               .groupBy("h", "event_type")
-               .agg(F.sum("cnt").alias("cnt"),
-                    F.sum("sum_raw").alias("sum_raw")))
-    _commit_state_version(rollup_dir, batch_id, cur, agg)
+
+
+def _rollup_merge(current: DataFrame, new: DataFrame) -> DataFrame:
+    """Counts and raw sums add."""
+    return (current.unionByName(new)
+            .groupBy("h", "event_type")
+            .agg(F.sum("cnt").alias("cnt"),
+                 F.sum("sum_raw").alias("sum_raw")))
 
 
 def read_rollup(spark: SparkSession, rollup_dir: str) -> DataFrame:
@@ -574,29 +602,20 @@ def decayed_score(events: DataFrame, key: str = "user_id",
                  F.sum(F.col("_c") * weight).alias("score_fixed")))
 
 
-def _merge_hll_batch(spark: SparkSession, batch_df: DataFrame,
-                     batch_id: int, state_dir: str) -> None:
-    """One idempotent HLL-state merge step (see incremental_hll_rollup):
-    same version-dir + CURRENT-pointer protocol as _merge_rollup_batch,
-    but the persisted state is the per-hour REGISTER table and the
-    merge is per-bucket MAX — the uniqMerge half of the sketch."""
-    import os
-
+def _hll_reduce(batch_df: DataFrame) -> DataFrame:
+    """HLL state of one micro-batch: the per-hour REGISTER table."""
     from ..functions.sketches import hll_registers
 
-    os.makedirs(state_dir, exist_ok=True)
-    cur = _rollup_current(state_dir)
-    if cur is not None and batch_id <= cur:
-        return  # at-least-once replay of an already-committed batch
     hours = batch_df.withColumn(
         "h", F.unix_timestamp(F.date_trunc("hour", F.col("ts"))))
-    regs = hll_registers(hours, "user_id", ["h"])
-    if cur is not None:
-        current = spark.read.parquet(os.path.join(state_dir, f"v{cur}"))
-        regs = (current.unionByName(regs)
-                .groupBy("h", "bucket")
-                .agg(F.max("m").alias("m")))
-    _commit_state_version(state_dir, batch_id, cur, regs)
+    return hll_registers(hours, "user_id", ["h"])
+
+
+def _hll_merge(current: DataFrame, new: DataFrame) -> DataFrame:
+    """Per-bucket MAX — the uniqMerge half of the sketch."""
+    return (current.unionByName(new)
+            .groupBy("h", "bucket")
+            .agg(F.max("m").alias("m")))
 
 
 def incremental_hll_rollup(spark: SparkSession, events_dir: str,
@@ -619,16 +638,8 @@ def incremental_hll_rollup(spark: SparkSession, events_dir: str,
     v<batch_id> dirs, atomic CURRENT pointer, replayed-batch skip,
     checkpoint-identity stamp.  Read via read_rollup(state_dir) and
     fold with hll_estimate_from_registers."""
-    _bind_state_to_checkpoint(state_dir, checkpoint_dir)
-    stream = events_stream(spark, events_dir,
-                           max_files_per_trigger=max_files_per_trigger)
-    q = (stream.writeStream
-         .foreachBatch(lambda batch_df, batch_id:
-                       _merge_hll_batch(spark, batch_df, batch_id,
-                                        state_dir))
-         .option("checkpointLocation", checkpoint_dir)
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
+    _run_versioned_state(spark, events_dir, state_dir, checkpoint_dir,
+                         max_files_per_trigger, _hll_reduce, _hll_merge)
 
 
 def full_join_within(events: DataFrame, left_type: str = "click",
@@ -662,36 +673,26 @@ def full_join_within(events: DataFrame, left_type: str = "click",
     return (j.withColumn("k", F.coalesce("k", "k2")).drop("k2"))
 
 
-def _merge_scd1_batch(spark: SparkSession, batch_df: DataFrame,
-                      batch_id: int, state_dir: str) -> None:
-    """One idempotent SCD1 merge step (see incremental_scd1): state is
-    one row per key — the argMax-(ts, event_id) latest event — merged
-    by per-key struct MAX (associative AND idempotent, like the HLL
-    register merge); same version-dir protocol."""
-    import os
+def _scd1_latest(rows: DataFrame) -> DataFrame:
+    """One row per key — the argMax-(ts, event_id) latest — by per-key
+    struct MAX (associative AND idempotent, like the HLL register
+    merge): the SCD1 reduce and merge both."""
+    return (rows.groupBy("user_id")
+            .agg(F.max(F.struct("ts", "event_id", "event_type",
+                                "cents")).alias("s"))
+            .select("user_id", "s.ts", "s.event_id", "s.event_type",
+                    "s.cents"))
 
-    os.makedirs(state_dir, exist_ok=True)
-    cur = _rollup_current(state_dir)
-    if cur is not None and batch_id <= cur:
-        return  # at-least-once replay of an already-committed batch
-    latest = (batch_df
-              .withColumn("cents",
-                          F.floor(F.col("value") * 100 + F.lit(0.5))
-                          .cast("long"))
-              .groupBy("user_id")
-              .agg(F.max(F.struct("ts", "event_id", "event_type",
-                                  "cents")).alias("s")))
-    if cur is not None:
-        current = spark.read.parquet(os.path.join(state_dir, f"v{cur}"))
-        latest = (current.select("user_id",
-                                 F.struct("ts", "event_id", "event_type",
-                                          "cents").alias("s"))
-                  .unionByName(latest)
-                  .groupBy("user_id")
-                  .agg(F.max("s").alias("s")))
-    flat = latest.select("user_id", "s.ts", "s.event_id",
-                         "s.event_type", "s.cents")
-    _commit_state_version(state_dir, batch_id, cur, flat)
+
+def _scd1_reduce(batch_df: DataFrame) -> DataFrame:
+    """SCD1 state of one micro-batch (values as integer cents)."""
+    return _scd1_latest(batch_df.withColumn(
+        "cents", F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")))
+
+
+def _scd1_merge(current: DataFrame, new: DataFrame) -> DataFrame:
+    """The latest row per key across both versions."""
+    return _scd1_latest(current.unionByName(new))
 
 
 def incremental_scd1(spark: SparkSession, events_dir: str,
@@ -706,13 +707,5 @@ def incremental_scd1(spark: SparkSession, events_dir: str,
     keys), per-batch cost O(batch + state).  Same crash protocol as
     incremental_rollup (version dirs, atomic CURRENT, checkpoint
     stamp); read via read_rollup(state_dir)."""
-    _bind_state_to_checkpoint(state_dir, checkpoint_dir)
-    stream = events_stream(spark, events_dir,
-                           max_files_per_trigger=max_files_per_trigger)
-    q = (stream.writeStream
-         .foreachBatch(lambda batch_df, batch_id:
-                       _merge_scd1_batch(spark, batch_df, batch_id,
-                                         state_dir))
-         .option("checkpointLocation", checkpoint_dir)
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
+    _run_versioned_state(spark, events_dir, state_dir, checkpoint_dir,
+                         max_files_per_trigger, _scd1_reduce, _scd1_merge)

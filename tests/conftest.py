@@ -24,6 +24,20 @@ def spark():
     yield s
 
 
+@pytest.fixture
+def force_aa_join(monkeypatch):
+    """A callable that zeroes both of adamic_adar's bit-matrix caps, so
+    the call after it routes to the wedge join (small test graphs fit
+    every dense tier otherwise)."""
+    from janusgraph_clickhouse_spark.graph import algorithms as GA
+
+    def force():
+        monkeypatch.setattr(GA, "AA_DENSE_MAX_NODES", 0)
+        monkeypatch.setattr(GA, "DENSE_TILE_MAX_NODES", 0)
+
+    return force
+
+
 @pytest.fixture(scope="session")
 def sf_smoke() -> str:
     return SF_SMOKE

@@ -63,7 +63,7 @@ def test_dense_triangle_variants_match_generic(spark):
     # co-occurrence: groups {0,1,2},{2,3,4} → two triangles
     inc = spark.createDataFrame(
         [(10, 0), (10, 1), (10, 2), (20, 2), (20, 3), (20, 4)], "g long, n long")
-    co = co_occurrence_triangles(inc, "g", "n", n_nodes=5).first()["triangles"]
+    co = co_occurrence_triangles(inc, "g", "n").first()["triangles"]
     assert co == 2
 
 
@@ -224,7 +224,7 @@ def test_longest_path_levels_micro(spark):
 
 
 def test_bfs_no_broadcast_above_threshold(spark):
-    """A frontier larger than broadcast_threshold must shuffle-join, not
+    """A frontier larger than BFS_BROADCAST_MAX must shuffle-join, not
     broadcast (the hub-fan-out driver-OOM guard): inspect the hop-join
     plan both ways."""
     from janusgraph_clickhouse_spark.graph.algorithms import _next_frontier
@@ -250,14 +250,15 @@ def test_bfs_no_broadcast_above_threshold(spark):
         sorted(r.id for r in big.collect())
 
 
-def test_bfs_shuffle_path_correct(spark):
-    """bfs with broadcast_threshold=0 (always shuffle) equals default."""
+def test_bfs_shuffle_path_correct(spark, monkeypatch):
+    """bfs with BFS_BROADCAST_MAX=0 (always shuffle) equals default."""
+    from janusgraph_clickhouse_spark.graph import algorithms as GA
     g = graph_from_edge_list(spark, [(1, 2), (2, 3), (3, 4), (2, 5)])
     a = {(r.id, r.distance)
          for r in bfs_distances(g, [1], max_hops=3).collect()}
+    monkeypatch.setattr(GA, "BFS_BROADCAST_MAX", 0)
     b = {(r.id, r.distance)
-         for r in bfs_distances(g, [1], max_hops=3,
-                                broadcast_threshold=0).collect()}
+         for r in bfs_distances(g, [1], max_hops=3).collect()}
     assert a == b == {(1, 0), (2, 1), (3, 2), (5, 2), (4, 3)}
 
 
@@ -270,7 +271,7 @@ def test_co_occurrence_or_reduce_single_matrix(spark):
 
     rows = [(g, n) for g in range(6) for n in range(g, g + 4)]
     inc = spark.createDataFrame(rows, "grp long, node long").repartition(16)
-    out = co_occurrence_triangles(inc, "grp", "node", n_nodes=16)
+    out = co_occurrence_triangles(inc, "grp", "node")
     tri = out.collect()[0].triangles
     # each group of 4 nodes is a clique K4 (4 triangles); overlapping
     # groups share edges — verify against the generic join counter
@@ -428,7 +429,7 @@ def test_clustered_interaction_matches_derivation(spark, sf_smoke):
             == sorted(r.id for r in g_d.vertices.collect()))
 
 
-def test_adamic_adar_dense_matches_join_path(spark):
+def test_adamic_adar_dense_matches_join_path(spark, force_aa_join):
     from janusgraph_clickhouse_spark.graph.algorithms import adamic_adar
     # irregular graph: hub 0, chain, a square — enough non-adjacent pairs
     edges = [(0, 1), (0, 2), (0, 3), (0, 4), (1, 2), (2, 3), (4, 5),
@@ -436,8 +437,9 @@ def test_adamic_adar_dense_matches_join_path(spark):
     g = graph_from_edge_list(spark, edges)
     dense = [(r.u, r.v, r.common_neighbors, r.adamic_adar)
              for r in adamic_adar(g, top=50).collect()]
+    force_aa_join()
     join = [(r.u, r.v, r.common_neighbors, r.adamic_adar)
-            for r in adamic_adar(g, top=50, dense_max_nodes=0).collect()]
+            for r in adamic_adar(g, top=50).collect()]
     assert dense == join and len(dense) > 0
 
 
@@ -468,20 +470,22 @@ def test_triangle_orientation_bounds_wedges_on_power_law(spark):
     assert max_out <= int(2 * m ** 0.5) + 1
 
 
-def test_adamic_adar_hub_salting_matches_unsalted(spark):
+def test_adamic_adar_hub_salting_matches_unsalted(spark, monkeypatch,
+                                                 force_aa_join):
     """Salting hub wedge centers must not change a single output row —
     same pairs, counts and scores as the unsalted join path."""
-    from janusgraph_clickhouse_spark.graph.algorithms import adamic_adar
+    from janusgraph_clickhouse_spark.graph import algorithms as GA
     edges = [(0, i) for i in range(1, 41)]           # hub 0, deg 40
     edges += [(i, i + 1) for i in range(1, 40, 3)]   # sparse cross edges
     g = graph_from_edge_list(spark, edges)
+    force_aa_join()
+    monkeypatch.setattr(GA, "AA_HUB_DEGREE", 10)
+    monkeypatch.setattr(GA, "AA_HUB_SALT", 4)
     salted = [(r.u, r.v, r.common_neighbors, r.adamic_adar)
-              for r in adamic_adar(g, top=1000, dense_max_nodes=0,
-                                   hub_degree_threshold=10,
-                                   hub_salt=4).collect()]
+              for r in GA.adamic_adar(g, top=1000).collect()]
+    monkeypatch.setattr(GA, "AA_HUB_DEGREE", 10 ** 9)
     plain = [(r.u, r.v, r.common_neighbors, r.adamic_adar)
-             for r in adamic_adar(g, top=1000, dense_max_nodes=0,
-                                  hub_degree_threshold=10 ** 9).collect()]
+             for r in GA.adamic_adar(g, top=1000).collect()]
     assert salted == plain and len(salted) > 0
 
 
@@ -498,22 +502,28 @@ def test_adamic_adar_negative_ids_use_join_path(spark):
     assert rows == {(-1, 4): (1, score), (2, 4): (1, score)}
 
 
-def test_adamic_adar_dense_tiling_matches_untiled(spark):
+def test_adamic_adar_dense_tiling_matches_untiled(spark, monkeypatch,
+                                                 force_aa_join):
     """The block-tiled dense matmul must be exact for any tile size —
-    including tiles that straddle the candidate pairs."""
-    from janusgraph_clickhouse_spark.graph.algorithms import (
-        _adamic_adar_dense, adamic_adar)
+    including tiles that straddle the candidate pairs — against the
+    join path."""
+    from janusgraph_clickhouse_spark.graph import algorithms as GA
     edges = [(0, 1), (0, 2), (0, 3), (0, 4), (1, 2), (2, 3), (4, 5),
              (5, 6), (6, 7), (7, 4), (3, 5)]
     g = graph_from_edge_list(spark, edges)
-    sym = g.undirected_edges()
-    expect = [(r.u, r.v, r.common_neighbors, r.adamic_adar)
-              for r in adamic_adar(g, top=50, dense_max_nodes=0).collect()]
+
+    def rows():
+        return [(r.u, r.v, r.common_neighbors, r.adamic_adar)
+                for r in GA.adamic_adar(g, top=50).collect()]
+
+    got = {}
     for block in (3, 8, 1024):
-        got = [(r.u, r.v, r.common_neighbors, r.adamic_adar)
-               for r in _adamic_adar_dense(sym, 8, top=50,
-                                           block=block).collect()]
-        assert got == expect, f"block={block}"
+        monkeypatch.setattr(GA, "AA_TILE_BLOCK", block)
+        got[block] = rows()
+    force_aa_join()
+    expect = rows()
+    for block, r in got.items():
+        assert r == expect, f"block={block}"
 
 
 def test_seeded_random_walks_dataframe_sources(spark):

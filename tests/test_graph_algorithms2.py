@@ -421,15 +421,30 @@ def test_hits_zero_iterations_is_uniform(spark):
         assert abs(r.authority - 0.25) < 1e-12
 
 
-def test_dense_triangle_cap_raises_loudly(spark):
-    """Past DENSE_TRI_MAX_NODES the bit-matrix path refuses (driver
-    would unpack ~8*n^2 bytes) instead of OOMing."""
-    import pytest
-    from janusgraph_clickhouse_spark.graph.algorithms import (
-        DENSE_TRI_MAX_NODES, co_occurrence_triangles)
-    inc = spark.createDataFrame([(1, 1)], "g long, n long")
-    with pytest.raises(ValueError, match="dense bit-matrix"):
-        co_occurrence_triangles(inc, "g", "n", DENSE_TRI_MAX_NODES + 1)
+def test_dense_triangle_cap_routes_by_component(spark, monkeypatch):
+    """Past DENSE_TRI_MAX_NODES distinct nodes the global bit matrix
+    (the driver would unpack ~8*n^2 bytes) is never built: the call
+    routes to the by-component tier and returns the same count."""
+    from janusgraph_clickhouse_spark.graph import algorithms as GA
+    # groups {0,1,2},{2,3,4},{1,2,3}: the projection holds triangles
+    # 012, 123 and 234; count on the global tier, then put the cap
+    # below the 5 distinct nodes
+    inc = spark.createDataFrame(
+        [(10, 0), (10, 1), (10, 2), (20, 2), (20, 3), (20, 4),
+         (30, 1), (30, 2), (30, 3)], "g long, n long")
+    want = GA.co_occurrence_triangles(inc, "g", "n").first()["triangles"]
+    calls = []
+    real = GA._co_occurrence_by_component
+
+    def spy(inc):
+        calls.append(1)
+        return real(inc)
+
+    monkeypatch.setattr(GA, "_co_occurrence_by_component", spy)
+    monkeypatch.setattr(GA, "DENSE_TRI_MAX_NODES", 4)
+    got = GA.co_occurrence_triangles(inc, "g", "n").first()["triangles"]
+    assert calls == [1]
+    assert got == want > 0
 
 
 def test_scc_fixpoint_inside_final_batch(spark):
@@ -551,7 +566,7 @@ def test_dense_id_index_declines_null_ids(spark):
 
 
 def test_adamic_adar_identity_range_routes_by_cardinality(
-        spark, monkeypatch):
+        spark, monkeypatch, force_aa_join):
     """A sparsely populated identity range [0, n) whose CARDINALITY
     fits the driver-dense tier must route driver-dense even when the
     RANGE only fits the tile tier and the cost gate would accept tiles
@@ -563,26 +578,28 @@ def test_adamic_adar_identity_range_routes_by_cardinality(
     calls = []
     real = GA._adamic_adar_dense
 
-    def spy(sym, n_nodes, top, **kw):
+    def spy(sym, n_nodes, *args):
         calls.append(n_nodes)
-        return real(sym, n_nodes, top, **kw)
+        return real(sym, n_nodes, *args)
 
     monkeypatch.setattr(GA, "_adamic_adar_dense", spy)
+    monkeypatch.setattr(GA, "AA_DENSE_MAX_NODES", 32)
+    monkeypatch.setattr(GA, "DENSE_TILE_MAX_NODES", 64)
     ids = [i * 5 // 2 for i in range(24)]  # 24 distinct ids in [0, 58)
     edges = [(ids[i], ids[j]) for i in range(24) for j in range(i + 1, 24)]
     del edges[0], edges[-1]  # two non-adjacent pairs → non-empty output
     g = graph_from_edge_list(spark, edges)
     out = [(r.u, r.v, r.common_neighbors, r.adamic_adar)
-           for r in GA.adamic_adar(g, top=50, dense_max_nodes=32,
-                                   dist_max_nodes=64).collect()]
+           for r in GA.adamic_adar(g, top=50).collect()]
     assert calls == [24], calls  # cardinality routed, not max_id+1
+    force_aa_join()
     join = [(r.u, r.v, r.common_neighbors, r.adamic_adar)
-            for r in GA.adamic_adar(g, top=50, dense_max_nodes=0,
-                                    dist_max_nodes=0).collect()]
+            for r in GA.adamic_adar(g, top=50).collect()]
     assert out == join and len(out) > 0
 
 
-def test_adamic_adar_sparse_ids_dense_remap_matches_join_path(spark):
+def test_adamic_adar_sparse_ids_dense_remap_matches_join_path(
+        spark, force_aa_join):
     """Sparse/offset vertex ids over a small dimension must route
     through the dense bit-matrix via the monotone remap and reproduce
     the join path EXACTLY — original ids in the output, same (rounded
@@ -596,8 +613,9 @@ def test_adamic_adar_sparse_ids_dense_remap_matches_join_path(spark):
                                      for a, b in edges])
     dense = [(r.u, r.v, r.common_neighbors, r.adamic_adar)
              for r in adamic_adar(g, top=50).collect()]
+    force_aa_join()
     join = [(r.u, r.v, r.common_neighbors, r.adamic_adar)
-            for r in adamic_adar(g, top=50, dense_max_nodes=0).collect()]
+            for r in adamic_adar(g, top=50).collect()]
     assert dense == join and len(dense) > 0
     assert all(u >= off and v >= off for u, v, _, _ in dense)
 
@@ -612,9 +630,9 @@ def test_local_clustering_identity_range_routes_by_cardinality(
     calls = []
     real = GA._vertex_triangles_dense
 
-    def spy(sym, n_nodes):
+    def spy(sym, n_nodes, index):
         calls.append(n_nodes)
-        return real(sym, n_nodes)
+        return real(sym, n_nodes, index)
 
     monkeypatch.setattr(GA, "_vertex_triangles_dense", spy)
     # square 0-19-38-57 plus diagonal (0,38): tri = 2, sparse in [0,58)
@@ -630,8 +648,9 @@ def test_local_clustering_identity_range_routes_by_cardinality(
 
 
 def test_local_clustering_sparse_ids_dense_remap(spark, monkeypatch):
-    """local_clustering with offset ids: the remapped dense path must
-    equal both the closed form and the join path (cap forced to 0)."""
+    """local_clustering with offset ids: the remapped mask and tile
+    tiers must equal both the closed form and the join path (caps
+    forced to 0)."""
     import janusgraph_clickhouse_spark.graph.algorithms as GA
     off = 9_000_000_000
     # square 0-1-2-3 plus diagonal (0,2): tri = {0,1,2}, {0,2,3}
@@ -643,6 +662,11 @@ def test_local_clustering_sparse_ids_dense_remap(spark, monkeypatch):
     expect = {off + 0: (3, round(2 / 3, 6)), off + 1: (2, 1.0),
               off + 2: (3, round(2 / 3, 6)), off + 3: (2, 1.0)}
     assert dense == expect
+    # no room for per-edge masks: the remapped distributed tiles
+    monkeypatch.setattr(GA, "LCC_MASK_MAX_BYTES", 0)
+    tiles = {r.id: (r.degree, r.lcc)
+             for r in GA.local_clustering(g).collect()}
+    assert tiles == expect
     monkeypatch.setattr(GA, "DENSE_LCC_MAX_NODES", 0)  # force join path
     joinp = {r.id: (r.degree, r.lcc)
              for r in GA.local_clustering(g).collect()}
@@ -667,40 +691,53 @@ def test_g03_dense_remap_sparse_supplier_ids(spark, tmp_path):
     assert got == base > 0
 
 
-def test_adamic_adar_distributed_tiles_match_all_paths(spark):
-    """The distributed tile path (dense_max_nodes=0 forces it for any
-    graph under the dist cap) must reproduce the driver-dense and join
+def test_adamic_adar_distributed_tiles_match_all_paths(
+        spark, monkeypatch, force_aa_join):
+    """The distributed tile path (AA_DENSE_MAX_NODES=0 forces it for any
+    graph under the tile cap) must reproduce the driver-dense and join
     paths row-for-row — same float64 sums, 6dp rounding, tiebreaks."""
-    from janusgraph_clickhouse_spark.graph.algorithms import adamic_adar
+    from janusgraph_clickhouse_spark.graph import algorithms as GA
     edges = [(0, 1), (0, 2), (0, 3), (0, 4), (1, 2), (2, 3), (4, 5),
              (5, 6), (6, 7), (7, 4), (3, 5), (1, 6), (2, 7)]
     g = graph_from_edge_list(spark, edges)
+    calls = []
+    real = GA._adamic_adar_dense_dist
 
-    def rows(**kw):
+    def spy(sym, n_nodes, *args):
+        calls.append(n_nodes)
+        return real(sym, n_nodes, *args)
+
+    def rows():
         return [(r.u, r.v, r.common_neighbors, r.adamic_adar)
-                for r in adamic_adar(g, top=50, **kw).collect()]
+                for r in GA.adamic_adar(g, top=50).collect()]
 
+    monkeypatch.setattr(GA, "_adamic_adar_dense_dist", spy)
     dense = rows()
-    dist = rows(dense_max_nodes=0)
-    join = rows(dense_max_nodes=0, dist_max_nodes=0)
+    monkeypatch.setattr(GA, "AA_DENSE_MAX_NODES", 0)
+    dist = rows()
+    assert calls == [8]
+    force_aa_join()
+    join = rows()
     assert dense == dist == join and len(dense) > 0
 
 
-def test_adamic_adar_distributed_sparse_ids_remap(spark):
+def test_adamic_adar_distributed_sparse_ids_remap(spark, monkeypatch,
+                                                  force_aa_join):
     """Sparse/offset ids + a forced-zero driver-dense cap must route
     remap → distributed tiles and still emit ORIGINAL ids in join-path
     order."""
-    from janusgraph_clickhouse_spark.graph.algorithms import adamic_adar
+    from janusgraph_clickhouse_spark.graph import algorithms as GA
     off = 8_800_000_000
     edges = [(0, 1), (0, 2), (0, 3), (1, 2), (2, 3), (3, 4), (4, 0),
              (1, 4)]
     g = graph_from_edge_list(spark, [(a + off, b + off)
                                      for a, b in edges])
+    monkeypatch.setattr(GA, "AA_DENSE_MAX_NODES", 0)
     dist = [(r.u, r.v, r.common_neighbors, r.adamic_adar)
-            for r in adamic_adar(g, top=50, dense_max_nodes=0).collect()]
+            for r in GA.adamic_adar(g, top=50).collect()]
+    force_aa_join()
     join = [(r.u, r.v, r.common_neighbors, r.adamic_adar)
-            for r in adamic_adar(g, top=50, dense_max_nodes=0,
-                                 dist_max_nodes=0).collect()]
+            for r in GA.adamic_adar(g, top=50).collect()]
     assert dist == join and len(dist) > 0
     assert all(u >= off and v >= off for u, v, _, _ in dist)
 
@@ -720,9 +757,9 @@ def test_triangles_per_vertex_tile_path_matches_mask_path(spark):
                      for _ in range(400)) if a < b})
     sym = spark.createDataFrame(edges, "src long, dst long")
     mask = {r.id: r.triangles
-            for r in _vertex_triangles_dense(sym, n).collect()}
+            for r in _vertex_triangles_dense(sym, n, None).collect()}
     tile = {r.id: r.triangles
-            for r in _vertex_triangles_dense_dist(sym, n).collect()}
+            for r in _vertex_triangles_dense_dist(sym, n, None).collect()}
     # the mask path emits a row per edge endpoint (0-credit rows
     # included); the tile path emits only positive credits — compare on
     # the union with 0 default
@@ -764,13 +801,56 @@ def test_bipartite_components_labels(spark):
     assert got == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10, 20: 20}
 
 
-def test_cooccurrence_by_component_matches_global_dense(spark):
+def _union_find_min_labels(rows):
+    """Reference co-occurrence components of a (g, n) incidence: each
+    node → the min node of its component, by union-find."""
+    parent = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    first = {}
+    for g, n in rows:
+        find(n)
+        if g in first:
+            a, b = find(first[g]), find(n)
+            parent[max(a, b)] = min(a, b)
+        else:
+            first[g] = n
+    return {n: find(n) for n in parent}
+
+
+def test_bipartite_components_converge_on_sparse_random_incidences(spark):
+    """Sparse random incidences — 150 rows over 60 groups and 200 nodes,
+    a shape on which the star form of `_bipartite_components` has
+    needed up to 14 supersteps — must converge within CC_MAX_ITER (not
+    return None) and label every node like a union-find over the
+    projection."""
+    import random
+    from janusgraph_clickhouse_spark.graph.algorithms import (
+        _bipartite_components)
+    for seed in range(4):
+        rng = random.Random(seed)
+        rows = [(rng.randrange(60), rng.randrange(200)) for _ in range(150)]
+        inc = spark.createDataFrame(rows, "g long, n long")
+        labels = _bipartite_components(inc)
+        assert labels is not None, seed
+        assert ({r.n: r.c for r in labels.collect()}
+                == _union_find_min_labels(rows)), seed
+
+
+def test_cooccurrence_by_component_matches_global_dense(spark,
+                                                       monkeypatch):
     """Per-component dispatch (r14) must equal the global bit-matrix
     count on a block-diagonal incidence — across the dense tier, the
-    forced join tier (comp_cap=0), and a mixed dense+sparse routing."""
+    forced join tier (DENSE_TRI_COMP_CAP=0), and a mixed dense+sparse
+    routing."""
     import numpy as np
-    from janusgraph_clickhouse_spark.graph.algorithms import (
-        co_occurrence_triangles, co_occurrence_triangles_by_component)
+    from janusgraph_clickhouse_spark.graph import algorithms as GA
     rng = np.random.RandomState(7)
     rows = []
     # three blocks of 12 nodes with random groups inside each block
@@ -784,11 +864,13 @@ def test_cooccurrence_by_component_matches_global_dense(spark):
     rows += [(9000 + i, 100 + i) for i in range(8)]
     rows += [(9000 + i, 101 + i) for i in range(8)]
     inc = spark.createDataFrame(rows, "g long, n long")
-    want = co_occurrence_triangles(inc, "g", "n", 256).first()["triangles"]
-    got_dense = co_occurrence_triangles_by_component(
+    want = GA.co_occurrence_triangles(inc, "g", "n").first()["triangles"]
+    monkeypatch.setattr(GA, "DENSE_TRI_MAX_NODES", 0)
+    got_dense = GA.co_occurrence_triangles(
         inc, "g", "n").first()["triangles"]
-    got_join = co_occurrence_triangles_by_component(
-        inc, "g", "n", comp_cap=0).first()["triangles"]
+    monkeypatch.setattr(GA, "DENSE_TRI_COMP_CAP", 0)
+    got_join = GA.co_occurrence_triangles(
+        inc, "g", "n").first()["triangles"]
     assert got_dense == got_join == want > 0
 
 
@@ -848,7 +930,8 @@ def test_edge_components_labels(spark):
                    20: 20, 21: 20, 22: 20}
 
 
-def test_adamic_adar_per_component_matches_global(spark, monkeypatch):
+def test_adamic_adar_per_component_matches_global(spark, monkeypatch,
+                                                  force_aa_join):
     """The r14 per-component AA tier (forced via zeroed attempt
     threshold + zeroed dense caps) must reproduce the driver-dense
     global rows exactly — including a mixed routing where one
@@ -863,15 +946,18 @@ def test_adamic_adar_per_component_matches_global(spark, monkeypatch):
     edges += [(5000 + i, 5000 + i + 2) for i in range(0, 29, 3)]
     g = graph_from_edge_list(spark, edges)
 
-    def rows(**kw):
+    def rows():
         return [(r.u, r.v, r.common_neighbors, r.adamic_adar)
-                for r in GA.adamic_adar(g, top=40, **kw).collect()]
+                for r in GA.adamic_adar(g, top=40).collect()]
 
     want = rows()  # global driver-dense (n < 8192)
     monkeypatch.setattr(GA, "EDGE_COMP_ATTEMPT_MIN_WEDGES", 0)
     monkeypatch.setattr(GA, "AA_COMP_CAP", 20)
-    got = rows(dense_max_nodes=0, dist_max_nodes=0)
+    force_aa_join()
+    got = rows()
     assert got == want and len(got) > 0
+    monkeypatch.setattr(GA, "AA_COMP_CAP", 0)  # no dense component
+    assert rows() == got
 
 
 def test_local_clustering_per_component_matches_global(spark,
@@ -894,3 +980,6 @@ def test_local_clustering_per_component_matches_global(spark,
     got = {r.id: (r.degree, r.lcc)
            for r in GA.local_clustering(g).collect()}
     assert got == want and len(got) > 0
+    monkeypatch.setattr(GA, "TRI_COMP_CAP", 0)  # no dense component
+    assert {r.id: (r.degree, r.lcc)
+            for r in GA.local_clustering(g).collect()} == got

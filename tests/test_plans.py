@@ -153,18 +153,21 @@ def test_sequence_packing_has_no_global_single_partition_window(
     assert "Exchange hashpartitioning(shard" in plan, plan[:2000]
 
 
-def test_adamic_adar_join_path_salts_hub_keys(spark):
+def test_adamic_adar_join_path_salts_hub_keys(spark, monkeypatch,
+                                              force_aa_join):
     """When a wedge center crosses the hub threshold, the join key must
     become (w, _salt) with the probe side exploded across salts — the
     skew defense has to be IN the plan, not a docstring."""
-    from janusgraph_clickhouse_spark.graph.algorithms import adamic_adar
+    from janusgraph_clickhouse_spark.graph import algorithms as GA
     from janusgraph_clickhouse_spark.graph.model import graph_from_edge_list
     g = graph_from_edge_list(
         spark, [(0, i) for i in range(1, 30)] + [(1, 2), (3, 4)])
-    # dist_max_nodes=0 too: since r11 the mid-size tile tier would
-    # otherwise absorb any small graph before the join path is reached
-    df = adamic_adar(g, top=10, dense_max_nodes=0, dist_max_nodes=0,
-                     hub_degree_threshold=5, hub_salt=4)
+    # both dense caps zeroed: the tile tier would otherwise absorb any
+    # small graph before the join path is reached
+    force_aa_join()
+    monkeypatch.setattr(GA, "AA_HUB_DEGREE", 5)
+    monkeypatch.setattr(GA, "AA_HUB_SALT", 4)
+    df = GA.adamic_adar(g, top=10)
     plan = _optimized(df)
     assert "_salt" in plan
     assert "explode" in plan.lower()
@@ -266,7 +269,8 @@ def test_local_clustering_routes_dense_to_bitset(spark, monkeypatch):
     orig_oriented = A._degree_oriented_edges_sym
     monkeypatch.setattr(
         A, "_vertex_triangles_dense",
-        lambda sym, n: (calls.append("dense"), orig_dense(sym, n))[1])
+        lambda sym, n, index: (calls.append("dense"),
+                               orig_dense(sym, n, index))[1])
     monkeypatch.setattr(
         A, "_degree_oriented_edges_sym",
         lambda e: (calls.append("wedge"), orig_oriented(e))[1])

@@ -1314,7 +1314,8 @@ def test_scd1_merge_chunking_invariant(spark, seed, n_events, n_chunks):
     from pyspark.sql import Row
     from pyspark.sql import functions as F
     from janusgraph_clickhouse_spark.streaming.ops import (
-        _merge_scd1_batch, read_rollup)
+        _scd1_merge, _scd1_reduce, _merge_state_batch, read_rollup)
+    fold = (_scd1_reduce, _scd1_merge)
     rng = np.random.RandomState(seed)
     rows = [Row(user_id=int(rng.randint(0, 5)),
                 ts=datetime.fromtimestamp(int(rng.randint(0, 50)),
@@ -1332,12 +1333,12 @@ def test_scd1_merge_chunking_invariant(spark, seed, n_events, n_chunks):
                 F.col("event_id").isin(
                     [i for i in range(n_events) if assign[i] == b])
                 if (assign == b).any() else F.lit(False))
-            _merge_scd1_batch(spark, chunk, b, d)
+            _merge_state_batch(spark, chunk, b, d, *fold)
         got = {r.user_id: (r.ts, r.event_id, r.event_type, r.cents)
                for r in read_rollup(spark, d).collect()}
         # replay every batch — must be a byte-for-byte no-op
         for b in range(n_chunks):
-            _merge_scd1_batch(spark, df.limit(0), b, d)
+            _merge_state_batch(spark, df.limit(0), b, d, *fold)
         again = {r.user_id: (r.ts, r.event_id, r.event_type, r.cents)
                  for r in read_rollup(spark, d).collect()}
         assert again == got

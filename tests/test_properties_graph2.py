@@ -10,6 +10,7 @@ ambient inflation the judge measured in r12); see CLAUDE.md."""
 from __future__ import annotations
 
 import numpy as np
+import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
@@ -368,17 +369,22 @@ def test_adamic_adar_remap_paths_match_join_on_random_graphs(
     offset=0 exercises the identity gates; the huge offset exercises
     the monotone remap (id VALUES must not matter — the scale-study
     finding)."""
-    from janusgraph_clickhouse_spark.graph.algorithms import adamic_adar
+    from janusgraph_clickhouse_spark.graph import algorithms as GA
     from janusgraph_clickhouse_spark.graph.model import (
         graph_from_edge_list)
     g = graph_from_edge_list(
         spark, [(a + offset, b + offset) for a, b in sorted(edges)])
-    def rows(**kw):
-        return [(r.u, r.v, r.common_neighbors, r.adamic_adar)
-                for r in adamic_adar(g, top=50, **kw).collect()]
-    join = rows(dense_max_nodes=0, dist_max_nodes=0)
+
+    def rows(**caps):
+        with pytest.MonkeyPatch.context() as mp:
+            for name, cap in caps.items():
+                mp.setattr(GA, name, cap)
+            return [(r.u, r.v, r.common_neighbors, r.adamic_adar)
+                    for r in GA.adamic_adar(g, top=50).collect()]
+
+    join = rows(AA_DENSE_MAX_NODES=0, DENSE_TILE_MAX_NODES=0)
     dense = rows()
-    dist = rows(dense_max_nodes=0)
+    dist = rows(AA_DENSE_MAX_NODES=0)
     assert dense == join
     # tiny graphs pass the Σd² gate (n³ is small), so the dist tier
     # really runs; if the gate ever rejects, the join path answers —

@@ -303,7 +303,8 @@ def test_incremental_hll_state_equals_direct(spark, tmp_path):
     from janusgraph_clickhouse_spark.functions.sketches import (
         hll_registers)
     from janusgraph_clickhouse_spark.streaming.ops import (
-        _merge_hll_batch, read_rollup)
+        _hll_merge, _hll_reduce, _merge_state_batch, read_rollup)
+    fold = (_hll_reduce, _hll_merge)
     ev = spark.createDataFrame(
         [(i, i % 37, "2024-01-01 %02d:10:00" % (i % 4)) for i in range(200)],
         "event_id long, user_id long, s string").withColumn(
@@ -313,7 +314,7 @@ def test_incremental_hll_state_equals_direct(spark, tmp_path):
     # streaming query uses
     for bid, pred in enumerate(["event_id % 3 = 0", "event_id % 3 = 1",
                                 "event_id % 3 = 2"]):
-        _merge_hll_batch(spark, ev.filter(pred), bid, state)
+        _merge_state_batch(spark, ev.filter(pred), bid, state, *fold)
     direct = hll_registers(
         ev.withColumn("h", F.unix_timestamp(
             F.date_trunc("hour", F.col("ts")))), "user_id", ["h"])
@@ -322,7 +323,7 @@ def test_incremental_hll_state_equals_direct(spark, tmp_path):
     assert got == want
     # replay of an already-committed batch id leaves CURRENT untouched
     before = open(os.path.join(state, "CURRENT")).read()
-    _merge_hll_batch(spark, ev.limit(5), 1, state)
+    _merge_state_batch(spark, ev.limit(5), 1, state, *fold)
     assert open(os.path.join(state, "CURRENT")).read() == before
     assert {(r.h, r.bucket): r.m
             for r in read_rollup(spark, state).collect()} == want
@@ -528,7 +529,8 @@ def test_incremental_scd1_equals_direct_and_replay_noop(spark, tmp_path):
     import os
 
     from janusgraph_clickhouse_spark.streaming.ops import (
-        _merge_scd1_batch, read_rollup)
+        _scd1_merge, _scd1_reduce, _merge_state_batch, read_rollup)
+    fold = (_scd1_reduce, _scd1_merge)
     ev = spark.createDataFrame(
         [(i, i % 5, "t%d" % (i % 3), float(i),
           "2024-01-01 00:%02d:00" % (i % 60)) for i in range(40)],
@@ -537,7 +539,7 @@ def test_incremental_scd1_equals_direct_and_replay_noop(spark, tmp_path):
     state = str(tmp_path / "scd1")
     for bid, pred in enumerate(["event_id % 3 = 0", "event_id % 3 = 1",
                                 "event_id % 3 = 2"]):
-        _merge_scd1_batch(spark, ev.filter(pred), bid, state)
+        _merge_state_batch(spark, ev.filter(pred), bid, state, *fold)
     got = {(r.user_id): (r.ts, r.event_id, r.event_type) for r in
            read_rollup(spark, state).collect()}
     from pyspark.sql import Window
@@ -549,7 +551,7 @@ def test_incremental_scd1_equals_direct_and_replay_noop(spark, tmp_path):
     assert got == want
     # replaying an old batch id is a no-op
     before = open(os.path.join(state, "CURRENT")).read()
-    _merge_scd1_batch(spark, ev.limit(3), 0, state)
+    _merge_state_batch(spark, ev.limit(3), 0, state, *fold)
     assert open(os.path.join(state, "CURRENT")).read() == before
 
 

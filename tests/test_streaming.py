@@ -388,17 +388,18 @@ def test_rollup_merge_is_idempotent_and_crash_safe(spark, tmp_path,
     import os
     import shutil
     from janusgraph_clickhouse_spark.streaming.ops import (
-        _merge_rollup_batch, read_rollup)
+        _rollup_merge, _rollup_reduce, _merge_state_batch, read_rollup)
+    fold = (_rollup_reduce, _rollup_merge)
     ev = load_table(spark, sf_smoke, "events")
     half = ev.filter(F.col("event_id") % 2 == 0)
     rest = ev.filter(F.col("event_id") % 2 == 1)
     d = str(tmp_path / "rollup")
-    _merge_rollup_batch(spark, half, 0, d)
-    _merge_rollup_batch(spark, rest, 1, d)
+    _merge_state_batch(spark, half, 0, d, *fold)
+    _merge_state_batch(spark, rest, 1, d, *fold)
     want = _rows(read_rollup(spark, d))
     # replay both batches — committed ids are skipped
-    _merge_rollup_batch(spark, half, 0, d)
-    _merge_rollup_batch(spark, rest, 1, d)
+    _merge_state_batch(spark, half, 0, d, *fold)
+    _merge_state_batch(spark, rest, 1, d, *fold)
     assert _rows(read_rollup(spark, d)) == want
     # simulate a crash between writing v2 and the pointer flip: a torn
     # v2 exists, CURRENT still says v1 — the replay of batch 2 must
@@ -406,7 +407,7 @@ def test_rollup_merge_is_idempotent_and_crash_safe(spark, tmp_path,
     torn = os.path.join(d, "v2")
     os.makedirs(torn, exist_ok=True)
     extra = ev.limit(10)
-    _merge_rollup_batch(spark, extra, 2, d)
+    _merge_state_batch(spark, extra, 2, d, *fold)
     merged = read_rollup(spark, d)
     assert merged.agg(F.sum("cnt")).collect()[0][0] == ev.count() + 10
 

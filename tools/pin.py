@@ -12,11 +12,13 @@ Usage:
 
 Prints per query: every warm run, the best-of-(runs-1) pin (run 1 is
 the untimed-in-spirit warmup; it is printed but excluded from the
-pin), and row count.  Calibration (solo spin + width-aware process
-spin + loadavg) brackets the session so a contaminated window is
-visible in the record.  Count-based (the steady-state number bench
-collect-context readings are compared against, see the g18 note in
-PERF.md r10).
+pin), the number of Spark jobs each warm run launched (one job group
+per run, counted with the status tracker — a plan-preserving refactor
+shows as equal counts, free of timing noise), and row count.
+Calibration (solo spin + width-aware process spin + loadavg) brackets
+the session so a contaminated window is visible in the record.
+Count-based (the steady-state number bench collect-context readings
+are compared against, see the g18 note in PERF.md r10).
 """
 
 from __future__ import annotations
@@ -68,18 +70,23 @@ def main() -> None:
                     "solo_spin_pre": _spin(), "pins": {}}
     print(f"calibration: solo {record['solo_spin_pre']} "
           f"{record['saturation_pre']}", flush=True)
+    tracker = spark.sparkContext.statusTracker()
     for name in args.names:
-        times = []
+        times, jobs = [], []
         rows = -1
-        for _ in range(args.runs):
+        for i in range(args.runs):
+            group = f"pin-{name}-{i}"
+            spark.sparkContext.setJobGroup(group, name)
             t0 = time.perf_counter()
             rows = queries[name](spark, args.sf).count()
             times.append(round(time.perf_counter() - t0, 2))
+            jobs.append(len(tracker.getJobIdsForGroup(group)))
         pin = min(times[1:]) if len(times) > 1 else times[0]
         record["pins"][name] = {"warmup": times[0], "warm": times[1:],
-                                "best": pin, "rows": rows}
+                                "best": pin, "rows": rows,
+                                "warm_jobs": jobs[1:]}
         print(f"{name}: warm {times[1:]} (warmup {times[0]}) -> "
-              f"pin {pin} s, {rows} rows", flush=True)
+              f"pin {pin} s, {rows} rows, jobs {jobs[1:]}", flush=True)
     record["saturation_end"] = _saturation_probe()
     record["solo_spin_end"] = _spin()
     print(f"calibration end: solo {record['solo_spin_end']} "
